@@ -13,9 +13,10 @@ rollup from the batch merge-on-read apply — so a green row proves the
 incremental, chunked (and for C6: interrupted-and-restarted) stream
 converges to exactly the batch answer.
 
-Scale notes: the streamed state apply shuffles once per micro-batch on
-the upsert key (uniform); checkpointing bounds reprocessing on restart
-to unread files only. Output rollups are O(1) rows.
+Scale notes: each micro-batch only appends its own events to the state's
+delta log; the one shuffle on the upsert key (uniform) runs at publish,
+once per stream run. Checkpointing bounds reprocessing on restart to
+unread files only. Output rollups are O(1) rows.
 """
 
 from __future__ import annotations

@@ -320,7 +320,8 @@ GATED_SURFACE: dict[str, tuple[str, str]] = {
         "tests/test_lake_backends.py",
     ),
     "D6 upsert merge-on-read": (
-        "read-side row_number dedup view -> MERGE INTO + merge-on-read",
+        "per-batch delta log under _delta/, merged once at publish by a "
+        "row_number view -> MERGE INTO + merge-on-read",
         "tests/test_lake_backends.py",
     ),
     "D7 ADD COLUMN evolution": (

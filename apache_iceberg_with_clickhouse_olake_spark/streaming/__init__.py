@@ -2,11 +2,14 @@
 SURVEY.md §2.10 C1-C6 / §3.2).
 
 - :func:`run_cdc_upsert_stream`: file-source change stream ->
-  ``foreachBatch`` upsert apply into a parquet state table. Each
-  micro-batch unions the incoming events with current state and keeps the
-  latest version per key (read-side merge-on-read, same operator as
-  ``operators.cdc.apply_cdc_upsert``); with an Iceberg runtime the batch
-  body becomes a single ``MERGE INTO``. Checkpointing gives restartable
+  ``foreachBatch`` append into a merge-on-read delta log under the
+  parquet state table. Each micro-batch lands as-is in its own
+  ``_delta/<batch_id>`` directory; once the stream has drained, one
+  merge (:func:`read_cdc_state`, the same latest-version-per-key
+  operator as ``operators.cdc.apply_cdc_upsert``) publishes base + deltas
+  as the new state. That is the parquet stand-in for an Iceberg
+  merge-on-read table: appended data and equality-delete files,
+  compacted by ``rewrite_data_files``. Checkpointing gives restartable
   exactly-once-per-batch semantics (C6).
 - :func:`run_streaming_sessionization`: watermarked ``session_window``
   aggregation (the streaming twin of
@@ -15,10 +18,10 @@ SURVEY.md §2.10 C1-C6 / §3.2).
 Micro-batch cadence (C3, destination.json:96-98) maps to ``trigger``;
 tests use ``availableNow`` so the whole backlog drains deterministically.
 
-Scale notes: state per micro-batch is bounded by (keys-in-batch + state
-rows matched); the watermark bounds session state. The parquet-overwrite
-state apply is the local-mode fallback -- on a real lake the foreachBatch
-body is an idempotent MERGE, not a rewrite.
+Scale notes: a CDC micro-batch reads and writes only its own events --
+it never touches the published state, so its cost is flat in the table
+size. The table is read and rewritten once per stream run, at publish.
+The watermark bounds session state.
 """
 
 from __future__ import annotations
@@ -53,9 +56,9 @@ CDC_EVENT_SCHEMA = StructType(
 
 def _recover_state(state_dir: str) -> None:
     """Crash recovery for the sibling-rename protocol: a crash between
-    the two renames leaves the state at '<dir>.old' and no live dir —
-    restore it (losing only the not-yet-published batch, which the
-    checkpoint will NOT have committed, so it replays); stale '.next'
+    the two renames of a publish leaves the state at '<dir>.old' and no
+    live dir — restore it. Its delta log comes back with it, so nothing
+    is lost: the next publish merges those deltas again. Stale '.next'
     staging dirs are discarded."""
     bak = state_dir.rstrip("/") + ".old"
     if os.path.exists(bak) and not os.path.exists(state_dir):
@@ -81,25 +84,53 @@ def _replace_state(df: DataFrame, state_dir: str) -> None:
     shutil.rmtree(bak, ignore_errors=True)
 
 
+def _delta_dir(state_dir: str) -> str:
+    """The delta log: one ``<batch_id:010d>`` directory per micro-batch.
+    Spark and pyarrow skip ``_``-prefixed paths, so a plain read of
+    ``state_dir`` sees only the last published state."""
+    return os.path.join(state_dir, "_delta")
+
+
+def _has_deltas(state_dir: str) -> bool:
+    delta = _delta_dir(state_dir)
+    return os.path.isdir(delta) and bool(os.listdir(delta))
+
+
+def read_cdc_state(
+    spark: SparkSession, state_dir: str, keep_tombstones: bool = False
+) -> DataFrame:
+    """Merge-on-read view of a CDC state table: the published base plus
+    every delta not yet published, latest version per key.
+
+    ``keep_tombstones=True`` keeps the winning delete rows, as a view
+    that more change events will still be merged into must."""
+    from ..operators.cdc import apply_cdc_upsert
+
+    paths = []
+    if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
+        paths.append(state_dir)
+    if _has_deltas(state_dir):
+        # Globbed: a read rooted at a `_` dir is ignored as hidden.
+        paths.append(os.path.join(_delta_dir(state_dir), "*"))
+    events = spark.read.schema(CDC_EVENT_SCHEMA).parquet(*paths)
+    return apply_cdc_upsert(events, keep_tombstones=keep_tombstones)
+
+
 def _apply_batch(state_dir: str):
-    """foreachBatch body: upsert the micro-batch into the parquet state."""
+    """foreachBatch body: append the micro-batch, as-is, to the delta log.
+
+    It neither reads nor rewrites the state, so a batch costs the batch.
+    A replayed batch id (crash after the write, before the checkpoint
+    commit) overwrites its own directory with the same rows -- the
+    idempotent-sink idiom of :func:`run_incremental_dedup_stream`.
+    Tombstones stay in the log until publish, so a delete keeps
+    outranking older updates that arrive in later micro-batches
+    (Iceberg's merge-on-read delete files, kept until compaction)."""
 
     def inner(batch: DataFrame, batch_id: int) -> None:
-        from ..operators.cdc import apply_cdc_upsert
-
-        spark = batch.sparkSession
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            state = spark.read.parquet(state_dir)
-            merged = state.unionByName(batch)
-        else:
-            merged = batch
-        # Tombstones STAY in the intermediate state: a delete must keep
-        # outranking older buffered updates that arrive in later
-        # micro-batches (Iceberg's merge-on-read delete files, kept
-        # until compaction).
-        out = apply_cdc_upsert(merged, keep_tombstones=True)
-        # Local-mode fallback: rewrite state (Iceberg path: MERGE INTO).
-        _replace_state(out, state_dir)
+        batch.write.mode("overwrite").parquet(
+            os.path.join(_delta_dir(state_dir), f"{batch_id:010d}")
+        )
 
     return inner
 
@@ -112,10 +143,17 @@ def run_cdc_upsert_stream(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Tail a directory of CDC event parquet files (C2: chunked reads via
-    maxFilesPerTrigger) and apply them to the state table; drains the
-    backlog with availableNow and blocks until done."""
+    maxFilesPerTrigger) into the state table's delta log; drains the
+    backlog with availableNow and blocks until done, then publishes.
+
+    Publish is the single merge of the run: base + every delta through
+    :func:`read_cdc_state` with tombstones compacted out (the
+    ``rewrite_data_files`` step), written by :func:`_replace_state`.
+    The deltas live inside the directory being replaced, so the rename
+    that publishes the merge also retires them. A run that applied no
+    batch and left no deltas publishes nothing."""
     # C6: if a prior run died between the state renames, restore the
-    # backup before the checkpointed replay re-applies the lost batch.
+    # backup (with its unpublished deltas) before the stream resumes.
     _recover_state(state_dir)
     reader = (
         spark.readStream.schema(CDC_EVENT_SCHEMA)
@@ -129,12 +167,8 @@ def run_cdc_upsert_stream(
         .start()
     )
     q.awaitTermination()
-    # Publish: compact tombstones out of the drained state (the
-    # rewrite_data_files step -- a real lake would retain delete files
-    # and filter them at read time instead).
-    if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-        state = spark.read.parquet(state_dir)
-        _replace_state(state.filter(F.col("_op") != "d"), state_dir)
+    if _has_deltas(state_dir):
+        _replace_state(read_cdc_state(spark, state_dir), state_dir)
 
 
 FIRST_SEEN_STATE_SCHEMA = StructType([StructField("seen", LongType())])

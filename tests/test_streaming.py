@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from apache_iceberg_with_clickhouse_olake_spark.operators.cdc import (
@@ -14,9 +15,12 @@ from apache_iceberg_with_clickhouse_olake_spark.operators.cdc import (
 )
 from apache_iceberg_with_clickhouse_olake_spark.sources.parquet import load_table
 from apache_iceberg_with_clickhouse_olake_spark.streaming import (
+    read_cdc_state,
     run_cdc_upsert_stream,
     run_streaming_sessionization,
 )
+
+CDC_COLS = ["key", "custkey", "price", "_op", "_seq", "_sync_ts_epoch"]
 
 
 def _rows(df, cols):
@@ -62,9 +66,12 @@ def test_cdc_stream_restart_is_idempotent(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt, 10)
     first = _rows(spark.read.parquet(state_dir), ["key", "price"])
-    # Restart with the same checkpoint: no new files -> state unchanged.
+    files = sorted(os.listdir(state_dir))
+    # Restart with the same checkpoint: no new files -> state unchanged,
+    # and no delta to merge, so the publish is skipped (same file names).
     run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt, 10)
     assert _rows(spark.read.parquet(state_dir), ["key", "price"]) == first
+    assert sorted(os.listdir(state_dir)) == files
 
 
 def test_streaming_sessionization_matches_batch(spark, sf_dir, tmp_path):
@@ -218,12 +225,11 @@ def test_cdc_stream_crash_after_sink_before_commit_is_exactly_once(
     spark, sf_dir, tmp_path
 ):
     """The C6 chaos case: kill the stream INSIDE the danger window — the
-    micro-batch's state write has landed but its checkpoint offset has
-    not committed. On restart Structured Streaming replays that batch
-    over the already-mutated state; the upsert body must be idempotent
-    (latest-version-per-key over a union sees the replayed rows tie with
-    their own prior application), so the final state must equal the
-    batch oracle exactly — no dropped and no double-applied changes."""
+    micro-batch's delta write has landed but its checkpoint offset has
+    not committed. On restart Structured Streaming replays that batch;
+    the replay overwrites the batch's own delta directory, so the final
+    state must equal the batch oracle exactly — no dropped and no
+    double-applied changes."""
     from apache_iceberg_with_clickhouse_olake_spark.streaming import (
         CDC_EVENT_SCHEMA,
         _apply_batch,
@@ -267,18 +273,119 @@ def test_cdc_stream_crash_after_sink_before_commit_is_exactly_once(
         q.awaitTermination()
     assert crashed == [1]
     # Prove the crash hit the danger window: the batch-1 (seq==1) rows
-    # are already IN the state, though their offset never committed.
-    mid = spark.read.parquet(state_dir)
+    # are already IN the merge-on-read state, though their offset never
+    # committed.
+    mid = read_cdc_state(spark, state_dir, keep_tombstones=True)
     assert mid.filter(F.col("_seq") == 1).count() > 0
 
-    # Restart without the poison: batch 1 replays over the mutated
-    # state, then batch 2 applies, then tombstones compact.
+    # Restart without the poison: batch 1 replays into its own delta
+    # dir, then batch 2 applies, then the publish merges and compacts
+    # tombstones out.
     run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt, 1)
     got = spark.read.parquet(state_dir)
     want = apply_cdc_upsert(events)
     cols = ["key", "custkey", "price", "_op", "_seq", "_sync_ts_epoch"]
     assert _rows(got, cols) == _rows(want, cols)
     assert got.filter(F.col("_op") == "d").count() == 0
+
+
+def test_cdc_batch_writes_only_its_own_events(spark, tmp_path):
+    """A micro-batch costs the batch: applying it (twice, as a replay
+    would) adds one delta holding exactly its rows and leaves the
+    published base byte-for-byte alone; plain readers still see only the
+    base, and the merge-on-read view equals latest-per-key over
+    base + batch."""
+    from apache_iceberg_with_clickhouse_olake_spark.streaming import (
+        _apply_batch,
+    )
+
+    state_dir = str(tmp_path / "state")
+    base = spark.range(5000).select(
+        F.col("id").alias("key"),
+        (F.col("id") % 97).alias("custkey"),
+        (F.col("id") * 1.5).alias("price"),
+        F.lit("c").alias("_op"),
+        F.lit(0).cast("long").alias("_seq"),
+        F.lit(0).cast("long").alias("_sync_ts_epoch"),
+    )
+    base.write.parquet(state_dir)
+
+    def base_files():
+        out = {}
+        for name in os.listdir(state_dir):
+            if name != "_delta":
+                st = os.stat(os.path.join(state_dir, name))
+                out[name] = (st.st_size, st.st_mtime_ns)
+        return out
+
+    before = base_files()
+    # Updates to keys 4990-4999, inserts of 5000-5009, one delete.
+    key = F.col("id")
+    batch = spark.range(4990, 5010).select(
+        key.alias("key"),
+        (key % 97).alias("custkey"),
+        F.when(key == 4995, F.lit(None)).otherwise(key * 2.0).alias("price"),
+        F.when(key == 4995, "d").when(key < 5000, "u").otherwise("c").alias("_op"),
+        F.lit(1).cast("long").alias("_seq"),
+        F.lit(60).cast("long").alias("_sync_ts_epoch"),
+    )
+    apply = _apply_batch(state_dir)
+    apply(batch, 7)
+    apply(batch, 7)  # a replay of the uncommitted batch id
+
+    assert base_files() == before
+    delta = os.path.join(state_dir, "_delta")
+    assert os.listdir(delta) == ["0000000007"]
+    got_delta = spark.read.parquet(os.path.join(delta, "0000000007"))
+    assert _rows(got_delta, CDC_COLS) == _rows(batch, CDC_COLS)
+    assert _rows(spark.read.parquet(state_dir), CDC_COLS) == _rows(base, CDC_COLS)
+    want = apply_cdc_upsert(base.unionByName(batch))
+    assert _rows(read_cdc_state(spark, state_dir), CDC_COLS) == _rows(want, CDC_COLS)
+
+
+def test_cdc_publish_crash_between_renames_recovers(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A crash between the publish's two renames leaves the state at
+    '<dir>.old' with its unpublished delta log inside. The next call
+    restores it, merges the deltas again and publishes the oracle
+    state."""
+    from apache_iceberg_with_clickhouse_olake_spark import streaming
+
+    orders = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderkey") < 2000
+    )
+    events = synthetic_change_events(orders)
+    events_dir = str(tmp_path / "events")
+    for cond in [F.col("_seq") == 0, F.col("_seq") == 1, F.col("_seq") >= 2]:
+        events.filter(cond).coalesce(1).write.mode("append").parquet(
+            events_dir
+        )
+    state_dir = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+
+    real_rename = os.rename
+    renames = []
+
+    def crash_on_second_rename(src, dst):
+        renames.append(dst)
+        if len(renames) == 2:
+            raise OSError("injected crash between the publish renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(streaming.os, "rename", crash_on_second_rename)
+    with pytest.raises(OSError, match="injected crash"):
+        run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt, 1)
+    monkeypatch.undo()
+    assert not os.path.exists(state_dir)
+    assert len(os.listdir(os.path.join(state_dir + ".old", "_delta"))) == 3
+
+    run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt, 1)
+    got = spark.read.parquet(state_dir)
+    assert _rows(got, CDC_COLS) == _rows(apply_cdc_upsert(events), CDC_COLS)
+    assert not os.path.exists(os.path.join(state_dir, "_delta"))
+    assert not os.path.exists(state_dir + ".old")
+    assert not os.path.exists(state_dir + ".next")
 
 
 def test_incremental_dedup_stream_builds_exact_index(spark, sf_dir, tmp_path):
