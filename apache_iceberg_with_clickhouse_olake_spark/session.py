@@ -75,6 +75,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # Read parquet INT96/ns timestamps as-is; events.parquet is ns.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # TIMESTAMP(NANOS) columns read as raw longs instead of failing
+        # with [PARQUET_TYPE_ILLEGAL]; sources.parquet.load_table rebuilds
+        # the microsecond timestamp.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # r19 (optimization round): the generated-class cache defaults
         # to 100 entries, while one multi-stage operator here plans
         # 100+ codegen units per EXECUTION (WSCG stages, mutable/unsafe

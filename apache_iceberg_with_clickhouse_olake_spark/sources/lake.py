@@ -17,7 +17,9 @@ Two interchangeable backends sit behind the module-level functions
   ``rewrite_data_files`` procedure.
 - :class:`ParquetBackend` — the sandbox fallback (no Iceberg jar
   ships here): versioned ``<table>/v<N>`` directories, ``mergeSchema``
-  reads for D7 evolution, coalesce-rewrite compaction.
+  reads for D7 evolution, coalesce-rewrite compaction. Each version's
+  schema is recorded at write time (``sources.parquet.record_schema``),
+  so reads of versions this process wrote launch no schema job.
 
 Both expose the same integer version contract (1-based, ordered by
 commit time), so callers — and the pytest that runs the SAME
@@ -30,6 +32,8 @@ import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .parquet import read_table, record_schema
 
 _CATALOG_ENV = "SPARK_GRAFT_ICEBERG_CATALOG"
 
@@ -176,9 +180,12 @@ class ParquetBackend:
     def write_snapshot(self, df: DataFrame, table_dir: str) -> int:
         versions = self._version_dirs(table_dir)
         v = (versions[-1] + 1) if versions else 1
-        df.write.mode("errorifexists").parquet(
-            os.path.join(table_dir, f"v{v}")
-        )
+        path = os.path.join(table_dir, f"v{v}")
+        df.write.mode("errorifexists").parquet(path)
+        # The commit records the schema it wrote, as an Iceberg commit
+        # writes it into the table metadata: a read of v<N> in this
+        # process never opens data-file footers to learn it.
+        record_schema(df.sparkSession, path, df.schema)
         return v
 
     def read_snapshot(
@@ -188,8 +195,8 @@ class ParquetBackend:
         if not versions:
             raise FileNotFoundError(f"no snapshots under {table_dir}")
         v = version if version is not None else versions[-1]
-        return spark.read.option("mergeSchema", "true").parquet(
-            os.path.join(table_dir, f"v{v}")
+        return read_table(
+            spark, os.path.join(table_dir, f"v{v}"), merge_schema=True
         )
 
     def snapshot_history(self, spark: SparkSession, table_dir: str) -> list[int]:
@@ -312,8 +319,11 @@ GATED_SURFACE: dict[str, tuple[str, str]] = {
         "tests/test_lake_backends.py (skipif not iceberg_available)",
     ),
     "L3 manifest caching": (
-        "N/A on parquet -> io.manifest.cache-enabled=true config keys",
-        "config passthrough only; no behavior to test without a jar",
+        "per-file-version schema record (sources.parquet.read_table; "
+        "seeded by write_snapshot) -> io.manifest.cache-enabled=true "
+        "config keys",
+        "tests/test_table_meta.py (parquet record); the Iceberg cache "
+        "is config passthrough only",
     ),
     "L4 snapshot inspection": (
         "v<N> dir listing -> .snapshots metadata table",

@@ -44,7 +44,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from apache_iceberg_with_clickhouse_olake_spark.operators import registry
-from apache_iceberg_with_clickhouse_olake_spark.session import get_spark
+from apache_iceberg_with_clickhouse_olake_spark.session import (
+    default_parallelism,
+    get_spark,
+)
 
 def _env_fingerprint() -> dict:
     """Machine-state snapshot published with every bench artifact, so a
@@ -348,7 +351,7 @@ def main() -> None:
     # sample is still published as *_end for transparency.)
     ctx_ambient = _env_fingerprint()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -119,8 +119,8 @@ def test_pair_cos_kernel_chunking_is_invisible():
 
 
 def test_widen_memoizes_per_path_and_parallelism(spark, tmp_path):
-    """The probe result is memoized on (abspath, parallelism, layout
-    fingerprint): the bench rebuilds each query 5-7x and the fixture
+    """The probe result is memoized in the path's metadata record, per
+    parallelism: the bench rebuilds each query 5-7x and the fixture
     path is immutable, so only the first build pays the partition-count
     probe."""
     import os
@@ -128,14 +128,10 @@ def test_widen_memoizes_per_path_and_parallelism(spark, tmp_path):
     path = str(tmp_path / "memo.parquet")
     spark.range(0, 100).coalesce(1).write.parquet(path)
     df = spark.read.parquet(path)
-    key = (
-        os.path.abspath(path),
-        spark.sparkContext.defaultParallelism,
-        *pq._layout_fingerprint(path),
-    )
-    pq._STARVED.pop(key, None)
+    pq._META.pop(os.path.realpath(path), None)
     pq.widen_split_starved(df, "id", path)
-    assert key in pq._STARVED and pq._STARVED[key] is True
+    meta = pq._META[os.path.realpath(path)]
+    assert meta.starved == {spark.sparkContext.defaultParallelism: True}
 
 
 def test_widen_memo_invalidates_on_rewrite(spark, tmp_path):
