@@ -46,44 +46,11 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 
 
 # The grading driver checks the FIRST 50 entries of queries() in dict
-# insertion order (CORRECTNESS_r02 was exactly the first 50 registry
-# entries). This list pins the window: one representative query per
-# SURVEY.md §2 op-id plus every LLM-pipeline family (dedup, similarity,
-# text, sessions, multimodal, windows, streaming) inside the first 50;
-# redundant variants of already-covered op-ids follow in module order.
-# tests/test_registry_window.py asserts the coverage invariant;
-# `python scripts/next_rotation.py` composes each round's rotation
-# (greedy tag set-cover + never-checked fill) and
-# `python scripts/coverage_gap.py` prints the remaining blind spot.
-# Rotation history (r7: 35-never-checked burn start; r11: 21
-# first-driver rows, blind spot 55 -> 47; r12: 17 first-driver rows
-# incl. the three seeded r02-FAIL retests, blind spot 47 -> 32) lives
-# in git — see this block's history at tags r07..r12.
-# r15 rotation (r14 VERDICT item 1): adopts the committed
-# scripts/rotation_r15_proposal.txt verbatim — 7 first-driver rows,
-# the FINAL blind-spot burn: bpe_pair_frequencies +
-# bpe_heldout_compression (the last two names never driver-checked
-# after r14) plus the five r14-authored ops (the two-level k-means
-# family embedding_kmeans_twolevel_profile / ann_twolevel_ivf_topk /
-# ann_twolevel_recall / semantic_dedup_twolevel_stats, clustering.py,
-# and embedding_decontamination_scan, similarity.py).
-# Accounting: r16 adopted scripts/rotation_r16_proposal.txt (50 names,
-# 10 first-driver rows — the full r15 batch); r17 adopted
-# scripts/rotation_r17_proposal.txt (50 names, 8 first-driver rows —
-# the full r16 batch), closing the blind spot to 0 at r17 start.
-# r18 rotation adopted scripts/rotation_r18_proposal.txt (50 names,
-# 2 first-driver rows — ann_ivfpq_topk_recall + paraphrase_mining_pairs
-# — closing the never-driver-checked blind spot to 0); see git history.
-# r19 rotation (r18 VERDICT item 1): adopts the committed
-# scripts/rotation_r19_proposal.txt verbatim — 50 names, 0 first-driver
-# rows (blind spot stays 0). Selection is staleness-first
-# (scripts/next_rotation.py) under the per-op-id cover invariant; at
-# adoption the registry held 238 names, staleness bound ceil(238/50)
-# = 19 rounds, stalest in-window 12, stalest omitted 10.
-# r20 rotation (r19 VERDICT item 8): adopts the committed
-# scripts/rotation_r20_proposal.txt verbatim — 50 names, 0 first-driver
-# rows; staleness-first fill, invariant OK, stalest in-window 11,
-# stalest omitted 10.
+# insertion order. This list pins that window: one representative query
+# per SURVEY.md §2 op-id plus every LLM-pipeline family (dedup,
+# similarity, text, sessions, multimodal, windows, streaming) inside the
+# first 50; redundant variants of already-covered op-ids follow in
+# module order. tests/test_registry_window.py asserts the invariant.
 _PRIORITY = (
     "ann_ivf_topk",
     "ann_lsh_bucketed_topk",

@@ -21,10 +21,13 @@ def main() -> int:
     names = sys.argv[2:]
 
     from apache_iceberg_with_clickhouse_olake_spark.operators import registry
-    from apache_iceberg_with_clickhouse_olake_spark.session import get_spark
+    from apache_iceberg_with_clickhouse_olake_spark.session import (
+        default_parallelism,
+        get_spark,
+    )
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     spark = get_spark("plan-dump", master=f"local[{cpus}]",
                       shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -542,24 +542,7 @@ def _run_to_sink(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _calib_spin_ms() -> float:
-    """The bench.py machine-epoch probe (identical deterministic Python
-    loop): cross-ROUND absolute-seconds comparisons of this file are
-    only meaningful through it -- r11 measured the same code at calib
-    ~100 ms (r10 epoch) and ~300 ms (r11 epoch) with driver-stage-heavy
-    ops inflating 40-80% while 8x/1x ratios (same-epoch cells) held."""
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        acc = 0
-        for i in range(2_000_000):
-            acc += i * i
-        best = min(best, time.perf_counter() - t0)
-    return round(best * 1000.0, 1)
-
-
 def main() -> None:
-    calib_ms = _calib_spin_ms()
     spark = get_spark("scaling")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.all_queries()
@@ -739,11 +722,6 @@ def main() -> None:
         "then median of 3, full plan executed into the no-op sink",
         "(executor-side materialization; no driver-side collect in the",
         "timed path).",
-        f"Machine epoch at this run: calib_spin_ms = {calib_ms}",
-        "(bench.py's deterministic Python probe). ABSOLUTE seconds are",
-        "only comparable across rounds through this number -- a slower",
-        "interpreter epoch inflates driver-stage-heavy ops 40-80% while",
-        "the 8x/1x RATIOS (same-epoch cells) stay valid.",
         "Machine-readable twin of every number here: SCALING.json.",
         "",
         "| query | 1x | 2x | 4x | 8x | 8x/1x |",
@@ -1262,7 +1240,6 @@ def main() -> None:
             {
                 "sf_base": 0.1,
                 "scales": [1, 2, 4, 8],
-                "calib_spin_ms": calib_ms,
                 "fact_suite": {
                     "queries": fact_table,
                     "worst_ratio_8x_over_1x": fact_worst,

@@ -28,9 +28,12 @@ def _rest(url: str):
 def main() -> int:
     name = sys.argv[1]
     from apache_iceberg_with_clickhouse_olake_spark.operators import registry
-    from apache_iceberg_with_clickhouse_olake_spark.session import get_spark
+    from apache_iceberg_with_clickhouse_olake_spark.session import (
+        default_parallelism,
+        get_spark,
+    )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     spark = get_spark("sql-profile", master=f"local[{cpus}]",
                       shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

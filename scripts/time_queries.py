@@ -23,9 +23,12 @@ def main() -> int:
         del args[i:i + 2]
 
     from apache_iceberg_with_clickhouse_olake_spark.operators import registry
-    from apache_iceberg_with_clickhouse_olake_spark.session import get_spark
+    from apache_iceberg_with_clickhouse_olake_spark.session import (
+        default_parallelism,
+        get_spark,
+    )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     spark = get_spark("time-queries", master=f"local[{cpus}]",
                       shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -917,7 +917,6 @@ def test_bpe_iteration_frames_are_vocabulary_sized(spark, sf_dir):
         release_caches,
     )
     from apache_iceberg_with_clickhouse_olake_spark.operators.tokenizer import (
-        _N_MERGES,
         _merged_symbols,
     )
 
@@ -938,7 +937,6 @@ def test_bpe_iteration_frames_are_vocabulary_sized(spark, sf_dir):
     # by construction: every round is the same fragment over the
     # previous checkpoint)
     assert plan.count("BroadcastNestedLoopJoin") >= 1, plan
-    assert _N_MERGES >= 1  # loop actually ran
 
 
 def test_disjunctive_hulls_push_to_both_scans(spark, sf_dir):
