@@ -957,35 +957,37 @@ def semantic_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("drop_id").isNull())
         .select(assigned["cluster"].alias("cluster"), "vec_id")
     )
-    tmp = tempfile.mkdtemp(prefix="semantic_dedup_apply_")
-    kept.write.mode("overwrite").parquet(tmp)
-    back = spark.read.parquet(tmp)
-    plan_side = assigned.groupBy("cluster").agg(
-        F.countDistinct("vec_id").alias("n_members")
-    )
-    drop_side = dropped.groupBy("cluster").agg(
-        F.count("*").alias("n_dropped")
-    )
-    read_side = back.groupBy("cluster").agg(
-        F.count("*").alias("kept_readback"),
-        F.sum("vec_id").cast("long").alias("kept_id_sum"),
-    )
-    return _finalize(spark, (
-        plan_side.join(read_side, "cluster", "left")
-        .join(drop_side, "cluster", "left")
-        .select(
-            "cluster",
-            "n_members",
-            F.coalesce("kept_readback", F.lit(0)).alias("kept_readback"),
-            F.coalesce("kept_id_sum", F.lit(0)).cast("long").alias(
-                "kept_id_sum"
-            ),
-            F.coalesce("n_dropped", F.lit(0)).cast("long").alias(
-                "n_dropped"
-            ),
+    with tempfile.TemporaryDirectory(
+        prefix="semantic_dedup_apply_", ignore_cleanup_errors=True
+    ) as tmp:
+        kept.write.mode("overwrite").parquet(tmp)
+        back = spark.read.parquet(tmp)
+        plan_side = assigned.groupBy("cluster").agg(
+            F.countDistinct("vec_id").alias("n_members")
         )
-        .orderBy("cluster")
-    ))
+        drop_side = dropped.groupBy("cluster").agg(
+            F.count("*").alias("n_dropped")
+        )
+        read_side = back.groupBy("cluster").agg(
+            F.count("*").alias("kept_readback"),
+            F.sum("vec_id").cast("long").alias("kept_id_sum"),
+        )
+        return _finalize(spark, (
+            plan_side.join(read_side, "cluster", "left")
+            .join(drop_side, "cluster", "left")
+            .select(
+                "cluster",
+                "n_members",
+                F.coalesce("kept_readback", F.lit(0)).alias("kept_readback"),
+                F.coalesce("kept_id_sum", F.lit(0)).cast("long").alias(
+                    "kept_id_sum"
+                ),
+                F.coalesce("n_dropped", F.lit(0)).cast("long").alias(
+                    "n_dropped"
+                ),
+            )
+            .orderBy("cluster")
+        ))
 
 
 # ---------------------------------------------------------------------------

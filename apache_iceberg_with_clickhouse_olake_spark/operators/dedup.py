@@ -20,7 +20,6 @@ oracle reproduces Spark bit-for-bit from shared constants.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -1341,8 +1340,9 @@ def dedup_removal_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = rep_plan.filter(F.col("doc_id") == F.col("cluster")).select(
         "doc_id", "source", "text"
     )
-    tmp = tempfile.mkdtemp(prefix="dedup_apply_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dedup_apply_", ignore_cleanup_errors=True
+    ) as tmp:
         kept.write.mode("overwrite").parquet(tmp)
         back = spark.read.parquet(tmp)
         agg_docs = grouped.groupBy("source").agg(
@@ -1376,8 +1376,6 @@ def dedup_removal_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("source")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(

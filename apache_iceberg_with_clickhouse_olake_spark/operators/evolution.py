@@ -14,7 +14,6 @@ answer directly.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,8 +54,9 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     both, old rows surfacing NULL. The P7 inequality filter
     (!= 'standard', blog :550) runs over the merged view."""
     orders = load_table(spark, sf_dir, "orders")
-    tmp = tempfile.mkdtemp(prefix="evolution_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="evolution_", ignore_cleanup_errors=True
+    ) as tmp:
         v1 = orders.filter(
             F.col("o_orderdate") < F.lit(_EVOLUTION_SPLIT_DATE).cast("date")
         ).select("o_orderkey", "o_custkey", "o_orderdate")
@@ -90,10 +90,7 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("order_count"))
             .orderBy("loyalty_tier")
         )
-        out = spark.createDataFrame(out.collect(), out.schema)
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @query(
@@ -135,8 +132,9 @@ def time_travel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     ev = synthetic_change_events(orders).select("key", "price", "_op", "_seq")
-    tmp = tempfile.mkdtemp(prefix="timetravel_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="timetravel_", ignore_cleanup_errors=True
+    ) as tmp:
         table = f"{tmp}/orders_state"
         write_snapshot(
             apply_cdc_upsert(ev.filter(F.col("_seq") <= 0)).select("key", "price"),
@@ -160,10 +158,7 @@ def time_travel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        out = spark.createDataFrame(out.orderBy("version").collect(), out.schema)
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return spark.createDataFrame(out.orderBy("version").collect(), out.schema)
 
 
 @query(
@@ -189,8 +184,9 @@ def medallion_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     .sql:16-38)."""
     from ..functions import davg
 
-    tmp = tempfile.mkdtemp(prefix="medallion_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="medallion_", ignore_cleanup_errors=True
+    ) as tmp:
         paths = build_medallion(spark, sf_dir, tmp)
         gold = spark.read.parquet(paths["gold_order_metrics"])
         out = (
@@ -203,10 +199,7 @@ def medallion_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy(F.col("total_orders").desc(), "status")
         )
-        out = spark.createDataFrame(out.collect(), out.schema)
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 _UPDATE_PRICE_CUTOFF = 400000.0
@@ -233,8 +226,9 @@ def lake_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    tmp = tempfile.mkdtemp(prefix="update_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="update_", ignore_cleanup_errors=True
+    ) as tmp:
         table = f"{tmp}/orders_state"
         write_snapshot(orders, table)
         v1 = read_snapshot(spark, table)
@@ -254,10 +248,7 @@ def lake_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("status")
         )
-        out = spark.createDataFrame(out.collect(), out.schema)
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 _LAYOUT_ROWS_PER_FILE = 10_000
@@ -300,8 +291,9 @@ def parquet_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
-    tmp = tempfile.mkdtemp(prefix="layout_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="layout_", ignore_cleanup_errors=True
+    ) as tmp:
         limited_dir = f"{tmp}/row_limited"
         small_dir, default_dir = f"{tmp}/small_rg", f"{tmp}/default_rg"
         (
@@ -397,8 +389,6 @@ def parquet_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "compression string, dictionary_encoded boolean, "
             "row_groups_exceed_default boolean, metadata_readers_agree boolean",
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # The engine's session-settings contract (D13): the reference pins
@@ -471,8 +461,9 @@ def lake_compaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     destination.json:261-264): write orders as 16 small files, compact to
     2, assert row counts survive. Returns the before/after accounting."""
     orders = load_table(spark, sf_dir, "orders")
-    tmp = tempfile.mkdtemp(prefix="compact_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="compact_", ignore_cleanup_errors=True
+    ) as tmp:
         data_dir = f"{tmp}/orders_small_files"
         orders.repartition(16).write.parquet(data_dir)
         rows_before = spark.read.parquet(data_dir).count()
@@ -486,8 +477,6 @@ def lake_compaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "files_before int, files_after int, rows_before long, "
             "rows_after long, rows_preserved boolean",
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -562,8 +551,9 @@ def seed_literal_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INSERT INTO ... VALUES literal seed (D4, mysql-init/01-setup.sql:
     74-132 idiom): createDataFrame from literal rows, write to the lake,
     read BACK from disk, aggregate -- the write path carries the values."""
-    tmp = tempfile.mkdtemp(prefix="seed_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="seed_", ignore_cleanup_errors=True
+    ) as tmp:
         df = spark.createDataFrame(
             _SEED_ROWS, "id int, name string, category string, price double"
         )
@@ -579,8 +569,6 @@ def seed_literal_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("category")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -608,8 +596,9 @@ def partition_pruning_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted in tests/test_plans.py) so at 100 TB the query touches
     1/(years x statuses) of the files."""
     orders = load_table(spark, sf_dir, "orders")
-    tmp = tempfile.mkdtemp(prefix="partitioned_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="partitioned_", ignore_cleanup_errors=True
+    ) as tmp:
         part_dir = f"{tmp}/orders_partitioned"
         (
             orders.withColumn(
@@ -632,8 +621,6 @@ def partition_pruning_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -789,15 +776,15 @@ def zorder_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = keyed.select(
         F.expr(_Z_SPARK).cast("long").alias("z"), "o_totalprice"
     )
-    tmp = tempfile.mkdtemp(prefix="zorder_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="zorder_", ignore_cleanup_errors=True
+    ) as tmp:
         (
             z.repartitionByRange(_Z_FILES, "z")
             .sortWithinPartitions("z")
-            .write.mode("overwrite")
-            .parquet(tmp)
+            .write.parquet(f"{tmp}/orders_z")
         )
-        back = spark.read.parquet(tmp)
+        back = spark.read.parquet(f"{tmp}/orders_z")
         out = (
             back.groupBy(
                 F.shiftright(F.col("z"), _Z_BUCKET_SHIFT).alias("zbucket")
@@ -812,5 +799,3 @@ def zorder_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("zbucket")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

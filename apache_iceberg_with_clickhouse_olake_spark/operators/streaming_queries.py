@@ -26,7 +26,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import dsum, dsum_sql
@@ -49,29 +49,45 @@ _STATE_ROLLUP_SQL = f"""
 """
 
 
+# FileStreamSource takes new files oldest-first: staged chunk c gets
+# mtime _ARRIVAL_EPOCH + c, so micro-batches arrive in chunk order.
+_ARRIVAL_EPOCH = 1_700_000_000
+
+
+def _stage_chunks(df: DataFrame, chunk: Column, events_dir: str) -> None:
+    """Stage ``df`` into ``events_dir`` as one parquet file per value c of
+    the integer ``chunk`` expression (``chunk<c>.parquet``, mtime pinned
+    to _ARRIVAL_EPOCH + c) in ONE Spark job: tag each row with an added
+    ``_chunk`` column, repartition by it so every chunk lands in exactly
+    one task, and let partitionBy split the dirs. The tag is a new
+    column because partitionBy strips its column out of the files -- a
+    column the stream schema reads must never be the partition key.
+    Chunks staged by a later call into the same dir arrive after the
+    earlier ones as long as their values are higher."""
+    stage = os.path.join(events_dir, "_stage")
+    (
+        df.withColumn("_chunk", chunk)
+        .repartition("_chunk")
+        .write.mode("overwrite")
+        .partitionBy("_chunk")
+        .parquet(stage)
+    )
+    for part in glob.glob(os.path.join(stage, "_chunk=*", "part-*.parquet")):
+        c = int(os.path.basename(os.path.dirname(part)).split("=", 1)[1])
+        dst = os.path.join(events_dir, f"chunk{c}.parquet")
+        shutil.move(part, dst)
+        os.utime(dst, (_ARRIVAL_EPOCH + c, _ARRIVAL_EPOCH + c))
+    shutil.rmtree(stage, ignore_errors=True)
+
+
 def _stage_seq_files(
     spark: SparkSession, sf_dir: str, events_dir: str, seqs: list[int]
 ) -> None:
-    """Materialize one parquet FILE per sequence step (named seq{s}.parquet
-    with ascending mtimes) so the file stream source sees an ordered,
-    chunked backlog — the batch equivalent of OLake's chunked snapshot."""
-    orders = load_table(spark, sf_dir, "orders")
-    ev = synthetic_change_events(orders)
-    for s in sorted(seqs):
-        stage = os.path.join(events_dir, f"_stage_{s}")
-        (
-            ev.filter(F.col("_seq") == s)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(events_dir, f"seq{s}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage, ignore_errors=True)
-        # FileStreamSource orders by modification time; pin it so the
-        # micro-batch order matches sequence order deterministically.
-        os.utime(dst, (1_700_000_000 + s, 1_700_000_000 + s))
+    """Stage one parquet file per CDC sequence step in ``seqs`` so the
+    file stream source sees an ordered, chunked backlog -- the batch
+    equivalent of OLake's chunked snapshot."""
+    ev = synthetic_change_events(load_table(spark, sf_dir, "orders"))
+    _stage_chunks(ev.filter(F.col("_seq").isin(seqs)), F.col("_seq"), events_dir)
 
 
 def _state_rollup(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -95,22 +111,16 @@ def streaming_chunked_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (maxFilesPerTrigger=1 => 4 micro-batches) through the checkpointed
     foreachBatch upsert; the final state rollup must equal the batch
     merge-on-read apply (oracle)."""
-    tmp = tempfile.mkdtemp(prefix="spark_graft_c2_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_c2_", ignore_cleanup_errors=True
+    ) as tmp:
         events_dir = os.path.join(tmp, "events")
-        os.makedirs(events_dir)
         _stage_seq_files(spark, sf_dir, events_dir, [0, 1, 2, 3])
         state_dir = os.path.join(tmp, "state")
         run_cdc_upsert_stream(
-            spark,
-            events_dir,
-            state_dir,
-            os.path.join(tmp, "ckpt"),
-            max_files_per_trigger=1,
+            spark, events_dir, state_dir, os.path.join(tmp, "ckpt")
         )
         return _state_rollup(spark, state_dir)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -124,29 +134,21 @@ def streaming_restart_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME checkpoint (only unread files replay), then restart once more
     with nothing new (must be a no-op). Final state rollup must equal the
     one-shot batch apply (oracle)."""
-    tmp = tempfile.mkdtemp(prefix="spark_graft_c6_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_c6_", ignore_cleanup_errors=True
+    ) as tmp:
         events_dir = os.path.join(tmp, "events")
-        os.makedirs(events_dir)
         state_dir = os.path.join(tmp, "state")
         ckpt = os.path.join(tmp, "ckpt")
         # Run 1: snapshot + first updates, then "crash".
         _stage_seq_files(spark, sf_dir, events_dir, [0, 1])
-        run_cdc_upsert_stream(
-            spark, events_dir, state_dir, ckpt, max_files_per_trigger=1
-        )
+        run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt)
         # Run 2 (restart): backlog grew; checkpoint skips seq 0-1.
         _stage_seq_files(spark, sf_dir, events_dir, [2, 3])
-        run_cdc_upsert_stream(
-            spark, events_dir, state_dir, ckpt, max_files_per_trigger=1
-        )
+        run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt)
         # Run 3 (restart, no new data): exactly-once => state unchanged.
-        run_cdc_upsert_stream(
-            spark, events_dir, state_dir, ckpt, max_files_per_trigger=1
-        )
+        run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt)
         return _state_rollup(spark, state_dir)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -185,65 +187,50 @@ def streaming_vector_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain) pins value-for-value. Proves the online half of the
     clustering family: chunked arrival, restart-safe idempotent sink,
     stateless per-batch projection."""
-    import tempfile
-
     from ..operators.clustering import _kmeans_state_frames
     from ..operators.similarity import _dvec
     from ..streaming import run_vector_assign_stream
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    work = tempfile.mkdtemp(prefix="stream_vec_assign_")
-    vec_dir = os.path.join(work, "vectors")
-    index_dir = os.path.join(work, "index")
-    out_dir = os.path.join(work, "assigned")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(vec_dir, exist_ok=True)
-
-    # train the index on the batch table and publish the artifact; the
-    # cache_scope drops the Lloyd training caches (persisted vector
-    # frame) as soon as the artifact is on disk -- the serving stream
-    # no longer needs them, and an exception mid-train cannot leak them
     from ._cache import cache_scope
 
-    with cache_scope():
-        _, cent = _kmeans_state_frames(
-            emb.select("vec_id", _dvec(F.col("embedding")).alias("dv"))
-        )
-        cent.write.mode("overwrite").parquet(index_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    with tempfile.TemporaryDirectory(
+        prefix="stream_vec_assign_", ignore_cleanup_errors=True
+    ) as work:
+        vec_dir = os.path.join(work, "vectors")
+        index_dir = os.path.join(work, "index")
+        out_dir = os.path.join(work, "assigned")
 
-    # stage the "arriving" vectors as ordered chunk files
-    for c in range(_N_VEC_CHUNKS):
-        stage = os.path.join(work, f"_stage_{c}")
-        (
-            emb.filter(F.col("vec_id") % _N_VEC_CHUNKS == c)
-            .select("vec_id", "embedding")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        parts = glob.glob(os.path.join(stage, "part-*.parquet"))
-        if not parts:
-            # an empty residue class (sparse or non-contiguous vec_ids)
-            # writes no part file; skip the chunk instead of IndexError
-            shutil.rmtree(stage, ignore_errors=True)
-            continue
-        part = parts[0]
-        dst = os.path.join(vec_dir, f"chunk{c}.parquet")
-        shutil.move(part, dst)
-        shutil.rmtree(stage, ignore_errors=True)
-        os.utime(dst, (1_700_000_000 + c, 1_700_000_000 + c))
+        # train the index on the batch table and publish the artifact;
+        # the cache_scope drops the Lloyd training caches (persisted
+        # vector frame) as soon as the artifact is on disk -- the serving
+        # stream no longer needs them, and an exception mid-train cannot
+        # leak them
+        with cache_scope():
+            _, cent = _kmeans_state_frames(
+                emb.select("vec_id", _dvec(F.col("embedding")).alias("dv"))
+            )
+            cent.write.mode("overwrite").parquet(index_dir)
 
-    run_vector_assign_stream(spark, vec_dir, index_dir, out_dir, ckpt)
-
-    assigned = spark.read.parquet(out_dir)
-    return (
-        assigned.groupBy("cluster")
-        .agg(
-            F.count("*").alias("n_vectors"),
-            F.min("vec_id").alias("min_vec_id"),
+        # stage the "arriving" vectors as ordered chunk files (an empty
+        # residue class stages no file)
+        _stage_chunks(
+            emb.select("vec_id", "embedding"),
+            F.col("vec_id") % _N_VEC_CHUNKS,
+            vec_dir,
         )
-        .orderBy("cluster")
-    )
+        run_vector_assign_stream(
+            spark, vec_dir, index_dir, out_dir, os.path.join(work, "ckpt")
+        )
+        out = (
+            spark.read.parquet(out_dir)
+            .groupBy("cluster")
+            .agg(
+                F.count("*").alias("n_vectors"),
+                F.min("vec_id").alias("min_vec_id"),
+            )
+            .orderBy("cluster")
+        )
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -369,49 +356,26 @@ def events_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"cutoff {t_hold} + {_WM_MARGIN_SECS}s margin; widen the "
             "fixture or shrink _WM_HOLD_DAYS/_WM_MID_DAYS"
         )
-    work = tempfile.mkdtemp(prefix="stream_wm_")
-    events_dir = os.path.join(work, "events")
-    out_dir = os.path.join(work, "out")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(events_dir, exist_ok=True)
-    # ONE staging job for all three chunks (r10 VERDICT item 5): tag
-    # each row with its chunk, repartition BY the tag so every chunk
-    # lands in exactly one task, and let partitionBy split the dirs --
-    # replaces r9's three sequential coalesce(1) write jobs (three
-    # events scans) with a single scan+shuffle+write.
-    stage = os.path.join(work, "_stage")
-    (
-        events.withColumn(
-            "chunk",
-            F.when(held, F.lit(2))
-            .when(es < F.lit(t_mid), F.lit(0))
-            .otherwise(F.lit(1)),
-        )
-        .repartition("chunk")
-        .write.mode("overwrite")
-        .partitionBy("chunk")
-        .parquet(stage)
+    chunk = (
+        F.when(held, F.lit(2))
+        .when(es < F.lit(t_mid), F.lit(0))
+        .otherwise(F.lit(1))
     )
-    for c in range(3):
-        parts = glob.glob(os.path.join(stage, f"chunk={c}", "part-*.parquet"))
-        if not parts:
-            continue
-        dst = os.path.join(events_dir, f"chunk{c}.parquet")
-        shutil.move(parts[0], dst)
-        os.utime(dst, (1_700_000_000 + c, 1_700_000_000 + c))
-    shutil.rmtree(stage, ignore_errors=True)
-
-    try:
-        run_watermark_window_stream(spark, events_dir, out_dir, ckpt)
+    with tempfile.TemporaryDirectory(
+        prefix="stream_wm_", ignore_cleanup_errors=True
+    ) as work:
+        events_dir = os.path.join(work, "events")
+        out_dir = os.path.join(work, "out")
+        _stage_chunks(events, chunk, events_dir)
+        run_watermark_window_stream(
+            spark, events_dir, out_dir, os.path.join(work, "ckpt")
+        )
         out = (
             spark.read.parquet(out_dir)
             .select("window_start_epoch", "n_events", "window_value")
             .orderBy("window_start_epoch")
         )
-        # snapshot before the temp stream dirs are deleted
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -436,8 +400,8 @@ def events_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL stateful streaming dedup: the event stream arrives as one
-    delivered chunk plus a byte-identical REPLAY of that chunk in a
-    LATER micro-batch (the at-least-once transport case: a source retry
+    delivered chunk plus a REPLAY of that chunk's rows in a LATER
+    micro-batch (the at-least-once transport case: a source retry
     re-delivers a whole file). The watermarked ``dropDuplicates`` state
     (streaming.run_stream_dedup) must swallow every replayed row, so
     the sink equals the PLAIN batch rollup of the events table -- which
@@ -470,26 +434,20 @@ def streaming_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    work = tempfile.mkdtemp(prefix="stream_dedup_")
-    events_dir = os.path.join(work, "events")
-    out_dir = os.path.join(work, "out")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(events_dir, exist_ok=True)
-    try:
-        stage = os.path.join(work, "_stage")
-        events.coalesce(1).write.mode("overwrite").parquet(stage)
-        parts = glob.glob(os.path.join(stage, "part-*.parquet"))
-        delivered = os.path.join(events_dir, "chunk0.parquet")
-        shutil.move(parts[0], delivered)
-        shutil.rmtree(stage, ignore_errors=True)
-        os.utime(delivered, (1_700_000_000, 1_700_000_000))
-        # the at-least-once replay: the SAME file re-delivered verbatim,
-        # arriving in the next micro-batch (file source orders by mtime)
-        replay = os.path.join(events_dir, "chunk0_replay.parquet")
-        shutil.copyfile(delivered, replay)
-        os.utime(replay, (1_700_000_001, 1_700_000_001))
-
-        run_stream_dedup(spark, events_dir, out_dir, ckpt)
+    with tempfile.TemporaryDirectory(
+        prefix="stream_dedup_", ignore_cleanup_errors=True
+    ) as work:
+        events_dir = os.path.join(work, "events")
+        out_dir = os.path.join(work, "out")
+        # chunk 0 is the delivered file; chunk 1, the at-least-once
+        # replay, holds the same rows again and arrives in the next
+        # micro-batch
+        _stage_chunks(
+            events, F.explode(F.array(F.lit(0), F.lit(1))), events_dir
+        )
+        run_stream_dedup(
+            spark, events_dir, out_dir, os.path.join(work, "ckpt")
+        )
         out = (
             spark.read.parquet(out_dir)
             .groupBy("event_type")
@@ -500,7 +458,4 @@ def streaming_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("event_type")
         )
-        # snapshot before the temp stream dirs are deleted
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)

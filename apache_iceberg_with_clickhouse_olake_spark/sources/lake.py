@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -205,34 +206,44 @@ class ParquetBackend:
     def compact(
         self, spark: SparkSession, data_dir: str, target_files: int
     ) -> tuple[int, int]:
-        import shutil
+        recover_dir(data_dir)
+        before = _n_parquet_files(data_dir)
+        replace_dir(spark.read.parquet(data_dir).coalesce(target_files), data_dir)
+        return before, _n_parquet_files(data_dir)
 
-        # Crash recovery for the sibling-rename swap below (same protocol
-        # as streaming._recover_state): a death between the two renames
-        # leaves the data at '<dir>.old' and no live dir — restore it
-        # (the compacted copy never became visible, so nothing is lost);
-        # stale '.compact' staging and '.old' leftovers are discarded so
-        # the renames below can never collide with them.
-        bak = data_dir.rstrip("/") + ".old"
-        tmp = data_dir.rstrip("/") + ".compact"
-        if os.path.exists(bak) and not os.path.exists(data_dir):
-            os.rename(bak, data_dir)
-        shutil.rmtree(bak, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
 
-        before = len(
-            [f for f in os.listdir(data_dir) if f.endswith(".parquet")]
-        )
-        df = spark.read.parquet(data_dir)
-        df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-        # Atomic swap (single-FS local mode; a lake commits a snapshot).
-        os.rename(data_dir, bak)
-        os.rename(tmp, data_dir)
-        shutil.rmtree(bak)
-        after = len(
-            [f for f in os.listdir(data_dir) if f.endswith(".parquet")]
-        )
-        return before, after
+def _n_parquet_files(d: str) -> int:
+    return len([f for f in os.listdir(d) if f.endswith(".parquet")])
+
+
+def recover_dir(path: str) -> None:
+    """Crash recovery for :func:`replace_dir`: a death between its two
+    renames leaves the data at '<path>.old' and no live dir -- restore
+    it (the replacement never became visible, so nothing is lost).
+    Stale '.old' and '.next' leftovers are discarded so the next swap's
+    renames can never collide with them."""
+    bak = path.rstrip("/") + ".old"
+    if os.path.exists(bak) and not os.path.exists(path):
+        os.rename(bak, path)
+    shutil.rmtree(bak, ignore_errors=True)
+    shutil.rmtree(path.rstrip("/") + ".next", ignore_errors=True)
+
+
+def replace_dir(df: DataFrame, path: str) -> None:
+    """Write ``df`` as the new contents of ``path``: write to the sibling
+    '<path>.next', then swap it in by two renames (single-FS local mode;
+    a lake commits a snapshot). ``df`` may read ``path`` itself: the
+    source files are only retired after the write finished, never
+    overwritten in place under a job that still reads them."""
+    tmp = path.rstrip("/") + ".next"
+    bak = path.rstrip("/") + ".old"
+    shutil.rmtree(tmp, ignore_errors=True)
+    df.write.mode("overwrite").parquet(tmp)
+    shutil.rmtree(bak, ignore_errors=True)
+    if os.path.exists(path):
+        os.rename(path, bak)
+    os.rename(tmp, path)
+    shutil.rmtree(bak, ignore_errors=True)
 
 
 class IcebergBackend:
@@ -387,15 +398,9 @@ def read_snapshot(spark: SparkSession, table_dir: str,
     return _backend(spark).read_snapshot(spark, table_dir, version)
 
 
-def snapshot_history(spark_or_dir, table_dir: str | None = None) -> list[int]:
-    """L4: the snapshot listing (metadata-table equivalent).
-
-    Accepts ``snapshot_history(spark, table_dir)``; the legacy
-    single-argument form ``snapshot_history(table_dir)`` still works and
-    uses the parquet backend directly."""
-    if table_dir is None:
-        return ParquetBackend()._version_dirs(spark_or_dir)
-    return _backend(spark_or_dir).snapshot_history(spark_or_dir, table_dir)
+def snapshot_history(spark: SparkSession, table_dir: str) -> list[int]:
+    """L4: the snapshot listing (metadata-table equivalent)."""
+    return _backend(spark).snapshot_history(spark, table_dir)
 
 
 def compact(spark: SparkSession, data_dir: str, target_files: int) -> tuple[int, int]:

@@ -16,7 +16,8 @@ SURVEY.md §2.10 C1-C6 / §3.2).
   ``operators.sessions.session_window_rollup``).
 
 Micro-batch cadence (C3, destination.json:96-98) maps to ``trigger``;
-tests use ``availableNow`` so the whole backlog drains deterministically.
+every stream here drains with ``availableNow`` (:func:`_drain`), so the
+whole backlog drains deterministically and the call returns.
 
 Scale notes: a CDC micro-batch reads and writes only its own events --
 it never touches the published state, so its cost is flat in the table
@@ -31,6 +32,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -41,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from ..sources.lake import recover_dir, replace_dir
 
 CDC_EVENT_SCHEMA = StructType(
     [
@@ -54,34 +58,38 @@ CDC_EVENT_SCHEMA = StructType(
 )
 
 
-def _recover_state(state_dir: str) -> None:
-    """Crash recovery for the sibling-rename protocol: a crash between
-    the two renames of a publish leaves the state at '<dir>.old' and no
-    live dir — restore it. Its delta log comes back with it, so nothing
-    is lost: the next publish merges those deltas again. Stale '.next'
-    staging dirs are discarded."""
-    bak = state_dir.rstrip("/") + ".old"
-    if os.path.exists(bak) and not os.path.exists(state_dir):
-        os.rename(bak, state_dir)
-    shutil.rmtree(bak, ignore_errors=True)
-    shutil.rmtree(state_dir.rstrip("/") + ".next", ignore_errors=True)
+def _file_stream(
+    spark: SparkSession,
+    schema: StructType,
+    src_dir: str,
+    max_files_per_trigger: int | None = 1,
+) -> DataFrame:
+    """A parquet file-source stream over ``src_dir`` (C2: by default one
+    file per micro-batch, so state and watermarks cross batches; None
+    lets one micro-batch take the whole backlog)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(src_dir)
 
 
-def _replace_state(df: DataFrame, state_dir: str) -> None:
-    """Write ``df`` as the new state via write-to-sibling + atomic rename
-    (the sources.lake.compact pattern). Never reads and overwrites the
-    same path in one job: a rewrite-in-place guarded only by cache()
-    corrupts state if a cached partition is evicted and recomputed after
-    the source files are deleted."""
-    tmp = state_dir.rstrip("/") + ".next"
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
-    bak = state_dir.rstrip("/") + ".old"
-    shutil.rmtree(bak, ignore_errors=True)
-    if os.path.exists(state_dir):
-        os.rename(state_dir, bak)
-    os.rename(tmp, state_dir)
-    shutil.rmtree(bak, ignore_errors=True)
+def _drain(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """Start ``writer`` checkpointed at ``checkpoint_dir`` and block until
+    it has drained the backlog: the one trigger policy of every stream
+    here (availableNow, so a run is deterministic and terminates)."""
+    writer = writer.option("checkpointLocation", checkpoint_dir)
+    writer.trigger(availableNow=True).start().awaitTermination()
+
+
+def _drain_to_memory(
+    df: DataFrame, name: str, output_mode: str, checkpoint_dir: str
+) -> DataFrame:
+    """:func:`_drain` into the in-memory sink ``name``; returns its table."""
+    _drain(
+        df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        checkpoint_dir,
+    )
+    return df.sparkSession.table(name)
 
 
 def _delta_dir(state_dir: str) -> str:
@@ -140,7 +148,7 @@ def run_cdc_upsert_stream(
     events_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
+    max_files_per_trigger: int = 1,
 ) -> None:
     """Tail a directory of CDC event parquet files (C2: chunked reads via
     maxFilesPerTrigger) into the state table's delta log; drains the
@@ -148,27 +156,17 @@ def run_cdc_upsert_stream(
 
     Publish is the single merge of the run: base + every delta through
     :func:`read_cdc_state` with tombstones compacted out (the
-    ``rewrite_data_files`` step), written by :func:`_replace_state`.
+    ``rewrite_data_files`` step), swapped in by ``sources.lake.replace_dir``.
     The deltas live inside the directory being replaced, so the rename
     that publishes the merge also retires them. A run that applied no
     batch and left no deltas publishes nothing."""
     # C6: if a prior run died between the state renames, restore the
     # backup (with its unpublished deltas) before the stream resumes.
-    _recover_state(state_dir)
-    reader = (
-        spark.readStream.schema(CDC_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger or 1)
-        .parquet(events_dir)
-    )
-    q = (
-        reader.writeStream.foreachBatch(_apply_batch(state_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    recover_dir(state_dir)
+    stream = _file_stream(spark, CDC_EVENT_SCHEMA, events_dir, max_files_per_trigger)
+    _drain(stream.writeStream.foreachBatch(_apply_batch(state_dir)), checkpoint_dir)
     if _has_deltas(state_dir):
-        _replace_state(read_cdc_state(spark, state_dir), state_dir)
+        replace_dir(read_cdc_state(spark, state_dir), state_dir)
 
 
 FIRST_SEEN_STATE_SCHEMA = StructType([StructField("seen", LongType())])
@@ -220,28 +218,16 @@ def run_first_seen_stream(
     schema = StructType(
         [StructField("event_id", LongType()), StructField("user_id", LongType())]
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
-    out = stream.groupBy("user_id").applyInPandasWithState(
+    out = _file_stream(spark, schema, events_dir).groupBy(
+        "user_id"
+    ).applyInPandasWithState(
         first_seen_tracker,
         outputStructType=FIRST_SEEN_OUT_SCHEMA,
         stateStructType=FIRST_SEEN_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("first_seen")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("first_seen")
+    return _drain_to_memory(out, "first_seen", "append", checkpoint_dir)
 
 
 def run_streaming_dedup(
@@ -259,20 +245,22 @@ def run_streaming_dedup(
             StructField("fingerprint", StringType()),
         ]
     )
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(events_dir)
-    deduped = stream.dropDuplicates(["fingerprint"])
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("stream_dedup")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    deduped = _file_stream(spark, schema, events_dir).dropDuplicates(
+        ["fingerprint"]
     )
-    q.awaitTermination()
-    return spark.table("stream_dedup")
+    return _drain_to_memory(deduped, "stream_dedup", "append", checkpoint_dir)
+
+
+# Event rows with an integer microsecond timestamp, the input of the
+# watermarked window rollups below.
+_EPOCH_EVENT_SCHEMA = StructType(
+    [
+        StructField("event_id", LongType()),
+        StructField("ts_epoch_us", LongType()),
+        StructField("user_id", LongType()),
+        StructField("value", DoubleType()),
+    ]
+)
 
 
 def run_streaming_tumbling(
@@ -285,17 +273,8 @@ def run_streaming_tumbling(
     """Watermarked tumbling-window aggregation over a file-sourced event
     stream (the streaming twin of operators.windows.events_tumbling_windows
     -- same buckets, incremental state instead of a batch shuffle)."""
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts_epoch_us", LongType()),
-            StructField("user_id", LongType()),
-            StructField("value", DoubleType()),
-        ]
-    )
     stream = (
-        spark.readStream.schema(schema)
-        .parquet(events_dir)
+        _file_stream(spark, _EPOCH_EVENT_SCHEMA, events_dir, None)
         .withColumn("ts", F.timestamp_micros(F.col("ts_epoch_us")))
         .withWatermark("ts", watermark)
     )
@@ -313,16 +292,7 @@ def run_streaming_tumbling(
             "approx_users",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("stream_tumbling")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("stream_tumbling")
+    return _drain_to_memory(agg, "stream_tumbling", "complete", checkpoint_dir)
 
 
 def run_streaming_sessionization(
@@ -335,17 +305,8 @@ def run_streaming_sessionization(
     """Watermarked session_window rollup over a file-sourced event stream;
     drains with availableNow into an in-memory sink and returns the result
     (complete mode keeps the full session table for assertion)."""
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts_epoch_us", LongType()),
-            StructField("user_id", LongType()),
-            StructField("value", DoubleType()),
-        ]
-    )
     stream = (
-        spark.readStream.schema(schema)
-        .parquet(events_dir)
+        _file_stream(spark, _EPOCH_EVENT_SCHEMA, events_dir, None)
         .withColumn("ts", F.timestamp_micros(F.col("ts_epoch_us")))
         .withWatermark("ts", watermark)
     )
@@ -360,16 +321,7 @@ def run_streaming_sessionization(
             "n_events",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("stream_sessions")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("stream_sessions")
+    return _drain_to_memory(agg, "stream_sessions", "complete", checkpoint_dir)
 
 
 DOC_STREAM_SCHEMA = StructType(
@@ -408,16 +360,8 @@ def run_incremental_dedup_stream(
     def body(batch: DataFrame, batch_id: int) -> None:
         _dedup_index_body(index_dir, batch, batch_id)
 
-    q = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-        .writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _file_stream(spark, DOC_STREAM_SCHEMA, docs_dir)
+    _drain(stream.writeStream.foreachBatch(body), checkpoint_dir)
 
 
 def _dedup_index_body(index_dir: str, batch: DataFrame, batch_id: int) -> None:
@@ -425,66 +369,66 @@ def _dedup_index_body(index_dir: str, batch: DataFrame, batch_id: int) -> None:
     module-level so the chaos tests exercise the REAL code path (the
     torn-write test wraps it; an inline-copy would let the copy and the
     product drift)."""
-    from pyspark.sql import Window
-
     from ..functions import norm_text
 
-    bspark = batch.sparkSession
+    rows = batch.select(
+        "doc_id",
+        "source",
+        F.md5(norm_text(F.col("text"))).alias("fp"),
+        F.lit(batch_id).alias("batch_id"),
+    )
+    _write_new_fingerprints(rows, index_dir, batch_id)
+
+
+def _write_new_fingerprints(rows: DataFrame, sink_dir: str, batch_id: int) -> None:
+    """Replay-safe partitioned sink for fingerprint-keyed ingestion: keep
+    the lowest ``doc_id`` per ``fp`` of ``rows``, drop the fingerprints
+    already in the sink's other ``batch=<id>`` partitions, and overwrite
+    this batch's own ``<sink_dir>/batch=<batch_id>``. A replayed batch
+    (crash after the write, before its offset committed) rewrites the
+    same partition with the same rows instead of appending twice; on a
+    real lake this is one MERGE INTO."""
+    from pyspark.sql import Window
+
     w = Window.partitionBy("fp").orderBy("doc_id")
     fresh = (
-        batch.select(
-            "doc_id",
-            "source",
-            F.md5(norm_text(F.col("text"))).alias("fp"),
-        )
-        .withColumn("rn", F.row_number().over(w))
+        rows.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-    # Remove any leftover batch=<id> partition BEFORE reading the
-    # index. The where-filter below already excluded this batch's
-    # rows from the anti-join (the replay self-erasure fix), but a
-    # kill MID-write — rather than after it — leaves torn parquet
-    # files whose footers the index read's schema inference/file
-    # listing can still open, wedging every replay until manual
-    # cleanup. Deleting first is safe by the checkpoint contract: a
-    # batch id is only re-delivered if its offset never committed, so
-    # anything under this partition is a failed attempt's partial
-    # output.
-    own_part = os.path.join(index_dir, f"batch={batch_id}")
-    if os.path.isdir(own_part):
-        shutil.rmtree(own_part, ignore_errors=True)
-    if os.path.isdir(index_dir) and any(
-        name.startswith("batch=") for name in os.listdir(index_dir)
+    # Remove any leftover batch=<id> partition BEFORE reading the sink.
+    # A kill MID-write leaves torn parquet files whose footers the sink
+    # read's schema inference/file listing can still open, wedging every
+    # replay until manual cleanup. Deleting first is safe by the
+    # checkpoint contract: a batch id is only re-delivered if its offset
+    # never committed, so anything under this partition is a failed
+    # attempt's partial output.
+    own_part = os.path.join(sink_dir, f"batch={batch_id}")
+    shutil.rmtree(own_part, ignore_errors=True)
+    if os.path.isdir(sink_dir) and any(
+        name.startswith("batch=") for name in os.listdir(sink_dir)
     ):
-        # Belt-and-braces: still exclude THIS batch's partition from
-        # the anti-join (crash-after-write replay would otherwise
-        # anti-join against its own write and erase its fingerprints).
-        # `batch` is the discovered partition column of batch=<id>.
+        # Belt-and-braces: still exclude THIS batch's partition from the
+        # anti-join (a replay would otherwise anti-join against its own
+        # write and erase its fingerprints). `batch` is the discovered
+        # partition column of batch=<id>.
         existing = (
-            bspark.read.parquet(index_dir)
+            rows.sparkSession.read.parquet(sink_dir)
             .where(F.col("batch") != batch_id)
             .select("fp")
         )
         fresh = fresh.join(existing, "fp", "left_anti")
-    # Fingerprint-keyed adaptive write (the r6 coalesce(1) wart, fixed
-    # properly): the fingerprint window upstream already hash-partitions
-    # the batch by fp, and that partitioning flows straight into the
-    # sink -- an explicit repartition(k, "fp") here is provably elided
-    # by Catalyst as redundant. AQE then sizes the exchange by BYTES
-    # (advisoryPartitionSizeInBytes), which is exactly the right knob:
-    # a trickle batch (maxFilesPerTrigger=1) coalesces to one file,
-    # while a backfill-sized batch keeps ~64 MB-per-task granularity and
-    # fans the write across the cluster instead of serializing through
-    # one core. The replay guard above is unchanged -- it deletes the
-    # whole batch=<id> directory, so multi-file partitions replay
-    # exactly like single-file ones (pinned by
-    # test_dedup_index_backfill_batch_writes_multiple_files).
-    (
-        fresh.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .parquet(own_part)
-    )
+    # Fingerprint-keyed adaptive write: the fp window above already
+    # hash-partitions the batch by fp, that partitioning flows straight
+    # into the sink (an explicit repartition(k, "fp") would be elided by
+    # Catalyst as redundant), and AQE sizes the exchange by BYTES
+    # (advisoryPartitionSizeInBytes). A trickle batch
+    # (maxFilesPerTrigger=1) coalesces to one file, while a
+    # backfill-sized batch keeps ~64 MB-per-task granularity and fans
+    # the write across the cluster. Multi-file partitions replay like
+    # single-file ones because the whole batch=<id> dir is deleted first
+    # (pinned by test_dedup_index_backfill_batch_writes_multiple_files).
+    fresh.write.mode("overwrite").parquet(own_part)
 
 
 def run_corpus_ingest_stream(
@@ -519,16 +463,8 @@ def run_corpus_ingest_stream(
     def body(batch: DataFrame, batch_id: int) -> None:
         _corpus_ingest_body(corpus_dir, n_shards, batch, batch_id)
 
-    q = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-        .writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _file_stream(spark, DOC_STREAM_SCHEMA, docs_dir)
+    _drain(stream.writeStream.foreachBatch(body), checkpoint_dir)
 
 
 def _corpus_ingest_body(
@@ -536,66 +472,30 @@ def _corpus_ingest_body(
 ) -> None:
     """The foreachBatch body of :func:`run_corpus_ingest_stream`,
     module-level so the chaos tests exercise the real code path."""
-    from pyspark.sql import Window
-
     from ..functions import md5_int60, norm_text, tokens
 
-    bspark = batch.sparkSession
     toks = tokens(F.col("text"))
     n_tokens = F.size(toks)
     n_punct = F.length(F.regexp_replace("text", "[^.!?,;:]", ""))
     punct_ratio = n_punct.cast("double") / F.when(
         F.length("text") == 0, F.lit(None)
     ).otherwise(F.length("text"))
-    w = Window.partitionBy("fp").orderBy("doc_id")
     shard = (
         md5_int60(
             F.concat(F.lit("pack-"), F.col("doc_id").cast("string"))
         )
         % n_shards
     ).cast("long")
-    fresh = (
-        batch.filter(
-            (n_tokens >= 5) & (n_tokens <= 10000) & (punct_ratio < 0.2)
-        )
-        .select(
-            "doc_id",
-            "source",
-            n_tokens.cast("long").alias("n_toks"),
-            shard.alias("shard"),
-            F.md5(norm_text(F.col("text"))).alias("fp"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
+    rows = batch.filter(
+        (n_tokens >= 5) & (n_tokens <= 10000) & (punct_ratio < 0.2)
+    ).select(
+        "doc_id",
+        "source",
+        n_tokens.cast("long").alias("n_toks"),
+        shard.alias("shard"),
+        F.md5(norm_text(F.col("text"))).alias("fp"),
     )
-    # Same torn-file guard as _dedup_index_body: a kill mid-write leaves
-    # corrupt parquet in this batch's own partition that the corpus
-    # read's schema inference could open; delete it before reading
-    # (safe: a batch id only replays when its offset never committed).
-    own_part = os.path.join(corpus_dir, f"batch={batch_id}")
-    if os.path.isdir(own_part):
-        shutil.rmtree(own_part, ignore_errors=True)
-    if os.path.isdir(corpus_dir) and any(
-        name.startswith("batch=") for name in os.listdir(corpus_dir)
-    ):
-        existing = (
-            bspark.read.parquet(corpus_dir)
-            .where(F.col("batch") != batch_id)
-            .select("fp")
-        )
-        fresh = fresh.join(existing, "fp", "left_anti")
-    # Fingerprint-keyed adaptive write -- the same discipline as the
-    # dedup-index sink above (and the r8 VERDICT's one scale wart): the
-    # fp dedup window already hash-partitions the batch, that
-    # partitioning flows into the sink, and AQE sizes the files by
-    # bytes. A trickle batch still lands as one file; a backfill-sized
-    # batch fans out across the cluster instead of serializing its
-    # corpus write through a single task.
-    (
-        fresh.write.mode("overwrite")
-        .parquet(os.path.join(corpus_dir, f"batch={batch_id}"))
-    )
+    _write_new_fingerprints(rows, corpus_dir, batch_id)
 
 
 # ---------------------------------------------------------------------------
@@ -648,16 +548,8 @@ def run_vector_assign_stream(
             .parquet(os.path.join(out_dir, f"batch={batch_id}"))
         )
 
-    q = (
-        spark.readStream.schema(VEC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(vec_dir)
-        .writeStream.foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _file_stream(spark, VEC_STREAM_SCHEMA, vec_dir)
+    _drain(stream.writeStream.foreachBatch(body), checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -717,9 +609,7 @@ def run_watermark_window_stream(
     stream's state partitioning is fixed at first-checkpoint time)."""
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     agg = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
+        _file_stream(spark, EVENT_STREAM_SCHEMA, events_dir)
         .withWatermark("ts", f"{WM_DELAY_SECS} seconds")
         .groupBy(F.window("ts", f"{WM_WINDOW_SECS} seconds").alias("w"))
         .agg(
@@ -738,15 +628,12 @@ def run_watermark_window_stream(
         "spark.sql.shuffle.partitions", str(WM_STATE_PARTITIONS)
     )
     try:
-        q = (
+        _drain(
             agg.writeStream.outputMode("append")
             .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+            .option("path", out_dir),
+            checkpoint_dir,
         )
-        q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
@@ -784,18 +671,13 @@ def run_stream_dedup(
     append mode does not wait for the watermark), so the sink holds
     exactly the distinct events."""
     deduped = (
-        spark.readStream.schema(DEDUP_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
+        _file_stream(spark, DEDUP_STREAM_SCHEMA, events_dir)
         .withWatermark("ts", f"{WM_DELAY_SECS} seconds")
         .dropDuplicates(["event_id", "ts"])
     )
-    q = (
+    _drain(
         deduped.writeStream.outputMode("append")
         .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", out_dir),
+        checkpoint_dir,
     )
-    q.awaitTermination()

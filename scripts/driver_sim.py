@@ -29,10 +29,17 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 def main() -> int:
     import __spark_entry__ as e
 
+    from apache_iceberg_with_clickhouse_olake_spark.session import (
+        default_parallelism,
+    )
+
+    # A raw builder on purpose, not session.get_spark: the grading
+    # driver builds its own session, and only a raw one proves that path.
+    cpus = default_parallelism()
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("driver-sim")
-        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", "8g")

@@ -23,8 +23,8 @@ NON_QUERY = {
     "D10": "N/A in Spark (informational); partition/sort layout serves pruning "
            "(partition_pruning_roundtrip, O5 sort-on-write)",
     "D13": "session.py get_spark (AQE/Arrow/shuffle/timezone settings surface)",
-    "L3": "N/A for parquet fallback; Iceberg manifest-cache config documented "
-          "in sources/lake.py",
+    "L3": "sources/parquet.read_table (per-file-version schema record) + "
+          "tests/test_table_meta.py",
 }
 
 GROUPS = [

@@ -3,6 +3,9 @@ mirror of the driver's correctness gate (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pytest
 
 from apache_iceberg_with_clickhouse_olake_spark.operators import registry
@@ -17,19 +20,31 @@ _ROWS_ONLY_NAMES = sorted(
 )
 
 
+@pytest.fixture
+def scratch_root(tmp_path, monkeypatch):
+    """A per-test ``tempfile`` root: every scratch dir a query makes
+    lands here, so the test can check the query removed it again."""
+    root = tmp_path / "scratch"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+    return root
+
+
 @pytest.mark.parametrize("name", _ORACLE_NAMES)
-def test_query_matches_oracle(spark, duck, sf_dir, name):
+def test_query_matches_oracle(spark, duck, sf_dir, scratch_root, name):
     spec = registry.REGISTRY[name]
     df = spec.fn(spark, sf_dir)
     assert_match(df, duck, spec.oracle, name=name)
+    assert not os.listdir(scratch_root)
 
 
 @pytest.mark.parametrize("name", _ROWS_ONLY_NAMES)
-def test_rows_only_query_runs(spark, sf_dir, name):
+def test_rows_only_query_runs(spark, sf_dir, scratch_root, name):
     spec = registry.REGISTRY[name]
     df = spec.fn(spark, sf_dir)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+    assert not os.listdir(scratch_root)
 
 
 def test_entry_contract(spark):

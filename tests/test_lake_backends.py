@@ -261,10 +261,10 @@ def test_compact_crash_recovery(spark, sf_dir, tmp_path):
 
     # simulate the crash window: data renamed away, compacted copy not in
     os.rename(data_dir, data_dir + ".old")
-    os.makedirs(data_dir + ".compact")  # stale staging from the dead run
+    os.makedirs(data_dir + ".next")  # stale staging from the dead run
 
     before, after = compact(spark, data_dir, 1)
     assert before >= 4 and after <= 2
     assert spark.read.parquet(data_dir).count() == n
     assert not os.path.exists(data_dir + ".old")
-    assert not os.path.exists(data_dir + ".compact")
+    assert not os.path.exists(data_dir + ".next")

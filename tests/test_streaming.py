@@ -194,30 +194,30 @@ def test_streaming_dedup_matches_batch(spark, sf_dir, tmp_path):
 
 def test_replace_state_crash_recovery(spark, tmp_path):
     """A crash between the two renames leaves '<dir>.old' and no live
-    dir; _recover_state must restore the backup (the checkpoint had not
+    dir; recover_dir must restore the backup (the checkpoint had not
     committed that batch, so it replays) and clear stale staging dirs."""
     import os
 
-    from apache_iceberg_with_clickhouse_olake_spark.streaming import (
-        _recover_state,
-        _replace_state,
+    from apache_iceberg_with_clickhouse_olake_spark.sources.lake import (
+        recover_dir,
+        replace_dir,
     )
 
     state = str(tmp_path / "state")
     df = spark.range(5).withColumnRenamed("id", "key")
-    _replace_state(df, state)
+    replace_dir(df, state)
     assert spark.read.parquet(state).count() == 5
 
     # simulate the crash window: state renamed away, new state not yet in
     os.rename(state, state + ".old")
     os.makedirs(state + ".next")  # stale staging dir from the dead write
-    _recover_state(state)
+    recover_dir(state)
     assert spark.read.parquet(state).count() == 5
     assert not os.path.exists(state + ".old")
     assert not os.path.exists(state + ".next")
 
     # normal path: recovery with a live state dir is a no-op
-    _recover_state(state)
+    recover_dir(state)
     assert spark.read.parquet(state).count() == 5
 
 
