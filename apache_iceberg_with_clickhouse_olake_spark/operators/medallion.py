@@ -7,9 +7,9 @@ gold (A9) and must reproduce raw answers (the reference's cross-layer
 consistency checks, cross-database-analytics.sql:16-38).
 
 Spark-first shape: each layer is a DataFrame transformation; materialization
-is a parquet (or Iceberg, when available) write partitioned/sorted the way
-the reference clusters its tables (MergeTree ORDER BY (order_month, status),
-iceberg-setup.sql:89-90 -> sortWithinPartitions on write).
+is a parquet write partitioned/sorted the way the reference clusters its
+tables (MergeTree ORDER BY (order_month, status), iceberg-setup.sql:89-90 ->
+sortWithinPartitions on write).
 
 Scale: gold is tiny (months x statuses) regardless of input size; silver is
 a narrow projection that parallelizes embarrassingly. The one shuffle is the
@@ -73,7 +73,8 @@ def build_gold(silver: DataFrame) -> DataFrame:
 def write_layer(df: DataFrame, warehouse: str, name: str,
                 sort_cols: tuple[str, ...] = ()) -> str:
     """Materialize a layer as parquet, sorted within partitions (the
-    MergeTree ORDER BY equivalent, O5)."""
+    MergeTree ORDER BY equivalent, O5). S3 lake write; Iceberg:
+    ``writeTo(catalog.ns.tbl).append()``."""
     path = os.path.join(warehouse, name)
     out = df.sortWithinPartitions(*sort_cols) if sort_cols else df
     out.write.mode("overwrite").parquet(path)

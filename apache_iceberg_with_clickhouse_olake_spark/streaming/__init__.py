@@ -7,8 +7,8 @@ SURVEY.md §2.10 C1-C6 / §3.2).
   ``_delta/<batch_id>`` directory; once the stream has drained, one
   merge (:func:`read_cdc_state`, the same latest-version-per-key
   operator as ``operators.cdc.apply_cdc_upsert``) publishes base + deltas
-  as the new state. That is the parquet stand-in for an Iceberg
-  merge-on-read table: appended data and equality-delete files,
+  as the new state. That is the parquet stand-in for the D6 upsert into
+  an Iceberg merge-on-read table: appended data and equality-delete files,
   compacted by ``rewrite_data_files``. Checkpointing gives restartable
   exactly-once-per-batch semantics (C6).
 - :func:`run_streaming_sessionization`: watermarked ``session_window``

@@ -101,16 +101,6 @@ def main() -> int:
             print(f"ERROR     {name}:\n{traceback.format_exc()}", flush=True)
             err += 1
     print(f"\nsummary: {match} match, {mismatch} mismatch, {err} error, {rows_only} rows-only")
-
-    # r5 verdict item 7: make the Iceberg-gated surface visible in every
-    # round's driver artifacts, so the record shows exactly which ops
-    # still ride the parquet fallback in this sandbox.
-    from apache_iceberg_with_clickhouse_olake_spark.sources.lake import (
-        gated_surface_report,
-    )
-
-    for line in gated_surface_report(spark):
-        print(line)
     return 1 if (mismatch or err) else 0
 
 

@@ -2,9 +2,8 @@
 
 The sandbox ships no media libraries, so these tests skip here; the
 moment pillow (or soundfile) is installed they run with zero extra
-work, mirroring the Iceberg-jar-gated integration tests. They verify
-the one branch the fake-decode oracle gate cannot: that
-``decode_with_codec`` really decodes codec-encoded payloads and that
+work. They verify the one branch the fake-decode oracle gate cannot:
+that ``decode_with_codec`` really decodes codec-encoded payloads and that
 ``media_decode_features_real`` pushes them through the same
 ``mapInPandas`` plumbing/schema as the registered fake-decode query.
 """

@@ -7,74 +7,6 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from apache_iceberg_with_clickhouse_olake_spark.sources.lake import (
-    _catalog_from_confs,
-    _pick_snapshot_id,
-    _rewrite_target_size,
-    _table_name_for_path,
-)
-
-
-@given(st.lists(st.integers(), min_size=1, max_size=50))
-def test_pick_snapshot_latest_is_last(ids):
-    assert _pick_snapshot_id(ids, None) == ids[-1]
-
-
-@given(st.lists(st.integers(), min_size=1, max_size=50), st.data())
-def test_pick_snapshot_version_is_positional(ids, data):
-    v = data.draw(st.integers(min_value=1, max_value=len(ids)))
-    assert _pick_snapshot_id(ids, v) == ids[v - 1]
-
-
-@given(
-    st.lists(st.integers(), min_size=1, max_size=50),
-    st.integers(),
-)
-def test_pick_snapshot_out_of_range_raises(ids, v):
-    import pytest
-
-    if 1 <= v <= len(ids):
-        return
-    with pytest.raises(FileNotFoundError):
-        _pick_snapshot_id(ids, v)
-
-
-@given(
-    st.integers(min_value=0, max_value=1 << 50),
-    st.integers(min_value=0, max_value=10_000),
-)
-def test_rewrite_target_size_bounds(total_bytes, target_files):
-    size = _rewrite_target_size(total_bytes, target_files)
-    # never degenerate, and sized so ~target_files outputs result
-    assert size >= 1024 * 1024
-    assert size >= total_bytes // max(target_files, 1) + 1 or size == 1024 * 1024
-
-
-@given(st.text(alphabet=st.characters(codec="utf-8"), max_size=80))
-def test_table_name_is_valid_sql_identifier(path):
-    import re
-
-    name = _table_name_for_path("/tmp/x/" + path)
-    assert re.fullmatch(r"\w*_[0-9a-f]{8}", name), name
-
-
-@given(st.text(max_size=60))
-def test_table_name_trailing_slash_invariant(base):
-    p = "/tmp/y/" + base.replace("/", "_")
-    assert _table_name_for_path(p) == _table_name_for_path(p + "/")
-
-
-@given(
-    st.lists(
-        st.tuples(st.text(max_size=40), st.text(max_size=40)), max_size=10
-    ),
-    st.one_of(st.none(), st.text(min_size=1, max_size=20)),
-)
-def test_forced_catalog_always_wins(confs, forced):
-    got = _catalog_from_confs(confs, forced)
-    if forced:
-        assert got == forced
-
 
 def test_canon_cell_float_nan_and_decimal():
     import math
