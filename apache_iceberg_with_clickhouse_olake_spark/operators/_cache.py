@@ -49,9 +49,7 @@ def persist_tracked(df: DataFrame) -> DataFrame:
 
 
 def release_caches() -> None:
-    """Unpersist every frame tracked by the CURRENT scope (also called
-    mid-op once a persisted training input has been fully consumed --
-    e.g. after the k-means index artifact is published to disk)."""
+    """Unpersist every frame tracked by the current scope."""
     scope = _SCOPES[-1]
     while scope:
         scope.pop().unpersist()

@@ -51,7 +51,6 @@ from ..sources.parquet import load_table
 from ._cache import scoped as _scoped
 from ._cache import finalize as _finalize
 from ._cache import persist_tracked as _persist
-from ._cache import release_caches  # noqa: F401  (re-export: streaming_queries)
 from .registry import query
 from .similarity import _COS_SQL, _VEC_FP_SQL, _cos, _cos_pre, _dvec
 from .similarity import _norm
@@ -586,7 +585,6 @@ def _salted_block_dropped(
     key_cols: list[str],
     out_schema: str,
     cap_rows: int | None = None,
-    lineage_cut: bool = True,
 ) -> DataFrame:
     """Keep-first drop set (key_cols..., drop_id) over a (key_cols...,
     vec_id, dv, nrm) member frame, with oversized blocks sub-split by
@@ -622,11 +620,7 @@ def _salted_block_dropped(
     # reference -- the un-truncated salted plan doubled the SemDeDup
     # plans. The checkpoint materializes once (from the callers'
     # cache) and every salt-side reference reads the tiny RDD leaf.
-    # ``lineage_cut=False`` is a plan-introspection seam for tests
-    # (the checkpoint hides upstream operators from the optimized
-    # plan, e.g. the capped variant's rank filter).
-    if lineage_cut:
-        members = members.localCheckpoint(eager=False)
+    members = members.localCheckpoint(eager=False)
     cnts = members.groupBy(*keys).agg(F.count("*").alias("_blk_n"))
     tot = cnts.agg(F.sum("_blk_n").alias("_tot_n"))
     cap_expr = (
@@ -682,7 +676,6 @@ def _salted_block_dropped(
 def _semantic_dropped(
     assigned: DataFrame,
     max_cluster_pair_members: int | None = None,
-    lineage_cut: bool = True,
 ) -> DataFrame:
     """(cluster, drop_id): vectors with a lower-id cosine near-dup in
     their own cluster (the order-free keep-first rule).
@@ -733,10 +726,7 @@ def _semantic_dropped(
         "cluster", "vec_id", "dv", _norm(F.col("dv")).alias("nrm")
     )
     return _salted_block_dropped(
-        withn,
-        ["cluster"],
-        "cluster bigint, drop_id bigint",
-        lineage_cut=lineage_cut,
+        withn, ["cluster"], "cluster bigint, drop_id bigint"
     )
 
 

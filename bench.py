@@ -65,8 +65,7 @@ HEADLINE = (
 
 
 # The corpus-operator suite, timed on the same sf dir as the headline
-# suite. Module-level so scripts/dump_plans.py can import it without
-# executing main().
+# suite.
 LLM_SUITE = (
     "dedup_cascade_stats",      # exact->LSH cascade over documents
     "corpus_build_pipeline",    # flagship: filter->dedup->decontam->mix->pack

@@ -1,98 +1,66 @@
-"""Per-op wall/stage attribution at bench scale (r19 optimization round).
+"""Per-layer profile of registered queries: one ``OpRunner`` record each.
 
-Runs a registered query warm at $SPARK_GRAFT_SF_DIR (default sf0.1,
-the bench scale) and prints, for the WARM run only:
+Usage (from the repository root)::
 
-- total wall
-- per-job wall (job description = query name + ordinal)
-- per-stage: executor run time sum, input/shuffle bytes, task count
-- the gap between wall and max(job walls) sum = driver-side time
-  (plan construction, py4j, collect handling)
+    python3 scripts/op_profile.py name [name...]
 
-Usage: python scripts/op_profile.py name [name...]
+Each named query runs at ``$SPARK_GRAFT_SF_DIR`` (default sf0.1, the
+bench scale): once to warm it, then once through lakebench's
+``spark_probe.OpRunner`` with tracing on. That run's record is printed
+as one JSON line: wall, the builder/collect split, Catalyst phase
+times, Spark jobs and stage totals, eager jobs (started while the
+builder ran), the driver gap, plan bytes, persistent RDDs left and the
+layers-sum-to-wall check. The session is lakebench's
+(``spark_probe.start_session``): the bench's confs and C1-only JIT.
+
+An op that ends in ``_finalize`` (nonzero ``eager_jobs``) returns a
+frame rebuilt from collected local rows: its Catalyst phases and
+``plan_bytes`` describe that local frame, and its real work is in the
+eager jobs and ``build_ms``.
+
+The name is not ``profile.py``: with ``scripts/`` first on ``sys.path``
+that would shadow the standard-library ``profile`` module, which
+``cProfile`` imports.
 """
+
 from __future__ import annotations
 
 import json
 import os
 import sys
-import time
-import urllib.request
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "lakebench")]
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-
-def _rest(url: str):
-    with urllib.request.urlopen(url) as r:
-        return json.load(r)
+from spark_probe import OpRunner, Tracer, start_session  # noqa: E402
 
 
-def main() -> int:
-    names = sys.argv[1:]
+def profile(spark, names: list[str], sf_dir: str) -> list[dict]:
+    """The traced ``OpRunner`` record of one warm run of each query."""
     from apache_iceberg_with_clickhouse_olake_spark.operators import registry
-    from apache_iceberg_with_clickhouse_olake_spark.session import (
-        default_parallelism,
-        get_spark,
-    )
-
-    cpus = default_parallelism()
-    spark = get_spark("op-profile", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
 
     queries = registry.all_queries()
+    runner = OpRunner(spark, Tracer("op-profile", enabled=True))
     for name in names:
         fn = queries[name]
-        fn(spark, SF_DIR).collect()  # warm (codegen, listing, python workers)
+        fn(spark, sf_dir).collect()  # warm: codegen, file listing, Python workers
+        runner.run(name, lambda: fn(spark, sf_dir))
+    return runner.records
 
-        jobs_before = {j["jobId"] for j in _rest(f"{ui}/api/v1/applications/{app}/jobs")}
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        t0 = time.perf_counter()
-        fn(spark, SF_DIR).collect()
-        wall = time.perf_counter() - t0
-        spark.sparkContext.setJobDescription(None)
 
-        jobs = [j for j in _rest(f"{ui}/api/v1/applications/{app}/jobs")
-                if j["jobId"] not in jobs_before]
-        jobs.sort(key=lambda j: j["jobId"])
-        stages = {s["stageId"]: s for s in
-                  _rest(f"{ui}/api/v1/applications/{app}/stages?status=complete")}
-        print(f"\n=== {name}: wall {wall:.3f}s, {len(jobs)} jobs ===")
-        job_wall_sum = 0.0
-        for j in jobs:
-            from datetime import datetime, timezone
-
-            def ts(s):
-                return datetime.strptime(
-                    s.replace("GMT", "+0000"), "%Y-%m-%dT%H:%M:%S.%f%z"
-                ).timestamp()
-            jw = ts(j["completionTime"]) - ts(j["submissionTime"])
-            job_wall_sum += jw
-            sids = sorted(j["stageIds"])
-            parts = []
-            for sid in sids:
-                s = stages.get(sid)
-                if s is None:
-                    continue
-                parts.append(
-                    f"s{sid}[{s['numCompleteTasks']}t "
-                    f"exec={s['executorRunTime'] / 1000:.2f}s "
-                    f"deser={s['executorDeserializeTime'] / 1000:.2f}s "
-                    f"gc={s['jvmGcTime'] / 1000:.2f}s "
-                    f"cpu={s['executorCpuTime'] / 1e9:.2f}s "
-                    f"in={s['inputBytes'] >> 20}M "
-                    f"sr={s['shuffleReadBytes'] >> 20}M "
-                    f"sw={s['shuffleWriteBytes'] >> 20}M]"
-                )
-            print(f"  job{j['jobId']} wall={jw:.3f}s " + " ".join(parts))
-        print(f"  sum(job walls)={job_wall_sum:.3f}s; "
-              f"driver-side gap={wall - job_wall_sum:.3f}s")
+def main(names: list[str]) -> int:
+    with tempfile.TemporaryDirectory() as work:
+        spark = start_session(work)
+        try:
+            for rec in profile(spark, names, SF_DIR):
+                print(json.dumps(rec))
+        finally:
+            spark.stop()
     return 0
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))

@@ -23,7 +23,17 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", shuffle_partitions=8)
+    # A fixed set of JIT compiler threads, as in lakebench's session:
+    # spark_probe.EngineCpu (tests/test_op_profile.py) reads each compiler
+    # thread's CPU clock and fails if one of them ends during an op.
+    s = get_spark(
+        "tests",
+        shuffle_partitions=8,
+        extra_conf={
+            "spark.driver.extraJavaOptions":
+                "-XX:-UseDynamicNumberOfCompilerThreads",
+        },
+    )
     yield s
 
 

@@ -492,9 +492,11 @@ def test_kmeans_assignment_is_broadcast_shuffle_free(spark, sf_dir):
     rebuild / final profile aggregations. (Pins the lazy frame -- the
     registered query materializes to local rows, whose plan is just a
     LocalTableScan.)"""
+    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
+        release_caches,
+    )
     from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
         _kmeans_profile_frame,
-        release_caches,
     )
 
     plan = physical_plan(_kmeans_profile_frame(spark, sf_dir))
@@ -521,11 +523,13 @@ def test_kmeans_vector_side_has_no_shuffle_before_assignment(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
+    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
+        release_caches,
+    )
     from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
         _assign,
         _dvec,
         _init_centroids,
-        release_caches,
     )
     from apache_iceberg_with_clickhouse_olake_spark.sources.parquet import (
         load_table,
@@ -566,9 +570,11 @@ def test_semantic_dedup_pair_join_is_cluster_keyed(spark, sf_dir):
     a cartesian over the corpus."""
     import re
 
+    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
+        release_caches,
+    )
     from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
         _semantic_stats_frame,
-        release_caches,
     )
 
     plan = physical_plan(_semantic_stats_frame(spark, sf_dir))
@@ -1219,10 +1225,12 @@ def test_persisted_corpus_frames_run_at_full_parallelism(spark, sf_dir):
     (fp/dvec cast) must also sit ABOVE the exchange so the cache-build
     pass itself runs wide -- checked by Project appearing before the
     Exchange line in the physical tree (children print below parents)."""
+    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
+        release_caches,
+    )
     from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
         _fp_vectors,
         _kmeans_assign,
-        release_caches,
     )
     from apache_iceberg_with_clickhouse_olake_spark.operators.linalg import (
         _pi_vectors,

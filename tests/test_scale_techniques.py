@@ -605,7 +605,7 @@ def test_mixture_ops_on_degenerate_zero_token_groups(spark, tmp_path):
         con.close()
 
 
-def test_semantic_pair_cap_bounds_cluster_work(spark):
+def test_semantic_pair_cap_bounds_cluster_work(spark, monkeypatch):
     """The in-code scale guard for the direct SemDeDup shape (r11
     VERDICT item 4): a pathological 40-replica cluster drops 39 members
     uncapped but EXACTLY cap-1 with max_cluster_pair_members=8 -- only
@@ -632,15 +632,17 @@ def test_semantic_pair_cap_bounds_cluster_work(spark):
     # self-join any more); the rank filter must sit BELOW it in the
     # plan tree (children print after parents), so only the cap
     # survivors ever reach the kernel -- work is still cut before
-    # pairing, not after. r20: the salted member frame is normally
+    # pairing, not after. r20: the salted member frame is
     # lineage-truncated (localCheckpoint hides the filter from the
-    # optimized plan), so the pin inspects the un-truncated seam; the
-    # only joins the salt machinery adds below the kernel are the
-    # broadcast count/total attaches, never a pair self-join.
+    # optimized plan), so the pin bypasses the checkpoint on the
+    # concrete DataFrame class; the only joins the salt machinery adds
+    # below the kernel are the broadcast count/total attaches, never a
+    # pair self-join.
+    monkeypatch.setattr(
+        type(assigned), "localCheckpoint", lambda self, eager=True: self
+    )
     plan = (
-        _semantic_dropped(
-            assigned, max_cluster_pair_members=cap, lineage_cut=False
-        )
+        _semantic_dropped(assigned, max_cluster_pair_members=cap)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
