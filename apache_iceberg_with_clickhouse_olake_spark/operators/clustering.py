@@ -51,6 +51,7 @@ from ..sources.parquet import load_table
 from ._cache import scoped as _scoped
 from ._cache import finalize as _finalize
 from ._cache import persist_tracked as _persist
+from ._cache import superstep as _superstep
 from .registry import query
 from .similarity import _COS_SQL, _VEC_FP_SQL, _cos, _cos_pre, _dvec
 from .similarity import _norm
@@ -613,14 +614,12 @@ def _salted_block_dropped(
     spark = members.sparkSession
     par = spark.sparkContext.defaultParallelism
     keys = list(key_cols)
-    # lineage cut (r20, the BPE-loop lesson): the salt pipeline
-    # references the member frame three times (the block counts, the
-    # total, and the explode), and the callers' persisted k-means
-    # chain is cache-reused at EXECUTION but re-walked by Catalyst per
-    # reference -- the un-truncated salted plan doubled the SemDeDup
-    # plans. The checkpoint materializes once (from the callers'
-    # cache) and every salt-side reference reads the tiny RDD leaf.
-    members = members.localCheckpoint(eager=False)
+    # the salt pipeline references the member frame three times (the
+    # block counts, the total, and the explode); un-cut, the salted
+    # plan doubled the SemDeDup plans. The checkpoint materializes once
+    # (from the callers' cache) and every salt-side reference reads the
+    # tiny RDD leaf.
+    members = _superstep(members)
     cnts = members.groupBy(*keys).agg(F.count("*").alias("_blk_n"))
     tot = cnts.agg(F.sum("_blk_n").alias("_tot_n"))
     cap_expr = (
@@ -2844,15 +2843,11 @@ def _kcenter_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("int").alias("ord"),
         )
     )
-    # localCheckpoint, not persist (r20, the BPE-loop lesson): pick t
-    # references m(t-1) TWICE (the farthest-point TakeOrdered AND the
-    # running-min update), so an un-truncated logical plan doubles per
-    # pick and Catalyst analysis goes 2^picks. The checkpoint cuts
-    # lineage to the materialized corpus-pass RDD; execution reuse is
-    # what the persist provided, unchanged.
-    m = emb.crossJoin(F.broadcast(c0.select("cv"))).select(
+    # pick t references m(t-1) TWICE (the farthest-point TakeOrdered
+    # AND the running-min update): a superstep per pick
+    m = _superstep(emb.crossJoin(F.broadcast(c0.select("cv"))).select(
         "vec_id", "dv", F.expr(_d2_spark_sql("dv", "cv")).alias("mind")
-    ).localCheckpoint(eager=False)
+    ))
     centers = [c0]
     for t in range(1, _KCENTER_PICKS + 1):
         ct = (
@@ -2866,13 +2861,13 @@ def _kcenter_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         centers.append(ct)
         if t < _KCENTER_PICKS:
-            m = m.crossJoin(F.broadcast(ct.select("cv"))).select(
+            m = _superstep(m.crossJoin(F.broadcast(ct.select("cv"))).select(
                 "vec_id",
                 "dv",
                 F.least(
                     F.col("mind"), F.expr(_d2_spark_sql("dv", "cv"))
                 ).alias("mind"),
-            ).localCheckpoint(eager=False)
+            ))
     cents = centers[0]
     for c in centers[1:]:
         cents = cents.unionAll(c)

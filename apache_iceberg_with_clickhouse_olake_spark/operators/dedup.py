@@ -40,6 +40,9 @@ from ..functions import (
     tokens_sql,
 )
 from ..sources.parquet import load_table, load_table_wide
+from ._cache import finalize as _finalize
+from ._cache import scoped as _scoped
+from ._cache import superstep as _superstep
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -473,6 +476,7 @@ _CASCADE_ORACLE = f"""
 
 
 @query("dedup_cascade_stats", oracle=_CASCADE_ORACLE, tags=("llm-dedup",))
+@_scoped
 def dedup_cascade_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production dedup cascade, one composed plan: exact dedup collapses
     byte-identical replica groups to their lowest-doc_id representative
@@ -505,9 +509,8 @@ def dedup_cascade_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the representative set once: three downstream branches
     # consume it (band pipeline, shingle verify side, the count), and
     # without a cut each would re-run the fingerprint window shuffle
-    # over the full corpus. On a cluster this is persist()/checkpoint()
-    # -- the same superstep discipline as dedup_cluster_sizes.
-    reps = reps.localCheckpoint(eager=True)
+    # over the full corpus.
+    reps = _superstep(reps, eager=True)
     verified = _minhash_verified_pairs(reps, par)
     total = docs.agg(F.count("*").alias("total_docs"))
     repc = reps.agg(F.count("*").alias("representatives"))
@@ -517,7 +520,7 @@ def dedup_cascade_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("near_dup").cast("long")), F.lit(0).cast("long")
         ).alias("near_dup_pairs"),
     )
-    return (
+    return _finalize(spark, (
         total.crossJoin(repc)
         .crossJoin(pair_agg)
         .select(
@@ -529,7 +532,7 @@ def dedup_cascade_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "candidate_pairs",
             "near_dup_pairs",
         )
-    )
+    ))
 
 
 # ---------------------------------------------------------------------------
@@ -923,6 +926,7 @@ def _cc_rounds_sql() -> str:
     """,
     tags=("llm-dedup",),
 )
+@_scoped
 def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS, not just pairs: connected components over the
     verified near-dup graph via {4} rounds of min-label propagation
@@ -955,13 +959,13 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(labels.select("doc_id"), "doc_id", "left_anti")
         .select("doc_id", F.col("doc_id").alias("label"))
     )
-    return (
+    return _finalize(spark, (
         labels.unionByName(singles)
         .join(reps.select("doc_id", "grp_size"), "doc_id")
         .groupBy(F.col("label").alias("cluster_id"))
         .agg(F.sum("grp_size").cast("long").alias("members"))
         .orderBy(F.col("members").desc(), "cluster_id")
-    )
+    ))
 
 
 def _cascade_rep_labels(spark: SparkSession, sf_dir: str, with_prev=False):
@@ -970,10 +974,10 @@ def _cascade_rep_labels(spark: SparkSession, sf_dir: str, with_prev=False):
     cluster ids. Returns (grouped, reps, labels):
 
     - grouped: every doc with (doc_id, source, text, fp, rn, grp_size),
-    - reps: one row per distinct fingerprint (rn=1), materialized
-      (localCheckpoint superstep -- the banding pipeline, the
-      shingle-verify side, and every consumer would otherwise re-run
-      the fingerprint window over the full corpus),
+    - reps: one row per distinct fingerprint (rn=1), a superstep (the
+      banding pipeline, the shingle-verify side, and every consumer
+      would otherwise re-run the fingerprint window over the full
+      corpus),
     - labels: (doc_id, label) for every rep touching a verified
       near-dup edge; label = min doc_id reachable within _CC_ROUNDS.
 
@@ -996,11 +1000,11 @@ def _cascade_rep_labels(spark: SparkSession, sf_dir: str, with_prev=False):
         .withColumn("rn", F.row_number().over(w_rn))
         .withColumn("grp_size", F.count("*").over(w_ct))
     )
-    reps = (
+    reps = _superstep(
         grouped.filter(F.col("rn") == 1)
         .select("doc_id", "source", "text", "grp_size")
-        .repartition(par, "doc_id")
-        .localCheckpoint(eager=True)
+        .repartition(par, "doc_id"),
+        eager=True,
     )
     verified = _minhash_verified_pairs(reps.select("doc_id", "text"), par)
     edges = verified.filter(F.col("near_dup")).select(
@@ -1009,16 +1013,15 @@ def _cascade_rep_labels(spark: SparkSession, sf_dir: str, with_prev=False):
     sym = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    # Iterative algorithm hygiene: materialize the edge set once and cut
-    # lineage every round (localCheckpoint), else each round re-embeds
-    # the full LSH pipeline in the plan and it grows exponentially.
+    # Materialize the edge set once and cut lineage every round, else
+    # each round re-embeds the full LSH pipeline in the plan.
     # Repartition on the probe key BEFORE checkpointing: every round
     # joins on sym.b, and a checkpoint captures its partitioning, so all
     # _CC_ROUNDS joins read the materialized edges co-partitioned (only
     # the tiny per-round label frame re-shuffles) instead of re-hashing
     # the edge set each round at whatever fragmented partitioning the
     # verify join happened to leave behind.
-    sym = sym.repartition(par, "b").localCheckpoint(eager=True)
+    sym = _superstep(sym.repartition(par, "b"), eager=True)
     labels = (
         sym.select(F.col("a").alias("doc_id")).distinct()
         .withColumn("label", F.col("doc_id"))
@@ -1029,11 +1032,10 @@ def _cascade_rep_labels(spark: SparkSession, sf_dir: str, with_prev=False):
         neighbor_labels = sym.join(
             labels, sym["b"] == labels["doc_id"]
         ).select(sym["a"].alias("doc_id"), "label")
-        labels = (
+        labels = _superstep(
             labels.unionByName(neighbor_labels)
             .groupBy("doc_id")
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
         )
     if with_prev:
         return grouped, reps, labels, prev
@@ -1190,6 +1192,7 @@ def incremental_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("llm-dedup",),
 )
+@_scoped
 def dedup_removal_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ACTIONABLE output of the dedup cascade: keep/remove decisions
     per source, not just statistics. Policy is keep-one-per-cluster --
@@ -1228,7 +1231,7 @@ def dedup_removal_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "removed_neardup"
         ),
     )
-    return (
+    return _finalize(spark, (
         agg_docs.join(agg_reps, "source", "left")
         .select(
             "source",
@@ -1245,7 +1248,7 @@ def dedup_removal_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("kept_fraction"),
         )
         .orderBy("source")
-    )
+    ))
 
 
 @query(
@@ -1311,6 +1314,7 @@ def dedup_removal_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("llm-dedup", "S3"),
 )
+@_scoped
 def dedup_removal_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """APPLY the removal plan end-to-end: materialize the kept corpus to
     a parquet sink, then account for it from the files READ BACK from
@@ -1375,7 +1379,7 @@ def dedup_removal_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("source")
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return _finalize(spark, out)
 
 
 @query(
@@ -1730,6 +1734,7 @@ winnowing_fingerprints.__doc__ = winnowing_fingerprints.__doc__.format(
     """,
     tags=("llm-dedup",),
 )
+@_scoped
 def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate near-duplicate pairs from shared winnowed fingerprints:
     docs sharing >= {n} kept fingerprints AND covering >= {v:.0%} of the
@@ -1742,20 +1747,19 @@ def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc fingerprint counts attach AFTER pair aggregation, keyed on
     the bounded pair set."""
     par = spark.sparkContext.defaultParallelism
-    # Materialize the winnowed frame once (superstep, same discipline as
-    # dedup_cascade_stats): FOUR consumers follow (posting x2, kept, the
-    # per-doc counts), and -- measured -- the explode generator otherwise
-    # collapses the staged gram/fps lambdas back into one projection,
-    # re-evaluating the whole O(m*w) pipeline per consumer per generated
-    # row (65 s vs 1.1 s on the sf0.01 corpus).
-    w = (
+    # Materialize the winnowed frame once: FOUR consumers follow
+    # (posting x2, kept, the per-doc counts), and -- measured -- the
+    # explode generator otherwise collapses the staged gram/fps lambdas
+    # back into one projection, re-evaluating the whole O(m*w) pipeline
+    # per consumer per generated row (65 s vs 1.1 s on the sf0.01
+    # corpus).
+    w = _superstep(
         _winnowed(
             load_table(spark, sf_dir, "documents").repartition(
                 par, "doc_id"
             )
-        )
-        .select("doc_id", F.size("fps").alias("n_fps"), "fps")
-        .localCheckpoint(eager=True)
+        ).select("doc_id", F.size("fps").alias("n_fps"), "fps"),
+        eager=True,
     )
     posting = w.select(
         "doc_id", F.explode("fps").alias("fp")
@@ -1784,7 +1788,7 @@ def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     wa = w.select(F.col("doc_id").alias("ka"), F.col("n_fps").alias("na"))
     wb = w.select(F.col("doc_id").alias("kb"), F.col("n_fps").alias("nb"))
     overlap = F.col("shared_fps").cast("double") / F.least("na", "nb")
-    return (
+    return _finalize(spark, (
         pairs.join(wa, pairs.doc_a == F.col("ka"))
         .join(wb, pairs.doc_b == F.col("kb"))
         .filter(overlap >= _WIN_MIN_OVERLAP)
@@ -1795,7 +1799,7 @@ def winnowing_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             dround(overlap, 4).alias("overlap"),
         )
         .orderBy("doc_a", "doc_b")
-    )
+    ))
 
 
 winnowing_neardup_pairs.__doc__ = winnowing_neardup_pairs.__doc__.format(
@@ -1918,6 +1922,7 @@ shingle_containment_pairs.__doc__ = shingle_containment_pairs.__doc__.format(
     """,
     tags=("llm-dedup", "llm-text"),
 )
+@_scoped
 def source_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What fraction of each source's distinct word-3-grams appears in
     NO other source -- the content-overlap diagnostic that decides
@@ -1936,7 +1941,7 @@ def source_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     superstep -- the same trap winnowing_neardup_pairs documents)."""
     par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf_dir, "documents")
-    staged = (
+    staged = _superstep(
         docs.repartition(par)
         .select("source", tokens(F.col("text")).alias("toks"),
                 norm_text(F.col("text")).alias("norm"))
@@ -1944,8 +1949,8 @@ def source_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "source",
             F.transform(F.col("sha"), lambda s: md5_int60(s)).alias("hs"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     sh = staged.select("source", F.explode("hs").alias("sh")).distinct()
     df = sh.groupBy("sh").agg(
@@ -1954,7 +1959,7 @@ def source_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     exclusive = F.sum(
         F.when(F.col("n_sources") == 1, 1).otherwise(0)
     ).cast("long")
-    return (
+    return _finalize(spark, (
         sh.join(df, "sh")
         .groupBy("source")
         .agg(
@@ -1965,7 +1970,7 @@ def source_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("novelty"),
         )
         .orderBy("source")
-    )
+    ))
 
 
 # ---------------------------------------------------------------------------
@@ -2300,6 +2305,7 @@ def _split_sql(expr: str) -> str:
     """,
     tags=("llm-dedup", "llm-sampling"),
 )
+@_scoped
 def leakage_safe_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-safe train/val/test assignment -- the CONSTRUCTIVE twin of
     train_test_leakage_scan (that op measures leakage after the fact;
@@ -2369,15 +2375,13 @@ def leakage_safe_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   (set-of-sets distinct == distinct over the doc rows);
     # - per-split n_docs / n_clusters are SUM(c_docs) /
     #   COUNT(DISTINCT cluster_id) over the same grain.
-    lvl1 = (
+    # two consumers (straddle + per-split stats); materialize once
+    lvl1 = _superstep(
         tagged.groupBy("cluster_id", "split")
         .agg(
             F.count("*").alias("c_docs"),
             F.collect_set("naive_split").alias("nset"),
         )
-        # two consumers (straddle + per-split stats); materialize once,
-        # same lazy-checkpoint idiom as the propagation rounds above
-        .localCheckpoint(eager=False)
     )
     straddle = (
         lvl1.groupBy("cluster_id")
@@ -2412,7 +2416,7 @@ def leakage_safe_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("propagation_label_changes")
         )
     )
-    return (
+    return _finalize(spark, (
         lvl1.groupBy("split")
         .agg(
             F.sum("c_docs").alias("n_docs"),
@@ -2429,7 +2433,7 @@ def leakage_safe_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "propagation_label_changes",
         )
         .orderBy("split")
-    )
+    ))
 
 
 # ---------------------------------------------------------------------------

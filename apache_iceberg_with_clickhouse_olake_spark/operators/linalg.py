@@ -38,6 +38,7 @@ from ..sources.parquet import load_table
 from ._cache import scoped as _scoped
 from ._cache import finalize as _finalize
 from ._cache import persist_tracked as _persist
+from ._cache import superstep as _superstep
 from .registry import query
 from .similarity import _dvec
 
@@ -293,13 +294,11 @@ def embedding_pca_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
     reductions, nothing driver-side. The deflated frame is persisted
     for the second loop exactly like the raw frame for the first."""
     emb = _persist(_pi_vectors(spark, sf_dir))
-    # v1 is the 64-row MODEL ARTIFACT between the two loops: collapse
-    # it to local rows so the second loop's lineage does not embed the
-    # first loop's unrolled plan (the doubly-nested plan was measured
-    # 3.5x slower purely in Catalyst compile time; same superstep
-    # justification as the dedup rep-set localCheckpoint)
-    v1_lazy = _pi_loop(spark, emb, _PI_ITERS)
-    v1 = spark.createDataFrame(v1_lazy.collect(), v1_lazy.schema)
+    # v1 is the 64-row MODEL ARTIFACT between the two loops: a
+    # superstep, so the second loop's lineage does not embed the first
+    # loop's unrolled plan (the doubly-nested plan was measured 3.5x
+    # slower purely in Catalyst compile time)
+    v1 = _superstep(_pi_loop(spark, emb, _PI_ITERS), eager=True)
     v1arr = v1.agg(
         F.expr("array_sort(collect_list(struct(dim, component)))")
         .alias("s")

@@ -45,6 +45,7 @@ from ..sources.parquet import load_table
 from ._cache import finalize as _finalize
 from ._cache import persist_tracked as _persist
 from ._cache import scoped as _scoped
+from ._cache import superstep as _superstep
 from .registry import query
 
 _DIM = 64
@@ -693,6 +694,7 @@ _VEC_FP_SQL = (
     """,
     tags=("llm-similarity", "llm-dedup"),
 )
+@_scoped
 def embedding_dedup_cascade_stats(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -726,9 +728,8 @@ def embedding_dedup_cascade_stats(
     # Materialize representatives once: the band explosion, the
     # vector-joinback side, and the count all consume reps, and without
     # a cut each branch re-runs the fingerprint window shuffle AND the
-    # band UDF over the corpus. Cluster equivalent: persist/checkpoint
-    # (the dedup_cluster_sizes superstep discipline).
-    reps = reps.localCheckpoint(eager=True)
+    # band UDF over the corpus.
+    reps = _superstep(reps, eager=True)
     candidates = _embed_candidate_pairs(reps)
     total = emb.agg(F.count("*").alias("total_vectors"))
     repc = reps.agg(F.count("*").alias("representatives"))
@@ -738,7 +739,7 @@ def embedding_dedup_cascade_stats(
             F.sum(F.col("near_dup").cast("long")), F.lit(0).cast("long")
         ).alias("near_dup_pairs"),
     )
-    return (
+    return _finalize(spark, (
         total.crossJoin(repc)
         .crossJoin(pair_agg)
         .select(
@@ -750,7 +751,7 @@ def embedding_dedup_cascade_stats(
             "candidate_pairs",
             "near_dup_pairs",
         )
-    )
+    ))
 
 
 # ---------------------------------------------------------------------------

@@ -37,6 +37,9 @@ from ..functions import (
     tokens_sql,
 )
 from ..sources.parquet import load_table, load_table_wide
+from ._cache import finalize as _finalize
+from ._cache import scoped as _scoped
+from ._cache import superstep as _superstep
 from .registry import query
 
 _TOKS = tokens_sql("text")
@@ -1716,6 +1719,7 @@ rrf_hybrid_search.__doc__ = rrf_hybrid_search.__doc__.replace(
     """,
     tags=("llm-text", "llm-sampling"),
 )
+@_scoped
 def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source unigram KL divergence KL(p_source || p_corpus) in
     nats -- the corpus-drift / source-mix QA metric: a source whose
@@ -1725,7 +1729,7 @@ def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution by construction, so q > 0 and the sum is total.
 
     Shape at scale: ONE corpus scan+tokenize materializes the
-    (source, term) count frame as a localCheckpoint superstep (it is
+    (source, term) count frame as a superstep (it is
     vocabulary x sources sized -- tiny relative to the corpus); the
     term-marginal, source-marginal, and grand total are all
     RE-AGGREGATIONS of that frame, never second scans (the
@@ -1737,17 +1741,16 @@ def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     is partition-order-independent and engine-exact; DuckDB ln == JVM
     log bit-for-bit (functions/__init__.py determinism note)."""
     # NOT widened (r19): interleaved A/B measured the split-starved
-    # widen at 1.033 -> 1.331 s here -- the localCheckpoint superstep
+    # widen at 1.033 -> 1.331 s here -- the superstep
     # already bounds the expensive frame, and the extra raw-text
     # exchange costs more than the spread tokenize saves
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(tokens(F.col("text"))).alias("term")
     )
-    st = (
-        tok.groupBy("source", "term")
-        .agg(F.count("*").alias("c_st"))
-        .localCheckpoint(eager=True)
+    st = _superstep(
+        tok.groupBy("source", "term").agg(F.count("*").alias("c_st")),
+        eager=True,
     )
     tt = st.groupBy("term").agg(
         F.sum("c_st").cast("double").alias("c_t")
@@ -1758,7 +1761,7 @@ def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     grand = tt.agg(F.sum("c_t").alias("grand"))
     p = F.col("c_st").cast("double") / F.col("c_s")
     q = F.col("c_t") / F.col("grand")
-    return (
+    return _finalize(spark, (
         st.join(tt, "term")
         .join(F.broadcast(s_tot), "source")
         .crossJoin(F.broadcast(grand))
@@ -1769,7 +1772,7 @@ def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum(p * F.log(p / q), "kl_nats"),
         )
         .orderBy("source")
-    )
+    ))
 
 
 # ---------------------------------------------------------------------------
@@ -1815,6 +1818,7 @@ _PMI_TOP = 40
     """,
     tags=("llm-text",),
 )
+@_scoped
 def term_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-level pointwise mutual information for term pairs over
     a BOUNDED top-{v} vocabulary -- the collocation/phrase-mining
@@ -1845,7 +1849,7 @@ def term_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("df").desc(), "term")
         .limit(_PMI_V)
     )
-    dt = tok.join(F.broadcast(vocab), "term").localCheckpoint(eager=True)
+    dt = _superstep(tok.join(F.broadcast(vocab), "term"), eager=True)
     # one-row broadcast scalar, kept IN-PLAN (the r10-ADVICE lazy-scalar
     # rule: an eager .count() here would re-scan documents per
     # invocation even when only the plan is inspected)
@@ -1878,7 +1882,7 @@ def term_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     pmi = F.log(
         (F.col("df_ab") / nd) / ((F.col("df_a") / nd) * (F.col("df_b") / nd))
     )
-    return (
+    return _finalize(spark, (
         pairs.select(
             "term_a",
             "term_b",
@@ -1887,7 +1891,7 @@ def term_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("pmi").desc(), "term_a", "term_b")
         .limit(_PMI_TOP)
-    )
+    ))
 
 
 term_cooccurrence_pmi.__doc__ = term_cooccurrence_pmi.__doc__.format(

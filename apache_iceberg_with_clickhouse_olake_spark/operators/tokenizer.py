@@ -44,6 +44,7 @@ from ..functions import dround, dround_sql, md5_int60_sql
 from ..sources.parquet import load_table
 from ._cache import scoped as _scoped
 from ._cache import finalize as _finalize
+from ._cache import superstep as _superstep
 from .registry import query
 
 _N_MERGES = 6
@@ -225,7 +226,7 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast the tie-broken winner -> literal-replace it into every
     word's symbol string. The oracle unrolls the identical N iterations
     in SQL, so even this iterative training loop is hash-exact. The
-    per-iteration type table is persisted (vocabulary-sized) so the
+    per-iteration type table is a superstep (vocabulary-sized) so the
     chained lineage doesn't recompute the whole history each round."""
     return _finalize(spark, _learn_merges_frame(spark, sf_dir))
 
@@ -236,16 +237,7 @@ def _learn_merges_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     symbols = _word_symbols(spark, sf_dir)
     out = []
     for rank in range(1, _N_MERGES + 1):
-        # localCheckpoint, not persist (r20): iteration i references
-        # iteration i-1 TWICE (the pair count feeding the winner AND
-        # the replace), so the un-truncated logical plan doubles per
-        # round -- 2^N subtree visits of Catalyst analysis by the last
-        # round (profiled: ~2.6 s of a ~5.9 s wall was driver-side on
-        # the heldout twin). A checkpoint cuts lineage to the
-        # materialized type-table RDD per round, the same superstep
-        # idiom as the dedup cascade; execution reuse is unchanged
-        # (the RDD materializes once, vocabulary-sized).
-        symbols = symbols.localCheckpoint(eager=False)
+        symbols = _superstep(symbols)
         top = (
             _pair_counts(symbols)
             .orderBy(F.col("cnt").desc(), "a", "b")
@@ -279,8 +271,7 @@ def _merged_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     learn loop applies only the first N-1 before selecting the Nth)."""
     symbols = _word_symbols(spark, sf_dir)
     for _ in range(_N_MERGES):
-        # lineage-truncating checkpoint per round: see _learn_merges_frame
-        symbols = symbols.localCheckpoint(eager=False)
+        symbols = _superstep(symbols)
         top = (
             _pair_counts(symbols)
             .orderBy(F.col("cnt").desc(), "a", "b")
@@ -474,8 +465,7 @@ def bpe_heldout_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym_t = _word_symbols_from(train_docs)
     sym_h = _word_symbols_from(held_docs)
     for _ in range(_N_MERGES):
-        # lineage-truncating checkpoint per round: see _learn_merges_frame
-        sym_t = sym_t.localCheckpoint(eager=False)
+        sym_t = _superstep(sym_t)
         top = (
             _pair_counts(sym_t)
             .orderBy(F.col("cnt").desc(), "a", "b")

@@ -78,7 +78,7 @@ LLM_SUITE = (
     # DSIR hashed-ngram importance weights (one corpus tokenize+hash
     # pass + broadcast ratio table)
     "dsir_importance_weights",
-    # per-source unigram KL over a localCheckpoint superstep
+    # per-source unigram KL over a superstep
     "source_unigram_kl",
     # cluster-keyed leakage-safe split over the cascade core
     "leakage_safe_split_stats",

@@ -1,6 +1,7 @@
-"""Lifecycle semantics of the scoped persist registry (r9 ADVICE: an
+"""Lifecycle semantics of the scoped block registry (r9 ADVICE: an
 operator that raises mid-build must not pin frames for later queries,
-and nested composition must never release a caller's live caches)."""
+and nested composition must never release a caller's live caches), for
+both tracked primitives: persisted frames and supersteps."""
 
 from __future__ import annotations
 
@@ -12,11 +13,19 @@ from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
     persist_tracked,
     release_caches,
     scoped,
+    superstep,
 )
 
 
 def _is_cached(df) -> bool:
     return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+
+def _holds_blocks(cut) -> bool:
+    """Is the superstep's checkpointed RDD (its LogicalRDD leaf, the
+    handle ``superstep`` tracks) still a persistent RDD?"""
+    rdd_id = cut._jdf.logicalPlan().rdd().id()
+    return rdd_id in cut.sparkSession.sparkContext._jsc.getPersistentRDDs()
 
 
 def test_exception_in_scope_releases_its_caches(spark):
@@ -73,3 +82,46 @@ def test_scoped_decorator_wraps_a_query_fn(spark):
     assert not _is_cached(captured["df"])
     # the finalized frame is rebuilt from local rows: still valid here
     assert out.count() == 3
+
+
+@pytest.mark.parametrize("eager", [False, True])
+def test_superstep_is_released_when_its_scope_drains(spark, eager):
+    with cache_scope():
+        cut = superstep(spark.range(6), eager=eager)
+        assert _holds_blocks(cut)
+        assert cut.count() == 6
+    assert not _holds_blocks(cut)
+    with pytest.raises(RuntimeError):
+        with cache_scope():
+            cut = superstep(spark.range(6), eager=eager)
+            assert _holds_blocks(cut)
+            raise RuntimeError("mid-build failure")
+    assert not _holds_blocks(cut)
+
+
+def test_inner_drain_leaves_outer_superstep_readable(spark):
+    with cache_scope():
+        outer = superstep(spark.range(5), eager=True)
+        with cache_scope():
+            inner = superstep(spark.range(7), eager=True)
+            release_caches()
+            assert not _holds_blocks(inner)
+        assert _holds_blocks(outer)
+        assert outer.count() == 5
+    assert not _holds_blocks(outer)
+
+
+def test_finalized_rows_outlive_the_superstep_they_read(spark):
+    from pyspark.sql import functions as F
+
+    with cache_scope():
+        cut = superstep(
+            spark.range(8).withColumn("g", F.col("id") % 2), eager=True
+        )
+        out = finalize(spark, cut.groupBy("g").count().orderBy("g"))
+        assert not _holds_blocks(cut)
+        # a released checkpoint has no lineage to recompute from ...
+        with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID"):
+            cut.count()
+    # ... so only the finalized rows outlive it
+    assert [tuple(r) for r in out.collect()] == [(0, 4), (1, 4)]

@@ -30,21 +30,30 @@ def scratch_root(tmp_path, monkeypatch):
     return root
 
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 @pytest.mark.parametrize("name", _ORACLE_NAMES)
 def test_query_matches_oracle(spark, duck, sf_dir, scratch_root, name):
     spec = registry.REGISTRY[name]
+    before = _persistent_rdd_ids(spark)
     df = spec.fn(spark, sf_dir)
     assert_match(df, duck, spec.oracle, name=name)
     assert not os.listdir(scratch_root)
+    # ids, not counts: the ContextCleaner may free older RDDs meanwhile
+    assert not _persistent_rdd_ids(spark) - before
 
 
 @pytest.mark.parametrize("name", _ROWS_ONLY_NAMES)
 def test_rows_only_query_runs(spark, sf_dir, scratch_root, name):
     spec = registry.REGISTRY[name]
+    before = _persistent_rdd_ids(spark)
     df = spec.fn(spark, sf_dir)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
     assert not os.listdir(scratch_root)
+    assert not _persistent_rdd_ids(spark) - before
 
 
 def test_entry_contract(spark):

@@ -173,10 +173,14 @@ def test_cc_rounds_converged_on_fixture(spark, sf_dir, monkeypatch):
     semantic non-convergence, since both sides run the same round
     count)."""
     from apache_iceberg_with_clickhouse_olake_spark.operators import dedup
+    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
+        cache_scope,
+    )
 
     def labels_at(rounds: int) -> dict:
         monkeypatch.setattr(dedup, "_CC_ROUNDS", rounds)
-        _, _, labels = dedup._cascade_rep_labels(spark, sf_dir)
-        return {r["doc_id"]: r["label"] for r in labels.collect()}
+        with cache_scope():
+            _, _, labels = dedup._cascade_rep_labels(spark, sf_dir)
+            return {r["doc_id"]: r["label"] for r in labels.collect()}
 
     assert labels_at(4) == labels_at(5)

@@ -613,6 +613,7 @@ def test_semantic_pair_cap_bounds_cluster_work(spark, monkeypatch):
     per-cluster pair work is bounded at cap*(cap-1)/2 no matter how
     skewed the clustering gets. The plan carries the rank filter BELOW
     the self-join (work is cut before pairing, not after)."""
+    from apache_iceberg_with_clickhouse_olake_spark.operators import clustering
     from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
         _semantic_dropped,
     )
@@ -632,14 +633,13 @@ def test_semantic_pair_cap_bounds_cluster_work(spark, monkeypatch):
     # self-join any more); the rank filter must sit BELOW it in the
     # plan tree (children print after parents), so only the cap
     # survivors ever reach the kernel -- work is still cut before
-    # pairing, not after. r20: the salted member frame is
-    # lineage-truncated (localCheckpoint hides the filter from the
-    # optimized plan), so the pin bypasses the checkpoint on the
-    # concrete DataFrame class; the only joins the salt machinery adds
+    # pairing, not after. r20: the salted member frame is a superstep
+    # (the lineage cut hides the filter from the optimized plan), so
+    # the pin bypasses the cut; the only joins the salt machinery adds
     # below the kernel are the broadcast count/total attaches, never a
     # pair self-join.
     monkeypatch.setattr(
-        type(assigned), "localCheckpoint", lambda self, eager=True: self
+        clustering, "_superstep", lambda df, eager=False: df
     )
     plan = (
         _semantic_dropped(assigned, max_cluster_pair_members=cap)
