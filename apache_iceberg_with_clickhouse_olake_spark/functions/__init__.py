@@ -253,9 +253,3 @@ def tokens_sql(expr: str) -> str:
         f"list_filter(string_split_regex(lower(coalesce({expr}, '')),"
         f" '{_WS_CLASS}'), x -> x <> '')"
     )
-
-
-def money(col: Column, scale: int = 2) -> Column:
-    """ROUND(x, 2) money presentation (used by every analytics query in the
-    reference, e.g. scripts/cross-database-analytics.sql:8)."""
-    return F.round(col, scale)

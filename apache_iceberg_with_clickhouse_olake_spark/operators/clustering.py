@@ -53,8 +53,9 @@ from ._cache import finalize as _finalize
 from ._cache import persist_tracked as _persist
 from ._cache import superstep as _superstep
 from .registry import query
-from .similarity import _COS_SQL, _VEC_FP_SQL, _cos, _cos_pre, _dvec
-from .similarity import _norm
+from .similarity import _COS_SQL, _TOP_K, _VEC_FP_SQL, _centroids, _cos
+from .similarity import _cos_pre, _dvec, _norm, _query_rows, _rank_top
+from .similarity import _recall, _recall_by_qid, _recall_sql, _single_recall
 
 _DIM = 64
 # k is DERIVED from the corpus size: k = max(_K_MIN, ceil(n / target
@@ -145,24 +146,13 @@ _SALT_MAX = 16
 # Spark side
 # ---------------------------------------------------------------------------
 
-def _d2(dv: Column, cv: Column) -> Column:
-    """Squared L2 distance, snapped to 6 decimals (see module doc)."""
-    return dround(
-        F.aggregate(
-            F.zip_with(dv, cv, lambda x, c: (x - c) * (x - c)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
-
-
 def _d2_spark_sql(dv: str, cv: str) -> str:
-    """Spark-SQL-text twin of :func:`_d2` (r19, the py4j plan-construction
-    class -- similarity._pq_sqdist_sql is the template): the same
-    zip_with square fold with 0.0D init and the same
-    decimal(30,6)-snap round, parsed in one gateway round-trip instead
-    of ~40 Column-API calls. Bit-identical tree by construction."""
+    """Squared L2 distance of two array columns, snapped to 6 decimals
+    (see module doc), as Spark SQL text: the zip_with square fold with
+    0.0D init and the decimal(30,6)-snap round, parsed in one gateway
+    round-trip instead of ~40 Column-API calls (r19, the py4j
+    plan-construction class -- similarity._pq_sqdist_sql is the
+    template)."""
     return (
         "CAST(round(CAST(aggregate(zip_with("
         f"{dv}, {cv}, (x, c) -> (x - c) * (x - c)), 0.0D,"
@@ -250,16 +240,7 @@ def _assign(emb: DataFrame, cent: DataFrame) -> DataFrame:
 def _update_centroids(assigned: DataFrame) -> DataFrame:
     """Lloyd update: per-dimension exact-decimal mean (davg, snapped to 4
     decimals) -- reduces to k x dim rows, then reassembles arrays."""
-    return (
-        assigned.select(
-            "cluster", F.posexplode("dv").alias("dim", "x")
-        )
-        .groupBy("cluster", "dim")
-        .agg(davg("x", "c"))
-        .groupBy("cluster")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("s"))
-        .select("cluster", F.transform("s", lambda t: t["c"]).alias("cv"))
-    )
+    return _centroids(assigned, "cluster", "dv")
 
 
 def _kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -729,6 +710,70 @@ def _semantic_dropped(
     )
 
 
+def _dropped_sql(src: str) -> str:
+    """pairs/dropped CTEs: members of ``src`` with a lower-id cosine
+    near-dup in their own cluster (twin: _semantic_dropped)."""
+    return f"""pairs AS (
+      SELECT a.cluster, b.vec_id AS drop_id
+      FROM {src} a JOIN {src} b
+        ON a.cluster = b.cluster AND a.vec_id < b.vec_id
+      WHERE {_COS_SQL.format(a='a.dv', b='b.dv')} >= {_SEMDEDUP_COS}
+    ),
+    dropped AS (SELECT DISTINCT cluster, drop_id FROM pairs)"""
+
+
+def _kept_stats_sql(
+    src: str, keys: tuple[str, ...] = ("cluster",), extra: str = ""
+) -> str:
+    """Per-block member/dropped/kept rollup of ``src`` against the
+    ``dropped`` CTE (twin: _kept_stats)."""
+    ks = ", ".join(f"s.{k}" for k in keys)
+    on = " AND ".join(f"s.{k} = d.{k}" for k in keys)
+    return f"""SELECT {ks},
+           COUNT(*) AS n_members, {extra}
+           COUNT(d.drop_id) AS n_dropped,
+           COUNT(*) - COUNT(d.drop_id) AS n_kept,
+           {dround_sql(
+               '(COUNT(*) - COUNT(d.drop_id)) / CAST(COUNT(*) AS DOUBLE)', 4
+           )} AS kept_frac
+    FROM {src} s
+    LEFT JOIN dropped d
+      ON {on} AND s.vec_id = d.drop_id
+    GROUP BY {ks}
+    ORDER BY {ks}"""
+
+
+def _with_drops(
+    members: DataFrame, dropped: DataFrame, keys: list[str]
+) -> DataFrame:
+    """``members`` left-joined to the (keys..., drop_id) rows that drop
+    them: drop_id is NULL on a kept member."""
+    on = [members[k] == dropped[k] for k in keys]
+    return members.join(
+        dropped, on + [members["vec_id"] == dropped["drop_id"]], "left"
+    )
+
+
+def _kept_stats(
+    members: DataFrame, dropped: DataFrame, keys: list[str], *extra: Column
+) -> DataFrame:
+    """Per-block n_members (then ``extra``), n_dropped, n_kept and
+    kept_frac of the SemDeDup decision, ordered by block."""
+    kept = F.count("*") - F.count("drop_id")
+    return (
+        _with_drops(members, dropped, keys)
+        .groupBy(*[members[k].alias(k) for k in keys])
+        .agg(
+            F.count("*").alias("n_members"),
+            *extra,
+            F.count("drop_id").alias("n_dropped"),
+            kept.alias("n_kept"),
+            dround(kept / F.count("*").cast("double"), 4).alias("kept_frac"),
+        )
+        .orderBy(*keys)
+    )
+
+
 @query(
     "semantic_dedup_stats",
     oracle=f"""
@@ -740,18 +785,7 @@ def _semantic_dropped(
       WHERE {_COS_SQL.format(a='a.dv', b='b.dv')} >= {_SEMDEDUP_COS}
     ),
     dropped AS (SELECT DISTINCT cluster, drop_id FROM pairs)
-    SELECT s.cluster,
-           COUNT(*) AS n_members,
-           COUNT(d.drop_id) AS n_dropped,
-           COUNT(*) - COUNT(d.drop_id) AS n_kept,
-           {dround_sql(
-               '(COUNT(*) - COUNT(d.drop_id)) / CAST(COUNT(*) AS DOUBLE)', 4
-           )} AS kept_frac
-    FROM {_FINAL} s
-    LEFT JOIN dropped d
-      ON s.cluster = d.cluster AND s.vec_id = d.drop_id
-    GROUP BY s.cluster
-    ORDER BY s.cluster
+    {_kept_stats_sql(_FINAL)}
     """,
     tags=("llm-similarity", "llm-dedup", "llm-clustering",
           "benchmark-yardstick"),
@@ -780,27 +814,7 @@ def semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _semantic_stats_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lazy SemDeDup per-cluster stats frame (plan-pinned)."""
     assigned = _persist(_kmeans_assign(spark, sf_dir))
-    dropped = _semantic_dropped(assigned)
-    return (
-        assigned.join(
-            dropped,
-            (assigned["cluster"] == dropped["cluster"])
-            & (assigned["vec_id"] == dropped["drop_id"]),
-            "left",
-        )
-        .groupBy(assigned["cluster"].alias("cluster"))
-        .agg(
-            F.count("*").alias("n_members"),
-            F.count("drop_id").alias("n_dropped"),
-            (F.count("*") - F.count("drop_id")).alias("n_kept"),
-            dround(
-                (F.count("*") - F.count("drop_id"))
-                / F.count("*").cast("double"),
-                4,
-            ).alias("kept_frac"),
-        )
-        .orderBy("cluster")
-    )
+    return _kept_stats(assigned, _semantic_dropped(assigned), ["cluster"])
 
 
 @query(
@@ -815,26 +829,10 @@ def _semantic_stats_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
       ) <= {_SEMDEDUP_CAP}
     ),
-    pairs AS (
-      SELECT a.cluster, b.vec_id AS drop_id
-      FROM capped a JOIN capped b
-        ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-      WHERE {_COS_SQL.format(a='a.dv', b='b.dv')} >= {_SEMDEDUP_COS}
-    ),
-    dropped AS (SELECT DISTINCT cluster, drop_id FROM pairs)
-    SELECT s.cluster,
-           COUNT(*) AS n_members,
-           LEAST(COUNT(*), {_SEMDEDUP_CAP}) AS n_pair_members,
-           COUNT(d.drop_id) AS n_dropped,
-           COUNT(*) - COUNT(d.drop_id) AS n_kept,
-           {dround_sql(
-               '(COUNT(*) - COUNT(d.drop_id)) / CAST(COUNT(*) AS DOUBLE)', 4
-           )} AS kept_frac
-    FROM {_FINAL} s
-    LEFT JOIN dropped d
-      ON s.cluster = d.cluster AND s.vec_id = d.drop_id
-    GROUP BY s.cluster
-    ORDER BY s.cluster
+    {_dropped_sql("capped")}
+    {_kept_stats_sql(
+        _FINAL, extra=f"LEAST(COUNT(*), {_SEMDEDUP_CAP}) AS n_pair_members,"
+    )}
     """,
     tags=("llm-similarity", "llm-dedup", "llm-clustering"),
 )
@@ -862,28 +860,13 @@ def _semantic_capped_stats_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped = _semantic_dropped(
         assigned, max_cluster_pair_members=_SEMDEDUP_CAP
     )
-    return (
-        assigned.join(
-            dropped,
-            (assigned["cluster"] == dropped["cluster"])
-            & (assigned["vec_id"] == dropped["drop_id"]),
-            "left",
-        )
-        .groupBy(assigned["cluster"].alias("cluster"))
-        .agg(
-            F.count("*").alias("n_members"),
-            F.least(F.count("*"), F.lit(_SEMDEDUP_CAP).cast("long")).alias(
-                "n_pair_members"
-            ),
-            F.count("drop_id").alias("n_dropped"),
-            (F.count("*") - F.count("drop_id")).alias("n_kept"),
-            dround(
-                (F.count("*") - F.count("drop_id"))
-                / F.count("*").cast("double"),
-                4,
-            ).alias("kept_frac"),
-        )
-        .orderBy("cluster")
+    return _kept_stats(
+        assigned,
+        dropped,
+        ["cluster"],
+        F.least(F.count("*"), F.lit(_SEMDEDUP_CAP).cast("long")).alias(
+            "n_pair_members"
+        ),
     )
 
 
@@ -891,13 +874,7 @@ def _semantic_capped_stats_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semantic_dedup_apply",
     oracle=f"""
     {_kmeans_sql_prefix()},
-    pairs AS (
-      SELECT a.cluster, b.vec_id AS drop_id
-      FROM {_FINAL} a JOIN {_FINAL} b
-        ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-      WHERE {_COS_SQL.format(a='a.dv', b='b.dv')} >= {_SEMDEDUP_COS}
-    ),
-    dropped AS (SELECT DISTINCT cluster, drop_id FROM pairs),
+    {_dropped_sql(_FINAL)},
     kept AS (
       SELECT s.cluster, s.vec_id
       FROM {_FINAL} s LEFT JOIN dropped d
@@ -937,12 +914,7 @@ def semantic_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = _persist(_kmeans_assign(spark, sf_dir))
     dropped = _semantic_dropped(assigned)
     kept = (
-        assigned.join(
-            dropped,
-            (assigned["cluster"] == dropped["cluster"])
-            & (assigned["vec_id"] == dropped["drop_id"]),
-            "left",
-        )
+        _with_drops(assigned, dropped, ["cluster"])
         .filter(F.col("drop_id").isNull())
         .select(assigned["cluster"].alias("cluster"), "vec_id")
     )
@@ -1022,13 +994,7 @@ _REPS_SOURCE = f"""SELECT vec_id, dv FROM (
              COUNT(*) AS grp_n, MIN(vec_id) AS rep_id
       FROM embeddings GROUP BY 1
     ),
-    pairs AS (
-      SELECT a.cluster, b.vec_id AS drop_id
-      FROM {_FINAL} a JOIN {_FINAL} b
-        ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-      WHERE {_COS_SQL.format(a='a.dv', b='b.dv')} >= {_SEMDEDUP_COS}
-    ),
-    dropped AS (SELECT DISTINCT cluster, drop_id FROM pairs),
+    {_dropped_sql(_FINAL)},
     per_rep AS (
       SELECT s.cluster, z.grp_n,
              CASE WHEN d.drop_id IS NOT NULL THEN 1 ELSE 0 END AS is_dropped
@@ -1079,12 +1045,10 @@ def semantic_dedup_cascade_stats(
     assigned = _persist(_kmeans_assign_frames(reps))
     dropped = _semantic_dropped(assigned)
     per_rep = (
-        assigned.join(sizes, assigned["vec_id"] == sizes["rep_id"])
-        .join(
+        _with_drops(
+            assigned.join(sizes, assigned["vec_id"] == sizes["rep_id"]),
             dropped,
-            (assigned["cluster"] == dropped["cluster"])
-            & (assigned["vec_id"] == dropped["drop_id"]),
-            "left",
+            ["cluster"],
         )
         .select(
             assigned["cluster"].alias("cluster"),
@@ -1114,7 +1078,134 @@ def semantic_dedup_cascade_stats(
 # ---------------------------------------------------------------------------
 
 _N_PROBES = 2
-_TOP_K = 10
+# Filtered search probes MORE lists than unfiltered (the filter thins
+# each probed list, so the same recall needs more candidates) -- the
+# n_probes-vs-selectivity trade every production vector store tunes.
+# 3 vs the unfiltered op's 2 documents the knob; ann_filtered_probe_sweep
+# and ann_twolevel_probe_sweep price it.
+_N_FILTERED_PROBES = 3
+_N_SUB_PROBES = 2
+_SWEEP_PROBE_WIDTHS = (1, 2, 3, 4)
+
+
+# -- oracle fragments of the probe / recall / sweep family (each the
+# twin of the Spark builder named in its comment) --
+
+def _probe_sql(name: str, width: int) -> str:
+    """The ``width`` centroids of the final Lloyd index nearest q
+    (twin: _probe)."""
+    return f"""{name} AS (
+      SELECT c.cluster
+      FROM c{_ITERS - 1} c CROSS JOIN q
+      ORDER BY {dround_sql(_COS_SQL.format(a='c.cv', b='q.qv'), 6)}
+               DESC NULLS LAST, c.cluster
+      LIMIT {width}
+    )"""
+
+
+def _sub_probe_sql(p1: str = "p1", cols: str = "") -> str:
+    """The _N_SUB_PROBES nearest sub-seeds within each probed coarse
+    cluster of CTE ``p1`` (twin: _sub_probe)."""
+    return f"""p2 AS (
+      SELECT s.cluster, s.sub{cols}
+      FROM seeds2 s JOIN {p1} USING (cluster) CROSS JOIN q
+      QUALIFY row_number() OVER (
+        PARTITION BY s.cluster
+        ORDER BY {dround_sql(_COS_SQL.format(a='s.sv', b='q.qv'), 6)}
+                 DESC NULLS LAST, s.sub) <= {_N_SUB_PROBES}
+    )"""
+
+
+def _twolevel_probe_sql(width: int) -> str:
+    """p1/p2: the two-level probe's leaf keys (twin: _twolevel_probe)."""
+    return f"{_probe_sql('p1', width)},\n    {_sub_probe_sql()}"
+
+
+# the lowest-vec_id query row with its label (twin: _filtered_query_row)
+_FILTERED_Q_SQL = """q AS (
+      SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv,
+             label AS qlabel
+      FROM embeddings ORDER BY vec_id LIMIT 1
+    ),"""
+
+# exact top-k over the label-filtered slice (twin: _exact_topk)
+_FILTERED_EXACT_SQL = f"""exact AS (
+      SELECT e.vec_id
+      FROM embeddings e CROSS JOIN q
+      WHERE e.vec_id <> q.qid AND e.label = q.qlabel
+      ORDER BY {dround_sql(
+          _COS_SQL.format(a='CAST(e.embedding AS DOUBLE[])', b='q.qv'), 6
+      )} DESC NULLS LAST, e.vec_id
+      LIMIT {_TOP_K}
+    )"""
+
+# one query's recall over CTEs exact (vec_id) / approx (vec_id, hit)
+# (twin: _single_recall)
+_SINGLE_RECALL_SQL = f"""SELECT q.qid,
+           COUNT(*) AS exact_k,
+           {_recall_sql('a.hit', 'probe_hits')}
+    FROM exact x
+    LEFT JOIN approx a USING (vec_id)
+    CROSS JOIN q
+    GROUP BY q.qid"""
+
+# the max-width probe, ranked (twin: _probe_ranks)
+_SWEEP_PR_SQL = f"""pr AS (
+      SELECT cluster,
+             row_number() OVER (ORDER BY ccos DESC NULLS LAST, cluster)
+               AS prank
+      FROM (
+        SELECT c.cluster,
+               {dround_sql(_COS_SQL.format(a='c.cv', b='q.qv'), 6)}
+                 AS ccos
+        FROM c{_ITERS - 1} c CROSS JOIN q
+        ORDER BY ccos DESC NULLS LAST, cluster
+        LIMIT {max(_SWEEP_PROBE_WIDTHS)}
+      )
+    ),"""
+
+
+def _sweep_sql(src: str, probed: str) -> str:
+    """wg .. cost CTEs and the per-width SELECT of a probe-width sweep
+    (twin: _probe_sweep): ``src`` is the aliased inverted-list relation,
+    ``probed`` the join to the ranked probe CTE (pr or p2)."""
+    a, p = src.split()[-1], probed.split()[0]
+    widths = ", ".join(f"({x})" for x in _SWEEP_PROBE_WIDTHS)
+    return f"""wg AS (
+      SELECT CAST(w AS BIGINT) AS n_probes FROM (VALUES {widths}) v(w)
+    ),
+    cand AS (
+      SELECT g.n_probes, {a}.vec_id,
+             {dround_sql(_COS_SQL.format(a=f'{a}.dv', b='q.qv'), 6)}
+               AS cos_sim
+      FROM {src}
+      JOIN {probed}
+      JOIN wg g ON {p}.prank <= g.n_probes
+      JOIN embeddings e ON e.vec_id = {a}.vec_id
+      CROSS JOIN q
+      WHERE {a}.vec_id <> q.qid AND e.label = q.qlabel
+    ),
+    approx AS (
+      SELECT n_probes, vec_id FROM cand
+      QUALIFY row_number() OVER (
+        PARTITION BY n_probes
+        ORDER BY cos_sim DESC NULLS LAST, vec_id) <= {_TOP_K}
+    ),
+    {_FILTERED_EXACT_SQL},
+    cost AS (
+      SELECT n_probes, COUNT(*) AS n_candidates FROM cand
+      GROUP BY n_probes
+    )
+    SELECT g.n_probes,
+           CAST(COALESCE(MAX(c.n_candidates), 0) AS BIGINT)
+             AS n_candidates,
+           {_recall_sql('a.vec_id', 'probe_hits')}
+    FROM wg g
+    CROSS JOIN exact x
+    LEFT JOIN approx a ON a.n_probes = g.n_probes AND a.vec_id = x.vec_id
+    LEFT JOIN cost c ON c.n_probes = g.n_probes
+    GROUP BY g.n_probes
+    ORDER BY g.n_probes"""
 
 
 @query(
@@ -1122,13 +1213,7 @@ _TOP_K = 10
     oracle=f"""
     {_kmeans_sql_prefix()},
     q AS (SELECT vec_id AS qid, dv AS qv FROM v ORDER BY vec_id LIMIT 1),
-    probe AS (
-      SELECT c.cluster
-      FROM c{_ITERS - 1} c CROSS JOIN q
-      ORDER BY {dround_sql(_COS_SQL.format(a='c.cv', b='q.qv'), 6)} DESC NULLS LAST,
-               c.cluster
-      LIMIT {_N_PROBES}
-    )
+    {_probe_sql('probe', _N_PROBES)}
     SELECT s.vec_id, s.cluster,
            {dround_sql(_COS_SQL.format(a='s.dv', b='q.qv'), 6)} AS cos_sim
     FROM {_FINAL} s JOIN probe USING (cluster) CROSS JOIN q
@@ -1160,22 +1245,8 @@ def _ann_ivf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assigned, cent = _kmeans_state_frames(emb)
     assigned = _persist(assigned)
-    q = (
-        emb.orderBy("vec_id")
-        .limit(1)
-        .select(F.col("vec_id").alias("qid"), F.col("dv").alias("qv"))
-    )
-    probe = (
-        cent.join(F.broadcast(q))
-        .select(
-            "cluster",
-            "qid",
-            "qv",
-            dround(_cos(F.col("cv"), F.col("qv")), 6).alias("ccos"),
-        )
-        .orderBy(F.col("ccos").desc(), "cluster")
-        .limit(_N_PROBES)
-        .select("cluster", "qid", "qv")
+    probe = _probe(cent, _query_rows(emb, "dv"), _N_PROBES).select(
+        "cluster", "qid", "qv"
     )
     return (
         assigned.join(F.broadcast(probe), "cluster")
@@ -1194,30 +1265,13 @@ def _ann_ivf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Two-level IVF probe: the extreme-n ANN shape over the sqrt-k index
 # ---------------------------------------------------------------------------
 
-_N_SUB_PROBES = 2
-
-
 @query(
     "ann_twolevel_ivf_topk",
     oracle=f"""
     {_kmeans_sql_prefix(k_sql=_K1_SQL)},
     {_TWOLEVEL_CTES},
     q AS (SELECT vec_id AS qid, dv AS qv FROM v ORDER BY vec_id LIMIT 1),
-    p1 AS (
-      SELECT c.cluster
-      FROM c{_ITERS - 1} c CROSS JOIN q
-      ORDER BY {dround_sql(_COS_SQL.format(a='c.cv', b='q.qv'), 6)}
-               DESC NULLS LAST, c.cluster
-      LIMIT {_N_PROBES}
-    ),
-    p2 AS (
-      SELECT s.cluster, s.sub
-      FROM seeds2 s JOIN p1 USING (cluster) CROSS JOIN q
-      QUALIFY row_number() OVER (
-        PARTITION BY s.cluster
-        ORDER BY {dround_sql(_COS_SQL.format(a='s.sv', b='q.qv'), 6)}
-                 DESC NULLS LAST, s.sub) <= {_N_SUB_PROBES}
-    )
+    {_twolevel_probe_sql(_N_PROBES)}
     SELECT f.vec_id, f.cluster, f.sub,
            {dround_sql(_COS_SQL.format(a='f.dv', b='q.qv'), 6)} AS cos_sim
     FROM f JOIN p2 USING (cluster, sub) CROSS JOIN q
@@ -1250,6 +1304,34 @@ def ann_twolevel_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _finalize(spark, _ann_twolevel_frame(spark, sf_dir))
 
 
+def _probe(cent: DataFrame, q: DataFrame, width: int) -> DataFrame:
+    """The ``width`` centroids nearest the 1-row query ``q`` (whose
+    columns ride along), with the snapped probe cosine ccos."""
+    return (
+        cent.join(F.broadcast(q))
+        .select(
+            "cluster",
+            *q.columns,
+            dround(_cos(F.col("cv"), F.col("qv")), 6).alias("ccos"),
+        )
+        .orderBy(F.col("ccos").desc(), "cluster")
+        .limit(width)
+    )
+
+
+def _sub_probe(seeds2: DataFrame, p1: DataFrame, q: DataFrame) -> DataFrame:
+    """Within each probed coarse cluster of ``p1`` (whose columns ride
+    along, like q's), the _N_SUB_PROBES sub-seeds nearest ``q``."""
+    scored = (
+        seeds2.join(F.broadcast(p1), "cluster")
+        .join(F.broadcast(q))
+        .withColumn("scos", dround(_cos(F.col("sv"), F.col("qv")), 6))
+    )
+    return _rank_top(
+        scored, ["cluster"], "scos", "sub", _N_SUB_PROBES
+    ).drop("scos", "sv")
+
+
 def _twolevel_probe(
     cent: DataFrame, seeds2: DataFrame, q: DataFrame, n_coarse: int
 ) -> DataFrame:
@@ -1258,27 +1340,7 @@ def _twolevel_probe(
     then the _N_SUB_PROBES nearest sub-seeds within each -- the ONE
     probe definition the unfiltered and filtered two-level ops share
     (probe tie-breaks can never de-synchronize them)."""
-    p1 = (
-        cent.join(F.broadcast(q))
-        .select(
-            "cluster",
-            dround(_cos(F.col("cv"), F.col("qv")), 6).alias("ccos"),
-        )
-        .orderBy(F.col("ccos").desc(), "cluster")
-        .limit(n_coarse)
-        .select("cluster")
-    )
-    w_p = Window.partitionBy("cluster").orderBy(
-        F.col("scos").desc_nulls_last(), F.col("sub")
-    )
-    return (
-        seeds2.join(F.broadcast(p1), "cluster")
-        .join(F.broadcast(q))
-        .withColumn("scos", dround(_cos(F.col("sv"), F.col("qv")), 6))
-        .withColumn("rk", F.row_number().over(w_p))
-        .filter(F.col("rk") <= _N_SUB_PROBES)
-        .drop("scos", "rk", "sv")
-    )
+    return _sub_probe(seeds2, _probe(cent, q, n_coarse).select("cluster"), q)
 
 
 def _ann_twolevel_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1288,11 +1350,7 @@ def _ann_twolevel_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", _dvec(F.col("embedding")).alias("dv")
     )
     _, cent, seeds2, fine = _twolevel_state_frames(emb)
-    q = (
-        emb.orderBy("vec_id")
-        .limit(1)
-        .select(F.col("vec_id").alias("qid"), F.col("dv").alias("qv"))
-    )
+    q = _query_rows(emb, "dv")
     p2 = _twolevel_probe(cent, seeds2, q, _N_PROBES).select(
         "cluster", "sub", "qid", "qv"
     )
@@ -1323,18 +1381,7 @@ def _ann_twolevel_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE {_COS_SQL.format(a='a.dv', b='b.dv')} >= {_SEMDEDUP_COS}
     ),
     dropped AS (SELECT DISTINCT cluster, sub, drop_id FROM pairs)
-    SELECT s.cluster, s.sub,
-           COUNT(*) AS n_members,
-           COUNT(d.drop_id) AS n_dropped,
-           COUNT(*) - COUNT(d.drop_id) AS n_kept,
-           {dround_sql(
-               '(COUNT(*) - COUNT(d.drop_id)) / CAST(COUNT(*) AS DOUBLE)', 4
-           )} AS kept_frac
-    FROM f s
-    LEFT JOIN dropped d
-      ON s.cluster = d.cluster AND s.sub = d.sub AND s.vec_id = d.drop_id
-    GROUP BY s.cluster, s.sub
-    ORDER BY s.cluster, s.sub
+    {_kept_stats_sql("f", ("cluster", "sub"))}
     """,
     tags=("llm-similarity", "llm-dedup", "llm-clustering"),
 )
@@ -1393,29 +1440,7 @@ def semantic_dedup_twolevel_stats(
         ["cluster", "sub"],
         "cluster bigint, sub bigint, drop_id bigint",
     )
-    return _finalize(spark, (
-        fine.join(
-            dropped,
-            (fine["cluster"] == dropped["cluster"])
-            & (fine["sub"] == dropped["sub"])
-            & (fine["vec_id"] == dropped["drop_id"]),
-            "left",
-        )
-        .groupBy(
-            fine["cluster"].alias("cluster"), fine["sub"].alias("sub")
-        )
-        .agg(
-            F.count("*").alias("n_members"),
-            F.count("drop_id").alias("n_dropped"),
-            (F.count("*") - F.count("drop_id")).alias("n_kept"),
-            dround(
-                (F.count("*") - F.count("drop_id"))
-                / F.count("*").cast("double"),
-                4,
-            ).alias("kept_frac"),
-        )
-        .orderBy("cluster", "sub")
-    ))
+    return _finalize(spark, _kept_stats(fine, dropped, ["cluster", "sub"]))
 
 
 @query(
@@ -1424,21 +1449,7 @@ def semantic_dedup_twolevel_stats(
     {_kmeans_sql_prefix(k_sql=_K1_SQL)},
     {_TWOLEVEL_CTES},
     q AS (SELECT vec_id AS qid, dv AS qv FROM v ORDER BY vec_id LIMIT 1),
-    p1 AS (
-      SELECT c.cluster
-      FROM c{_ITERS - 1} c CROSS JOIN q
-      ORDER BY {dround_sql(_COS_SQL.format(a='c.cv', b='q.qv'), 6)}
-               DESC NULLS LAST, c.cluster
-      LIMIT {_N_PROBES}
-    ),
-    p2 AS (
-      SELECT s.cluster, s.sub
-      FROM seeds2 s JOIN p1 USING (cluster) CROSS JOIN q
-      QUALIFY row_number() OVER (
-        PARTITION BY s.cluster
-        ORDER BY {dround_sql(_COS_SQL.format(a='s.sv', b='q.qv'), 6)}
-                 DESC NULLS LAST, s.sub) <= {_N_SUB_PROBES}
-    ),
+    {_twolevel_probe_sql(_N_PROBES)},
     approx AS (
       SELECT f.vec_id, 1 AS hit
       FROM f JOIN p2 USING (cluster, sub) CROSS JOIN q
@@ -1455,76 +1466,33 @@ def semantic_dedup_twolevel_stats(
                DESC NULLS LAST, e.vec_id
       LIMIT {_TOP_K}
     )
-    SELECT q.qid,
-           COUNT(*) AS exact_k,
-           CAST(COUNT(a.hit) AS BIGINT) AS probe_hits,
-           {dround_sql(f'COUNT(a.hit) / {_TOP_K}.0', 4)} AS recall_at_k
-    FROM exact x
-    LEFT JOIN approx a USING (vec_id)
-    CROSS JOIN q
-    GROUP BY q.qid
+    {_SINGLE_RECALL_SQL}
     """,
     tags=("llm-similarity", "llm-clustering"),
 )
 @_scoped
 def ann_twolevel_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the two-level probe against the exact brute-force
-    top-k (the same eval discipline every ANN variant here carries:
-    ann_dim_truncation_recall, the IVF recall evals -- an index whose
-    recall is not measured is not done). Both sides share the one
-    query vector and the fully tie-broken (snapped cosine, vec_id)
-    ordering, so the overlap count is engine-exact, not a tolerance
-    compare. The probed fraction is ~probes*sub_probes*target/n of the
-    corpus; recall prices what that skipping costs on THIS corpus --
-    the number a production tuner moves n_probes/_N_SUB_PROBES
-    against, exactly as the single-level IVF family documents.
+    top-k (an index whose recall is not measured is not done). Both
+    sides share the one query vector and the fully tie-broken (snapped
+    cosine, vec_id) ordering, so the overlap count is engine-exact, not
+    a tolerance compare. The probed fraction is
+    ~probes*sub_probes*target/n of the corpus; recall prices what that
+    skipping costs on THIS corpus -- the number a production tuner
+    moves n_probes/_N_SUB_PROBES against, exactly as the single-level
+    IVF family documents.
 
-    Shape at scale: the exact side is one broadcast-query scan with a
-    TakeOrderedAndProject head (the cosine_topk baseline); the approx
-    side is the two-level probe's bounded leaf fetch; the final
-    rollup compares two <= k-row frames."""
+    Shape at scale: the exact side is _exact_topk's broadcast-query
+    scan with a TakeOrderedAndProject head; the approx side is the
+    two-level probe's bounded leaf fetch (_ann_twolevel_frame);
+    _single_recall compares the two <= k-row frames."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("dv")
     )
-    q = (
-        emb.orderBy("vec_id")
-        .limit(1)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("dv").alias("qv"),
-            _norm(F.col("dv")).alias("qn"),
-        )
-    )
-    approx = _ann_twolevel_frame(spark, sf_dir).select(
-        "vec_id", F.lit(1).alias("hit")
-    )
-    exact = (
-        emb.join(F.broadcast(q), emb["vec_id"] != F.col("qid"))
-        .select(
-            "vec_id",
-            dround(
-                _cos_pre(
-                    F.col("dv"), _norm(F.col("dv")),
-                    F.col("qv"), F.col("qn"),
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(_TOP_K)
-        .select("vec_id")
-    )
-    return _finalize(spark, (
-        exact.join(approx, "vec_id", "left")
-        .crossJoin(F.broadcast(q.select("qid")))
-        .groupBy("qid")
-        .agg(
-            F.count("*").alias("exact_k"),
-            F.count("hit").cast("long").alias("probe_hits"),
-            dround(
-                F.count("hit") / F.lit(float(_TOP_K)), 4
-            ).alias("recall_at_k"),
-        )
+    q = _query_rows(emb, "dv", _norm(F.col("dv")).alias("qn"))
+    return _finalize(spark, _single_recall(
+        _exact_topk(emb, q), _ann_twolevel_frame(spark, sf_dir), q,
+        "probe_hits",
     ))
 
 
@@ -1532,29 +1500,12 @@ def ann_twolevel_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Filtered ANN: metadata predicate + IVF probe (the production pattern)
 # ---------------------------------------------------------------------------
 
-# Filtered search probes MORE lists than unfiltered (the filter thins
-# each probed list, so the same recall needs more candidates) -- the
-# n_probes-vs-selectivity trade every production vector store tunes.
-# 3 vs the unfiltered op's 2 documents the knob without a sweep.
-_N_FILTERED_PROBES = 3
-
-
 @query(
     "ann_filtered_topk",
     oracle=f"""
     {_kmeans_sql_prefix()},
-    q AS (
-      SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv,
-             label AS qlabel
-      FROM embeddings ORDER BY vec_id LIMIT 1
-    ),
-    probe AS (
-      SELECT c.cluster
-      FROM c{_ITERS - 1} c CROSS JOIN q
-      ORDER BY {dround_sql(_COS_SQL.format(a='c.cv', b='q.qv'), 6)}
-               DESC NULLS LAST, c.cluster
-      LIMIT {_N_FILTERED_PROBES}
-    )
+    {_FILTERED_Q_SQL}
+    {_probe_sql('probe', _N_FILTERED_PROBES)}
     SELECT s.vec_id, s.cluster, e.label,
            {dround_sql(_COS_SQL.format(a='s.dv', b='q.qv'), 6)} AS cos_sim
     FROM {_FINAL} s
@@ -1606,38 +1557,13 @@ def _filtered_search_parts(spark: SparkSession, sf_dir: str):
 
 def _filtered_query_row(emb_full: DataFrame) -> DataFrame:
     """The lowest-vec_id query row with its label payload (qid, qv,
-    qlabel) -- the ONE query-selection definition every filtered op
-    (linear-k and two-level) shares."""
-    return (
-        emb_full.orderBy("vec_id")
-        .limit(1)
-        .select(
-            F.col("vec_id").alias("qid"),
-            _dvec(F.col("embedding")).alias("qv"),
-            F.col("label").alias("qlabel"),
-            # query norm rides the 1-row broadcast: the corpus-scan
-            # sides then pay dot + norm(v) per row instead of
-            # re-folding norm(qv) for every row (loop-invariant
-            # hoisting codegen does not do across rows)
-            _norm(_dvec(F.col("embedding"))).alias("qn"),
-        )
-    )
-
-
-def _filtered_probe(cent: DataFrame, q: DataFrame, width: int) -> DataFrame:
-    """The `width` centroids nearest the query, with the snapped probe
-    cosine retained (the sweep ranks on it; the topk path drops it)."""
-    return (
-        cent.join(F.broadcast(q))
-        .select(
-            "cluster",
-            "qid",
-            "qv",
-            "qlabel",
-            dround(_cos(F.col("cv"), F.col("qv")), 6).alias("ccos"),
-        )
-        .orderBy(F.col("ccos").desc(), "cluster")
-        .limit(width)
+    qlabel, qn) -- the ONE query-selection definition every filtered op
+    (linear-k and two-level) shares. The query norm rides the 1-row
+    broadcast: corpus scans then pay dot + norm(v) per row instead of
+    re-folding norm(qv) for every row."""
+    dv = _dvec(F.col("embedding"))
+    return _query_rows(
+        emb_full, dv, F.col("label").alias("qlabel"), _norm(dv).alias("qn")
     )
 
 
@@ -1663,19 +1589,18 @@ def _filtered_topk(lists: DataFrame, probe: DataFrame) -> DataFrame:
     )
 
 
-def _filtered_exact_topk(emb_full: DataFrame, q: DataFrame) -> DataFrame:
-    """Brute-force top-k over the label-filtered corpus slice (the
-    recall baselines' shared exact side). Uses the query row's carried
-    norm (qn): two 64-dim folds per scanned row, not three."""
+def _exact_topk(e: DataFrame, q: DataFrame, *conds: Column) -> DataFrame:
+    """Brute-force top-k vec_ids of the (vec_id, dv, ...) frame ``e``
+    for the 1-row query ``q`` over the rows passing ``conds``: one
+    broadcast-query scan with a TakeOrderedAndProject head, using the
+    query row's carried norm (qn) -- two 64-dim folds per scanned row,
+    not three."""
+    keep = F.col("vec_id") != F.col("qid")
+    for c in conds:
+        keep = keep & c
     return (
-        emb_full.select(
-            "vec_id", "label", _dvec(F.col("embedding")).alias("dv")
-        )
-        .join(F.broadcast(q))
-        .filter(
-            (F.col("vec_id") != F.col("qid"))
-            & (F.col("label") == F.col("qlabel"))
-        )
+        e.join(F.broadcast(q))
+        .filter(keep)
         .select(
             "vec_id",
             dround(
@@ -1692,30 +1617,29 @@ def _filtered_exact_topk(emb_full: DataFrame, q: DataFrame) -> DataFrame:
     )
 
 
+def _filtered_exact_topk(emb_full: DataFrame, q: DataFrame) -> DataFrame:
+    """_exact_topk over the query label's corpus slice (the filtered
+    recall baselines' shared exact side)."""
+    e = emb_full.select(
+        "vec_id", "label", _dvec(F.col("embedding")).alias("dv")
+    )
+    return _exact_topk(e, q, F.col("label") == F.col("qlabel"))
+
+
 def _ann_filtered_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lazy filtered-probe frame (plan tests pin the payload-join and
     bucket-local scan shape BEFORE the materialization idiom collapses
     it to local rows)."""
     _, lists, q, cent = _filtered_search_parts(spark, sf_dir)
-    return _filtered_topk(lists, _filtered_probe(cent, q, _N_FILTERED_PROBES))
+    return _filtered_topk(lists, _probe(cent, q, _N_FILTERED_PROBES))
 
 
 @query(
     "ann_filtered_recall",
     oracle=f"""
     {_kmeans_sql_prefix()},
-    q AS (
-      SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv,
-             label AS qlabel
-      FROM embeddings ORDER BY vec_id LIMIT 1
-    ),
-    probe AS (
-      SELECT c.cluster
-      FROM c{_ITERS - 1} c CROSS JOIN q
-      ORDER BY {dround_sql(_COS_SQL.format(a='c.cv', b='q.qv'), 6)}
-               DESC NULLS LAST, c.cluster
-      LIMIT {_N_FILTERED_PROBES}
-    ),
+    {_FILTERED_Q_SQL}
+    {_probe_sql('probe', _N_FILTERED_PROBES)},
     approx AS (
       SELECT s.vec_id, 1 AS hit
       FROM {_FINAL} s
@@ -1727,23 +1651,8 @@ def _ann_filtered_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                DESC NULLS LAST, s.vec_id
       LIMIT {_TOP_K}
     ),
-    exact AS (
-      SELECT e.vec_id
-      FROM embeddings e CROSS JOIN q
-      WHERE e.vec_id <> q.qid AND e.label = q.qlabel
-      ORDER BY {dround_sql(
-          _COS_SQL.format(a='CAST(e.embedding AS DOUBLE[])', b='q.qv'), 6
-      )} DESC NULLS LAST, e.vec_id
-      LIMIT {_TOP_K}
-    )
-    SELECT q.qid,
-           COUNT(*) AS exact_k,
-           CAST(COUNT(a.hit) AS BIGINT) AS probe_hits,
-           {dround_sql(f'COUNT(a.hit) / {_TOP_K}.0', 4)} AS recall_at_k
-    FROM exact x
-    LEFT JOIN approx a USING (vec_id)
-    CROSS JOIN q
-    GROUP BY q.qid
+    {_FILTERED_EXACT_SQL}
+    {_SINGLE_RECALL_SQL}
     """,
     tags=("llm-similarity", "llm-clustering"),
 )
@@ -1753,30 +1662,17 @@ def ann_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same filtered corpus slice -- the number that prices the
     probe-width/selectivity trade (_N_FILTERED_PROBES): widen the
     probe and recall rises at linear candidate cost; a selective
-    filter thins the probed lists and drags recall down first. Same
-    engine-exact discipline as ann_twolevel_recall (snapped cosines,
-    full tie-breaks on both sides).
+    filter thins the probed lists and drags recall down first. Snapped
+    cosines and full tie-breaks on both sides keep it engine-exact.
 
-    Shape at scale: the exact side is one broadcast-query scan over
-    the filtered slice with a TakeOrderedAndProject head; the approx
-    side is the bounded filtered-list fetch; the rollup compares two
-    <= k-row frames."""
+    Shape at scale: the exact side is _filtered_exact_topk's
+    broadcast-query scan over the filtered slice; the approx side is
+    the bounded filtered-list fetch (_filtered_topk); _single_recall
+    compares the two <= k-row frames."""
     emb_full, lists, q, cent = _filtered_search_parts(spark, sf_dir)
-    approx = _filtered_topk(
-        lists, _filtered_probe(cent, q, _N_FILTERED_PROBES)
-    ).select("vec_id", F.lit(1).alias("hit"))
-    exact = _filtered_exact_topk(emb_full, q)
-    return _finalize(spark, (
-        exact.join(approx, "vec_id", "left")
-        .crossJoin(F.broadcast(q.select("qid")))
-        .groupBy("qid")
-        .agg(
-            F.count("*").alias("exact_k"),
-            F.count("hit").cast("long").alias("probe_hits"),
-            dround(
-                F.count("hit") / F.lit(float(_TOP_K)), 4
-            ).alias("recall_at_k"),
-        )
+    approx = _filtered_topk(lists, _probe(cent, q, _N_FILTERED_PROBES))
+    return _finalize(spark, _single_recall(
+        _filtered_exact_topk(emb_full, q), approx, q, "probe_hits"
     ))
 
 
@@ -2001,76 +1897,13 @@ def ann_index_incremental_assign(
 # Filtered-probe width sweep: the selectivity/recall dial, priced
 # ---------------------------------------------------------------------------
 
-_SWEEP_PROBE_WIDTHS = (1, 2, 3, 4)
-
-
 @query(
     "ann_filtered_probe_sweep",
     oracle=f"""
     {_kmeans_sql_prefix()},
-    q AS (
-      SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv,
-             label AS qlabel
-      FROM embeddings ORDER BY vec_id LIMIT 1
-    ),
-    pr AS (
-      SELECT cluster,
-             row_number() OVER (ORDER BY ccos DESC NULLS LAST, cluster)
-               AS prank
-      FROM (
-        SELECT c.cluster,
-               {dround_sql(_COS_SQL.format(a='c.cv', b='q.qv'), 6)}
-                 AS ccos
-        FROM c{_ITERS - 1} c CROSS JOIN q
-        ORDER BY ccos DESC NULLS LAST, cluster
-        LIMIT {max(_SWEEP_PROBE_WIDTHS)}
-      )
-    ),
-    wg AS (
-      SELECT CAST(w AS BIGINT) AS n_probes
-      FROM (VALUES {", ".join(f"({x})" for x in _SWEEP_PROBE_WIDTHS)}) v(w)
-    ),
-    cand AS (
-      SELECT g.n_probes, s.vec_id,
-             {dround_sql(_COS_SQL.format(a='s.dv', b='q.qv'), 6)}
-               AS cos_sim
-      FROM {_FINAL} s
-      JOIN pr USING (cluster)
-      JOIN wg g ON pr.prank <= g.n_probes
-      JOIN embeddings e ON e.vec_id = s.vec_id
-      CROSS JOIN q
-      WHERE s.vec_id <> q.qid AND e.label = q.qlabel
-    ),
-    approx AS (
-      SELECT n_probes, vec_id FROM cand
-      QUALIFY row_number() OVER (
-        PARTITION BY n_probes
-        ORDER BY cos_sim DESC NULLS LAST, vec_id) <= {_TOP_K}
-    ),
-    exact AS (
-      SELECT e.vec_id
-      FROM embeddings e CROSS JOIN q
-      WHERE e.vec_id <> q.qid AND e.label = q.qlabel
-      ORDER BY {dround_sql(
-          _COS_SQL.format(a='CAST(e.embedding AS DOUBLE[])', b='q.qv'), 6
-      )} DESC NULLS LAST, e.vec_id
-      LIMIT {_TOP_K}
-    ),
-    cost AS (
-      SELECT n_probes, COUNT(*) AS n_candidates FROM cand
-      GROUP BY n_probes
-    )
-    SELECT g.n_probes,
-           CAST(COALESCE(MAX(c.n_candidates), 0) AS BIGINT)
-             AS n_candidates,
-           CAST(COUNT(a.vec_id) AS BIGINT) AS probe_hits,
-           {dround_sql(f'COUNT(a.vec_id) / {_TOP_K}.0', 4)} AS recall_at_k
-    FROM wg g
-    CROSS JOIN exact x
-    LEFT JOIN approx a ON a.n_probes = g.n_probes AND a.vec_id = x.vec_id
-    LEFT JOIN cost c ON c.n_probes = g.n_probes
-    GROUP BY g.n_probes
-    ORDER BY g.n_probes
+    {_FILTERED_Q_SQL}
+    {_SWEEP_PR_SQL}
+    {_sweep_sql(_FINAL + " s", "pr USING (cluster)")}
     """,
     tags=("llm-similarity", "llm-clustering"),
 )
@@ -2086,28 +1919,46 @@ def ann_filtered_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     same recall -- here the curve is a table a pipeline owner reads
     before setting the knob.
 
-    Shape at scale: ONE index build and ONE probed-list pass serve
-    every width (the width grid joins the prank <= w predicate against
-    a <= max-width-row broadcast, so sweeping costs the widest probe,
-    not the sum); candidates persist once and feed both the recall and
-    the cost rollups. Exact side is the bounded filtered brute-force
-    baseline; everything tie-broken and snapped as usual."""
+    Shape at scale: ONE index build; _probe_sweep runs ONE
+    probed-list pass at the widest probe (_probe_ranks) for every
+    width, with the bounded filtered brute-force baseline as its exact
+    side; everything tie-broken and snapped as usual."""
     emb_full, lists, q, cent = _filtered_search_parts(spark, sf_dir)
-    probe_top = _filtered_probe(cent, q, max(_SWEEP_PROBE_WIDTHS))
-    w_pr = Window.orderBy(F.col("ccos").desc(), "cluster")
-    pr = probe_top.withColumn("prank", F.row_number().over(w_pr)).select(
-        "cluster", "prank"
+    probed = lists.join(F.broadcast(_probe_ranks(cent, q)), "cluster")
+    return _finalize(spark, _probe_sweep(spark, probed, emb_full, q))
+
+
+def _probe_ranks(cent: DataFrame, q: DataFrame) -> DataFrame:
+    """(cluster, prank): the max(_SWEEP_PROBE_WIDTHS) centroids nearest
+    ``q``, ranked -- the widest probe, which every sweep width prefixes."""
+    w = Window.orderBy(F.col("ccos").desc_nulls_last(), "cluster")
+    return (
+        _probe(cent, q, max(_SWEEP_PROBE_WIDTHS))
+        .withColumn("prank", F.row_number().over(w))
+        .select("cluster", "prank")
     )
+
+
+def _probe_sweep(
+    spark: SparkSession, probed: DataFrame, emb_full: DataFrame, q: DataFrame
+) -> DataFrame:
+    """Per probe width n_probes in _SWEEP_PROBE_WIDTHS: the filtered
+    candidate count and recall@k against exact filtered brute force,
+    for the filtered query row ``q``. ``probed`` is the caller's
+    inverted-list rows (vec_id, label, dv) joined to its ranked probe
+    (prank). ONE probed-list pass serves every width: the width grid
+    attaches as a broadcast prank <= n_probes join, so sweeping costs
+    the widest probe, not the sum; candidates persist once and feed
+    both the recall and the cost rollup, and both rollup sides (<=
+    widths*k rows) broadcast into the stitch, so it never plans a
+    sort-merge exchange pair."""
     widths = spark.range(1).select(
         F.explode(
-            F.array(
-                *[F.lit(x).cast("long") for x in _SWEEP_PROBE_WIDTHS]
-            )
+            F.array(*[F.lit(x).cast("long") for x in _SWEEP_PROBE_WIDTHS])
         ).alias("n_probes")
     )
     cand = _persist(
-        lists.join(F.broadcast(pr), "cluster")
-        .join(F.broadcast(widths), F.col("prank") <= F.col("n_probes"))
+        probed.join(F.broadcast(widths), F.col("prank") <= F.col("n_probes"))
         .join(F.broadcast(q))
         .filter(
             (F.col("vec_id") != F.col("qid"))
@@ -2119,29 +1970,16 @@ def ann_filtered_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             dround(_cos(F.col("dv"), F.col("qv")), 6).alias("cos_sim"),
         )
     )
-    w_rk = Window.partitionBy("n_probes").orderBy(
-        F.col("cos_sim").desc_nulls_last(), F.col("vec_id")
+    approx = _rank_top(cand, ["n_probes"], "cos_sim").select(
+        "n_probes", "vec_id", F.lit(1).alias("hit")
     )
-    approx = (
-        cand.withColumn("rk", F.row_number().over(w_rk))
-        .filter(F.col("rk") <= _TOP_K)
-        .select("n_probes", "vec_id", F.lit(1).alias("hit"))
-    )
-    exact = _filtered_exact_topk(emb_full, q)
-    cost = cand.groupBy("n_probes").agg(
-        F.count("*").alias("n_candidates")
-    )
-    out = (
-        widths.crossJoin(exact)
-        .join(approx, ["n_probes", "vec_id"], "left")
+    cost = cand.groupBy("n_probes").agg(F.count("*").alias("n_candidates"))
+    return (
+        widths.crossJoin(_filtered_exact_topk(emb_full, q))
+        .join(F.broadcast(approx), ["n_probes", "vec_id"], "left")
         .groupBy("n_probes")
-        .agg(
-            F.count("hit").cast("long").alias("probe_hits"),
-            dround(
-                F.count("hit") / F.lit(float(_TOP_K)), 4
-            ).alias("recall_at_k"),
-        )
-        .join(cost, "n_probes", "left")
+        .agg(*_recall("hit", "probe_hits"))
+        .join(F.broadcast(cost), "n_probes", "left")
         .select(
             "n_probes",
             F.coalesce("n_candidates", F.lit(0))
@@ -2152,7 +1990,6 @@ def ann_filtered_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("n_probes")
     )
-    return _finalize(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -2164,26 +2001,8 @@ def ann_filtered_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     {_kmeans_sql_prefix(k_sql=_K1_SQL)},
     {_TWOLEVEL_CTES},
-    q AS (
-      SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv,
-             label AS qlabel
-      FROM embeddings ORDER BY vec_id LIMIT 1
-    ),
-    p1 AS (
-      SELECT c.cluster
-      FROM c{_ITERS - 1} c CROSS JOIN q
-      ORDER BY {dround_sql(_COS_SQL.format(a='c.cv', b='q.qv'), 6)}
-               DESC NULLS LAST, c.cluster
-      LIMIT {_N_FILTERED_PROBES}
-    ),
-    p2 AS (
-      SELECT s.cluster, s.sub
-      FROM seeds2 s JOIN p1 USING (cluster) CROSS JOIN q
-      QUALIFY row_number() OVER (
-        PARTITION BY s.cluster
-        ORDER BY {dround_sql(_COS_SQL.format(a='s.sv', b='q.qv'), 6)}
-                 DESC NULLS LAST, s.sub) <= {_N_SUB_PROBES}
-    )
+    {_FILTERED_Q_SQL}
+    {_twolevel_probe_sql(_N_FILTERED_PROBES)}
     SELECT f.vec_id, f.cluster, f.sub, e.label,
            {dround_sql(_COS_SQL.format(a='f.dv', b='q.qv'), 6)} AS cos_sim
     FROM f
@@ -2220,6 +2039,17 @@ def ann_twolevel_filtered_topk(
     return _finalize(spark, _ann_twolevel_filtered_frame(spark, sf_dir))
 
 
+def _twolevel_filtered_parts(spark: SparkSession, sf_dir: str):
+    """(emb_full, lists, q, cent, seeds2): _filtered_search_parts over
+    the two-level index -- the fine leaf lists carry the label payload,
+    and the sub-seeds ride along for the second probe level."""
+    emb_full = load_table(spark, sf_dir, "embeddings")
+    emb = emb_full.select("vec_id", _dvec(F.col("embedding")).alias("dv"))
+    _, cent, seeds2, fine = _twolevel_state_frames(emb)
+    lists = fine.join(emb_full.select("vec_id", "label"), "vec_id")
+    return emb_full, lists, _filtered_query_row(emb_full), cent, seeds2
+
+
 def _ann_twolevel_filtered_frame(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2228,11 +2058,7 @@ def _ann_twolevel_filtered_frame(
     collapses it), composed from the shared builders: the two-level
     probe (shared with the unfiltered twin) over the filtered query
     row (shared with the linear-k filtered ops)."""
-    emb_full = load_table(spark, sf_dir, "embeddings")
-    emb = emb_full.select("vec_id", _dvec(F.col("embedding")).alias("dv"))
-    _, cent, seeds2, fine = _twolevel_state_frames(emb)
-    lists = fine.join(emb_full.select("vec_id", "label"), "vec_id")
-    q = _filtered_query_row(emb_full)
+    _, lists, q, cent, seeds2 = _twolevel_filtered_parts(spark, sf_dir)
     p2 = _twolevel_probe(cent, seeds2, q, _N_FILTERED_PROBES).select(
         "cluster", "sub", "qid", "qv", "qlabel"
     )
@@ -2259,26 +2085,8 @@ def _ann_twolevel_filtered_frame(
     oracle=f"""
     {_kmeans_sql_prefix(k_sql=_K1_SQL)},
     {_TWOLEVEL_CTES},
-    q AS (
-      SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv,
-             label AS qlabel
-      FROM embeddings ORDER BY vec_id LIMIT 1
-    ),
-    p1 AS (
-      SELECT c.cluster
-      FROM c{_ITERS - 1} c CROSS JOIN q
-      ORDER BY {dround_sql(_COS_SQL.format(a='c.cv', b='q.qv'), 6)}
-               DESC NULLS LAST, c.cluster
-      LIMIT {_N_FILTERED_PROBES}
-    ),
-    p2 AS (
-      SELECT s.cluster, s.sub
-      FROM seeds2 s JOIN p1 USING (cluster) CROSS JOIN q
-      QUALIFY row_number() OVER (
-        PARTITION BY s.cluster
-        ORDER BY {dround_sql(_COS_SQL.format(a='s.sv', b='q.qv'), 6)}
-                 DESC NULLS LAST, s.sub) <= {_N_SUB_PROBES}
-    ),
+    {_FILTERED_Q_SQL}
+    {_twolevel_probe_sql(_N_FILTERED_PROBES)},
     approx AS (
       SELECT f.vec_id, 1 AS hit
       FROM f
@@ -2290,23 +2098,8 @@ def _ann_twolevel_filtered_frame(
                DESC NULLS LAST, f.vec_id
       LIMIT {_TOP_K}
     ),
-    exact AS (
-      SELECT e.vec_id
-      FROM embeddings e CROSS JOIN q
-      WHERE e.vec_id <> q.qid AND e.label = q.qlabel
-      ORDER BY {dround_sql(
-          _COS_SQL.format(a='CAST(e.embedding AS DOUBLE[])', b='q.qv'), 6
-      )} DESC NULLS LAST, e.vec_id
-      LIMIT {_TOP_K}
-    )
-    SELECT q.qid,
-           COUNT(*) AS exact_k,
-           CAST(COUNT(a.hit) AS BIGINT) AS probe_hits,
-           {dround_sql(f'COUNT(a.hit) / {_TOP_K}.0', 4)} AS recall_at_k
-    FROM exact x
-    LEFT JOIN approx a USING (vec_id)
-    CROSS JOIN q
-    GROUP BY q.qid
+    {_FILTERED_EXACT_SQL}
+    {_SINGLE_RECALL_SQL}
     """,
     tags=("llm-similarity", "llm-clustering"),
 )
@@ -2322,15 +2115,15 @@ def ann_twolevel_filtered_recall(
     index specifically: the width was inherited from the linear-k
     sweep, but the sqrt-k leaf fetch probes far fewer vectors per
     list, so the selectivity penalty lands differently -- this row is
-    the number a tuner would move the width against. Same engine-exact
-    discipline as every sibling recall eval (snapped cosines, full
-    (cos, vec_id) tie-breaks on both sides, shared exact-side builder
-    _filtered_exact_topk and shared approx frame).
+    the number a tuner would move the width against. Snapped cosines
+    and full (cos, vec_id) tie-breaks on both sides keep it
+    engine-exact.
 
-    Shape at scale: the exact side is one broadcast-query scan over
-    the filtered slice with a TakeOrderedAndProject head; the approx
-    side is the bounded two-level leaf fetch with the predicate
-    evaluated map-side; the rollup compares two <= k-row frames."""
+    Shape at scale: the exact side is _filtered_exact_topk's
+    broadcast-query scan over the filtered slice; the approx side is
+    the bounded two-level leaf fetch with the predicate evaluated
+    map-side (_ann_twolevel_filtered_frame); _single_recall compares
+    the two <= k-row frames."""
     return _finalize(
         spark, _ann_twolevel_filtered_recall_frame(spark, sf_dir)
     )
@@ -2341,24 +2134,14 @@ def _ann_twolevel_filtered_recall_frame(
 ) -> DataFrame:
     """Lazy recall-eval frame (plan tests pin the exact side's top-k
     head and the <= k-row rollup joins BEFORE the materialization
-    idiom collapses them), composed entirely from shared builders."""
+    idiom collapses them)."""
     emb_full = load_table(spark, sf_dir, "embeddings")
     q = _filtered_query_row(emb_full)
-    approx = _ann_twolevel_filtered_frame(spark, sf_dir).select(
-        "vec_id", F.lit(1).alias("hit")
-    )
-    exact = _filtered_exact_topk(emb_full, q)
-    return (
-        exact.join(approx, "vec_id", "left")
-        .crossJoin(F.broadcast(q.select("qid")))
-        .groupBy("qid")
-        .agg(
-            F.count("*").alias("exact_k"),
-            F.count("hit").cast("long").alias("probe_hits"),
-            dround(
-                F.count("hit") / F.lit(float(_TOP_K)), 4
-            ).alias("recall_at_k"),
-        )
+    return _single_recall(
+        _filtered_exact_topk(emb_full, q),
+        _ann_twolevel_filtered_frame(spark, sf_dir),
+        q,
+        "probe_hits",
     )
 
 
@@ -2367,77 +2150,10 @@ def _ann_twolevel_filtered_recall_frame(
     oracle=f"""
     {_kmeans_sql_prefix(k_sql=_K1_SQL)},
     {_TWOLEVEL_CTES},
-    q AS (
-      SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv,
-             label AS qlabel
-      FROM embeddings ORDER BY vec_id LIMIT 1
-    ),
-    pr AS (
-      SELECT cluster,
-             row_number() OVER (ORDER BY ccos DESC NULLS LAST, cluster)
-               AS prank
-      FROM (
-        SELECT c.cluster,
-               {dround_sql(_COS_SQL.format(a='c.cv', b='q.qv'), 6)}
-                 AS ccos
-        FROM c{_ITERS - 1} c CROSS JOIN q
-        ORDER BY ccos DESC NULLS LAST, cluster
-        LIMIT {max(_SWEEP_PROBE_WIDTHS)}
-      )
-    ),
-    p2 AS (
-      SELECT s.cluster, s.sub, pr.prank
-      FROM seeds2 s JOIN pr USING (cluster) CROSS JOIN q
-      QUALIFY row_number() OVER (
-        PARTITION BY s.cluster
-        ORDER BY {dround_sql(_COS_SQL.format(a='s.sv', b='q.qv'), 6)}
-                 DESC NULLS LAST, s.sub) <= {_N_SUB_PROBES}
-    ),
-    wg AS (
-      SELECT CAST(w AS BIGINT) AS n_probes
-      FROM (VALUES {", ".join(f"({x})" for x in _SWEEP_PROBE_WIDTHS)}) v(w)
-    ),
-    cand AS (
-      SELECT g.n_probes, f.vec_id,
-             {dround_sql(_COS_SQL.format(a='f.dv', b='q.qv'), 6)}
-               AS cos_sim
-      FROM f
-      JOIN p2 USING (cluster, sub)
-      JOIN wg g ON p2.prank <= g.n_probes
-      JOIN embeddings e ON e.vec_id = f.vec_id
-      CROSS JOIN q
-      WHERE f.vec_id <> q.qid AND e.label = q.qlabel
-    ),
-    approx AS (
-      SELECT n_probes, vec_id FROM cand
-      QUALIFY row_number() OVER (
-        PARTITION BY n_probes
-        ORDER BY cos_sim DESC NULLS LAST, vec_id) <= {_TOP_K}
-    ),
-    exact AS (
-      SELECT e.vec_id
-      FROM embeddings e CROSS JOIN q
-      WHERE e.vec_id <> q.qid AND e.label = q.qlabel
-      ORDER BY {dround_sql(
-          _COS_SQL.format(a='CAST(e.embedding AS DOUBLE[])', b='q.qv'), 6
-      )} DESC NULLS LAST, e.vec_id
-      LIMIT {_TOP_K}
-    ),
-    cost AS (
-      SELECT n_probes, COUNT(*) AS n_candidates FROM cand
-      GROUP BY n_probes
-    )
-    SELECT g.n_probes,
-           CAST(COALESCE(MAX(c.n_candidates), 0) AS BIGINT)
-             AS n_candidates,
-           CAST(COUNT(a.vec_id) AS BIGINT) AS probe_hits,
-           {dround_sql(f'COUNT(a.vec_id) / {_TOP_K}.0', 4)} AS recall_at_k
-    FROM wg g
-    CROSS JOIN exact x
-    LEFT JOIN approx a ON a.n_probes = g.n_probes AND a.vec_id = x.vec_id
-    LEFT JOIN cost c ON c.n_probes = g.n_probes
-    GROUP BY g.n_probes
-    ORDER BY g.n_probes
+    {_FILTERED_Q_SQL}
+    {_SWEEP_PR_SQL}
+    {_sub_probe_sql("pr", ", pr.prank")},
+    {_sweep_sql("f", "p2 USING (cluster, sub)")}
     """,
     tags=("llm-similarity", "llm-clustering"),
 )
@@ -2453,14 +2169,11 @@ def ann_twolevel_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     1..4 (sub-probe width fixed at _N_SUB_PROBES): filtered candidate
     count and recall@k against exact filtered brute force.
 
-    Shape at scale: ONE two-level index build and ONE leaf-list pass
-    at the WIDEST probe serve every width (the width grid joins the
-    coarse prank <= w predicate against a <= 4-row broadcast);
-    candidates persist once and feed both rollups; probed sub-seed
-    selection is a per-cluster window over <= maxw*k2 broadcast rows.
-    Exact side is the shared filtered brute-force baseline
-    (_filtered_exact_topk); snapped cosines and full tie-breaks keep
-    both engines hash-exact."""
+    Shape at scale: ONE two-level index build; _probe_sweep runs ONE
+    leaf-list pass at the WIDEST coarse probe (_probe_ranks) for every
+    width; probed sub-seed selection (_sub_probe) is a per-cluster
+    window over <= maxw*k2 broadcast rows. Snapped cosines and full
+    tie-breaks keep both engines hash-exact."""
     return _finalize(spark, _twolevel_sweep_frame(spark, sf_dir))
 
 
@@ -2468,93 +2181,12 @@ def _twolevel_sweep_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lazy two-level sweep frame (plan tests pin the one-leaf-pass /
     broadcast-grid shape BEFORE the materialization idiom collapses
     it)."""
-    emb_full = load_table(spark, sf_dir, "embeddings")
-    emb = emb_full.select("vec_id", _dvec(F.col("embedding")).alias("dv"))
-    _, cent, seeds2, fine = _twolevel_state_frames(emb)
-    lists = fine.join(emb_full.select("vec_id", "label"), "vec_id")
-    q = _filtered_query_row(emb_full)
-    maxw = max(_SWEEP_PROBE_WIDTHS)
-    probe_top = (
-        cent.join(F.broadcast(q))
-        .select(
-            "cluster",
-            dround(_cos(F.col("cv"), F.col("qv")), 6).alias("ccos"),
-        )
-        .orderBy(F.col("ccos").desc_nulls_last(), "cluster")
-        .limit(maxw)
+    emb_full, lists, q, cent, seeds2 = _twolevel_filtered_parts(spark, sf_dir)
+    p2 = _sub_probe(seeds2, _probe_ranks(cent, q), q).select(
+        "cluster", "sub", "prank"
     )
-    w_pr = Window.orderBy(F.col("ccos").desc_nulls_last(), "cluster")
-    pr = probe_top.withColumn("prank", F.row_number().over(w_pr)).select(
-        "cluster", "prank"
-    )
-    w_p = Window.partitionBy("cluster").orderBy(
-        F.col("scos").desc_nulls_last(), F.col("sub")
-    )
-    p2 = (
-        seeds2.join(F.broadcast(pr), "cluster")
-        .join(F.broadcast(q))
-        .withColumn("scos", dround(_cos(F.col("sv"), F.col("qv")), 6))
-        .withColumn("rk", F.row_number().over(w_p))
-        .filter(F.col("rk") <= _N_SUB_PROBES)
-        .select("cluster", "sub", "prank")
-    )
-    widths = spark.range(1).select(
-        F.explode(
-            F.array(
-                *[F.lit(x).cast("long") for x in _SWEEP_PROBE_WIDTHS]
-            )
-        ).alias("n_probes")
-    )
-    cand = _persist(
-        lists.join(F.broadcast(p2), ["cluster", "sub"])
-        .join(F.broadcast(widths), F.col("prank") <= F.col("n_probes"))
-        .join(F.broadcast(q))
-        .filter(
-            (F.col("vec_id") != F.col("qid"))
-            & (F.col("label") == F.col("qlabel"))
-        )
-        .select(
-            "n_probes",
-            "vec_id",
-            dround(_cos(F.col("dv"), F.col("qv")), 6).alias("cos_sim"),
-        )
-    )
-    w_rk = Window.partitionBy("n_probes").orderBy(
-        F.col("cos_sim").desc_nulls_last(), F.col("vec_id")
-    )
-    approx = (
-        cand.withColumn("rk", F.row_number().over(w_rk))
-        .filter(F.col("rk") <= _TOP_K)
-        .select("n_probes", "vec_id", F.lit(1).alias("hit"))
-    )
-    exact = _filtered_exact_topk(emb_full, q)
-    cost = cand.groupBy("n_probes").agg(
-        F.count("*").alias("n_candidates")
-    )
-    out = (
-        widths.crossJoin(exact)
-        # both rollup sides are <= widths*k rows -- broadcast them so
-        # the final stitch never plans a sort-merge exchange pair
-        .join(F.broadcast(approx), ["n_probes", "vec_id"], "left")
-        .groupBy("n_probes")
-        .agg(
-            F.count("hit").cast("long").alias("probe_hits"),
-            dround(
-                F.count("hit") / F.lit(float(_TOP_K)), 4
-            ).alias("recall_at_k"),
-        )
-        .join(F.broadcast(cost), "n_probes", "left")
-        .select(
-            "n_probes",
-            F.coalesce("n_candidates", F.lit(0))
-            .cast("long")
-            .alias("n_candidates"),
-            "probe_hits",
-            "recall_at_k",
-        )
-        .orderBy("n_probes")
-    )
-    return out
+    probed = lists.join(F.broadcast(p2), ["cluster", "sub"])
+    return _probe_sweep(spark, probed, emb_full, q)
 
 
 # ---------------------------------------------------------------------------
@@ -2655,54 +2287,33 @@ def _batch_recall_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", _dvec(F.col("embedding")).alias("dv")
     )
     _, cent, seeds2, fine = _twolevel_state_frames(emb)
-    qb = (
-        emb.orderBy("vec_id")
-        .limit(_N_BATCH_QUERIES)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("dv").alias("qv"),
-            _norm(F.col("dv")).alias("qn"),
-        )
+    qb = _query_rows(
+        emb, "dv", _norm(F.col("dv")).alias("qn"), n=_N_BATCH_QUERIES
     )
-    w_p1 = Window.partitionBy("qid").orderBy(
-        F.col("ccos").desc_nulls_last(), "cluster"
-    )
-    p1 = (
-        cent.join(F.broadcast(qb))
-        .withColumn("ccos", dround(_cos(F.col("cv"), F.col("qv")), 6))
-        .withColumn("rk", F.row_number().over(w_p1))
-        .filter(F.col("rk") <= _N_PROBES)
-        .select("qid", "cluster")
-    )
-    w_p2 = Window.partitionBy("qid", "cluster").orderBy(
-        F.col("scos").desc_nulls_last(), "sub"
-    )
-    p2 = (
+    p1 = _rank_top(
+        cent.join(F.broadcast(qb)).withColumn(
+            "ccos", dround(_cos(F.col("cv"), F.col("qv")), 6)
+        ),
+        ["qid"], "ccos", "cluster", _N_PROBES,
+    ).select("qid", "cluster")
+    p2 = _rank_top(
         seeds2.join(F.broadcast(p1), "cluster")
         .join(F.broadcast(qb), "qid")
-        .withColumn("scos", dround(_cos(F.col("sv"), F.col("qv")), 6))
-        .withColumn("rk", F.row_number().over(w_p2))
-        .filter(F.col("rk") <= _N_SUB_PROBES)
-        .select("qid", "cluster", "sub", "qv")
-    )
-    w_ak = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc_nulls_last(), "vec_id"
-    )
-    approx = (
+        .withColumn("scos", dround(_cos(F.col("sv"), F.col("qv")), 6)),
+        ["qid", "cluster"], "scos", "sub", _N_SUB_PROBES,
+    ).select("qid", "cluster", "sub", "qv")
+    approx = _rank_top(
         fine.join(F.broadcast(p2), ["cluster", "sub"])
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
             "vec_id",
             dround(_cos(F.col("dv"), F.col("qv")), 6).alias("cos_sim"),
-        )
-        .withColumn("rk", F.row_number().over(w_ak))
-        .filter(F.col("rk") <= _TOP_K)
-        .select("qid", "vec_id", F.lit(1).alias("hit"))
-    )
-    exact = (
-        emb.join(F.broadcast(qb), emb["vec_id"] != F.col("qid"))
-        .select(
+        ),
+        ["qid"], "cos_sim",
+    ).select("qid", "vec_id", F.lit(1).alias("hit"))
+    exact = _rank_top(
+        emb.join(F.broadcast(qb), emb["vec_id"] != F.col("qid")).select(
             "qid",
             "vec_id",
             dround(
@@ -2712,25 +2323,15 @@ def _batch_recall_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 6,
             ).alias("cos_sim"),
-        )
-        .withColumn("rk", F.row_number().over(w_ak))
-        .filter(F.col("rk") <= _TOP_K)
-        .select("qid", "vec_id")
-    )
-    return (
-        # approx is <= B*k rows -- broadcast it so the rollup stitch
-        # never plans a sort-merge exchange pair
-        exact.join(F.broadcast(approx), ["qid", "vec_id"], "left")
-        .groupBy("qid")
-        .agg(
-            F.count("*").alias("exact_k"),
-            F.count("hit").cast("long").alias("probe_hits"),
-            dround(
-                F.count("hit") / F.lit(float(_TOP_K)), 4
-            ).alias("recall_at_k"),
-        )
-        .orderBy("qid")
-    )
+        ),
+        ["qid"], "cos_sim",
+    ).select("qid", "vec_id")
+    # approx is <= B*k rows -- broadcast it so the rollup stitch never
+    # plans a sort-merge exchange pair
+    return _recall_by_qid(
+        exact.join(F.broadcast(approx), ["qid", "vec_id"], "left"),
+        "probe_hits",
+    ).orderBy("qid")
 
 
 # ---------------------------------------------------------------------------

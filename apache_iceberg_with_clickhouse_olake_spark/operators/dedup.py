@@ -219,6 +219,17 @@ _BANDS_CTE = f"""bands AS (
     )"""
 
 
+def _band_pairs_sql(name: str) -> str:
+    """CTE ``name``: the distinct (doc_a < doc_b) pairs sharing a band of
+    ``bands`` -- the SQL twin of _lsh_candidate_pairs' band join."""
+    return f"""{name} AS (
+      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+      FROM bands x JOIN bands y
+        ON x.band_id = y.band_id AND x.band_hash = y.band_hash
+       AND x.doc_id < y.doc_id
+    )"""
+
+
 def _with_sig(docs: DataFrame) -> DataFrame:
     """(doc_id, shingles, sig) frame: the shingle set plus the
     16-component MinHash signature ARRAY (kept as one array column so it
@@ -372,12 +383,7 @@ def minhash_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CANDIDATES_SQL = f"""
     WITH {_SIG_CTE},
     {_BANDS_CTE},
-    pairs AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-       AND x.doc_id < y.doc_id
-    ),
+    {_band_pairs_sql('pairs')},
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM documents)
     SELECT p.doc_a, p.doc_b,
            {dround_sql(
@@ -449,12 +455,7 @@ _CASCADE_ORACLE = f"""
     ),
     {_sig_cte_sql('reps')},
     {_BANDS_CTE},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-       AND x.doc_id < y.doc_id
-    ),
+    {_band_pairs_sql('cand')},
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM reps),
     verified AS (
       SELECT CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
@@ -891,12 +892,7 @@ def _cc_rounds_sql() -> str:
     ),
     {_sig_cte_sql('reps')},
     {_BANDS_CTE},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-       AND x.doc_id < y.doc_id
-    ),
+    {_band_pairs_sql('cand')},
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM reps),
     edges AS (
       SELECT p.doc_a AS a, p.doc_b AS b
@@ -1141,12 +1137,7 @@ def incremental_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     {_sig_cte_sql('reps')},
     {_BANDS_CTE},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-       AND x.doc_id < y.doc_id
-    ),
+    {_band_pairs_sql('cand')},
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM reps),
     edges AS (
       SELECT p.doc_a AS a, p.doc_b AS b
@@ -1265,12 +1256,7 @@ def dedup_removal_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     {_sig_cte_sql('reps')},
     {_BANDS_CTE},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-       AND x.doc_id < y.doc_id
-    ),
+    {_band_pairs_sql('cand')},
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM reps),
     edges AS (
       SELECT p.doc_a AS a, p.doc_b AS b
@@ -1477,12 +1463,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CALIB_ORACLE = f"""
     WITH {_SIG_CTE},
     {_BANDS_CTE},
-    pairs AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-       AND x.doc_id < y.doc_id
-    ),
+    {_band_pairs_sql('pairs')},
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM documents),
     scored AS (
       SELECT CAST({' + '.join(
@@ -1819,12 +1800,7 @@ _CONT_ASYM_GAP = 0.1  # |cont_a - cont_b| above this marks sub-document copy
     oracle=f"""
     WITH {_SIG_CTE},
     {_BANDS_CTE},
-    pairs AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-       AND x.doc_id < y.doc_id
-    ),
+    {_band_pairs_sql('pairs')},
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM documents),
     scored AS (
       SELECT p.doc_a, p.doc_b,
@@ -1991,12 +1967,7 @@ _LEAK_TEST_MOD = 10  # hash-split: 1/10 of docs held out as test
     ),
     {_SIG_CTE},
     {_BANDS_CTE},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-       AND x.doc_id < y.doc_id
-    ),
+    {_band_pairs_sql('cand')},
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM documents),
     cross_pairs AS MATERIALIZED (
       SELECT p.doc_a, p.doc_b, ta.is_test AS test_a,
@@ -2111,12 +2082,7 @@ def train_test_leakage_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_SIG_CTE},
     {_BANDS_CTE},
-    pairs AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-       AND x.doc_id < y.doc_id
-    ),
+    {_band_pairs_sql('pairs')},
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM documents),
     scored AS MATERIALIZED (
       SELECT p.doc_a, p.doc_b,
@@ -2246,12 +2212,7 @@ def _split_sql(expr: str) -> str:
     reps AS MATERIALIZED (SELECT doc_id, text FROM g WHERE rn = 1),
     {_sig_cte_sql('reps')},
     {_BANDS_CTE},
-    cand AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-       AND x.doc_id < y.doc_id
-    ),
+    {_band_pairs_sql('cand')},
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM reps),
     edges AS (
       SELECT p.doc_a AS a, p.doc_b AS b
@@ -2445,12 +2406,7 @@ def leakage_safe_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_SIG_CTE},
     {_BANDS_CTE},
-    pairs AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-       AND x.doc_id < y.doc_id
-    ),
+    {_band_pairs_sql('pairs')},
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM documents),
     scored AS (
       SELECT p.doc_a, p.doc_b,
@@ -2530,12 +2486,7 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_SIG_CTE},
     {_BANDS_CTE},
-    pairs AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM bands x JOIN bands y
-        ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-       AND x.doc_id < y.doc_id
-    ),
+    {_band_pairs_sql('pairs')},
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM documents),
     edges AS (
       SELECT p.doc_a, p.doc_b

@@ -127,8 +127,7 @@ def all_oracles() -> dict[str, str]:
     }
 
 
-# Candidate operator modules; imported lazily so the registry degrades
-# gracefully while modules land incrementally.
+# Operator modules, imported on first use so their decorators run.
 _MODULES = (
     "analytics",
     "cdc",
@@ -155,20 +154,14 @@ _loaded = False
 
 
 def _load_all() -> None:
-    """Import every operator module so decorators run.
-
-    A missing module is skipped (it hasn't been built yet); an ImportError
-    *inside* an existing module is a real bug and propagates.
-    """
+    """Import every operator module so decorators run. A missing or
+    renamed module raises: skipping it would silently drop its whole
+    query family from the registry and from the oracle mirror."""
     global _loaded
     if _loaded:
         return
     import importlib
 
     for mod in _MODULES:
-        try:
-            importlib.import_module(f".{mod}", __package__)
-        except ModuleNotFoundError as exc:
-            if exc.name != f"{__package__}.{mod}":
-                raise
+        importlib.import_module(f".{mod}", __package__)
     _loaded = True

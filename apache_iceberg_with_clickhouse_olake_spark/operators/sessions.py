@@ -36,6 +36,31 @@ def _spark_epoch() -> F.Column:
     return (F.unix_micros("ts") / 1_000_000).cast("long")
 
 
+def _sessions_sql(
+    cols: str, epoch: str = _D_EPOCH, gap: str = str(SESSION_GAP_SECS)
+) -> str:
+    """e/s CTEs: every event with ``cols`` and its gap-based session_seq
+    (a session breaks where ``epoch`` advances past ``gap`` since the
+    user's previous event) -- the SQL twin of :func:`sessionize`."""
+    return f"""e AS (
+      SELECT user_id, event_id, ts, {cols},
+             CASE WHEN {epoch}
+                    - lag({epoch}) OVER (
+                        PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
+                    > {gap}
+                  OR lag(ts) OVER (
+                        PARTITION BY user_id ORDER BY epoch_us(ts), event_id) IS NULL
+                  THEN 1 ELSE 0 END AS new_sess
+      FROM events
+    ),
+    s AS (
+      SELECT *, SUM(new_sess) OVER (
+               PARTITION BY user_id ORDER BY epoch_us(ts), event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
+      FROM e
+    )"""
+
+
 def sessionize(events: DataFrame, gap_secs: int = SESSION_GAP_SECS) -> DataFrame:
     """Assign gap-based session ids: a session breaks when the time since
     the user's previous event exceeds ``gap_secs``."""
@@ -50,23 +75,7 @@ def sessionize(events: DataFrame, gap_secs: int = SESSION_GAP_SECS) -> DataFrame
 @query(
     "sessionize_events",
     oracle=f"""
-    WITH e AS (
-      SELECT user_id, event_id, ts, {_D_EPOCH} AS ep, value,
-             CASE WHEN {_D_EPOCH}
-                    - lag({_D_EPOCH}) OVER (
-                        PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-                    > {SESSION_GAP_SECS}
-                  OR lag(ts) OVER (
-                        PARTITION BY user_id ORDER BY epoch_us(ts), event_id) IS NULL
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM events
-    ),
-    s AS (
-      SELECT *, SUM(new_sess) OVER (
-               PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-      FROM e
-    )
+    WITH {_sessions_sql(f"{_D_EPOCH} AS ep, value")}
     SELECT user_id,
            CAST(session_seq AS BIGINT) AS session_seq,
            COUNT(*) AS n_events,
@@ -103,23 +112,11 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "session_window_rollup",
     oracle=f"""
-    WITH e AS (
-      SELECT user_id, event_id, ts, {_D_EPOCH} AS ep, value,
-             CASE WHEN epoch_us(ts)
-                    - lag(epoch_us(ts)) OVER (
-                        PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-                    > {SESSION_GAP_SECS} * 1000000
-                  OR lag(ts) OVER (
-                        PARTITION BY user_id ORDER BY epoch_us(ts), event_id) IS NULL
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM events
-    ),
-    s AS (
-      SELECT *, SUM(new_sess) OVER (
-               PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-      FROM e
-    )
+    WITH {_sessions_sql(
+        f"{_D_EPOCH} AS ep, value",
+        "epoch_us(ts)",
+        f"{SESSION_GAP_SECS} * 1000000",
+    )}
     SELECT user_id,
            MIN(ep) AS window_start_epoch,
            MAX(ep) + {SESSION_GAP_SECS} AS window_end_epoch,
@@ -170,23 +167,7 @@ def session_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "session_length_distribution",
     oracle=f"""
-    WITH e AS (
-      SELECT user_id, event_id, ts, {_D_EPOCH} AS ep,
-             CASE WHEN {_D_EPOCH}
-                    - lag({_D_EPOCH}) OVER (
-                        PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-                    > {SESSION_GAP_SECS}
-                  OR lag(ts) OVER (
-                        PARTITION BY user_id ORDER BY epoch_us(ts), event_id) IS NULL
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM events
-    ),
-    s AS (
-      SELECT *, SUM(new_sess) OVER (
-               PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-      FROM e
-    ),
+    WITH {_sessions_sql(f"{_D_EPOCH} AS ep")},
     per AS (
       SELECT user_id, session_seq, COUNT(*) AS n_events
       FROM s GROUP BY user_id, session_seq
@@ -542,23 +523,7 @@ _PATH_TOP = 25
 @query(
     "session_event_bigrams",
     oracle=f"""
-    WITH e AS (
-      SELECT user_id, event_id, ts, event_type,
-             CASE WHEN {_D_EPOCH}
-                    - lag({_D_EPOCH}) OVER (
-                        PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-                    > {SESSION_GAP_SECS}
-                  OR lag(ts) OVER (
-                        PARTITION BY user_id ORDER BY epoch_us(ts), event_id) IS NULL
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM events
-    ),
-    s AS (
-      SELECT *, SUM(new_sess) OVER (
-               PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-      FROM e
-    ),
+    WITH {_sessions_sql("event_type")},
     t AS (
       SELECT event_type AS from_type,
              lead(event_type) OVER (

@@ -18,8 +18,12 @@ Layers, from exact to scale-path:
   search only the query's bucket. Hyperplanes are md5-seeded +/-1
   literals shared with the oracle, so even the ANN path is oracle-exact.
 - ``ann_ivf_topk``: IVF with per-label mean centroids (posexplode +
-  groupBy -- fully distributed), probing the 2 nearest centroids.
-  Rows-only: float avg accumulation order differs per engine.
+  groupBy -- fully distributed), probing the 2 nearest centroids; the
+  davg-snapped centroids keep it oracle-exact.
+- Recall evals: every recall / probe-sweep op here and in
+  clustering.py builds its query rows, window top-k and recall rollup
+  from the one set of shared pieces below ``_COS_SQL``, each with its
+  oracle-side twin.
 
 All dot products / norms are left-fold ``F.aggregate`` over
 double-cast arrays -- verified bit-identical to DuckDB's
@@ -37,7 +41,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import davg, davg_sql, dround, dround_sql
@@ -180,6 +184,112 @@ _COS_SQL = (
 
 
 # ---------------------------------------------------------------------------
+# ANN evaluation pieces shared by every recall / sweep op (here and in
+# clustering.py): query rows, window top-k, the recall rollup, centroids
+# ---------------------------------------------------------------------------
+
+_N_EVAL_Q = 20
+
+
+def _query_rows(
+    e: DataFrame, v: str | Column, *extra: Column, n: int = 1
+) -> DataFrame:
+    """The ``n`` lowest-vec_id rows of ``e`` as query rows: qid, qv (the
+    column named or computed by ``v``), then ``extra`` -- all computed
+    after the limit, so only the query rows pay for them."""
+    qv = F.col(v) if isinstance(v, str) else v
+    return e.orderBy("vec_id").limit(n).select(
+        F.col("vec_id").alias("qid"), qv.alias("qv"), *extra
+    )
+
+
+def _rank_top(
+    df: DataFrame, parts: list[str], score: str, tie: str = "vec_id",
+    k: int = _TOP_K,
+) -> DataFrame:
+    """Rows ranked <= k within each ``parts`` group by ``score`` DESC
+    NULLS LAST, then ``tie`` -- the oracle's QUALIFY row_number()."""
+    w = Window.partitionBy(*parts).orderBy(
+        F.col(score).desc_nulls_last(), F.col(tie)
+    )
+    return (
+        df.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= k)
+        .drop("_rk")
+    )
+
+
+def _recall(
+    hit: str, hits_name: str, recall_name: str = "recall_at_k",
+    k: int = _TOP_K,
+) -> list[Column]:
+    """How many exact top-k rows carry the left-joined ``hit`` marker,
+    and that count over k snapped to 4 decimals (twin: _recall_sql)."""
+    return [
+        F.count(hit).alias(hits_name),
+        dround(F.count(hit) / F.lit(float(k)), 4).alias(recall_name),
+    ]
+
+
+def _recall_sql(
+    hit: str, hits_name: str, recall_name: str = "recall_at_k",
+    k: int = _TOP_K,
+) -> str:
+    return (
+        f"CAST(COUNT({hit}) AS BIGINT) AS {hits_name},"
+        f" {dround_sql(f'COUNT({hit}) / {k}.0', 4)} AS {recall_name}"
+    )
+
+
+def _qid_recall_sql(hits_name: str) -> str:
+    """Per-qid recall SELECT over CTEs exact (qid, vec_id) and approx
+    (qid, vec_id, hit) (twin: _recall_by_qid)."""
+    return f"""SELECT x.qid,
+           COUNT(*) AS exact_k,
+           {_recall_sql('a.hit', hits_name)}
+    FROM exact x
+    LEFT JOIN approx a ON x.qid = a.qid AND x.vec_id = a.vec_id
+    GROUP BY x.qid
+    ORDER BY x.qid"""
+
+
+def _recall_by_qid(joined: DataFrame, hits_name: str) -> DataFrame:
+    """Per-qid recall of exact top-k rows left-joined to approx rows
+    that carry ``hit``."""
+    return joined.groupBy("qid").agg(
+        F.count("*").alias("exact_k"), *_recall("hit", hits_name)
+    )
+
+
+def _single_recall(
+    exact: DataFrame, approx: DataFrame, q: DataFrame, hits_name: str
+) -> DataFrame:
+    """Recall of one query's approx top-k (vec_id) against its exact
+    top-k (vec_id): two <= k-row frames and the 1-row query ``q``."""
+    hits = approx.select("vec_id", F.lit(1).alias("hit"))
+    return _recall_by_qid(
+        exact.join(hits, "vec_id", "left").crossJoin(
+            F.broadcast(q.select("qid"))
+        ),
+        hits_name,
+    )
+
+
+def _centroids(e: DataFrame, key: str, v: str) -> DataFrame:
+    """(key, cv): the per-``key`` mean of vector column ``v``, built
+    distributively (posexplode -> (key, dim) davg -> reassembly); davg
+    makes every component engine-exact."""
+    return (
+        e.select(key, F.posexplode(v).alias("dim", "c"))
+        .groupBy(key, "dim")
+        .agg(davg("c", "c"))
+        .groupBy(key)
+        .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("s"))
+        .select(key, F.transform("s", lambda t: t["c"]).alias("cv"))
+    )
+
+
+# ---------------------------------------------------------------------------
 # Exact brute-force top-k
 # ---------------------------------------------------------------------------
 
@@ -203,17 +313,9 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition heads, no global sort)."""
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", "label", _dvec(F.col("embedding")).alias("v"))
-    q = (
-        e.orderBy("vec_id")
-        .limit(1)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            # query norm rides the 1-row broadcast: the scan pays two
-            # 64-dim folds per row (dot + norm(v)), not three
-            _norm(F.col("v")).alias("qn"),
-        )
-    )
+    # query norm rides the 1-row broadcast: the scan pays two 64-dim
+    # folds per row (dot + norm(v)), not three
+    q = _query_rows(e, "v", _norm(F.col("v")).alias("qn"))
     return (
         e.join(F.broadcast(q), e.vec_id != q.qid)
         .select(
@@ -707,8 +809,6 @@ def embedding_dedup_cascade_stats(
     factor (every replica pair shares every band); the cascade's pair
     stage sees each replica group once, so its cost tracks distinct
     vectors -- the same mitigation SCALING.md measures for documents."""
-    from pyspark.sql import Window
-
     from ._embed_lsh_udf import make_embed_bands_udf
 
     bands_udf = make_embed_bands_udf()
@@ -770,30 +870,57 @@ _RECALL_TWIN_EPS = (0.05, 0.9)
 _RECALL_TWIN_OFFSET = 1_000_000
 
 
-def _perturb_sql(eps: float) -> str:
+def _twin_sample_sql(eps_list: tuple[float, ...]) -> str:
+    """The ``sample`` CTE: the label sample plus one perturbed twin of
+    every vector per eps (twin: _twin_sample)."""
     # DuckDB lambda index is 1-based; (i-1) matches Spark's 0-based i.
-    return (
-        "list_transform(CAST(embedding AS DOUBLE[]), (x, i) -> "
-        f"x * (1.0 + {eps!r} * CASE WHEN (i - 1) % 2 = 0 "
-        "THEN 1.0 ELSE -1.0 END))"
+    twins = "".join(
+        f"""UNION ALL
+      SELECT vec_id + {(j + 1) * _RECALL_TWIN_OFFSET}, label,
+             list_transform(CAST(embedding AS DOUBLE[]), (x, i) -> x * (1.0
+               + {eps!r} * CASE WHEN (i - 1) % 2 = 0 THEN 1.0 ELSE -1.0 END))
+      FROM embeddings WHERE label < {_RECALL_SAMPLE_LABELS}
+      """
+        for j, eps in enumerate(eps_list)
     )
+    return f"""sample AS MATERIALIZED (
+      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS embedding
+      FROM embeddings WHERE label < {_RECALL_SAMPLE_LABELS}
+      {twins}
+    )"""
+
+
+def _twin_sample(
+    spark: SparkSession, sf_dir: str, eps_list: tuple[float, ...]
+) -> DataFrame:
+    """(vec_id, label, v): the label sample plus one twin of every vector
+    per eps, scaled x -> x * (1 + eps * s_i) with s_i = +1 on even
+    components -- identical double arithmetic to _twin_sample_sql."""
+    base = load_table(spark, sf_dir, "embeddings").filter(
+        F.col("label") < _RECALL_SAMPLE_LABELS
+    ).select("vec_id", "label", _dvec(F.col("embedding")).alias("v"))
+
+    def twin(j: int, eps: float) -> DataFrame:
+        def perturb(x, i):
+            sign = F.when(i % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
+            return x * (F.lit(1.0) + F.lit(eps) * sign)
+
+        return base.select(
+            (F.col("vec_id") + (j + 1) * _RECALL_TWIN_OFFSET).alias("vec_id"),
+            "label",
+            F.transform("v", perturb).alias("v"),
+        )
+
+    out = base
+    for j, eps in enumerate(eps_list):
+        out = out.unionByName(twin(j, eps))
+    return out
 
 
 @query(
     "embedding_neardup_recall_eval",
     oracle=f"""
-    WITH sample AS MATERIALIZED (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS embedding
-      FROM embeddings WHERE label < {_RECALL_SAMPLE_LABELS}
-      {''.join(
-          f'''UNION ALL
-      SELECT vec_id + {(j + 1) * _RECALL_TWIN_OFFSET}, label,
-             {_perturb_sql(eps)}
-      FROM embeddings WHERE label < {_RECALL_SAMPLE_LABELS}
-      '''
-          for j, eps in enumerate(_RECALL_TWIN_EPS)
-      )}
-    ),
+    WITH {_twin_sample_sql(_RECALL_TWIN_EPS)},
     {_embed_band_ctes('sample')},
     coll AS (SELECT vec_a, vec_b FROM cand),
     truth AS (
@@ -850,32 +977,7 @@ def embedding_neardup_recall_eval(
     from ._embed_lsh_udf import make_embed_bands_udf
 
     bands_udf = make_embed_bands_udf()
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("label") < _RECALL_SAMPLE_LABELS).select(
-        "vec_id", "label", _dvec(F.col("embedding")).alias("v")
-    )
-    def _perturb(eps):
-        def fn(x, i):
-            sign = F.when(i % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
-            return x * (F.lit(1.0) + F.lit(eps) * sign)
-
-        return fn
-
-    parts = [base]
-    for j, eps in enumerate(_RECALL_TWIN_EPS):
-        parts.append(
-            base.select(
-                (F.col("vec_id") + (j + 1) * _RECALL_TWIN_OFFSET).alias(
-                    "vec_id"
-                ),
-                "label",
-                F.transform("v", _perturb(eps)).alias("v"),
-            )
-        )
-    aug = parts[0]
-    for p in parts[1:]:
-        aug = aug.unionByName(p)
-    sample = aug.select(
+    sample = _twin_sample(spark, sf_dir, _RECALL_TWIN_EPS).select(
         "vec_id", "label", "v", bands_udf(F.col("v")).alias("bands"),
         _norm(F.col("v")).alias("nrm"),
     )
@@ -976,14 +1078,6 @@ def _sweep_cfg_name(b: int, r: int) -> str:
 def _sweep_oracle() -> str:
     from ._embed_lsh_udf import MAX_SWEEP_PLANES, SWEEP_CONFIGS
 
-    twin_union = "".join(
-        f"""UNION ALL
-      SELECT vec_id + {(j + 1) * _RECALL_TWIN_OFFSET}, label,
-             {_perturb_sql(eps)}
-      FROM embeddings WHERE label < {_RECALL_SAMPLE_LABELS}
-      """
-        for j, eps in enumerate(_SWEEP_TWIN_EPS)
-    )
     bv = ",\n".join(
         f"""
     bv_{i} AS MATERIALIZED (
@@ -1012,11 +1106,7 @@ def _sweep_oracle() -> str:
         for i, (b, r) in enumerate(SWEEP_CONFIGS)
     )
     return f"""
-    WITH sample AS MATERIALIZED (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS embedding
-      FROM embeddings WHERE label < {_RECALL_SAMPLE_LABELS}
-      {twin_union}
-    ),
+    WITH {_twin_sample_sql(_SWEEP_TWIN_EPS)},
     planes AS (
       SELECT p.p, i.i,
              CASE WHEN substr(md5(concat('hp-', p.p, '-', i.i)), 2, 1)
@@ -1092,33 +1182,7 @@ def embedding_neardup_config_sweep(
     )
 
     sweep_udf = make_embed_sweep_udf()
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("label") < _RECALL_SAMPLE_LABELS).select(
-        "vec_id", "label", _dvec(F.col("embedding")).alias("v")
-    )
-
-    def _perturb(eps):
-        def fn(x, i):
-            sign = F.when(i % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
-            return x * (F.lit(1.0) + F.lit(eps) * sign)
-
-        return fn
-
-    parts = [base]
-    for j, eps in enumerate(_SWEEP_TWIN_EPS):
-        parts.append(
-            base.select(
-                (F.col("vec_id") + (j + 1) * _RECALL_TWIN_OFFSET).alias(
-                    "vec_id"
-                ),
-                "label",
-                F.transform("v", _perturb(eps)).alias("v"),
-            )
-        )
-    aug = parts[0]
-    for p in parts[1:]:
-        aug = aug.unionByName(p)
-    sample = aug.select(
+    sample = _twin_sample(spark, sf_dir, _SWEEP_TWIN_EPS).select(
         "vec_id", "label", "v", sweep_udf(F.col("v")).alias("sw"),
         _norm(F.col("v")).alias("nrm"),
     )
@@ -1210,15 +1274,7 @@ def ann_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         _dvec(F.col("embedding")).alias("v"),
     ).withColumn("bucket", _bucket("v"))
-    q = (
-        e.orderBy("vec_id")
-        .limit(1)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.col("bucket").alias("qbucket"),
-        )
-    )
+    q = _query_rows(e, "v", F.col("bucket").alias("qbucket"))
     return (
         e.join(
             F.broadcast(q),
@@ -1281,15 +1337,7 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         _dvec(F.col("embedding")).alias("v"),
     ).withColumn("bucket", _bucket("v"))
-    q = (
-        e.orderBy("vec_id")
-        .limit(1)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.col("bucket").alias("qbucket"),
-        )
-    )
+    q = _query_rows(e, "v", F.col("bucket").alias("qbucket"))
     probes = q.select(
         "qid",
         "qv",
@@ -1323,10 +1371,12 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF top-k (oracle-exact: centroids via decimal-snapped davg)
 # ---------------------------------------------------------------------------
 
-@query(
-    "ann_ivf_topk",
-    oracle=f"""
-    WITH cent AS (
+# lists probed by ann_ivf_topk and ann_ivfpq_topk_recall
+_IVFPQ_PROBES = 2
+
+# label centroids and the _IVFPQ_PROBES of them nearest the first query
+# row (twin: _centroids + the probe head of both ops)
+_LABEL_PROBE_SQL = f"""cent AS (
       SELECT label, i, {davg_sql('CAST(embedding[i] AS DOUBLE)')} AS cx
       FROM embeddings, LATERAL unnest(range(1, {_DIM} + 1)) AS t(i)
       GROUP BY label, i
@@ -1340,8 +1390,14 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT cvec.label FROM cvec, q
       ORDER BY {_COS_SQL.format(a='cv', b='qv')} DESC NULLS LAST,
                cvec.label ASC NULLS LAST
-      LIMIT 2
-    )
+      LIMIT {_IVFPQ_PROBES}
+    )"""
+
+
+@query(
+    "ann_ivf_topk",
+    oracle=f"""
+    WITH {_LABEL_PROBE_SQL}
     SELECT e.vec_id, e.label,
            {dround_sql(_COS_SQL.format(a='e.embedding', b='q.qv'), 6)} AS cos_sim
     FROM embeddings e JOIN probe ON e.label = probe.label, q
@@ -1358,37 +1414,17 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels. Centroid build is the only shuffle and reduces to labels x
     dims rows. davg makes the centroids engine-exact, so even this
     approximate path is oracle-checked value-for-value."""
-    from ..functions import davg
-
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", "label", _dvec(F.col("embedding")).alias("v"))
-
-    cent = (
-        e.select("label", F.posexplode("v").alias("dim", "x"))
-        .groupBy("label", "dim")
-        .agg(davg("x", "cx"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("dim"), F.col("cx")))
-                ),
-                lambda s: s.getField("cx"),
-            ).alias("cv")
-        )
-    )
-    q = (
-        e.orderBy("vec_id")
-        .limit(1)
-        .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"))
-    )
+    cent = _centroids(e, "label", "v")
+    q = _query_rows(e, "v")
     probe = (
         cent.join(F.broadcast(q))
         .select(
             "label", "qid", "qv", _cos(F.col("cv"), F.col("qv")).alias("ccos")
         )
         .orderBy(F.col("ccos").desc(), F.col("label").asc_nulls_last())
-        .limit(2)
+        .limit(_IVFPQ_PROBES)
         .select("label", "qid", "qv")
     )
     return (
@@ -1541,13 +1577,8 @@ def embedding_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ANN recall evaluation: LSH-bucketed top-k vs exact top-k on a query sample
 # ---------------------------------------------------------------------------
 
-_N_EVAL_Q = 20
-
-
-@query(
-    "ann_recall_eval",
-    oracle=f"""
-    WITH b AS MATERIALIZED (
+# b/q/scored/exact CTEs of the sampled LSH evals (twin: _lsh_eval)
+_LSH_EVAL_SQL = f"""WITH b AS MATERIALIZED (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
              {_bucket_sql('embedding')} AS bucket
       FROM embeddings
@@ -1563,20 +1594,44 @@ _N_EVAL_Q = 20
       SELECT qid, vec_id FROM scored
       QUALIFY row_number() OVER (PARTITION BY qid
                 ORDER BY cos_sim DESC NULLS LAST, vec_id) <= {_TOP_K}
-    ),
+    ),"""
+
+
+def _lsh_eval(spark: SparkSession, sf_dir: str):
+    """(q, scored, exact) of the sampled LSH evals: the query rows
+    vec_id < _N_EVAL_Q (qid, qv, qbucket) broadcast against the corpus,
+    every (qid, vec_id) pair scored with its bucket and snapped cosine,
+    and the exact per-qid top-k (qid, vec_id)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    e = emb.select(
+        "vec_id", _dvec(F.col("embedding")).alias("v")
+    ).withColumn("bucket", _bucket("v"))
+    q = e.filter(F.col("vec_id") < _N_EVAL_Q).select(
+        F.col("vec_id").alias("qid"),
+        F.col("v").alias("qv"),
+        F.col("bucket").alias("qbucket"),
+    )
+    scored = e.join(F.broadcast(q), e.vec_id != q.qid).select(
+        "qid",
+        "vec_id",
+        "bucket",
+        "qbucket",
+        dround(_cos(F.col("v"), F.col("qv")), 6).alias("cos_sim"),
+    )
+    exact = _rank_top(scored, ["qid"], "cos_sim").select("qid", "vec_id")
+    return q, scored, exact
+
+
+@query(
+    "ann_recall_eval",
+    oracle=f"""
+    {_LSH_EVAL_SQL}
     approx AS (
       SELECT qid, vec_id, 1 AS hit FROM scored WHERE bucket = qbucket
       QUALIFY row_number() OVER (PARTITION BY qid
                 ORDER BY cos_sim DESC NULLS LAST, vec_id) <= {_TOP_K}
     )
-    SELECT x.qid,
-           COUNT(*) AS exact_k,
-           CAST(COUNT(a.hit) AS BIGINT) AS ann_hits,
-           {dround_sql(f'COUNT(a.hit) / {_TOP_K}.0', 4)} AS recall_at_k
-    FROM exact x
-    LEFT JOIN approx a ON x.qid = a.qid AND x.vec_id = a.vec_id
-    GROUP BY x.qid
-    ORDER BY x.qid
+    {_qid_recall_sql('ann_hits')}
     """,
     tags=("llm-similarity",),
 )
@@ -1589,76 +1644,21 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring is corpus x sample (the standard sampled-recall eval, NOT
     corpus x corpus); ranking is a per-qid window over the sample's
     score lists. Recall here is an eval metric on a sample, so the same
-    job works unchanged when the corpus is partitioned by bucket."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id", _dvec(F.col("embedding")).alias("v")
-    ).withColumn("bucket", _bucket("v"))
-    q = e.filter(F.col("vec_id") < _N_EVAL_Q).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("bucket").alias("qbucket"),
-    )
-    scored = (
-        e.join(F.broadcast(q), e.vec_id != q.qid)
-        .select(
-            "qid",
-            "vec_id",
-            "bucket",
-            "qbucket",
-            dround(_cos(F.col("v"), F.col("qv")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
-    exact = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("qid", "vec_id")
-    )
-    approx = (
-        scored.filter(F.col("bucket") == F.col("qbucket"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("qid", "vec_id", F.lit(1).alias("hit"))
-    )
-    return (
-        exact.join(approx, ["qid", "vec_id"], "left")
-        .groupBy("qid")
-        .agg(
-            F.count("*").alias("exact_k"),
-            F.count("hit").alias("ann_hits"),
-            dround(F.count("hit") / F.lit(float(_TOP_K)), 4).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("qid")
-    )
+    job works unchanged when the corpus is partitioned by bucket. The
+    sample, scoring and exact side are _lsh_eval's."""
+    _, scored, exact = _lsh_eval(spark, sf_dir)
+    approx = _rank_top(
+        scored.filter(F.col("bucket") == F.col("qbucket")), ["qid"], "cos_sim"
+    ).select("qid", "vec_id", F.lit(1).alias("hit"))
+    return _recall_by_qid(
+        exact.join(approx, ["qid", "vec_id"], "left"), "ann_hits"
+    ).orderBy("qid")
 
 
 @query(
     "ann_probe_sweep_recall",
     oracle=f"""
-    WITH b AS MATERIALIZED (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-             {_bucket_sql('embedding')} AS bucket
-      FROM embeddings
-    ),
-    q AS (SELECT vec_id AS qid, v AS qv, bucket AS qbucket
-          FROM b WHERE vec_id < {_N_EVAL_Q}),
-    scored AS MATERIALIZED (
-      SELECT q.qid, e.vec_id, e.bucket, q.qbucket,
-             {dround_sql('list_cosine_similarity(e.v, q.qv)', 6)} AS cos_sim
-      FROM b e, q WHERE e.vec_id <> q.qid
-    ),
-    exact AS (
-      SELECT qid, vec_id FROM scored
-      QUALIFY row_number() OVER (PARTITION BY qid
-                ORDER BY cos_sim DESC NULLS LAST, vec_id) <= {_TOP_K}
-    ),
+    {_LSH_EVAL_SQL}
     cand AS (
       SELECT 'multi_probe' AS method, * FROM scored
       WHERE bit_count(xor(bucket, qbucket)) <= 1
@@ -1704,35 +1704,10 @@ def ann_probe_sweep_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the same evaluation sample as ann_recall_eval. Multi-probe
     should buy substantially higher recall for ~9x the (still tiny)
     candidate cost -- this op turns that claim into a number a pipeline
-    owner can read before choosing a probe count. Same scale shape as
-    ann_recall_eval: broadcast query sample, corpus x sample scoring,
-    per-(method, qid) windows."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id", _dvec(F.col("embedding")).alias("v")
-    ).withColumn("bucket", _bucket("v"))
-    q = e.filter(F.col("vec_id") < _N_EVAL_Q).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("bucket").alias("qbucket"),
-    )
-    scored = e.join(F.broadcast(q), e.vec_id != q.qid).select(
-        "qid",
-        "vec_id",
-        "bucket",
-        "qbucket",
-        dround(_cos(F.col("v"), F.col("qv")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
-    exact = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("qid", "vec_id")
-    )
+    owner can read before choosing a probe count. The sample, scoring
+    and exact side are _lsh_eval's; the approx side is a
+    per-(method, qid) window."""
+    q, scored, exact = _lsh_eval(spark, sf_dir)
     hamming = F.bit_count(
         F.col("bucket").bitwiseXOR(F.col("qbucket"))
     )
@@ -1743,13 +1718,8 @@ def ann_probe_sweep_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "method", F.lit("single_bucket")
         )
     )
-    wm = Window.partitionBy("method", "qid").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
-    approx = (
-        cand.withColumn("rnk", F.row_number().over(wm))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("method", "qid", "vec_id")
+    approx = _rank_top(cand, ["method", "qid"], "cos_sim").select(
+        "method", "qid", "vec_id"
     )
     methods = spark.createDataFrame(
         [("multi_probe",), ("single_bucket",)], "method string"
@@ -1826,15 +1796,8 @@ def semantic_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs is never read, let alone shuffled."""
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    q = (
-        emb.orderBy("vec_id")
-        .limit(1)
-        .select(
-            F.col("vec_id").alias("qid"),
-            _dvec(F.col("embedding")).alias("qv"),
-            _norm(_dvec(F.col("embedding"))).alias("qn"),
-        )
-    )
+    dv = _dvec(F.col("embedding"))
+    q = _query_rows(emb, dv, _norm(dv).alias("qn"))
     hits = (
         emb.join(F.broadcast(q), emb.vec_id != F.col("qid"))
         .select(
@@ -2115,15 +2078,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _dvec(F.col("embedding")).alias("v")
     )
-    q = (
-        emb.orderBy("vec_id")
-        .limit(_HN_QUERIES)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("label").alias("qlabel"),
-            F.col("v").alias("qv"),
-        )
-    )
+    q = _query_rows(emb, "v", F.col("label").alias("qlabel"), n=_HN_QUERIES)
     scored = (
         emb.crossJoin(F.broadcast(q))
         .filter(F.col("label") != F.col("qlabel"))
@@ -2163,6 +2118,27 @@ _PQ_SUBDIM = _DIM // _PQ_M     # dims per subspace
 _PQ_K = 8                      # codewords per subspace
 
 _PQ_MD5 = "CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT)"
+
+
+# md5-ranked codebook CTEs (twin: _pq_codebook)
+_PQ_CODEBOOK_SQL = f"""ranked AS (
+      SELECT CAST(embedding AS DOUBLE[]) AS cv,
+             ROW_NUMBER() OVER (ORDER BY {_PQ_MD5}, vec_id) AS rn
+      FROM embeddings
+      QUALIFY rn <= {_PQ_K}
+    ),
+    cb AS (SELECT CAST(rn - 1 AS INT) AS code, cv FROM ranked),
+    sub AS (SELECT CAST(s AS INT) AS subspace FROM range({_PQ_M}) t(s)),"""
+
+
+def _pq_subdist_sql(x: str) -> str:
+    """Subspace squared distance of vector ``x`` to codeword ``cb.cv``."""
+    return f"""list_sum(list_transform(range(1, {_PQ_SUBDIM + 1}), i ->
+               ({x}[subspace * {_PQ_SUBDIM} + i]
+                  - cb.cv[subspace * {_PQ_SUBDIM} + i])
+               * ({x}[subspace * {_PQ_SUBDIM} + i]
+                  - cb.cv[subspace * {_PQ_SUBDIM} + i])
+             ))"""
 
 
 def _pq_dlit(x: float) -> str:
@@ -2208,22 +2184,10 @@ def _pq_argmin_sql(codebook: list[list[float]], s: int) -> str:
 @query(
     "pq_codebook_stats",
     oracle=f"""
-    WITH ranked AS (
-      SELECT CAST(embedding AS DOUBLE[]) AS cv,
-             ROW_NUMBER() OVER (ORDER BY {_PQ_MD5}, vec_id) AS rn
-      FROM embeddings
-      QUALIFY rn <= {_PQ_K}
-    ),
-    cb AS (SELECT CAST(rn - 1 AS INT) AS code, cv FROM ranked),
-    sub AS (SELECT CAST(s AS INT) AS subspace FROM range({_PQ_M}) t(s)),
+    WITH {_PQ_CODEBOOK_SQL}
     dist AS (
       SELECT e.vec_id, sub.subspace, cb.code,
-             list_sum(list_transform(range(1, {_PQ_SUBDIM + 1}), i ->
-               (e.ev[subspace * {_PQ_SUBDIM} + i]
-                  - cb.cv[subspace * {_PQ_SUBDIM} + i])
-               * (e.ev[subspace * {_PQ_SUBDIM} + i]
-                  - cb.cv[subspace * {_PQ_SUBDIM} + i])
-             )) AS sqdist
+             {_pq_subdist_sql('e.ev')} AS sqdist
       FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev
             FROM embeddings) e, sub, cb
     ),
@@ -2262,25 +2226,7 @@ def pq_codebook_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolve identically by code id."""
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", _dvec(F.col("embedding")).alias("v"))
-    # bounded K-row materialization: md5-ranked codeword sample
-    cb_rows = (
-        e.select(
-            "vec_id",
-            "v",
-            F.conv(
-                F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("h"),
-        )
-        .orderBy("h", "vec_id")
-        .limit(_PQ_K)
-        .collect()
-    )
-    codebook = [list(r["v"]) for r in cb_rows]  # K x DIM doubles
-
+    codebook = _pq_codebook(e)
     asg = e.selectExpr(
         *[f"{_pq_argmin_sql(codebook, s)} AS s{s}" for s in range(_PQ_M)]
     )
@@ -2347,14 +2293,7 @@ _TRUNC_DIM = _DIM // 2
       QUALIFY row_number() OVER (PARTITION BY qid
                 ORDER BY cos_trunc DESC NULLS LAST, vec_id) <= {_TOP_K}
     )
-    SELECT x.qid,
-           COUNT(*) AS exact_k,
-           CAST(COUNT(a.hit) AS BIGINT) AS trunc_hits,
-           {dround_sql(f'COUNT(a.hit) / {_TOP_K}.0', 4)} AS recall_at_k
-    FROM exact x
-    LEFT JOIN approx a ON x.qid = a.qid AND x.vec_id = a.vec_id
-    GROUP BY x.qid
-    ORDER BY x.qid
+    {_qid_recall_sql('trunc_hits')}
     """,
     tags=("llm-similarity",),
 )
@@ -2366,12 +2305,10 @@ def ann_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncated vectors (2x less IO/memory per scan) with full-dim
     rescoring only on the short list.
 
-    Shape at scale: identical to ann_recall_eval -- the {nq}-query
-    sample is a tiny broadcast, scoring is corpus x sample in one pass
-    (both cosines ride the SAME row visit, so truncation adds no second
-    scan), ranking is a per-qid window over the sample's score lists."""
-    from pyspark.sql import Window
-
+    Shape at scale: the {nq}-query sample is a tiny broadcast, scoring
+    is corpus x sample in one pass (both cosines ride the SAME row
+    visit, so truncation adds no second scan), ranking is _rank_top's
+    per-qid window and the rollup is _recall_by_qid."""
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select("vec_id", _dvec(F.col("embedding")).alias("v"))
     q = e.filter(F.col("vec_id") < _N_EVAL_Q).select(
@@ -2389,34 +2326,13 @@ def ann_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("cos_trunc"),
     )
-    w_full = Window.partitionBy("qid").orderBy(
-        F.col("cos_full").desc(), F.col("vec_id")
+    exact = _rank_top(scored, ["qid"], "cos_full").select("qid", "vec_id")
+    approx = _rank_top(scored, ["qid"], "cos_trunc").select(
+        "qid", "vec_id", F.lit(1).alias("hit")
     )
-    w_trunc = Window.partitionBy("qid").orderBy(
-        F.col("cos_trunc").desc(), F.col("vec_id")
-    )
-    exact = (
-        scored.withColumn("rnk", F.row_number().over(w_full))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("qid", "vec_id")
-    )
-    approx = (
-        scored.withColumn("rnk", F.row_number().over(w_trunc))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select("qid", "vec_id", F.lit(1).alias("hit"))
-    )
-    return (
-        exact.join(approx, ["qid", "vec_id"], "left")
-        .groupBy("qid")
-        .agg(
-            F.count("*").alias("exact_k"),
-            F.count("hit").alias("trunc_hits"),
-            dround(F.count("hit") / F.lit(float(_TOP_K)), 4).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("qid")
-    )
+    return _recall_by_qid(
+        exact.join(approx, ["qid", "vec_id"], "left"), "trunc_hits"
+    ).orderBy("qid")
 
 
 ann_dim_truncation_recall.__doc__ = ann_dim_truncation_recall.__doc__.format(
@@ -2512,14 +2428,8 @@ def embedding_sign_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "v",
         *[_sign_word(F.col("v"), w).alias(f"w{w}") for w in range(_HAM_N_WORDS)],
     )
-    q = (
-        e.orderBy("vec_id")
-        .limit(1)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            *[F.col(f"w{w}").alias(f"qw{w}") for w in range(_HAM_N_WORDS)],
-        )
+    q = _query_rows(
+        e, "v", *[F.col(f"w{w}").alias(f"qw{w}") for w in range(_HAM_N_WORDS)]
     )
     ham = None
     for w in range(_HAM_N_WORDS):
@@ -2590,8 +2500,6 @@ def knn_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus x sample in one pass; ranking is a per-qid window over the
     sample's score lists -- the sampled-eval shape, never
     corpus x corpus."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id", "label", _dvec(F.col("embedding")).alias("v")
@@ -2608,15 +2516,11 @@ def knn_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         dround(_cos(F.col("v"), F.col("qv")), 6).alias("cos_sim"),
         "vec_id",
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
     hits = F.sum(
         F.when(F.col("label") == F.col("qlabel"), 1).otherwise(0)
     )
     return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
+        _rank_top(scored, ["qid"], "cos_sim")
         .groupBy("qid")
         .agg(
             F.any_value(F.col("qlabel")).alias("qlabel"),
@@ -2683,16 +2587,7 @@ def label_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = emb.select(
         "vec_id", "label", _dvec(F.col("embedding")).alias("v")
     )
-    comp = e.select(
-        "label", F.posexplode(F.col("v")).alias("dim", "x")
-    )
-    cent = comp.groupBy("label", "dim").agg(davg("x", "c"))
-    cent_arr = cent.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "c"))),
-            lambda s: s["c"],
-        ).alias("cv")
-    )
+    cent_arr = _centroids(e, "label", "v")
     sq = F.aggregate(
         F.zip_with(F.col("v"), F.col("cv"), lambda x, c: (x - c) * (x - c)),
         F.lit(0.0),
@@ -2724,42 +2619,26 @@ _PQ_TOP_K = 10
 _PQ_RERANK = 30
 
 
-@query(
-    "pq_adc_topk_recall",
-    oracle=f"""
-    WITH ranked AS (
-      SELECT CAST(embedding AS DOUBLE[]) AS cv,
-             ROW_NUMBER() OVER (ORDER BY {_PQ_MD5}, vec_id) AS rn
-      FROM embeddings
-      QUALIFY rn <= {_PQ_K}
-    ),
-    cb AS (SELECT CAST(rn - 1 AS INT) AS code, cv FROM ranked),
-    sub AS (SELECT CAST(s AS INT) AS subspace FROM range({_PQ_M}) t(s)),
-    q AS (
-      SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings ORDER BY vec_id LIMIT 1
-    ),
-    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev
-          FROM embeddings),
-    adc AS (
-      SELECT sub.subspace, cb.code,
-             list_sum(list_transform(range(1, {_PQ_SUBDIM + 1}), i ->
-               (q.qv[subspace * {_PQ_SUBDIM} + i]
-                  - cb.cv[subspace * {_PQ_SUBDIM} + i])
-               * (q.qv[subspace * {_PQ_SUBDIM} + i]
-                  - cb.cv[subspace * {_PQ_SUBDIM} + i])
-             )) AS d
+def _pq_adc_recall_sql(
+    src: str, scored_tail: str = "", scanned: str = ""
+) -> str:
+    """adc .. exact CTEs and the two-recall SELECT of the PQ evals (twin:
+    _pq_recall), ADC-scoring the rows of ``src`` ("e" or "lists l");
+    ``scored_tail`` closes the scored CTE and ``scanned`` is an extra
+    leading SELECT column."""
+    a = src.split()[-1]
+    true_l2 = dround_sql(
+        f"list_sum(list_transform(range(1, {_DIM + 1}), i ->"
+        " (e.ev[i] - q.qv[i]) * (e.ev[i] - q.qv[i])))", 6
+    )
+    return f"""adc AS (
+      SELECT sub.subspace, cb.code, {_pq_subdist_sql('q.qv')} AS d
       FROM sub, cb, q
     ),
     dist AS (
-      SELECT e.vec_id, sub.subspace, cb.code,
-             list_sum(list_transform(range(1, {_PQ_SUBDIM + 1}), i ->
-               (e.ev[subspace * {_PQ_SUBDIM} + i]
-                  - cb.cv[subspace * {_PQ_SUBDIM} + i])
-               * (e.ev[subspace * {_PQ_SUBDIM} + i]
-                  - cb.cv[subspace * {_PQ_SUBDIM} + i])
-             )) AS sqdist
-      FROM e, sub, cb
+      SELECT {a}.vec_id, sub.subspace, cb.code,
+             {_pq_subdist_sql(f'{a}.ev')} AS sqdist
+      FROM {src}, sub, cb
     ),
     best AS (
       SELECT vec_id, subspace, code
@@ -2783,8 +2662,7 @@ _PQ_RERANK = 30
       JOIN adc a1 ON a1.subspace = 1 AND a1.code = p.c1
       JOIN adc a2 ON a2.subspace = 2 AND a2.code = p.c2
       JOIN adc a3 ON a3.subspace = 3 AND a3.code = p.c3
-      CROSS JOIN q
-      WHERE p.vec_id <> q.qid
+      {scored_tail}
     ),
     adc_topk AS (
       SELECT vec_id FROM scored
@@ -2797,35 +2675,38 @@ _PQ_RERANK = 30
     rerank AS (
       SELECT c.vec_id
       FROM cand c JOIN e USING (vec_id) CROSS JOIN q
-      ORDER BY {dround_sql(
-          f"list_sum(list_transform(range(1, {_DIM + 1}), i ->"
-          " (e.ev[i] - q.qv[i]) * (e.ev[i] - q.qv[i])))", 6
-      )} ASC NULLS LAST, c.vec_id
+      ORDER BY {true_l2} ASC NULLS LAST, c.vec_id
       LIMIT {_PQ_TOP_K}
     ),
     exact AS (
       SELECT e.vec_id
       FROM e CROSS JOIN q
       WHERE e.vec_id <> q.qid
-      ORDER BY {dround_sql(
-          f"list_sum(list_transform(range(1, {_DIM + 1}), i ->"
-          " (e.ev[i] - q.qv[i]) * (e.ev[i] - q.qv[i])))", 6
-      )} ASC NULLS LAST, e.vec_id
+      ORDER BY {true_l2} ASC NULLS LAST, e.vec_id
       LIMIT {_PQ_TOP_K}
     )
-    SELECT q.qid,
+    SELECT q.qid, {scanned}
            COUNT(*) AS exact_k,
-           CAST(COUNT(a.vec_id) AS BIGINT) AS adc_hits,
-           {dround_sql(f'COUNT(a.vec_id) / {_PQ_TOP_K}.0', 4)}
-             AS adc_recall,
-           CAST(COUNT(r.vec_id) AS BIGINT) AS rerank_hits,
-           {dround_sql(f'COUNT(r.vec_id) / {_PQ_TOP_K}.0', 4)}
-             AS rerank_recall
+           {_recall_sql('a.vec_id', 'adc_hits', 'adc_recall', _PQ_TOP_K)},
+           {_recall_sql('r.vec_id', 'rerank_hits', 'rerank_recall', _PQ_TOP_K)}
     FROM exact x
     LEFT JOIN adc_topk a USING (vec_id)
     LEFT JOIN rerank r USING (vec_id)
     CROSS JOIN q
-    GROUP BY q.qid
+    GROUP BY q.qid"""
+
+
+@query(
+    "pq_adc_topk_recall",
+    oracle=f"""
+    WITH {_PQ_CODEBOOK_SQL}
+    q AS (
+      SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
+      FROM embeddings ORDER BY vec_id LIMIT 1
+    ),
+    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev
+          FROM embeddings),
+    {_pq_adc_recall_sql("e", "CROSS JOIN q WHERE p.vec_id <> q.qid")}
     """,
     tags=("llm-similarity",),
 )
@@ -2856,13 +2737,10 @@ def pq_adc_topk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _finalize(spark, _pq_adc_recall_frame(spark, sf_dir))
 
 
-def _pq_codebook_and_query(
-    e: DataFrame,
-) -> tuple[list[list[float]], int, list[float]]:
-    """Bounded-setup collects shared by the flat-ADC and IVF-PQ ops:
-    the md5-ranked {K}-row codebook plus the first-vec_id query row
-    (the same <= 8-row materializations the r16 plan audit accepted as
-    model artifacts, similarity.py pq_adc_topk_recall)."""
+def _pq_codebook(e: DataFrame) -> list[list[float]]:
+    """The md5-ranked _PQ_K codewords of the (vec_id, v) corpus ``e``
+    (K x DIM doubles): a bounded K-row collect, never corpus-sized
+    (twin: _PQ_CODEBOOK_SQL)."""
     cb_rows = (
         e.select(
             "vec_id",
@@ -2879,7 +2757,16 @@ def _pq_codebook_and_query(
         .limit(_PQ_K)
         .collect()
     )
-    codebook = [list(r["v"]) for r in cb_rows]  # K x DIM doubles
+    return [list(r["v"]) for r in cb_rows]
+
+
+def _pq_codebook_and_query(
+    e: DataFrame,
+) -> tuple[list[list[float]], int, list[float]]:
+    """Bounded-setup collects shared by the flat-ADC and IVF-PQ ops:
+    the codebook plus the first-vec_id query row (the <= 8-row
+    materializations the r16 plan audit accepted as model artifacts)."""
+    codebook = _pq_codebook(e)
     q_row = e.orderBy("vec_id").limit(1).collect()[0]
     return codebook, q_row["vec_id"], list(q_row["v"])
 
@@ -2948,15 +2835,13 @@ def _pq_adc_recall_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     r18 stage audit (r17 VERDICT item 4): the op makes 4+ corpus
     passes (codebook/query setup, the encode scan under BOTH top-k
     heads, the true-distance scan under BOTH the exact-truth and
-    re-rank branches). Three shared frames are now persisted once via
-    the _pi_vectors discipline instead of re-derived per head: the
-    repartitioned (vec_id, v) corpus (one parquet decode + one
-    exchange serves every pass at full parallelism -- a single-file
-    fixture would otherwise serialize each pass onto one task), the
-    (vec_id, adc_dist) encode output (the literal-unrolled ADC
-    expression runs ONCE, not once per head), and the (vec_id,
-    true_dist) truth frame (exact top-k and re-rank are both heads
-    over it; re-rank restricts it by the broadcast candidate set).
+    re-rank branches). Three shared frames are persisted once instead
+    of re-derived per head: the repartitioned (vec_id, v) corpus (one
+    parquet decode + one exchange serves every pass at full
+    parallelism -- a single-file fixture would otherwise serialize
+    each pass onto one task), the (vec_id, adc_dist) encode output
+    (the literal-unrolled ADC expression runs ONCE, not once per
+    head), and _pq_recall's (vec_id, true_dist) truth frame.
     Answers are bit-identical: every head orders the same snapped
     columns with the same tie-breaks, and dround/zip_with folds are
     partitioning-independent."""
@@ -2971,17 +2856,29 @@ def _pq_adc_recall_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = _persist(
         _pq_adc_scored(e.filter(F.col("vec_id") != F.lit(qid)), codebook, qv)
     )
-    adc_topk = (
-        scored.orderBy(F.col("adc_dist").asc_nulls_last(), "vec_id")
-        .limit(_PQ_TOP_K)
-        .select("vec_id", F.lit(1).alias("adc_hit"))
-    )
-    cand = (
-        scored.orderBy(F.col("adc_dist").asc_nulls_last(), "vec_id")
-        .limit(_PQ_RERANK)
-        .select("vec_id")
-    )
     qf = spark.createDataFrame([(qid, qv)], "qid long, qv array<double>")
+    return _pq_recall(scored, e, qf, qid)
+
+
+def _pq_recall(
+    scored: DataFrame, e: DataFrame, qf: DataFrame, qid: int
+) -> DataFrame:
+    """ADC top-k, exact re-rank of the top _PQ_RERANK ADC candidates and
+    the two-recall rollup against exact L2 top-k, shared by the flat
+    and IVF-PQ ops: ``scored`` is the persisted (vec_id, adc_dist)
+    encode output, ``e`` the (vec_id, v) corpus, ``qf`` the 1-row
+    (qid, qv) query. The (vec_id, true_dist) truth frame is persisted
+    once and serves both the exact head and the broadcast-restricted
+    re-rank; every head is TakeOrderedAndProject and the stitch joins
+    three <= k-row frames."""
+
+    def head(df: DataFrame, dist: str, k: int) -> DataFrame:
+        return df.orderBy(F.col(dist).asc_nulls_last(), "vec_id").limit(k)
+
+    adc_topk = head(scored, "adc_dist", _PQ_TOP_K).select(
+        "vec_id", F.lit(1).alias("adc_hit")
+    )
+    cand = head(scored, "adc_dist", _PQ_RERANK).select("vec_id")
     true_sq = F.aggregate(
         F.zip_with(
             F.col("v"), F.col("qv"), lambda x, y: (x - y) * (x - y)
@@ -2994,17 +2891,10 @@ def _pq_adc_recall_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(qf))
         .select("vec_id", dround(true_sq, 6).alias("true_dist"))
     )
-    rerank = (
-        truth.join(F.broadcast(cand), "vec_id")
-        .orderBy(F.col("true_dist").asc_nulls_last(), "vec_id")
-        .limit(_PQ_TOP_K)
-        .select("vec_id", F.lit(1).alias("rr_hit"))
-    )
-    exact = (
-        truth.orderBy(F.col("true_dist").asc_nulls_last(), "vec_id")
-        .limit(_PQ_TOP_K)
-        .select("vec_id")
-    )
+    rerank = head(
+        truth.join(F.broadcast(cand), "vec_id"), "true_dist", _PQ_TOP_K
+    ).select("vec_id", F.lit(1).alias("rr_hit"))
+    exact = head(truth, "true_dist", _PQ_TOP_K).select("vec_id")
     return (
         exact.join(F.broadcast(adc_topk), "vec_id", "left")
         .join(F.broadcast(rerank), "vec_id", "left")
@@ -3012,14 +2902,8 @@ def _pq_adc_recall_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("qid")
         .agg(
             F.count("*").alias("exact_k"),
-            F.count("adc_hit").cast("long").alias("adc_hits"),
-            dround(
-                F.count("adc_hit") / F.lit(float(_PQ_TOP_K)), 4
-            ).alias("adc_recall"),
-            F.count("rr_hit").cast("long").alias("rerank_hits"),
-            dround(
-                F.count("rr_hit") / F.lit(float(_PQ_TOP_K)), 4
-            ).alias("rerank_recall"),
+            *_recall("adc_hit", "adc_hits", "adc_recall", _PQ_TOP_K),
+            *_recall("rr_hit", "rerank_hits", "rerank_recall", _PQ_TOP_K),
         )
     )
 
@@ -3038,36 +2922,11 @@ pq_adc_topk_recall.__doc__ = pq_adc_topk_recall.__doc__.format(
 # them and reports recall after BOTH losses plus the re-rank recovery.
 # ---------------------------------------------------------------------------
 
-_IVFPQ_PROBES = 2
-
-
 @query(
     "ann_ivfpq_topk_recall",
     oracle=f"""
-    WITH cent AS (
-      SELECT label, i, {davg_sql('CAST(embedding[i] AS DOUBLE)')} AS cx
-      FROM embeddings, LATERAL unnest(range(1, {_DIM} + 1)) AS t(i)
-      GROUP BY label, i
-    ),
-    cvec AS (
-      SELECT label, list(cx ORDER BY i) AS cv FROM cent GROUP BY label
-    ),
-    q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-          FROM embeddings ORDER BY vec_id LIMIT 1),
-    probe AS (
-      SELECT cvec.label FROM cvec, q
-      ORDER BY {_COS_SQL.format(a='cv', b='qv')} DESC NULLS LAST,
-               cvec.label ASC NULLS LAST
-      LIMIT {_IVFPQ_PROBES}
-    ),
-    ranked AS (
-      SELECT CAST(embedding AS DOUBLE[]) AS cv,
-             ROW_NUMBER() OVER (ORDER BY {_PQ_MD5}, vec_id) AS rn
-      FROM embeddings
-      QUALIFY rn <= {_PQ_K}
-    ),
-    cb AS (SELECT CAST(rn - 1 AS INT) AS code, cv FROM ranked),
-    sub AS (SELECT CAST(s AS INT) AS subspace FROM range({_PQ_M}) t(s)),
+    WITH {_LABEL_PROBE_SQL},
+    {_PQ_CODEBOOK_SQL}
     e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS ev
           FROM embeddings),
     lists AS (
@@ -3075,90 +2934,10 @@ _IVFPQ_PROBES = 2
       FROM e JOIN probe USING (label), q
       WHERE e.vec_id <> q.qid
     ),
-    adc AS (
-      SELECT sub.subspace, cb.code,
-             list_sum(list_transform(range(1, {_PQ_SUBDIM + 1}), i ->
-               (q.qv[subspace * {_PQ_SUBDIM} + i]
-                  - cb.cv[subspace * {_PQ_SUBDIM} + i])
-               * (q.qv[subspace * {_PQ_SUBDIM} + i]
-                  - cb.cv[subspace * {_PQ_SUBDIM} + i])
-             )) AS d
-      FROM sub, cb, q
-    ),
-    dist AS (
-      SELECT l.vec_id, sub.subspace, cb.code,
-             list_sum(list_transform(range(1, {_PQ_SUBDIM + 1}), i ->
-               (l.ev[subspace * {_PQ_SUBDIM} + i]
-                  - cb.cv[subspace * {_PQ_SUBDIM} + i])
-               * (l.ev[subspace * {_PQ_SUBDIM} + i]
-                  - cb.cv[subspace * {_PQ_SUBDIM} + i])
-             )) AS sqdist
-      FROM lists l, sub, cb
-    ),
-    best AS (
-      SELECT vec_id, subspace, code
-      FROM dist
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, subspace
-                                 ORDER BY sqdist, code) = 1
-    ),
-    piv AS (
-      SELECT vec_id,
-             MAX(CASE WHEN subspace = 0 THEN code END) AS c0,
-             MAX(CASE WHEN subspace = 1 THEN code END) AS c1,
-             MAX(CASE WHEN subspace = 2 THEN code END) AS c2,
-             MAX(CASE WHEN subspace = 3 THEN code END) AS c3
-      FROM best GROUP BY vec_id
-    ),
-    scored AS (
-      SELECT p.vec_id,
-             {dround_sql('a0.d + a1.d + a2.d + a3.d', 6)} AS adc_dist
-      FROM piv p
-      JOIN adc a0 ON a0.subspace = 0 AND a0.code = p.c0
-      JOIN adc a1 ON a1.subspace = 1 AND a1.code = p.c1
-      JOIN adc a2 ON a2.subspace = 2 AND a2.code = p.c2
-      JOIN adc a3 ON a3.subspace = 3 AND a3.code = p.c3
-    ),
-    adc_topk AS (
-      SELECT vec_id FROM scored
-      ORDER BY adc_dist ASC NULLS LAST, vec_id LIMIT {_PQ_TOP_K}
-    ),
-    cand AS (
-      SELECT vec_id FROM scored
-      ORDER BY adc_dist ASC NULLS LAST, vec_id LIMIT {_PQ_RERANK}
-    ),
-    rerank AS (
-      SELECT c.vec_id
-      FROM cand c JOIN e USING (vec_id) CROSS JOIN q
-      ORDER BY {dround_sql(
-          f"list_sum(list_transform(range(1, {_DIM + 1}), i ->"
-          " (e.ev[i] - q.qv[i]) * (e.ev[i] - q.qv[i])))", 6
-      )} ASC NULLS LAST, c.vec_id
-      LIMIT {_PQ_TOP_K}
-    ),
-    exact AS (
-      SELECT e.vec_id
-      FROM e CROSS JOIN q
-      WHERE e.vec_id <> q.qid
-      ORDER BY {dround_sql(
-          f"list_sum(list_transform(range(1, {_DIM + 1}), i ->"
-          " (e.ev[i] - q.qv[i]) * (e.ev[i] - q.qv[i])))", 6
-      )} ASC NULLS LAST, e.vec_id
-      LIMIT {_PQ_TOP_K}
-    )
-    SELECT q.qid,
-           CAST((SELECT COUNT(*) FROM lists) AS BIGINT) AS scanned,
-           COUNT(*) AS exact_k,
-           CAST(COUNT(a.vec_id) AS BIGINT) AS adc_hits,
-           {dround_sql(f'COUNT(a.vec_id) / {_PQ_TOP_K}.0', 4)}
-             AS adc_recall,
-           CAST(COUNT(r.vec_id) AS BIGINT) AS rerank_hits,
-           {dround_sql(f'COUNT(r.vec_id) / {_PQ_TOP_K}.0', 4)}
-             AS rerank_recall
-    FROM exact x
-    LEFT JOIN adc_topk a USING (vec_id)
-    LEFT JOIN rerank r USING (vec_id)
-    CROSS JOIN q
-    GROUP BY q.qid
+    {_pq_adc_recall_sql(
+        "lists l",
+        scanned="CAST((SELECT COUNT(*) FROM lists) AS BIGINT) AS scanned,",
+    )}
     """,
     tags=("llm-similarity",),
 )
@@ -3196,15 +2975,12 @@ def _ivfpq_recall_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lazy IVF-PQ recall frame (plan tests pin the broadcast probe
     filter and the joinless ADC scan before _finalize collapses them).
 
-    r18 stage audit (r17 VERDICT item 4): same shared-frame persists
-    as _pq_adc_recall_frame -- the repartitioned corpus serves the
-    setup collects, the centroid build, the probed-lists scan AND the
-    truth scan from one parquet decode; the probed-lists ADC encode
-    runs once for its THREE heads (adc top-k, re-rank candidates, the
-    `scanned` count); the truth frame serves exact top-k and the
-    broadcast-restricted re-rank."""
-    from ..functions import davg
-
+    r18 stage audit (r17 VERDICT item 4): the repartitioned corpus
+    serves the setup collects, the centroid build, the probed-lists
+    scan AND _pq_recall's truth scan from one parquet decode; the
+    probed-lists ADC encode is persisted once for its THREE heads (adc
+    top-k and re-rank candidates in _pq_recall, the `scanned`
+    count)."""
     par = spark.sparkContext.defaultParallelism
     e = _persist(
         load_table(spark, sf_dir, "embeddings")
@@ -3213,21 +2989,7 @@ def _ivfpq_recall_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev = e.select("vec_id", "v")
     codebook, qid, qv = _pq_codebook_and_query(ev)
-
-    cent = (
-        e.select("label", F.posexplode("v").alias("dim", "x"))
-        .groupBy("label", "dim")
-        .agg(davg("x", "cx"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("dim"), F.col("cx")))
-                ),
-                lambda s: s.getField("cx"),
-            ).alias("cv")
-        )
-    )
+    cent = _centroids(e, "label", "v")
     qf = spark.createDataFrame([(qid, qv)], "qid long, qv array<double>")
     # Tie-break pinned cross-engine (r17 ADVICE): zero-norm centroids
     # rank NULL-last on BOTH sides (_cos here, _COS_SQL guard in the
@@ -3248,60 +3010,8 @@ def _ivfpq_recall_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "v")
     )
     scored = _persist(_pq_adc_scored(lists, codebook, qv))
-    adc_topk = (
-        scored.orderBy(F.col("adc_dist").asc_nulls_last(), "vec_id")
-        .limit(_PQ_TOP_K)
-        .select("vec_id", F.lit(1).alias("adc_hit"))
-    )
-    cand = (
-        scored.orderBy(F.col("adc_dist").asc_nulls_last(), "vec_id")
-        .limit(_PQ_RERANK)
-        .select("vec_id")
-    )
-    true_sq = F.aggregate(
-        F.zip_with(
-            F.col("v"), F.col("qv"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-    truth = _persist(
-        ev.filter(F.col("vec_id") != F.lit(qid))
-        .join(F.broadcast(qf))
-        .select("vec_id", dround(true_sq, 6).alias("true_dist"))
-    )
-    rerank = (
-        truth.join(F.broadcast(cand), "vec_id")
-        .orderBy(F.col("true_dist").asc_nulls_last(), "vec_id")
-        .limit(_PQ_TOP_K)
-        .select("vec_id", F.lit(1).alias("rr_hit"))
-    )
-    exact = (
-        truth.orderBy(F.col("true_dist").asc_nulls_last(), "vec_id")
-        .limit(_PQ_TOP_K)
-        .select("vec_id")
-    )
-    scanned = scored.groupBy().agg(
-        F.count("*").cast("long").alias("scanned")
-    )
-    return (
-        exact.join(F.broadcast(adc_topk), "vec_id", "left")
-        .join(F.broadcast(rerank), "vec_id", "left")
-        .withColumn("qid", F.lit(qid).cast("long"))
-        .groupBy("qid")
-        .agg(
-            F.count("*").alias("exact_k"),
-            F.count("adc_hit").cast("long").alias("adc_hits"),
-            dround(
-                F.count("adc_hit") / F.lit(float(_PQ_TOP_K)), 4
-            ).alias("adc_recall"),
-            F.count("rr_hit").cast("long").alias("rerank_hits"),
-            dround(
-                F.count("rr_hit") / F.lit(float(_PQ_TOP_K)), 4
-            ).alias("rerank_recall"),
-        )
-        .join(F.broadcast(scanned))
-    )
+    scanned = scored.groupBy().agg(F.count("*").alias("scanned"))
+    return _pq_recall(scored, ev, qf, qid).join(F.broadcast(scanned))
 
 
 ann_ivfpq_topk_recall.__doc__ = ann_ivfpq_topk_recall.__doc__.format(

@@ -23,13 +23,6 @@ def analyzed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().analyzed().toString()
 
 
-def final_plan(df: DataFrame) -> str:
-    """Post-execution plan: triggers the job so AQE finalizes, then
-    returns the adaptively-resolved plan string."""
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def scan_lines(df: DataFrame) -> list[str]:
     return [
         line for line in physical_plan(df).splitlines() if "FileScan" in line
@@ -70,22 +63,6 @@ def assert_scan_columns_at_most(
             )
         return
     raise AssertionError(f"no scan matching {table_fragment!r} found")
-
-
-def broadcast_hinted_tables(df: DataFrame) -> list[str]:
-    """Tables under an explicit ResolvedHint(broadcast) in the analyzed
-    plan (AQE-chosen broadcasts don't count -- those adapt with scale;
-    explicit hints override AQE and are the 100 TB OOM hazard)."""
-    out: list[str] = []
-    lines = analyzed_plan(df).splitlines()
-    for i, line in enumerate(lines):
-        if "ResolvedHint" not in line:
-            continue
-        for later in lines[i + 1:]:
-            if "Relation" in later or "parquet" in later.lower():
-                out.append(later.strip()[:120])
-                break
-    return out
 
 
 def assert_no_global_sort(df: DataFrame) -> None:

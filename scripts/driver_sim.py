@@ -1,7 +1,9 @@
 """Driver simulation: run every __spark_entry__ query at sf0.01 vs DuckDB oracle.
 
-Mirrors the grading driver: row-count + schema + order-insensitive
-value comparison. Prints MATCH/MISMATCH/ERROR per query name.
+Mirrors the grading driver with tests/oracle_utils.assert_match (schema,
+dtype drift, row count and order-insensitive values). Prints
+MATCH/MISMATCH/ERROR per query name; name queries on the command line to
+run only those.
 """
 from __future__ import annotations
 
@@ -15,12 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from pyspark.sql import SparkSession
 
-from tests.oracle_utils import (
-    canon_rows,
-    duck_result_typed,
-    spark_coltypes,
-    spark_result,
-)
+from tests.oracle_utils import assert_match, spark_result
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -66,37 +63,19 @@ def main() -> int:
         t0 = time.time()
         try:
             df = qs[name](spark, SF_DIR)
-            cols, rows = spark_result(df)
             if name not in oracles:
+                rows = spark_result(df)[1]
                 print(f"ROWSONLY  {name}: {len(rows)} rows ({time.time()-t0:.1f}s)", flush=True)
                 rows_only += 1
                 continue
-            ocols, orows, d_types = duck_result_typed(con, oracles[name])
-            a = canon_rows(cols, rows)
-            b = canon_rows(ocols, orows)
-            s_types = spark_coltypes(df)
-            drift = {
-                c: (s_types[c], d_types.get(c))
-                for c in s_types
-                if s_types[c] != d_types.get(c)
-            }
-            if sorted(cols) != sorted(ocols):
-                print(f"MISMATCH  {name}: schema {sorted(cols)} vs {sorted(ocols)}", flush=True)
+            try:
+                assert_match(df, con, oracles[name], name=name)
+            except AssertionError as exc:
+                print(f"MISMATCH  {exc}", flush=True)
                 mismatch += 1
-            elif drift:
-                print(f"MISMATCH  {name}: dtype drift (spark,duck) {drift}", flush=True)
-                mismatch += 1
-            elif a != b:
-                diff_a = [r for r in a if r not in set(b)][:2]
-                diff_b = [r for r in b if r not in set(a)][:2]
-                print(
-                    f"MISMATCH  {name}: {len(a)} vs {len(b)} rows; spark-only={diff_a} oracle-only={diff_b}",
-                    flush=True,
-                )
-                mismatch += 1
-            else:
-                print(f"MATCH     {name}: {len(a)} rows ({time.time()-t0:.1f}s)", flush=True)
-                match += 1
+                continue
+            print(f"MATCH     {name} ({time.time()-t0:.1f}s)", flush=True)
+            match += 1
         except Exception:
             print(f"ERROR     {name}:\n{traceback.format_exc()}", flush=True)
             err += 1

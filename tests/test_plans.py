@@ -934,6 +934,27 @@ def test_filtered_ann_and_balanced_sample_plans_stay_keyed(spark, sf_dir):
         release_caches()
 
 
+def test_filtered_probe_sweep_plans_no_cartesian_or_sort_merge(
+    spark, sf_dir, monkeypatch
+):
+    """The linear-k filtered sweep shares _probe_sweep with the two-level
+    sweep pinned above, so it carries the same pin: the width grid
+    attaches as a broadcast range join (never a cartesian) and the
+    rollup stitch broadcasts its <= widths*k-row sides."""
+    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
+        release_caches,
+    )
+
+    try:
+        plan = physical_plan(
+            _lazy(monkeypatch, "ann_filtered_probe_sweep")(spark, sf_dir)
+        )
+        assert "CartesianProduct" not in plan, plan
+        assert "SortMergeJoin" not in plan, plan
+    finally:
+        release_caches()
+
+
 def test_bpe_iteration_frames_are_vocabulary_sized(spark, sf_dir, monkeypatch):
     """r9 VERDICT item 7 (BPE half): every merge iteration operates on
     the word-TYPE table, never re-reading the corpus -- the documents

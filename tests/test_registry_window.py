@@ -10,6 +10,7 @@ import re
 
 from apache_iceberg_with_clickhouse_olake_spark.operators.registry import (
     REGISTRY,
+    _MODULES,
     _PRIORITY,
     _load_all,
     _ordered,
@@ -76,3 +77,15 @@ def test_queries_and_oracles_share_priority_order():
     os_ = list(all_oracles())
     filtered = [n for n in qs if n in set(os_)]
     assert filtered == os_
+
+
+def test_every_operator_module_registers_a_query():
+    # a listed module whose queries no longer register drops its whole
+    # family from queries() and the oracle mirror without a word
+    _load_all()
+    registering = {
+        spec.fn.__module__.rsplit(".", 1)[-1] for spec in REGISTRY.values()
+    }
+    assert not set(_MODULES) - registering, sorted(
+        set(_MODULES) - registering
+    )
