@@ -3,7 +3,8 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash -> CORRECTNESS_r{N}.json).
+order-insensitive value-hash; ``scripts/driver_sim.py`` runs the same
+check locally).
 
 All real content lives in ``apache_iceberg_with_clickhouse_olake_spark``;
 this module only delegates to the central operator registry.

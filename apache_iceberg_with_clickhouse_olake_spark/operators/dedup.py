@@ -877,20 +877,10 @@ def _cc_rounds_sql() -> str:
     return ",\n".join(parts)
 
 
-@query(
-    "dedup_cluster_sizes",
-    oracle=f"""
-    WITH g AS MATERIALIZED (
-      SELECT doc_id, text,
-             row_number() OVER (
-               PARTITION BY md5({_NORM}) ORDER BY doc_id) AS rn,
-             COUNT(*) OVER (PARTITION BY md5({_NORM})) AS grp_size
-      FROM documents
-    ),
-    reps AS MATERIALIZED (
-      SELECT doc_id, text, grp_size FROM g WHERE rn = 1
-    ),
-    {_sig_cte_sql('reps')},
+# The representatives' labelled near-dup graph, shared by every oracle
+# that clusters ``reps``: MinHash band pairs, Jaccard-verified edges made
+# symmetric, then the connected-component rounds ``l0..l{_CC_ROUNDS}``.
+_REP_LABELS_CTES = f"""{_sig_cte_sql('reps')},
     {_BANDS_CTE},
     {_band_pairs_sql('cand')},
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM reps),
@@ -906,7 +896,23 @@ def _cc_rounds_sql() -> str:
     sym AS MATERIALIZED (
       SELECT a, b FROM edges UNION ALL SELECT b AS a, a AS b FROM edges
     ),
-    {_cc_rounds_sql()},
+    {_cc_rounds_sql()}"""
+
+
+@query(
+    "dedup_cluster_sizes",
+    oracle=f"""
+    WITH g AS MATERIALIZED (
+      SELECT doc_id, text,
+             row_number() OVER (
+               PARTITION BY md5({_NORM}) ORDER BY doc_id) AS rn,
+             COUNT(*) OVER (PARTITION BY md5({_NORM})) AS grp_size
+      FROM documents
+    ),
+    reps AS MATERIALIZED (
+      SELECT doc_id, text, grp_size FROM g WHERE rn = 1
+    ),
+    {_REP_LABELS_CTES},
     labeled AS (
       SELECT doc_id, label FROM l{_CC_ROUNDS}
       UNION ALL
@@ -1135,23 +1141,7 @@ def incremental_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps AS MATERIALIZED (
       SELECT doc_id, source, text FROM g WHERE rn = 1
     ),
-    {_sig_cte_sql('reps')},
-    {_BANDS_CTE},
-    {_band_pairs_sql('cand')},
-    sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM reps),
-    edges AS (
-      SELECT p.doc_a AS a, p.doc_b AS b
-      FROM cand p
-      JOIN sh sa ON p.doc_a = sa.doc_id
-      JOIN sh sb ON p.doc_b = sb.doc_id
-      WHERE CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-              / len(list_distinct(list_concat(sa.shingles, sb.shingles)))
-            >= {_JACCARD_THRESHOLD}
-    ),
-    sym AS MATERIALIZED (
-      SELECT a, b FROM edges UNION ALL SELECT b AS a, a AS b FROM edges
-    ),
-    {_cc_rounds_sql()},
+    {_REP_LABELS_CTES},
     rep_plan AS (
       SELECT r.doc_id, r.source,
              COALESCE(l.label, r.doc_id) AS cluster
@@ -1254,23 +1244,7 @@ def dedup_removal_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps AS MATERIALIZED (
       SELECT doc_id, source, text FROM g WHERE rn = 1
     ),
-    {_sig_cte_sql('reps')},
-    {_BANDS_CTE},
-    {_band_pairs_sql('cand')},
-    sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM reps),
-    edges AS (
-      SELECT p.doc_a AS a, p.doc_b AS b
-      FROM cand p
-      JOIN sh sa ON p.doc_a = sa.doc_id
-      JOIN sh sb ON p.doc_b = sb.doc_id
-      WHERE CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-              / len(list_distinct(list_concat(sa.shingles, sb.shingles)))
-            >= {_JACCARD_THRESHOLD}
-    ),
-    sym AS MATERIALIZED (
-      SELECT a, b FROM edges UNION ALL SELECT b AS a, a AS b FROM edges
-    ),
-    {_cc_rounds_sql()},
+    {_REP_LABELS_CTES},
     kept AS (
       SELECT r.doc_id, r.source, r.text
       FROM reps r LEFT JOIN l{_CC_ROUNDS} l USING (doc_id)
@@ -2210,23 +2184,7 @@ def _split_sql(expr: str) -> str:
       FROM documents
     ),
     reps AS MATERIALIZED (SELECT doc_id, text FROM g WHERE rn = 1),
-    {_sig_cte_sql('reps')},
-    {_BANDS_CTE},
-    {_band_pairs_sql('cand')},
-    sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM reps),
-    edges AS (
-      SELECT p.doc_a AS a, p.doc_b AS b
-      FROM cand p
-      JOIN sh sa ON p.doc_a = sa.doc_id
-      JOIN sh sb ON p.doc_b = sb.doc_id
-      WHERE CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-              / len(list_distinct(list_concat(sa.shingles, sb.shingles)))
-            >= {_JACCARD_THRESHOLD}
-    ),
-    sym AS MATERIALIZED (
-      SELECT a, b FROM edges UNION ALL SELECT b AS a, a AS b FROM edges
-    ),
-    {_cc_rounds_sql()},
+    {_REP_LABELS_CTES},
     tagged AS MATERIALIZED (
       SELECT g.doc_id,
              COALESCE(l.label, g.rep_id) AS cluster_id,

@@ -17,10 +17,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from pyspark.sql import SparkSession
 
+from apache_iceberg_with_clickhouse_olake_spark.sources.parquet import (
+    TABLES,
+    table_path,
+)
 from tests.oracle_utils import assert_match, spark_result
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 def main() -> int:
@@ -50,7 +53,7 @@ def main() -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(SF_DIR, t)}')"
         )
 
     qs = e.queries()
