@@ -1,64 +1,64 @@
-"""Block-lifecycle helpers shared by the iterative operators
-(clustering's Lloyd loop, the BPE merge-learning loop, the dedup
-cascade, DSIR, power iteration).
+"""Resource lifetimes for the registered operators: every block, lineage
+cut and scratch directory an operator takes lives in its cache scope
+and is released when that scope drains.
 
-Two primitives hold blocks for an operator, and both are tracked:
+Three kinds of resource, each taken through one helper here:
 
 - :func:`persist_tracked` -- ``persist()``, for a frame that several
   consumers read at EXECUTION time.
 - :func:`superstep` -- ``localCheckpoint()``, for a frame whose plan
   must be cut (the reasons are on the function).
+- :func:`scratch_dir` -- a temporary directory for the lake writes an
+  operator reads back (snapshots, compaction, stream checkpoints and
+  sinks). It is the one place to swap in a shared warehouse path: on a
+  real cluster a driver-local ``file:`` path is not visible to remote
+  executors.
 
-Spark never auto-unpersists: across a 150+-op correctness gate plus
-repeated bench iterations, leaked blocks accumulate for the session
-lifetime and show up as memory-pressure-driven bench drift (and, worse,
-Spark's CacheManager silently substitutes a leaked InMemoryRelation
-into any later plan that matches it -- the r8 bench cache-subsidy
-bug). The registry is a STACK of scopes so lifetimes cannot
-cross-contaminate:
+Spark never auto-unpersists: leaked blocks accumulate for the session
+lifetime, and the CacheManager silently substitutes a leaked
+InMemoryRelation into any later plan that matches it. The registry is
+a STACK of scopes, each a :class:`contextlib.ExitStack`, so lifetimes
+cannot cross-contaminate:
 
 - :func:`cache_scope` pushes a fresh scope and -- in a ``finally`` --
-  releases everything that scope tracked, so an operator that raises
-  mid-build cannot pin blocks for an unrelated later query, and a
-  finalize-using op composed inside another op drains only its OWN
-  scope, never its caller's live blocks.
+  closes it, so an operator that raises mid-build cannot pin blocks or
+  leave a directory behind, and a finalize-using op composed inside
+  another op drains only its OWN scope, never its caller's.
 - :func:`scoped` wraps a query fn ``(spark, sf_dir) -> DataFrame`` in
-  :func:`cache_scope`; every registered query that persists or takes a
-  superstep uses it.
+  :func:`cache_scope`; every registered query that takes a resource
+  uses it.
 - :func:`finalize` materializes the small result rows (inside a
   ``try/finally`` that drains the current scope) and returns a frame
-  rebuilt from local rows, valid after its tracked inputs are gone (the
-  registered-query materialization idiom evolution.py pioneered).
+  rebuilt from local rows, valid after its inputs are gone.
 
-The rule: an op that takes a superstep finalizes. A released checkpoint
-cannot be recomputed -- its lineage is gone -- so a lazy frame that
-reads one is dead once its scope drains; only collected rows outlive
-it.
+The rule: an op that takes a superstep or a scratch dir finalizes. A
+released checkpoint cannot be recomputed -- its lineage is gone -- and
+a removed directory cannot be re-read, so a lazy frame over either is
+dead once its scope drains; only collected rows outlive it.
 
 Queries execute sequentially per session (driver gate / pytest), so a
 module-level stack is safe here; the stack makes NESTED composition
-safe too, which the old flat list was not (r9 ADVICE).
+safe too.
 """
 
 from __future__ import annotations
 
 import functools
+import tempfile
 from collections.abc import Callable, Iterator
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Base scope catches blocks taken outside any cache_scope (e.g. a plan
+# Base scope catches resources taken outside any cache_scope (e.g. a
 # test poking a lazy builder directly); release_caches() drains it.
-# Entries are persisted DataFrames and checkpointed JVM RDDs: both
-# release with ``.unpersist(False)``.
-_SCOPES: list[list] = [[]]
+_SCOPES: list[ExitStack] = [ExitStack()]
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
     """persist() tracked in the innermost live scope; see module doc."""
     df = df.persist()
-    _SCOPES[-1].append(df)
+    _SCOPES[-1].callback(df.unpersist, False)
     return df
 
 
@@ -87,28 +87,32 @@ def superstep(df: DataFrame, eager: bool = False) -> DataFrame:
     result cannot be recomputed -- hence the module rule that an op that
     takes a superstep collects through :func:`finalize`."""
     df = df.localCheckpoint(eager=eager)
-    _SCOPES[-1].append(df._jdf.logicalPlan().rdd())
+    _SCOPES[-1].callback(df._jdf.logicalPlan().rdd().unpersist, False)
     return df
 
 
+def scratch_dir(prefix: str) -> str:
+    """A fresh temporary directory, removed when the innermost live
+    scope drains. It lives under ``tempfile``'s default root."""
+    return _SCOPES[-1].enter_context(
+        tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True)
+    )
+
+
 def release_caches() -> None:
-    """Release every block tracked by the current scope."""
-    scope = _SCOPES[-1]
-    while scope:
-        scope.pop().unpersist(False)
+    """Release every resource tracked by the current scope."""
+    _SCOPES[-1].close()
 
 
 @contextmanager
 def cache_scope() -> Iterator[None]:
-    """Push a fresh block-tracking scope; drain it on exit (even on
-    exception), leaving enclosing scopes' blocks untouched."""
-    _SCOPES.append([])
+    """Push a fresh scope; drain it on exit (even on exception),
+    leaving enclosing scopes' resources untouched."""
+    _SCOPES.append(ExitStack())
     try:
         yield
     finally:
-        scope = _SCOPES.pop()
-        while scope:
-            scope.pop().unpersist(False)
+        _SCOPES.pop().close()
 
 
 def scoped(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
@@ -124,8 +128,8 @@ def scoped(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
 
 def finalize(spark: SparkSession, out: DataFrame) -> DataFrame:
     """Materialize the small result rows, release the current scope's
-    tracked blocks (in a ``finally`` -- a failed collect must not pin
-    them either), and return a frame rebuilt from the local rows."""
+    resources (in a ``finally`` -- a failed collect must not pin them
+    either), and return a frame rebuilt from the local rows."""
     try:
         rows = out.collect()
     finally:

@@ -41,8 +41,6 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -51,6 +49,7 @@ from ..sources.parquet import load_table
 from ._cache import scoped as _scoped
 from ._cache import finalize as _finalize
 from ._cache import persist_tracked as _persist
+from ._cache import scratch_dir as _scratch_dir
 from ._cache import superstep as _superstep
 from .registry import query
 from .similarity import _COS_SQL, _TOP_K, _VEC_FP_SQL, _centroids, _cos
@@ -390,14 +389,8 @@ def embedding_kmeans_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, snapped centroids, snapped distances, tie-broken argmins) is
     engine-identical by construction, so the check is exact, not a
     tolerance compare. See module docstring for the 100 TB shape."""
-    return _finalize(spark, _kmeans_profile_frame(spark, sf_dir))
-
-
-def _kmeans_profile_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy per-cluster profile frame (plan tests pin its physical shape
-    BEFORE the materialization idiom collapses it to local rows)."""
     assigned = _kmeans_assign(spark, sf_dir)
-    return (
+    out = (
         assigned.groupBy("cluster")
         .agg(
             F.count("*").alias("n_vectors"),
@@ -406,6 +399,7 @@ def _kmeans_profile_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cluster")
     )
+    return _finalize(spark, out)
 
 
 # Level-2 CTE block shared by the two-level profile and the two-level
@@ -481,7 +475,20 @@ def embedding_kmeans_twolevel_profile(
     engine-exact like every k-means step here (snapped seeds, snapped
     distances, (d2, sub) tie-break), so the oracle unrolls it
     verbatim."""
-    return _finalize(spark, _kmeans_twolevel_frame(spark, sf_dir))
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", _dvec(F.col("embedding")).alias("dv")
+    )
+    _, _, _, fine = _twolevel_state_frames(emb)
+    out = (
+        fine.groupBy("cluster", "sub")
+        .agg(
+            F.count("*").alias("n_vectors"),
+            davg("d2", "avg_dist2"),
+            F.min("vec_id").alias("min_vec_id"),
+        )
+        .orderBy("cluster", "sub")
+    )
+    return _finalize(spark, out)
 
 
 def _twolevel_state_frames(emb: DataFrame):
@@ -542,24 +549,6 @@ def _twolevel_state_frames(emb: DataFrame):
         .repartition(par, "cluster", "sub")
     )
     return assigned, cent, seeds2, fine
-
-
-def _kmeans_twolevel_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy two-level profile frame (plan tests pin its physical shape
-    BEFORE the materialization idiom collapses it to local rows)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _dvec(F.col("embedding")).alias("dv")
-    )
-    _, _, _, fine = _twolevel_state_frames(emb)
-    return (
-        fine.groupBy("cluster", "sub")
-        .agg(
-            F.count("*").alias("n_vectors"),
-            davg("d2", "avg_dist2"),
-            F.min("vec_id").alias("min_vec_id"),
-        )
-        .orderBy("cluster", "sub")
-    )
 
 
 def _salted_block_dropped(
@@ -808,13 +797,9 @@ def semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: the assignment feeds the pair join twice (both sides)
     # plus the final rollup -- without the cache the whole 2-iteration
     # k-means chain re-executes per use (measured 3x wall at x1).
-    return _finalize(spark, _semantic_stats_frame(spark, sf_dir))
-
-
-def _semantic_stats_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy SemDeDup per-cluster stats frame (plan-pinned)."""
     assigned = _persist(_kmeans_assign(spark, sf_dir))
-    return _kept_stats(assigned, _semantic_dropped(assigned), ["cluster"])
+    out = _kept_stats(assigned, _semantic_dropped(assigned), ["cluster"])
+    return _finalize(spark, out)
 
 
 @query(
@@ -851,16 +836,11 @@ def semantic_dedup_capped_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means seed init -- making the capped branch hash-checkable
     (r12 VERDICT item 5: the cap existed in code since r12 but no
     registered query ever executed it against an oracle)."""
-    return _finalize(spark, _semantic_capped_stats_frame(spark, sf_dir))
-
-
-def _semantic_capped_stats_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy capped-SemDeDup per-cluster stats frame (plan-pinned)."""
     assigned = _persist(_kmeans_assign(spark, sf_dir))
     dropped = _semantic_dropped(
         assigned, max_cluster_pair_members=_SEMDEDUP_CAP
     )
-    return _kept_stats(
+    out = _kept_stats(
         assigned,
         dropped,
         ["cluster"],
@@ -868,6 +848,7 @@ def _semantic_capped_stats_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_pair_members"
         ),
     )
+    return _finalize(spark, out)
 
 
 @query(
@@ -908,9 +889,8 @@ def semantic_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash compare then fails.
 
     100 TB: the kept frame writes in parallel at its existing
-    partitioning (no coalesce); the tempfile sink is the sandbox
-    stand-in for a shared warehouse path, same one-line swap as every
-    temp-materializing op in this repo."""
+    partitioning (no coalesce); the sink is a ``_cache.scratch_dir``,
+    the one place to swap in a shared warehouse path."""
     assigned = _persist(_kmeans_assign(spark, sf_dir))
     dropped = _semantic_dropped(assigned)
     kept = (
@@ -918,37 +898,36 @@ def semantic_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("drop_id").isNull())
         .select(assigned["cluster"].alias("cluster"), "vec_id")
     )
-    with tempfile.TemporaryDirectory(
-        prefix="semantic_dedup_apply_", ignore_cleanup_errors=True
-    ) as tmp:
-        kept.write.mode("overwrite").parquet(tmp)
-        back = spark.read.parquet(tmp)
-        plan_side = assigned.groupBy("cluster").agg(
-            F.countDistinct("vec_id").alias("n_members")
+    tmp = _scratch_dir("semantic_dedup_apply_")
+    kept.write.mode("overwrite").parquet(tmp)
+    back = spark.read.parquet(tmp)
+    plan_side = assigned.groupBy("cluster").agg(
+        F.countDistinct("vec_id").alias("n_members")
+    )
+    drop_side = dropped.groupBy("cluster").agg(
+        F.count("*").alias("n_dropped")
+    )
+    read_side = back.groupBy("cluster").agg(
+        F.count("*").alias("kept_readback"),
+        F.sum("vec_id").cast("long").alias("kept_id_sum"),
+    )
+    out = (
+        plan_side.join(read_side, "cluster", "left")
+        .join(drop_side, "cluster", "left")
+        .select(
+            "cluster",
+            "n_members",
+            F.coalesce("kept_readback", F.lit(0)).alias("kept_readback"),
+            F.coalesce("kept_id_sum", F.lit(0)).cast("long").alias(
+                "kept_id_sum"
+            ),
+            F.coalesce("n_dropped", F.lit(0)).cast("long").alias(
+                "n_dropped"
+            ),
         )
-        drop_side = dropped.groupBy("cluster").agg(
-            F.count("*").alias("n_dropped")
-        )
-        read_side = back.groupBy("cluster").agg(
-            F.count("*").alias("kept_readback"),
-            F.sum("vec_id").cast("long").alias("kept_id_sum"),
-        )
-        return _finalize(spark, (
-            plan_side.join(read_side, "cluster", "left")
-            .join(drop_side, "cluster", "left")
-            .select(
-                "cluster",
-                "n_members",
-                F.coalesce("kept_readback", F.lit(0)).alias("kept_readback"),
-                F.coalesce("kept_id_sum", F.lit(0)).cast("long").alias(
-                    "kept_id_sum"
-                ),
-                F.coalesce("n_dropped", F.lit(0)).cast("long").alias(
-                    "n_dropped"
-                ),
-            )
-            .orderBy("cluster")
-        ))
+        .orderBy("cluster")
+    )
+    return _finalize(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -1234,12 +1213,6 @@ def ann_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     final top-k is fully tie-broken. Scale shape: centroids are a
     broadcast, the probed fraction is n_probes/k of the corpus, and the
     top-k is TakeOrderedAndProject -- never a global sort."""
-    return _finalize(spark, _ann_ivf_frame(spark, sf_dir))
-
-
-def _ann_ivf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy IVF probe frame (plan tests pin the bucket-local scan shape
-    BEFORE the materialization idiom collapses it to local rows)."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("dv")
     )
@@ -1248,7 +1221,7 @@ def _ann_ivf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = _probe(cent, _query_rows(emb, "dv"), _N_PROBES).select(
         "cluster", "qid", "qv"
     )
-    return (
+    out = (
         assigned.join(F.broadcast(probe), "cluster")
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
@@ -1259,6 +1232,7 @@ def _ann_ivf_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(_TOP_K)
     )
+    return _finalize(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -1537,7 +1511,9 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     _N_FILTERED_PROBES > _N_PROBES: selectivity thins each list, so
     filtered search probes wider for the same recall -- the trade
     ann_filtered_recall measures."""
-    return _finalize(spark, _ann_filtered_frame(spark, sf_dir))
+    _, lists, q, cent = _filtered_search_parts(spark, sf_dir)
+    out = _filtered_topk(lists, _probe(cent, q, _N_FILTERED_PROBES))
+    return _finalize(spark, out)
 
 
 def _filtered_search_parts(spark: SparkSession, sf_dir: str):
@@ -1624,14 +1600,6 @@ def _filtered_exact_topk(emb_full: DataFrame, q: DataFrame) -> DataFrame:
         "vec_id", "label", _dvec(F.col("embedding")).alias("dv")
     )
     return _exact_topk(e, q, F.col("label") == F.col("qlabel"))
-
-
-def _ann_filtered_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy filtered-probe frame (plan tests pin the payload-join and
-    bucket-local scan shape BEFORE the materialization idiom collapses
-    it to local rows)."""
-    _, lists, q, cent = _filtered_search_parts(spark, sf_dir)
-    return _filtered_topk(lists, _probe(cent, q, _N_FILTERED_PROBES))
 
 
 @query(
@@ -1744,13 +1712,6 @@ def cluster_balanced_sample_stats(
     ~_TARGET_CLUSTER_SIZE rows by construction, so no window partition
     ever exceeds a task; the rollup is one hash aggregation. No
     global sort, no driver-side state."""
-    return _finalize(spark, _balanced_sample_frame(spark, sf_dir))
-
-
-def _balanced_sample_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy per-cluster sample-audit frame (plan tests pin the
-    leaf-keyed window shape BEFORE the materialization idiom collapses
-    it to local rows)."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("dv")
     )
@@ -1787,7 +1748,7 @@ def _balanced_sample_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cluster")
     )
-    return out
+    return _finalize(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -2124,25 +2085,15 @@ def ann_twolevel_filtered_recall(
     the bounded two-level leaf fetch with the predicate evaluated
     map-side (_ann_twolevel_filtered_frame); _single_recall compares
     the two <= k-row frames."""
-    return _finalize(
-        spark, _ann_twolevel_filtered_recall_frame(spark, sf_dir)
-    )
-
-
-def _ann_twolevel_filtered_recall_frame(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Lazy recall-eval frame (plan tests pin the exact side's top-k
-    head and the <= k-row rollup joins BEFORE the materialization
-    idiom collapses them)."""
     emb_full = load_table(spark, sf_dir, "embeddings")
     q = _filtered_query_row(emb_full)
-    return _single_recall(
+    out = _single_recall(
         _filtered_exact_topk(emb_full, q),
         _ann_twolevel_filtered_frame(spark, sf_dir),
         q,
         "probe_hits",
     )
+    return _finalize(spark, out)
 
 
 @query(
@@ -2174,19 +2125,13 @@ def ann_twolevel_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     width; probed sub-seed selection (_sub_probe) is a per-cluster
     window over <= maxw*k2 broadcast rows. Snapped cosines and full
     tie-breaks keep both engines hash-exact."""
-    return _finalize(spark, _twolevel_sweep_frame(spark, sf_dir))
-
-
-def _twolevel_sweep_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy two-level sweep frame (plan tests pin the one-leaf-pass /
-    broadcast-grid shape BEFORE the materialization idiom collapses
-    it)."""
     emb_full, lists, q, cent, seeds2 = _twolevel_filtered_parts(spark, sf_dir)
     p2 = _sub_probe(seeds2, _probe_ranks(cent, q), q).select(
         "cluster", "sub", "prank"
     )
     probed = lists.join(F.broadcast(p2), ["cluster", "sub"])
-    return _probe_sweep(spark, probed, emb_full, q)
+    out = _probe_sweep(spark, probed, emb_full, q)
+    return _finalize(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -2277,12 +2222,6 @@ def ann_twolevel_batch_recall(
     qid. Only the EVAL's exact side pays n*B cosines (one corpus scan
     cross-joined with the B-row broadcast, qid-windowed) -- the
     recall baseline every sibling eval also pays, batched."""
-    return _finalize(spark, _batch_recall_frame(spark, sf_dir))
-
-
-def _batch_recall_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy batch-recall frame (plan tests pin the broadcast-probe /
-    qid-window shape BEFORE the materialization idiom collapses it)."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("dv")
     )
@@ -2328,10 +2267,11 @@ def _batch_recall_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("qid", "vec_id")
     # approx is <= B*k rows -- broadcast it so the rollup stitch never
     # plans a sort-merge exchange pair
-    return _recall_by_qid(
+    out = _recall_by_qid(
         exact.join(F.broadcast(approx), ["qid", "vec_id"], "left"),
         "probe_hits",
     ).orderBy("qid")
+    return _finalize(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -2417,13 +2357,6 @@ def greedy_kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast once. Engine-exact: snapped distances (6 decimals),
     farthest ties break on lowest vec_id, assignment ties on pick
     order."""
-    return _finalize(spark, _kcenter_frame(spark, sf_dir))
-
-
-def _kcenter_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy k-center frame (plan tests pin the per-pick broadcast
-    passes and the joinless assignment fold BEFORE the materialization
-    idiom collapses them)."""
     # spread to full parallelism BEFORE the first persist: every pick
     # is an iterated no-shuffle corpus pass over the cached frame, so
     # its task count is whatever the cache has -- a file-count-
@@ -2493,7 +2426,7 @@ def _kcenter_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("d").alias("radius"),
         davg("d", "avg_dist"),
     )
-    return (
+    out = (
         cents.select("cid", "ord")
         .join(F.broadcast(per), "ord", "left")
         .select(
@@ -2506,3 +2439,4 @@ def _kcenter_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("pick_order")
     )
+    return _finalize(spark, out)

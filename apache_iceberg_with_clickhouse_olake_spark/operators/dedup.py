@@ -20,8 +20,6 @@ oracle reproduces Spark bit-for-bit from shared constants.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,6 +40,7 @@ from ..functions import (
 from ..sources.parquet import load_table, load_table_wide
 from ._cache import finalize as _finalize
 from ._cache import scoped as _scoped
+from ._cache import scratch_dir as _scratch_dir
 from ._cache import superstep as _superstep
 from .registry import query
 
@@ -1292,11 +1291,9 @@ def dedup_removal_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the kept corpus is written in parallel at the reps frame's
     doc_id partitioning (no coalesce -- a backfill-sized apply spreads
     across the cluster); every aggregate is source-cardinality. The
-    tempfile sink is the sandbox stand-in for a SHARED warehouse path:
-    on a real cluster the same write must target s3://... / hdfs://...
-    (a driver-local file: path is not visible to remote executors), the
-    one-line swap every temp-materializing op in this repo shares
-    (medallion_readback, lake ops)."""
+    sink is a ``_cache.scratch_dir``: on a real cluster the write must
+    target a SHARED warehouse path (s3://... / hdfs://...), and
+    scratch_dir is the one place to swap it in."""
     grouped, reps, labels = _cascade_rep_labels(spark, sf_dir)
     rep_plan = reps.join(labels, "doc_id", "left").withColumn(
         "cluster", F.coalesce("label", F.col("doc_id"))
@@ -1304,42 +1301,40 @@ def dedup_removal_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = rep_plan.filter(F.col("doc_id") == F.col("cluster")).select(
         "doc_id", "source", "text"
     )
-    with tempfile.TemporaryDirectory(
-        prefix="dedup_apply_", ignore_cleanup_errors=True
-    ) as tmp:
-        kept.write.mode("overwrite").parquet(tmp)
-        back = spark.read.parquet(tmp)
-        agg_docs = grouped.groupBy("source").agg(
-            F.count("*").alias("docs_total"),
-            F.count(F.when(F.col("rn") > 1, True)).alias("removed_exact"),
+    tmp = _scratch_dir("dedup_apply_")
+    kept.write.mode("overwrite").parquet(tmp)
+    back = spark.read.parquet(tmp)
+    agg_docs = grouped.groupBy("source").agg(
+        F.count("*").alias("docs_total"),
+        F.count(F.when(F.col("rn") > 1, True)).alias("removed_exact"),
+    )
+    removed_nd = (
+        rep_plan.filter(F.col("doc_id") != F.col("cluster"))
+        .groupBy("source")
+        .agg(F.count("*").alias("removed_neardup"))
+    )
+    agg_kept = back.groupBy("source").agg(
+        F.count("*").alias("kept_readback"),
+        F.sum(F.length("text")).alias("kept_chars"),
+    )
+    out = (
+        agg_docs.join(agg_kept, "source", "left")
+        .join(removed_nd, "source", "left")
+        .select(
+            "source",
+            "docs_total",
+            F.coalesce("kept_readback", F.lit(0)).alias("kept_readback"),
+            F.coalesce("kept_chars", F.lit(0)).cast("long").alias(
+                "kept_chars"
+            ),
+            "removed_exact",
+            F.coalesce("removed_neardup", F.lit(0)).alias(
+                "removed_neardup"
+            ),
         )
-        removed_nd = (
-            rep_plan.filter(F.col("doc_id") != F.col("cluster"))
-            .groupBy("source")
-            .agg(F.count("*").alias("removed_neardup"))
-        )
-        agg_kept = back.groupBy("source").agg(
-            F.count("*").alias("kept_readback"),
-            F.sum(F.length("text")).alias("kept_chars"),
-        )
-        out = (
-            agg_docs.join(agg_kept, "source", "left")
-            .join(removed_nd, "source", "left")
-            .select(
-                "source",
-                "docs_total",
-                F.coalesce("kept_readback", F.lit(0)).alias("kept_readback"),
-                F.coalesce("kept_chars", F.lit(0)).cast("long").alias(
-                    "kept_chars"
-                ),
-                "removed_exact",
-                F.coalesce("removed_neardup", F.lit(0)).alias(
-                    "removed_neardup"
-                ),
-            )
-            .orderBy("source")
-        )
-        return _finalize(spark, out)
+        .orderBy("source")
+    )
+    return _finalize(spark, out)
 
 
 @query(

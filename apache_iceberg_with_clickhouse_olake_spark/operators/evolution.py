@@ -4,8 +4,9 @@ lakehouse recipes (BLOG_POST_COMPLETE_WALKTHROUGH.md:521-553,
 scripts/iceberg-setup.sql:47-103) re-expressed over the parquet-native
 lake in sources/lake.py.
 
-These queries materialize real files under a throwaway /tmp warehouse at
-run time, then *read back* -- so the correctness gate covers the write
+These queries materialize real files under a scratch warehouse
+(``_cache.scratch_dir``, removed when the op's scope drains) at run
+time, then *read back* -- so the correctness gate covers the write
 path (S3/S4/D5/O5), not just plan shapes. Results are pure functions of
 the input tables, so DuckDB oracles state the expected post-roundtrip
 answer directly.
@@ -14,7 +15,6 @@ answer directly.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,6 +22,9 @@ from pyspark.sql import functions as F
 from ..functions import davg_sql, dsum, dsum_sql
 from ..sources.lake import compact, read_snapshot, snapshot_history, write_snapshot
 from ..sources.parquet import load_table
+from ._cache import finalize as _finalize
+from ._cache import scoped as _scoped
+from ._cache import scratch_dir as _scratch_dir
 from .medallion import _GOLD_SQL_INNER, build_medallion
 from .registry import query
 
@@ -48,49 +51,48 @@ _EVOLUTION_SPLIT_DATE = "2000-01-01"
     """,
     tags=("D7", "D8", "P7", "L1"),
 )
+@_scoped
 def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALTER TABLE ADD COLUMN equivalent (blog :539-553): snapshot v1 is
     written WITHOUT loyalty_tier, v2 WITH it; the mergeSchema read sees
     both, old rows surfacing NULL. The P7 inequality filter
     (!= 'standard', blog :550) runs over the merged view."""
     orders = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(
-        prefix="evolution_", ignore_cleanup_errors=True
-    ) as tmp:
-        v1 = orders.filter(
-            F.col("o_orderdate") < F.lit(_EVOLUTION_SPLIT_DATE).cast("date")
-        ).select("o_orderkey", "o_custkey", "o_orderdate")
-        v2 = (
-            orders.filter(
-                F.col("o_orderdate") >= F.lit(_EVOLUTION_SPLIT_DATE).cast("date")
-            )
-            .select("o_orderkey", "o_custkey", "o_orderdate")
-            .withColumn(
-                "loyalty_tier",
-                F.when(F.col("o_custkey") % 10 == 0, "gold").otherwise(
-                    "standard"
-                ),
+    tmp = _scratch_dir("evolution_")
+    v1 = orders.filter(
+        F.col("o_orderdate") < F.lit(_EVOLUTION_SPLIT_DATE).cast("date")
+    ).select("o_orderkey", "o_custkey", "o_orderdate")
+    v2 = (
+        orders.filter(
+            F.col("o_orderdate") >= F.lit(_EVOLUTION_SPLIT_DATE).cast("date")
+        )
+        .select("o_orderkey", "o_custkey", "o_orderdate")
+        .withColumn(
+            "loyalty_tier",
+            F.when(F.col("o_custkey") % 10 == 0, "gold").otherwise(
+                "standard"
+            ),
+        )
+    )
+    table = f"{tmp}/orders_evolving"
+    write_snapshot(v1, table)
+    write_snapshot(v2, table)
+    # read both versions together (mergeSchema across snapshots)
+    merged = spark.read.option("mergeSchema", "true").parquet(
+        f"{table}/v1", f"{table}/v2"
+    )
+    out = (
+        merged.select(
+            F.coalesce(F.col("loyalty_tier"), F.lit("(pre-evolution)")).alias(
+                "loyalty_tier"
             )
         )
-        table = f"{tmp}/orders_evolving"
-        write_snapshot(v1, table)
-        write_snapshot(v2, table)
-        # read both versions together (mergeSchema across snapshots)
-        merged = spark.read.option("mergeSchema", "true").parquet(
-            f"{table}/v1", f"{table}/v2"
-        )
-        out = (
-            merged.select(
-                F.coalesce(F.col("loyalty_tier"), F.lit("(pre-evolution)")).alias(
-                    "loyalty_tier"
-                )
-            )
-            .filter(F.coalesce(F.col("loyalty_tier"), F.lit("")) != "standard")
-            .groupBy("loyalty_tier")
-            .agg(F.count("*").alias("order_count"))
-            .orderBy("loyalty_tier")
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
+        .filter(F.coalesce(F.col("loyalty_tier"), F.lit("")) != "standard")
+        .groupBy("loyalty_tier")
+        .agg(F.count("*").alias("order_count"))
+        .orderBy("loyalty_tier")
+    )
+    return _finalize(spark, out)
 
 
 @query(
@@ -124,6 +126,7 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("L1", "L4", "D6"),
 )
+@_scoped
 def time_travel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel (blog :521-527): snapshot v1 = initial CDC snapshot,
     v2 = state after late inserts + deletes; both versions stay readable
@@ -132,33 +135,31 @@ def time_travel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     ev = synthetic_change_events(orders).select("key", "price", "_op", "_seq")
-    with tempfile.TemporaryDirectory(
-        prefix="timetravel_", ignore_cleanup_errors=True
-    ) as tmp:
-        table = f"{tmp}/orders_state"
-        write_snapshot(
-            apply_cdc_upsert(ev.filter(F.col("_seq") <= 0)).select("key", "price"),
-            table,
+    tmp = _scratch_dir("timetravel_")
+    table = f"{tmp}/orders_state"
+    write_snapshot(
+        apply_cdc_upsert(ev.filter(F.col("_seq") <= 0)).select("key", "price"),
+        table,
+    )
+    write_snapshot(
+        apply_cdc_upsert(
+            ev.filter(F.col("_op").isin("c", "d"))
+        ).select("key", "price"),
+        table,
+    )
+    parts = []
+    for v in snapshot_history(spark, table):
+        snap = read_snapshot(spark, table, v)
+        parts.append(
+            snap.agg(
+                F.count("*").alias("live_rows"),
+                dsum("price", "revenue"),
+            ).select(F.lit(v).alias("version"), "live_rows", "revenue")
         )
-        write_snapshot(
-            apply_cdc_upsert(
-                ev.filter(F.col("_op").isin("c", "d"))
-            ).select("key", "price"),
-            table,
-        )
-        parts = []
-        for v in snapshot_history(spark, table):
-            snap = read_snapshot(spark, table, v)
-            parts.append(
-                snap.agg(
-                    F.count("*").alias("live_rows"),
-                    dsum("price", "revenue"),
-                ).select(F.lit(v).alias("version"), "live_rows", "revenue")
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return spark.createDataFrame(out.orderBy("version").collect(), out.schema)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return _finalize(spark, out.orderBy("version"))
 
 
 @query(
@@ -175,6 +176,7 @@ def time_travel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("S3", "S4", "D5", "O5", "A9"),
 )
+@_scoped
 def medallion_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full medallion write/read-back cycle: build_medallion materializes
     silver+gold parquet (sorted within partitions, O5), then the gold
@@ -184,22 +186,20 @@ def medallion_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     .sql:16-38)."""
     from ..functions import davg
 
-    with tempfile.TemporaryDirectory(
-        prefix="medallion_", ignore_cleanup_errors=True
-    ) as tmp:
-        paths = build_medallion(spark, sf_dir, tmp)
-        gold = spark.read.parquet(paths["gold_order_metrics"])
-        out = (
-            gold.groupBy("status")
-            .agg(
-                F.sum("order_count").alias("total_orders"),
-                F.sum("user_count").alias("total_user_slots"),
-                dsum("gross_revenue", "total_revenue"),
-                davg("gross_revenue", "avg_monthly_revenue"),
-            )
-            .orderBy(F.col("total_orders").desc(), "status")
+    tmp = _scratch_dir("medallion_")
+    paths = build_medallion(spark, sf_dir, tmp)
+    gold = spark.read.parquet(paths["gold_order_metrics"])
+    out = (
+        gold.groupBy("status")
+        .agg(
+            F.sum("order_count").alias("total_orders"),
+            F.sum("user_count").alias("total_user_slots"),
+            dsum("gross_revenue", "total_revenue"),
+            davg("gross_revenue", "avg_monthly_revenue"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        .orderBy(F.col("total_orders").desc(), "status")
+    )
+    return _finalize(spark, out)
 
 
 _UPDATE_PRICE_CUTOFF = 400000.0
@@ -218,6 +218,7 @@ _UPDATE_PRICE_CUTOFF = 400000.0
     """,
     tags=("D9", "L1"),
 )
+@_scoped
 def lake_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UPDATE ... WHERE (blog :541-542) on the parquet-native lake:
     read-modify-overwrite as a NEW snapshot (v1 untouched -- the
@@ -226,29 +227,27 @@ def lake_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    with tempfile.TemporaryDirectory(
-        prefix="update_", ignore_cleanup_errors=True
-    ) as tmp:
-        table = f"{tmp}/orders_state"
-        write_snapshot(orders, table)
-        v1 = read_snapshot(spark, table)
-        updated = v1.withColumn(
-            "o_orderstatus",
-            F.when(
-                F.col("o_totalprice") > _UPDATE_PRICE_CUTOFF, F.lit("archived")
-            ).otherwise(F.col("o_orderstatus")),
+    tmp = _scratch_dir("update_")
+    table = f"{tmp}/orders_state"
+    write_snapshot(orders, table)
+    v1 = read_snapshot(spark, table)
+    updated = v1.withColumn(
+        "o_orderstatus",
+        F.when(
+            F.col("o_totalprice") > _UPDATE_PRICE_CUTOFF, F.lit("archived")
+        ).otherwise(F.col("o_orderstatus")),
+    )
+    write_snapshot(updated, table)
+    out = (
+        read_snapshot(spark, table)
+        .groupBy(F.col("o_orderstatus").alias("status"))
+        .agg(
+            F.count("*").alias("order_count"),
+            dsum("o_totalprice", "revenue"),
         )
-        write_snapshot(updated, table)
-        out = (
-            read_snapshot(spark, table)
-            .groupBy(F.col("o_orderstatus").alias("status"))
-            .agg(
-                F.count("*").alias("order_count"),
-                dsum("o_totalprice", "revenue"),
-            )
-            .orderBy("status")
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
+        .orderBy("status")
+    )
+    return _finalize(spark, out)
 
 
 _LAYOUT_ROWS_PER_FILE = 10_000
@@ -267,6 +266,7 @@ _LAYOUT_ORACLE = f"""
 
 
 @query("parquet_layout_roundtrip", oracle=_LAYOUT_ORACLE, tags=("S6", "D12"))
+@_scoped
 def parquet_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Physical parquet layout control (S6/D12, destination.json:29-36 +
     84-87: row-group 128 MiB / page 1 MiB / dictionary on / snappy).
@@ -291,104 +291,102 @@ def parquet_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
-    with tempfile.TemporaryDirectory(
-        prefix="layout_", ignore_cleanup_errors=True
-    ) as tmp:
-        limited_dir = f"{tmp}/row_limited"
-        small_dir, default_dir = f"{tmp}/small_rg", f"{tmp}/default_rg"
-        (
-            li.coalesce(1)
-            .write.option("maxRecordsPerFile", _LAYOUT_ROWS_PER_FILE)
-            .option("compression", "snappy")
-            .parquet(limited_dir)
-        )
-        # 16 KiB row groups: small enough that even the sf0.001 fixture
-        # (6k rows) splits into multiple groups, so the strict
-        # small > default row-group comparison holds at every test SF.
-        (
-            li.coalesce(1)
-            .write.option("parquet.block.size", 16 * 1024)
-            .option("parquet.page.size", 4 * 1024)
-            .option("compression", "snappy")
-            .parquet(small_dir)
-        )
-        li.coalesce(1).write.option("compression", "snappy").parquet(default_dir)
+    tmp = _scratch_dir("layout_")
+    limited_dir = f"{tmp}/row_limited"
+    small_dir, default_dir = f"{tmp}/small_rg", f"{tmp}/default_rg"
+    (
+        li.coalesce(1)
+        .write.option("maxRecordsPerFile", _LAYOUT_ROWS_PER_FILE)
+        .option("compression", "snappy")
+        .parquet(limited_dir)
+    )
+    # 16 KiB row groups: small enough that even the sf0.001 fixture
+    # (6k rows) splits into multiple groups, so the strict
+    # small > default row-group comparison holds at every test SF.
+    (
+        li.coalesce(1)
+        .write.option("parquet.block.size", 16 * 1024)
+        .option("parquet.page.size", 4 * 1024)
+        .option("compression", "snappy")
+        .parquet(small_dir)
+    )
+    li.coalesce(1).write.option("compression", "snappy").parquet(default_dir)
 
-        def _parquet_files(d: str) -> list[str]:
-            return sorted(
-                os.path.join(d, f)
-                for f in os.listdir(d)
-                if f.endswith(".parquet")
+    def _parquet_files(d: str) -> list[str]:
+        return sorted(
+            os.path.join(d, f)
+            for f in os.listdir(d)
+            if f.endswith(".parquet")
+        )
+
+    # --- reader 1: pyarrow footers ---
+    limited_files = _parquet_files(limited_dir)
+    pa_rows = [pq.ParquetFile(p).metadata.num_rows for p in limited_files]
+    first = pq.ParquetFile(limited_files[0])
+    col = first.metadata.row_group(0).column(1)  # l_returnflag
+    pa_comp = str(col.compression).lower()
+    pa_dict = "PLAIN_DICTIONARY" in str(col.encodings) or (
+        "RLE_DICTIONARY" in str(col.encodings)
+    )
+    pa_rg_small = pq.ParquetFile(_parquet_files(small_dir)[0]).metadata
+    pa_rg_default = pq.ParquetFile(_parquet_files(default_dir)[0]).metadata
+
+    # --- reader 2: DuckDB parquet metadata functions ---
+    import duckdb
+
+    con = duckdb.connect()
+    dd_files, dd_total = con.execute(
+        "SELECT COUNT(DISTINCT file_name), SUM(num_rows) "
+        f"FROM parquet_file_metadata('{limited_dir}/*.parquet')"
+    ).fetchone()
+    dd_comp, dd_enc = con.execute(
+        "SELECT LOWER(MIN(compression)), MIN(encodings) "
+        f"FROM parquet_metadata('{limited_dir}/*.parquet') "
+        "WHERE path_in_schema = 'l_returnflag'"
+    ).fetchone()
+    dd_rg_small, dd_rg_default = (
+        con.execute(
+            "SELECT num_row_groups "
+            f"FROM parquet_file_metadata('{d}/*.parquet')"
+        ).fetchone()[0]
+        for d in (small_dir, default_dir)
+    )
+    con.close()
+
+    readers_agree = (
+        dd_files == len(limited_files)
+        and int(dd_total) == sum(pa_rows)
+        and dd_comp == pa_comp
+        and ("RLE_DICTIONARY" in dd_enc or "PLAIN_DICTIONARY" in dd_enc)
+        == pa_dict
+        and dd_rg_small == pa_rg_small.num_row_groups
+        and dd_rg_default == pa_rg_default.num_row_groups
+    )
+    if not readers_agree:
+        raise RuntimeError(
+            "pyarrow and DuckDB disagree on parquet layout metadata: "
+            f"files {len(limited_files)} vs {dd_files}, "
+            f"rows {sum(pa_rows)} vs {dd_total}, codec {pa_comp} vs "
+            f"{dd_comp}, row groups ({pa_rg_small.num_row_groups}, "
+            f"{pa_rg_default.num_row_groups}) vs ({dd_rg_small}, "
+            f"{dd_rg_default})"
+        )
+    return spark.createDataFrame(
+        [
+            (
+                len(limited_files),
+                max(pa_rows),
+                sum(pa_rows),
+                pa_comp,
+                pa_dict,
+                pa_rg_small.num_row_groups > pa_rg_default.num_row_groups,
+                readers_agree,
             )
-
-        # --- reader 1: pyarrow footers ---
-        limited_files = _parquet_files(limited_dir)
-        pa_rows = [pq.ParquetFile(p).metadata.num_rows for p in limited_files]
-        first = pq.ParquetFile(limited_files[0])
-        col = first.metadata.row_group(0).column(1)  # l_returnflag
-        pa_comp = str(col.compression).lower()
-        pa_dict = "PLAIN_DICTIONARY" in str(col.encodings) or (
-            "RLE_DICTIONARY" in str(col.encodings)
-        )
-        pa_rg_small = pq.ParquetFile(_parquet_files(small_dir)[0]).metadata
-        pa_rg_default = pq.ParquetFile(_parquet_files(default_dir)[0]).metadata
-
-        # --- reader 2: DuckDB parquet metadata functions ---
-        import duckdb
-
-        con = duckdb.connect()
-        dd_files, dd_total = con.execute(
-            "SELECT COUNT(DISTINCT file_name), SUM(num_rows) "
-            f"FROM parquet_file_metadata('{limited_dir}/*.parquet')"
-        ).fetchone()
-        dd_comp, dd_enc = con.execute(
-            "SELECT LOWER(MIN(compression)), MIN(encodings) "
-            f"FROM parquet_metadata('{limited_dir}/*.parquet') "
-            "WHERE path_in_schema = 'l_returnflag'"
-        ).fetchone()
-        dd_rg_small, dd_rg_default = (
-            con.execute(
-                "SELECT num_row_groups "
-                f"FROM parquet_file_metadata('{d}/*.parquet')"
-            ).fetchone()[0]
-            for d in (small_dir, default_dir)
-        )
-        con.close()
-
-        readers_agree = (
-            dd_files == len(limited_files)
-            and int(dd_total) == sum(pa_rows)
-            and dd_comp == pa_comp
-            and ("RLE_DICTIONARY" in dd_enc or "PLAIN_DICTIONARY" in dd_enc)
-            == pa_dict
-            and dd_rg_small == pa_rg_small.num_row_groups
-            and dd_rg_default == pa_rg_default.num_row_groups
-        )
-        if not readers_agree:
-            raise RuntimeError(
-                "pyarrow and DuckDB disagree on parquet layout metadata: "
-                f"files {len(limited_files)} vs {dd_files}, "
-                f"rows {sum(pa_rows)} vs {dd_total}, codec {pa_comp} vs "
-                f"{dd_comp}, row groups ({pa_rg_small.num_row_groups}, "
-                f"{pa_rg_default.num_row_groups}) vs ({dd_rg_small}, "
-                f"{dd_rg_default})"
-            )
-        return spark.createDataFrame(
-            [
-                (
-                    len(limited_files),
-                    max(pa_rows),
-                    sum(pa_rows),
-                    pa_comp,
-                    pa_dict,
-                    pa_rg_small.num_row_groups > pa_rg_default.num_row_groups,
-                    readers_agree,
-                )
-            ],
-            "n_files int, max_rows_per_file long, total_rows long, "
-            "compression string, dictionary_encoded boolean, "
-            "row_groups_exceed_default boolean, metadata_readers_agree boolean",
-        )
+        ],
+        "n_files int, max_rows_per_file long, total_rows long, "
+        "compression string, dictionary_encoded boolean, "
+        "row_groups_exceed_default boolean, metadata_readers_agree boolean",
+    )
 
 
 # The engine's session-settings contract (D13): the reference pins
@@ -456,27 +454,26 @@ _COMPACT_ORACLE = """
 
 
 @query("lake_compaction_stats", oracle=_COMPACT_ORACLE, tags=("D11", "S6"))
+@_scoped
 def lake_compaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction (rewrite_data_files equivalent,
     destination.json:261-264): write orders as 16 small files, compact to
     2, assert row counts survive. Returns the before/after accounting."""
     orders = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(
-        prefix="compact_", ignore_cleanup_errors=True
-    ) as tmp:
-        data_dir = f"{tmp}/orders_small_files"
-        orders.repartition(16).write.parquet(data_dir)
-        rows_before = spark.read.parquet(data_dir).count()
-        files_before, files_after = compact(spark, data_dir, 2)
-        rows_after = spark.read.parquet(data_dir).count()
-        return spark.createDataFrame(
-            [
-                (files_before, files_after, rows_before, rows_after,
-                 rows_before == rows_after)
-            ],
-            "files_before int, files_after int, rows_before long, "
-            "rows_after long, rows_preserved boolean",
-        )
+    tmp = _scratch_dir("compact_")
+    data_dir = f"{tmp}/orders_small_files"
+    orders.repartition(16).write.parquet(data_dir)
+    rows_before = spark.read.parquet(data_dir).count()
+    files_before, files_after = compact(spark, data_dir, 2)
+    rows_after = spark.read.parquet(data_dir).count()
+    return spark.createDataFrame(
+        [
+            (files_before, files_after, rows_before, rows_after,
+             rows_before == rows_after)
+        ],
+        "files_before int, files_after int, rows_before long, "
+        "rows_after long, rows_preserved boolean",
+    )
 
 
 @query(
@@ -547,28 +544,27 @@ _SEED_ROWS = [
     """,
     tags=("D4", "D5", "S7"),
 )
+@_scoped
 def seed_literal_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INSERT INTO ... VALUES literal seed (D4, mysql-init/01-setup.sql:
     74-132 idiom): createDataFrame from literal rows, write to the lake,
     read BACK from disk, aggregate -- the write path carries the values."""
-    with tempfile.TemporaryDirectory(
-        prefix="seed_", ignore_cleanup_errors=True
-    ) as tmp:
-        df = spark.createDataFrame(
-            _SEED_ROWS, "id int, name string, category string, price double"
+    tmp = _scratch_dir("seed_")
+    df = spark.createDataFrame(
+        _SEED_ROWS, "id int, name string, category string, price double"
+    )
+    table = f"{tmp}/seed_products"
+    write_snapshot(df, table)
+    out = (
+        read_snapshot(spark, table)
+        .groupBy("category")
+        .agg(
+            F.count("*").alias("items"),
+            dsum("price", "total_price"),
         )
-        table = f"{tmp}/seed_products"
-        write_snapshot(df, table)
-        out = (
-            read_snapshot(spark, table)
-            .groupBy("category")
-            .agg(
-                F.count("*").alias("items"),
-                dsum("price", "total_price"),
-            )
-            .orderBy("category")
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
+        .orderBy("category")
+    )
+    return _finalize(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -588,6 +584,7 @@ def seed_literal_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("L2", "S1", "O5"),
 )
+@_scoped
 def partition_pruning_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition transforms (destination.json:37-65: month(order_date) x
     identity(status)) on the parquet lake: write orders partitioned by
@@ -596,31 +593,29 @@ def partition_pruning_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted in tests/test_plans.py) so at 100 TB the query touches
     1/(years x statuses) of the files."""
     orders = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(
-        prefix="partitioned_", ignore_cleanup_errors=True
-    ) as tmp:
-        part_dir = f"{tmp}/orders_partitioned"
-        (
-            orders.withColumn(
-                "order_year", F.year("o_orderdate").cast("int")
-            )
-            .write.partitionBy("order_year", "o_orderstatus")
-            .parquet(part_dir)
+    tmp = _scratch_dir("partitioned_")
+    part_dir = f"{tmp}/orders_partitioned"
+    (
+        orders.withColumn(
+            "order_year", F.year("o_orderdate").cast("int")
         )
-        back = spark.read.parquet(part_dir)
-        out = (
-            back.filter(
-                (F.col("order_year") == 1995) & (F.col("o_orderstatus") == "O")
-            )
-            .groupBy(
-                "order_year", F.col("o_orderstatus").alias("status")
-            )
-            .agg(
-                F.count("*").alias("order_count"),
-                dsum("o_totalprice", "revenue"),
-            )
+        .write.partitionBy("order_year", "o_orderstatus")
+        .parquet(part_dir)
+    )
+    back = spark.read.parquet(part_dir)
+    out = (
+        back.filter(
+            (F.col("order_year") == 1995) & (F.col("o_orderstatus") == "O")
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        .groupBy(
+            "order_year", F.col("o_orderstatus").alias("status")
+        )
+        .agg(
+            F.count("*").alias("order_count"),
+            dsum("o_totalprice", "revenue"),
+        )
+    )
+    return _finalize(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -641,6 +636,7 @@ _BUCKET_KEY = 1  # o_custkey present at every SF
     """,
     tags=("D10", "P9", "O5"),
 )
+@_scoped
 def bucket_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D10 secondary index, Spark-native: persist orders BUCKETED (+
     sorted) by o_custkey -- a precomputed hash index over the key -- then
@@ -675,7 +671,7 @@ def bucket_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_spent",
             )
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return _finalize(spark, out)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
@@ -741,6 +737,7 @@ _Z_DUCK = _z_terms(
     """,
     tags=("O5", "D12"),
 )
+@_scoped
 def zorder_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write orders Z-ORDERED on (custkey, orderdate), read the files
     back, and report the per-z-bucket profile FROM THE READBACK -- a
@@ -776,26 +773,24 @@ def zorder_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = keyed.select(
         F.expr(_Z_SPARK).cast("long").alias("z"), "o_totalprice"
     )
-    with tempfile.TemporaryDirectory(
-        prefix="zorder_", ignore_cleanup_errors=True
-    ) as tmp:
-        (
-            z.repartitionByRange(_Z_FILES, "z")
-            .sortWithinPartitions("z")
-            .write.parquet(f"{tmp}/orders_z")
+    tmp = _scratch_dir("zorder_")
+    (
+        z.repartitionByRange(_Z_FILES, "z")
+        .sortWithinPartitions("z")
+        .write.parquet(f"{tmp}/orders_z")
+    )
+    back = spark.read.parquet(f"{tmp}/orders_z")
+    out = (
+        back.groupBy(
+            F.shiftright(F.col("z"), _Z_BUCKET_SHIFT).alias("zbucket")
         )
-        back = spark.read.parquet(f"{tmp}/orders_z")
-        out = (
-            back.groupBy(
-                F.shiftright(F.col("z"), _Z_BUCKET_SHIFT).alias("zbucket")
-            )
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.sum("z").cast("long").alias("z_sum"),
-                F.min("z").alias("z_min"),
-                F.max("z").alias("z_max"),
-                dsum(F.col("o_totalprice"), "revenue"),
-            )
-            .orderBy("zbucket")
+        .agg(
+            F.count("*").alias("n_rows"),
+            F.sum("z").cast("long").alias("z_sum"),
+            F.min("z").alias("z_min"),
+            F.max("z").alias("z_max"),
+            dsum(F.col("o_totalprice"), "revenue"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        .orderBy("zbucket")
+    )
+    return _finalize(spark, out)

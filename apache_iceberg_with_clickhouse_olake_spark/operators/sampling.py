@@ -26,6 +26,8 @@ from ..functions import (
     tokens_sql,
 )
 from ..sources.parquet import load_table, load_table_wide
+from ._cache import finalize as _finalize
+from ._cache import persist_tracked as _persist
 from ._cache import scoped as _scoped
 from .registry import query
 
@@ -575,9 +577,7 @@ def _dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram_logprob_quality's determinism note) and each per-occurrence
     term is decimal-snapped by dsum, so the summed weight is
     partition-order-independent."""
-    from ._cache import persist_tracked
-
-    bucketed = persist_tracked(_dsir_bucketed(spark, sf_dir))
+    bucketed = _persist(_dsir_bucketed(spark, sf_dir))
     btab = bucketed.groupBy("b").agg(
         F.count("*").alias("r_cnt"),
         F.count(
@@ -657,14 +657,12 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     document's hashed n-gram bag is). Fully tie-broken top-k
     (TakeOrderedAndProject -- never a global sort); the weight itself is
     hash-exact cross-engine, so even the float ordering agrees."""
-    from ._cache import finalize
-
     out = (
         _dsir_weights(spark, sf_dir)
         .orderBy(F.col("weight").desc_nulls_last(), "doc_id")
         .limit(_DSIR_TOP)
     )
-    return finalize(spark, out)
+    return _finalize(spark, out)
 
 
 _DSIR_GUMBEL_SQL = (
@@ -709,8 +707,6 @@ def dsir_resample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup joins a per-language total computed straight from the
     documents table (honest denominators: docs with zero features can
     never be selected but still count)."""
-    from ._cache import finalize
-
     w = _dsir_weights(spark, sf_dir)
     u = (
         md5_int60(
@@ -740,7 +736,7 @@ def dsir_resample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang")
     )
-    return finalize(spark, out)
+    return _finalize(spark, out)
 
 
 # ---------------------------------------------------------------------------

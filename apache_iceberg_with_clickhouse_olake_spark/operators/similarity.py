@@ -2734,7 +2734,32 @@ def pq_adc_topk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension-by-dimension left-to-right and snap to 6 decimals on
     both engines; argmin ties resolve by code id, ranking ties by
     vec_id (the pq_codebook_stats discipline end-to-end)."""
-    return _finalize(spark, _pq_adc_recall_frame(spark, sf_dir))
+    # Three shared frames are persisted once instead of re-derived per
+    # head of the 4+ corpus passes (codebook/query setup, the encode scan
+    # under BOTH top-k heads, the true-distance scan under BOTH the
+    # exact-truth and re-rank branches): the repartitioned (vec_id, v)
+    # corpus (one parquet decode + one exchange serves every pass at full
+    # parallelism -- a single-file fixture would otherwise serialize each
+    # pass onto one task), the (vec_id, adc_dist) encode output (the
+    # literal-unrolled ADC expression runs ONCE, not once per head), and
+    # _pq_recall's (vec_id, true_dist) truth frame. Answers are
+    # bit-identical: every head orders the same snapped columns with the
+    # same tie-breaks, and dround/zip_with folds are
+    # partitioning-independent.
+    par = spark.sparkContext.defaultParallelism
+    e = _persist(
+        load_table(spark, sf_dir, "embeddings")
+        .repartition(par, "vec_id")
+        .select("vec_id", _dvec(F.col("embedding")).alias("v"))
+    )
+    codebook, qid, qv = _pq_codebook_and_query(e)
+
+    scored = _persist(
+        _pq_adc_scored(e.filter(F.col("vec_id") != F.lit(qid)), codebook, qv)
+    )
+    qf = spark.createDataFrame([(qid, qv)], "qid long, qv array<double>")
+    out = _pq_recall(scored, e, qf, qid)
+    return _finalize(spark, out)
 
 
 def _pq_codebook(e: DataFrame) -> list[list[float]]:
@@ -2825,39 +2850,6 @@ def _pq_adc_scored(
             ).alias("adc_dist"),
         )
     )
-
-
-def _pq_adc_recall_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy ADC-recall frame (plan tests pin the joinless encode scan
-    and bounded-broadcast stitches BEFORE the materialization idiom
-    collapses them; the codebook/query collects are bounded setup).
-
-    r18 stage audit (r17 VERDICT item 4): the op makes 4+ corpus
-    passes (codebook/query setup, the encode scan under BOTH top-k
-    heads, the true-distance scan under BOTH the exact-truth and
-    re-rank branches). Three shared frames are persisted once instead
-    of re-derived per head: the repartitioned (vec_id, v) corpus (one
-    parquet decode + one exchange serves every pass at full
-    parallelism -- a single-file fixture would otherwise serialize
-    each pass onto one task), the (vec_id, adc_dist) encode output
-    (the literal-unrolled ADC expression runs ONCE, not once per
-    head), and _pq_recall's (vec_id, true_dist) truth frame.
-    Answers are bit-identical: every head orders the same snapped
-    columns with the same tie-breaks, and dround/zip_with folds are
-    partitioning-independent."""
-    par = spark.sparkContext.defaultParallelism
-    e = _persist(
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(par, "vec_id")
-        .select("vec_id", _dvec(F.col("embedding")).alias("v"))
-    )
-    codebook, qid, qv = _pq_codebook_and_query(e)
-
-    scored = _persist(
-        _pq_adc_scored(e.filter(F.col("vec_id") != F.lit(qid)), codebook, qv)
-    )
-    qf = spark.createDataFrame([(qid, qv)], "qid long, qv array<double>")
-    return _pq_recall(scored, e, qf, qid)
 
 
 def _pq_recall(
@@ -2968,19 +2960,11 @@ def ann_ivfpq_topk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's full-scan cosine (BLOG_POST_COMPLETE_WALKTHROUGH.md's
     analytics surface has no ANN index); this op is the Spark-first
     scale path for that same query class."""
-    return _finalize(spark, _ivfpq_recall_frame(spark, sf_dir))
-
-
-def _ivfpq_recall_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy IVF-PQ recall frame (plan tests pin the broadcast probe
-    filter and the joinless ADC scan before _finalize collapses them).
-
-    r18 stage audit (r17 VERDICT item 4): the repartitioned corpus
-    serves the setup collects, the centroid build, the probed-lists
-    scan AND _pq_recall's truth scan from one parquet decode; the
-    probed-lists ADC encode is persisted once for its THREE heads (adc
-    top-k and re-rank candidates in _pq_recall, the `scanned`
-    count)."""
+    # The repartitioned corpus serves the setup collects, the centroid
+    # build, the probed-lists scan AND _pq_recall's truth scan from one
+    # parquet decode; the probed-lists ADC encode is persisted once for its
+    # THREE heads (adc top-k and re-rank candidates in _pq_recall, the
+    # `scanned` count).
     par = spark.sparkContext.defaultParallelism
     e = _persist(
         load_table(spark, sf_dir, "embeddings")
@@ -3011,7 +2995,8 @@ def _ivfpq_recall_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = _persist(_pq_adc_scored(lists, codebook, qv))
     scanned = scored.groupBy().agg(F.count("*").alias("scanned"))
-    return _pq_recall(scored, ev, qf, qid).join(F.broadcast(scanned))
+    out = _pq_recall(scored, ev, qf, qid).join(F.broadcast(scanned))
+    return _finalize(spark, out)
 
 
 ann_ivfpq_topk_recall.__doc__ = ann_ivfpq_topk_recall.__doc__.format(

@@ -24,7 +24,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +31,10 @@ from pyspark.sql import functions as F
 from ..functions import dsum, dsum_sql
 from ..sources.parquet import load_table
 from ..streaming import run_cdc_upsert_stream
+from ._cache import cache_scope
+from ._cache import finalize as _finalize
+from ._cache import scoped as _scoped
+from ._cache import scratch_dir as _scratch_dir
 from .cdc import _EVENTS_WITH_TS_SQL, synthetic_change_events
 from .registry import query
 
@@ -91,14 +94,11 @@ def _stage_seq_files(
 
 
 def _state_rollup(spark: SparkSession, state_dir: str) -> DataFrame:
-    state = spark.read.parquet(state_dir)
-    out = state.agg(
+    return spark.read.parquet(state_dir).agg(
         F.count("*").alias("live_rows"),
         F.countDistinct("custkey").alias("live_customers"),
         dsum("price", "live_revenue"),
     )
-    # Snapshot before the temp lake dir is deleted (bounded: 1 row).
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 @query(
@@ -106,21 +106,20 @@ def _state_rollup(spark: SparkSession, state_dir: str) -> DataFrame:
     oracle=_STATE_ROLLUP_SQL,
     tags=("C2", "C3"),
 )
+@_scoped
 def streaming_chunked_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2/C3: drain the change stream one file per micro-batch
     (maxFilesPerTrigger=1 => 4 micro-batches) through the checkpointed
     foreachBatch upsert; the final state rollup must equal the batch
     merge-on-read apply (oracle)."""
-    with tempfile.TemporaryDirectory(
-        prefix="spark_graft_c2_", ignore_cleanup_errors=True
-    ) as tmp:
-        events_dir = os.path.join(tmp, "events")
-        _stage_seq_files(spark, sf_dir, events_dir, [0, 1, 2, 3])
-        state_dir = os.path.join(tmp, "state")
-        run_cdc_upsert_stream(
-            spark, events_dir, state_dir, os.path.join(tmp, "ckpt")
-        )
-        return _state_rollup(spark, state_dir)
+    tmp = _scratch_dir("spark_graft_c2_")
+    events_dir = os.path.join(tmp, "events")
+    _stage_seq_files(spark, sf_dir, events_dir, [0, 1, 2, 3])
+    state_dir = os.path.join(tmp, "state")
+    run_cdc_upsert_stream(
+        spark, events_dir, state_dir, os.path.join(tmp, "ckpt")
+    )
+    return _finalize(spark, _state_rollup(spark, state_dir))
 
 
 @query(
@@ -128,27 +127,26 @@ def streaming_chunked_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_STATE_ROLLUP_SQL,
     tags=("C6", "C2"),
 )
+@_scoped
 def streaming_restart_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C6 restart/exactly-once: drain the first half of the backlog, stop
     (simulated crash between syncs), stage the rest, restart against the
     SAME checkpoint (only unread files replay), then restart once more
     with nothing new (must be a no-op). Final state rollup must equal the
     one-shot batch apply (oracle)."""
-    with tempfile.TemporaryDirectory(
-        prefix="spark_graft_c6_", ignore_cleanup_errors=True
-    ) as tmp:
-        events_dir = os.path.join(tmp, "events")
-        state_dir = os.path.join(tmp, "state")
-        ckpt = os.path.join(tmp, "ckpt")
-        # Run 1: snapshot + first updates, then "crash".
-        _stage_seq_files(spark, sf_dir, events_dir, [0, 1])
-        run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt)
-        # Run 2 (restart): backlog grew; checkpoint skips seq 0-1.
-        _stage_seq_files(spark, sf_dir, events_dir, [2, 3])
-        run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt)
-        # Run 3 (restart, no new data): exactly-once => state unchanged.
-        run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt)
-        return _state_rollup(spark, state_dir)
+    tmp = _scratch_dir("spark_graft_c6_")
+    events_dir = os.path.join(tmp, "events")
+    state_dir = os.path.join(tmp, "state")
+    ckpt = os.path.join(tmp, "ckpt")
+    # Run 1: snapshot + first updates, then "crash".
+    _stage_seq_files(spark, sf_dir, events_dir, [0, 1])
+    run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt)
+    # Run 2 (restart): backlog grew; checkpoint skips seq 0-1.
+    _stage_seq_files(spark, sf_dir, events_dir, [2, 3])
+    run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt)
+    # Run 3 (restart, no new data): exactly-once => state unchanged.
+    run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt)
+    return _finalize(spark, _state_rollup(spark, state_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -176,6 +174,7 @@ _VEC_ASSIGN_ORACLE = f"""
     oracle=_VEC_ASSIGN_ORACLE,
     tags=("C2", "C3", "llm-similarity", "llm-clustering"),
 )
+@_scoped
 def streaming_vector_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-serve the k-means index: train centroids batch-side
     (operators/clustering), publish them as a parquet index artifact,
@@ -190,47 +189,44 @@ def streaming_vector_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import _kmeans_state_frames
     from ..operators.similarity import _dvec
     from ..streaming import run_vector_assign_stream
-    from ._cache import cache_scope
 
     emb = load_table(spark, sf_dir, "embeddings")
-    with tempfile.TemporaryDirectory(
-        prefix="stream_vec_assign_", ignore_cleanup_errors=True
-    ) as work:
-        vec_dir = os.path.join(work, "vectors")
-        index_dir = os.path.join(work, "index")
-        out_dir = os.path.join(work, "assigned")
+    work = _scratch_dir("stream_vec_assign_")
+    vec_dir = os.path.join(work, "vectors")
+    index_dir = os.path.join(work, "index")
+    out_dir = os.path.join(work, "assigned")
 
-        # train the index on the batch table and publish the artifact;
-        # the cache_scope drops the Lloyd training caches (persisted
-        # vector frame) as soon as the artifact is on disk -- the serving
-        # stream no longer needs them, and an exception mid-train cannot
-        # leak them
-        with cache_scope():
-            _, cent = _kmeans_state_frames(
-                emb.select("vec_id", _dvec(F.col("embedding")).alias("dv"))
-            )
-            cent.write.mode("overwrite").parquet(index_dir)
+    # train the index on the batch table and publish the artifact;
+    # the cache_scope drops the Lloyd training caches (persisted
+    # vector frame) as soon as the artifact is on disk -- the serving
+    # stream no longer needs them, and an exception mid-train cannot
+    # leak them
+    with cache_scope():
+        _, cent = _kmeans_state_frames(
+            emb.select("vec_id", _dvec(F.col("embedding")).alias("dv"))
+        )
+        cent.write.mode("overwrite").parquet(index_dir)
 
-        # stage the "arriving" vectors as ordered chunk files (an empty
-        # residue class stages no file)
-        _stage_chunks(
-            emb.select("vec_id", "embedding"),
-            F.col("vec_id") % _N_VEC_CHUNKS,
-            vec_dir,
+    # stage the "arriving" vectors as ordered chunk files (an empty
+    # residue class stages no file)
+    _stage_chunks(
+        emb.select("vec_id", "embedding"),
+        F.col("vec_id") % _N_VEC_CHUNKS,
+        vec_dir,
+    )
+    run_vector_assign_stream(
+        spark, vec_dir, index_dir, out_dir, os.path.join(work, "ckpt")
+    )
+    out = (
+        spark.read.parquet(out_dir)
+        .groupBy("cluster")
+        .agg(
+            F.count("*").alias("n_vectors"),
+            F.min("vec_id").alias("min_vec_id"),
         )
-        run_vector_assign_stream(
-            spark, vec_dir, index_dir, out_dir, os.path.join(work, "ckpt")
-        )
-        out = (
-            spark.read.parquet(out_dir)
-            .groupBy("cluster")
-            .agg(
-                F.count("*").alias("n_vectors"),
-                F.min("vec_id").alias("min_vec_id"),
-            )
-            .orderBy("cluster")
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
+        .orderBy("cluster")
+    )
+    return _finalize(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -303,6 +299,7 @@ _WM_MID_DAYS = _WM_HOLD_DAYS + _WM_DELAY_DAYS + 2
     """,
     tags=("C3", "C2", "A8"),
 )
+@_scoped
 def events_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL watermarked append-mode streaming aggregation (not a batch
     twin): the event stream is staged as two on-time chunks plus a
@@ -361,21 +358,19 @@ def events_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(es < F.lit(t_mid), F.lit(0))
         .otherwise(F.lit(1))
     )
-    with tempfile.TemporaryDirectory(
-        prefix="stream_wm_", ignore_cleanup_errors=True
-    ) as work:
-        events_dir = os.path.join(work, "events")
-        out_dir = os.path.join(work, "out")
-        _stage_chunks(events, chunk, events_dir)
-        run_watermark_window_stream(
-            spark, events_dir, out_dir, os.path.join(work, "ckpt")
-        )
-        out = (
-            spark.read.parquet(out_dir)
-            .select("window_start_epoch", "n_events", "window_value")
-            .orderBy("window_start_epoch")
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
+    work = _scratch_dir("stream_wm_")
+    events_dir = os.path.join(work, "events")
+    out_dir = os.path.join(work, "out")
+    _stage_chunks(events, chunk, events_dir)
+    run_watermark_window_stream(
+        spark, events_dir, out_dir, os.path.join(work, "ckpt")
+    )
+    out = (
+        spark.read.parquet(out_dir)
+        .select("window_start_epoch", "n_events", "window_value")
+        .orderBy("window_start_epoch")
+    )
+    return _finalize(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -398,6 +393,7 @@ def events_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("C2", "C6", "A2"),
 )
+@_scoped
 def streaming_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL stateful streaming dedup: the event stream arrives as one
     delivered chunk plus a REPLAY of that chunk's rows in a LATER
@@ -434,28 +430,26 @@ def streaming_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    with tempfile.TemporaryDirectory(
-        prefix="stream_dedup_", ignore_cleanup_errors=True
-    ) as work:
-        events_dir = os.path.join(work, "events")
-        out_dir = os.path.join(work, "out")
-        # chunk 0 is the delivered file; chunk 1, the at-least-once
-        # replay, holds the same rows again and arrives in the next
-        # micro-batch
-        _stage_chunks(
-            events, F.explode(F.array(F.lit(0), F.lit(1))), events_dir
+    work = _scratch_dir("stream_dedup_")
+    events_dir = os.path.join(work, "events")
+    out_dir = os.path.join(work, "out")
+    # chunk 0 is the delivered file; chunk 1, the at-least-once
+    # replay, holds the same rows again and arrives in the next
+    # micro-batch
+    _stage_chunks(
+        events, F.explode(F.array(F.lit(0), F.lit(1))), events_dir
+    )
+    run_stream_dedup(
+        spark, events_dir, out_dir, os.path.join(work, "ckpt")
+    )
+    out = (
+        spark.read.parquet(out_dir)
+        .groupBy("event_type")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.countDistinct("user_id").alias("n_users"),
+            dsum(F.col("value"), "total_value"),
         )
-        run_stream_dedup(
-            spark, events_dir, out_dir, os.path.join(work, "ckpt")
-        )
-        out = (
-            spark.read.parquet(out_dir)
-            .groupBy("event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.countDistinct("user_id").alias("n_users"),
-                dsum(F.col("value"), "total_value"),
-            )
-            .orderBy("event_type")
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
+        .orderBy("event_type")
+    )
+    return _finalize(spark, out)

@@ -197,7 +197,6 @@ def _learn_sql() -> str:
     """,
     tags=("llm-text", "llm-tokenizer"),
 )
-@_scoped
 def bpe_pair_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top adjacent symbol pairs of the initial (character-level) BPE
     state, weighted by word frequency -- the single-shot primitive the
@@ -228,14 +227,8 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     in SQL, so even this iterative training loop is hash-exact. The
     per-iteration type table is a superstep (vocabulary-sized) so the
     chained lineage doesn't recompute the whole history each round."""
-    return _finalize(spark, _learn_merges_frame(spark, sf_dir))
-
-
-def _learn_merges_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy merge-table frame (plan tests pin its physical shape BEFORE
-    the materialization idiom collapses it to local rows)."""
     symbols = _word_symbols(spark, sf_dir)
-    out = []
+    merges = []
     for rank in range(1, _N_MERGES + 1):
         symbols = _superstep(symbols)
         top = (
@@ -243,7 +236,7 @@ def _learn_merges_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.col("cnt").desc(), "a", "b")
             .limit(1)
         )
-        out.append(
+        merges.append(
             top.select(
                 F.lit(rank).alias("merge_rank"),
                 F.col("a").alias("sym_a"),
@@ -258,7 +251,8 @@ def _learn_merges_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .withColumn("s", F.expr(_APPLY_MERGE))
                 .select("word", "freq", "s")
             )
-    return reduce(DataFrame.unionAll, out).orderBy("merge_rank")
+    out = reduce(DataFrame.unionAll, merges).orderBy("merge_rank")
+    return _finalize(spark, out)
 
 
 # ---------------------------------------------------------------------------

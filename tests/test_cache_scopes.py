@@ -1,9 +1,12 @@
-"""Lifecycle semantics of the scoped block registry (r9 ADVICE: an
-operator that raises mid-build must not pin frames for later queries,
-and nested composition must never release a caller's live caches), for
-both tracked primitives: persisted frames and supersteps."""
+"""Lifecycle semantics of the scoped resource registry: an operator
+that raises mid-build must not pin resources for later queries, and
+nested composition must never release a caller's live resources. Each
+tracked kind is covered: persisted frames, supersteps and scratch
+directories."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -13,6 +16,7 @@ from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
     persist_tracked,
     release_caches,
     scoped,
+    scratch_dir,
     superstep,
 )
 
@@ -33,9 +37,12 @@ def test_exception_in_scope_releases_its_caches(spark):
     with pytest.raises(RuntimeError):
         with cache_scope():
             persist_tracked(df)
+            tmp = scratch_dir("scope_raise_")
             assert _is_cached(df)
+            assert os.path.isdir(tmp)
             raise RuntimeError("mid-build failure")
     assert not _is_cached(df)
+    assert not os.path.exists(tmp)
 
 
 def test_nested_scope_cannot_release_outer_caches(spark):
@@ -43,15 +50,21 @@ def test_nested_scope_cannot_release_outer_caches(spark):
     inner = spark.range(7)
     with cache_scope():
         persist_tracked(outer)
+        outer_dir = scratch_dir("scope_outer_")
         with cache_scope():
             persist_tracked(inner)
+            inner_dir = scratch_dir("scope_inner_")
             # the inner op's mid-op release (the streaming trainer
             # idiom) must drain only ITS scope
             release_caches()
             assert not _is_cached(inner)
+            assert not os.path.exists(inner_dir)
             assert _is_cached(outer)
+            assert os.path.isdir(outer_dir)
         assert _is_cached(outer)
+        assert os.path.isdir(outer_dir)
     assert not _is_cached(outer)
+    assert not os.path.exists(outer_dir)
 
 
 def test_finalize_releases_current_scope_even_on_failed_collect(spark):
@@ -75,13 +88,17 @@ def test_scoped_decorator_wraps_a_query_fn(spark):
     def op(spark, sf_dir):
         df = spark.range(3)
         captured["df"] = persist_tracked(df)
-        return finalize(spark, df)
+        captured["dir"] = tmp = scratch_dir("scope_op_")
+        df.write.parquet(f"{tmp}/t")
+        return finalize(spark, spark.read.parquet(f"{tmp}/t"))
 
     out = op(spark, "unused")
     assert out.count() == 3
     assert not _is_cached(captured["df"])
-    # the finalized frame is rebuilt from local rows: still valid here
-    assert out.count() == 3
+    assert not os.path.exists(captured["dir"])
+    # the finalized frame is rebuilt from local rows: still valid here,
+    # after the directory it was read from is gone
+    assert sorted(r.id for r in out.collect()) == [0, 1, 2]
 
 
 @pytest.mark.parametrize("eager", [False, True])

@@ -231,7 +231,7 @@ def test_power_iteration_rayleigh_is_monotone_and_unit_norm(spark, sf_dir):
         _pi_frame,
     )
     from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
+        cache_scope,
     )
 
     X = np.array(
@@ -247,15 +247,15 @@ def test_power_iteration_rayleigh_is_monotone_and_unit_norm(spark, sf_dir):
     G = X.T @ X
     rayleighs = []
     for iters in (1, 2, 3):
-        v = np.array(
-            [
-                r["component"]
-                for r in _pi_frame(spark, sf_dir, iters=iters)
-                .orderBy("dim")
-                .collect()
-            ]
-        )
-        release_caches()
+        with cache_scope():
+            v = np.array(
+                [
+                    r["component"]
+                    for r in _pi_frame(spark, sf_dir, iters=iters)
+                    .orderBy("dim")
+                    .collect()
+                ]
+            )
         assert abs(np.linalg.norm(v) - 1.0) < 1e-2  # 4-dp snapped iterate
         rayleighs.append(float(v @ G @ v))
     assert rayleighs == sorted(rayleighs), rayleighs

@@ -4,12 +4,18 @@ tables, no needless global sorts) plus declared-schema pinning."""
 
 from __future__ import annotations
 
+import inspect
 import sys
+from contextlib import contextmanager
+from unittest import mock
 
 import pytest
 
 from apache_iceberg_with_clickhouse_olake_spark import schemas
 from apache_iceberg_with_clickhouse_olake_spark.operators import registry
+from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
+    cache_scope,
+)
 from apache_iceberg_with_clickhouse_olake_spark.plans import (
     analyzed_plan,
     assert_no_global_sort,
@@ -30,16 +36,21 @@ registry._load_all()
 _Q = {name: spec.fn for name, spec in registry.REGISTRY.items()}
 
 
-def _lazy(monkeypatch, name):
-    """The registered query ``name`` with ``_finalize`` patched to the
-    identity in its module: a superstep op collects through
-    ``_finalize``, so its real return is a frame rebuilt from rows and
-    only this lazy twin shows the plan the op executes."""
+@contextmanager
+def _lazy(name, spark, sf_dir):
+    """Yield the lazy frame the registered query ``name`` would collect.
+
+    An op that finalizes returns a frame rebuilt from local rows, whose
+    plan is a LocalTableScan; this runs the op's body (without
+    ``@_scoped``) inside a ``cache_scope`` with its module's
+    ``_finalize`` patched to the identity, and yields the frame while
+    the scope's persisted blocks and checkpoints are still live, so the
+    plan read is the one the op executes."""
     fn = _Q[name]
-    monkeypatch.setattr(
+    with mock.patch.object(
         sys.modules[fn.__module__], "_finalize", lambda spark, out: out
-    )
-    return fn
+    ), cache_scope():
+        yield inspect.unwrap(fn)(spark, sf_dir)
 
 
 def test_broadcast_dims_exclude_scaling_tables():
@@ -307,7 +318,7 @@ def test_embedding_neardup_join_keyed_on_lsh_band(spark, sf_dir):
 
 
 def test_dedup_cascade_pair_join_sees_representatives_only(
-    spark, sf_dir, monkeypatch
+    spark, sf_dir
 ):
     # the cascade's whole point: minhash banding must consume the
     # MATERIALIZED representative set (superstep -- the
@@ -315,9 +326,8 @@ def test_dedup_cascade_pair_join_sees_representatives_only(
     # one composed plan with no cartesian and no distinct over pairs.
     # The checkpoint cuts lineage, so the final plan shows the banding
     # reading from the materialized RDD rather than re-deriving reps.
-    plan = physical_plan(
-        _lazy(monkeypatch, "dedup_cascade_stats")(spark, sf_dir)
-    )
+    with _lazy("dedup_cascade_stats", spark, sf_dir) as df:
+        plan = physical_plan(df)
     # (the two 1-row stat crossJoins legitimately appear as broadcast
     # NLJ-Cross -- only a cartesian over DATA rows would be a bug)
     assert "ExistingRDD" in plan, plan
@@ -326,11 +336,10 @@ def test_dedup_cascade_pair_join_sees_representatives_only(
 
 
 def test_embedding_cascade_pair_join_sees_representatives_only(
-    spark, sf_dir, monkeypatch
+    spark, sf_dir
 ):
-    plan = physical_plan(
-        _lazy(monkeypatch, "embedding_dedup_cascade_stats")(spark, sf_dir)
-    )
+    with _lazy("embedding_dedup_cascade_stats", spark, sf_dir) as df:
+        plan = physical_plan(df)
     assert "ExistingRDD" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "band_val" in plan, plan
@@ -514,15 +523,8 @@ def test_kmeans_assignment_is_broadcast_shuffle_free(spark, sf_dir):
     rebuild / final profile aggregations. (Pins the lazy frame -- the
     registered query materializes to local rows, whose plan is just a
     LocalTableScan.)"""
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
-    )
-    from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
-        _kmeans_profile_frame,
-    )
-
-    plan = physical_plan(_kmeans_profile_frame(spark, sf_dir))
-    release_caches()
+    with _lazy("embedding_kmeans_profile", spark, sf_dir) as df:
+        plan = physical_plan(df)
     assert "CartesianProduct" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastNestedLoopJoin" in plan, plan
@@ -545,9 +547,6 @@ def test_kmeans_vector_side_has_no_shuffle_before_assignment(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
-    )
     from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
         _assign,
         _dvec,
@@ -560,9 +559,8 @@ def test_kmeans_vector_side_has_no_shuffle_before_assignment(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("dv")
     )
-    assigned = _assign(emb, _init_centroids(emb, 8))
-    plan = physical_plan(assigned)
-    release_caches()
+    with cache_scope():
+        plan = physical_plan(_assign(emb, _init_centroids(emb, 8)))
     lines = plan.splitlines()
     first_bx = next(
         i for i, ln in enumerate(lines) if "BroadcastExchange" in ln
@@ -592,15 +590,8 @@ def test_semantic_dedup_pair_join_is_cluster_keyed(spark, sf_dir):
     a cartesian over the corpus."""
     import re
 
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
-    )
-    from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
-        _semantic_stats_frame,
-    )
-
-    plan = physical_plan(_semantic_stats_frame(spark, sf_dir))
-    release_caches()
+    with _lazy("semantic_dedup_stats", spark, sf_dir) as df:
+        plan = physical_plan(df)
     assert "CartesianProduct" not in plan, plan
     keys = re.findall(
         r"(?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin) \[(\w+)#",
@@ -613,15 +604,8 @@ def test_bpe_plans_are_type_table_shaped(spark, sf_dir):
     """BPE learning: the winning pair is a 1-row broadcast per iteration
     (BNLJ attaches only), never a cartesian / sort-merge join; the
     initial pair top-k is TakeOrderedAndProject, not a global sort."""
-    from apache_iceberg_with_clickhouse_olake_spark.operators.tokenizer import (
-        _learn_merges_frame,
-    )
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
-    )
-
-    plan = physical_plan(_learn_merges_frame(spark, sf_dir))
-    release_caches()
+    with _lazy("bpe_learn_merges", spark, sf_dir) as df:
+        plan = physical_plan(df)
     assert "CartesianProduct" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
     plan = physical_plan(_Q["bpe_pair_frequencies"](spark, sf_dir))
@@ -651,15 +635,12 @@ def test_dsir_ratio_table_is_broadcast_and_topk_is_take_ordered(spark, sf_dir):
     from apache_iceberg_with_clickhouse_olake_spark.operators.sampling import (
         _dsir_weights,
     )
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
-    )
     from pyspark.sql import functions as F
 
-    w = _dsir_weights(spark, sf_dir)
-    top = w.orderBy(F.col("weight").desc_nulls_last(), "doc_id").limit(50)
-    plan = physical_plan(top)
-    release_caches()
+    with cache_scope():
+        w = _dsir_weights(spark, sf_dir)
+        top = w.orderBy(F.col("weight").desc_nulls_last(), "doc_id").limit(50)
+        plan = physical_plan(top)
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     keys = re.findall(r"BroadcastHashJoin \[(\w+)#", plan)
@@ -721,12 +702,9 @@ def test_power_iteration_is_broadcast_only_on_the_vector_side(spark, sf_dir):
     from apache_iceberg_with_clickhouse_olake_spark.operators.linalg import (
         _pi_frame,
     )
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
-    )
 
-    plan = physical_plan(_pi_frame(spark, sf_dir))
-    release_caches()
+    with cache_scope():
+        plan = physical_plan(_pi_frame(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -777,15 +755,8 @@ def test_ann_ivf_probe_is_bucket_local_and_topk_take_ordered(spark, sf_dir):
     TakeOrderedAndProject, never a global sort over the scored rows."""
     import re
 
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
-    )
-    from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
-        _ann_ivf_frame,
-    )
-
-    plan = physical_plan(_ann_ivf_frame(spark, sf_dir))
-    release_caches()
+    with _lazy("ann_kmeans_ivf_topk", spark, sf_dir) as df:
+        plan = physical_plan(df)
     assert "CartesianProduct" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
     keys = re.findall(r"BroadcastHashJoin \[(\w+)#", plan)
@@ -806,15 +777,8 @@ def test_twolevel_kmeans_and_probe_plans_stay_keyed(spark, sf_dir):
     probe additionally ends in TakeOrderedAndProject with no
     rangepartitioning (no global sort of scored candidates) -- same
     contract as its single-level twin."""
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
-    )
     from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
         _ann_twolevel_frame,
-        _kmeans_twolevel_frame,
-    )
-
-    from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
         _twolevel_state_frames,
     )
     from apache_iceberg_with_clickhouse_olake_spark.operators.similarity import (
@@ -825,11 +789,12 @@ def test_twolevel_kmeans_and_probe_plans_stay_keyed(spark, sf_dir):
     )
     from pyspark.sql import functions as F
 
-    try:
-        plan = physical_plan(_kmeans_twolevel_frame(spark, sf_dir))
-        assert "CartesianProduct" not in plan, plan
-        assert "SortMergeJoin" not in plan, plan
-        assert "Exchange hashpartitioning(cluster" in plan, plan
+    with _lazy("embedding_kmeans_twolevel_profile", spark, sf_dir) as df:
+        plan = physical_plan(df)
+    assert "CartesianProduct" not in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "Exchange hashpartitioning(cluster" in plan, plan
+    with cache_scope():
         # the fine frame must carry full parallelism regardless of how
         # AQE plans the seed-array join (r14: an AQE-coalesced join
         # output serialized the 268k-pair cos stage onto one task --
@@ -841,12 +806,10 @@ def test_twolevel_kmeans_and_probe_plans_stay_keyed(spark, sf_dir):
         par = spark.sparkContext.defaultParallelism
         assert fine.rdd.getNumPartitions() >= par
         probe_plan = physical_plan(_ann_twolevel_frame(spark, sf_dir))
-        assert "CartesianProduct" not in probe_plan, probe_plan
-        assert "SortMergeJoin" not in probe_plan, probe_plan
-        assert "TakeOrderedAndProject" in probe_plan, probe_plan
-        assert "rangepartitioning" not in probe_plan.lower(), probe_plan
-    finally:
-        release_caches()
+    assert "CartesianProduct" not in probe_plan, probe_plan
+    assert "SortMergeJoin" not in probe_plan, probe_plan
+    assert "TakeOrderedAndProject" in probe_plan, probe_plan
+    assert "rangepartitioning" not in probe_plan.lower(), probe_plan
 
 
 def test_filtered_ann_and_balanced_sample_plans_stay_keyed(spark, sf_dir):
@@ -858,101 +821,77 @@ def test_filtered_ann_and_balanced_sample_plans_stay_keyed(spark, sf_dir):
     frame and nothing plans a CartesianProduct."""
     import re
 
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
-    )
     from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
-        _ann_filtered_frame,
-        _balanced_sample_frame,
+        _ann_twolevel_filtered_frame,
     )
 
-    try:
-        plan = physical_plan(_ann_filtered_frame(spark, sf_dir))
-        assert "CartesianProduct" not in plan, plan
-        assert "TakeOrderedAndProject" in plan, plan
-        assert "rangepartitioning" not in plan.lower(), plan
-        # every equi-join keys on cluster/label (probe attach --
-        # Catalyst folds the label = qlabel predicate INTO the hash
-        # join keys, so the filter is applied by the join itself) or
-        # vec_id (label payload attach at index-build time)
-        keys = re.findall(r"BroadcastHashJoin \[(\w+)#", plan)
-        assert keys and all(
-            k in ("cluster", "vec_id", "label") for k in keys
-        ), (keys, plan)
-        sample_plan = physical_plan(_balanced_sample_frame(spark, sf_dir))
-        assert "CartesianProduct" not in sample_plan, sample_plan
-        # the quota window partitions by the full leaf key -- its sort
-        # is leaf-local (~target rows), never corpus-global
-        assert re.search(
-            r"Exchange hashpartitioning\(cluster#\d+L?, sub#\d+", sample_plan
-        ), sample_plan
-        # (the plan's one rangepartitioning is the orderBy on the
-        # k1-row RESULT -- a result sort, not a corpus sort, so it is
-        # not asserted away here)
-        # r15 late: the filtered TWO-LEVEL probe keeps the same
-        # contract -- bounded leaf fetch, top-k head, no corpus sort
-        from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (  # noqa: E501
-            _ann_twolevel_filtered_frame,
-        )
-
+    with _lazy("ann_filtered_topk", spark, sf_dir) as df:
+        plan = physical_plan(df)
+    assert "CartesianProduct" not in plan, plan
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "rangepartitioning" not in plan.lower(), plan
+    # every equi-join keys on cluster/label (probe attach --
+    # Catalyst folds the label = qlabel predicate INTO the hash
+    # join keys, so the filter is applied by the join itself) or
+    # vec_id (label payload attach at index-build time)
+    keys = re.findall(r"BroadcastHashJoin \[(\w+)#", plan)
+    assert keys and all(
+        k in ("cluster", "vec_id", "label") for k in keys
+    ), (keys, plan)
+    with _lazy("cluster_balanced_sample_stats", spark, sf_dir) as df:
+        sample_plan = physical_plan(df)
+    assert "CartesianProduct" not in sample_plan, sample_plan
+    # the quota window partitions by the full leaf key -- its sort
+    # is leaf-local (~target rows), never corpus-global
+    assert re.search(
+        r"Exchange hashpartitioning\(cluster#\d+L?, sub#\d+", sample_plan
+    ), sample_plan
+    # (the plan's one rangepartitioning is the orderBy on the
+    # k1-row RESULT -- a result sort, not a corpus sort, so it is
+    # not asserted away here)
+    # r15 late: the filtered TWO-LEVEL probe keeps the same
+    # contract -- bounded leaf fetch, top-k head, no corpus sort
+    with cache_scope():
         tlf_plan = physical_plan(_ann_twolevel_filtered_frame(spark, sf_dir))
-        assert "CartesianProduct" not in tlf_plan, tlf_plan
-        assert "TakeOrderedAndProject" in tlf_plan, tlf_plan
-        assert "rangepartitioning" not in tlf_plan.lower(), tlf_plan
-        # r16: the filtered two-level RECALL eval keeps the contract on
-        # its exact side too -- brute force over the filtered slice is
-        # a broadcast-query scan with a top-k head, never a corpus
-        # sort; the rollup joins two <= k-row frames (broadcast hash)
-        from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (  # noqa: E501
-            _ann_twolevel_filtered_recall_frame,
-        )
-
-        rec_plan = physical_plan(
-            _ann_twolevel_filtered_recall_frame(spark, sf_dir)
-        )
-        assert "CartesianProduct" not in rec_plan, rec_plan
-        assert "TakeOrderedAndProject" in rec_plan, rec_plan
-        assert "rangepartitioning" not in rec_plan.lower(), rec_plan
-        assert "SortMergeJoin" not in rec_plan, rec_plan
-        # r16: the two-level width sweep -- one leaf pass serves every
-        # width (the grid attaches as a broadcast range join, never a
-        # cartesian or a per-width rescan), and the batch eval -- all
-        # probe attaches broadcast, per-qid windows, no corpus sort
-        from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (  # noqa: E501
-            _batch_recall_frame,
-            _twolevel_sweep_frame,
-        )
-
-        sweep_plan = physical_plan(_twolevel_sweep_frame(spark, sf_dir))
-        assert "CartesianProduct" not in sweep_plan, sweep_plan
-        assert "SortMergeJoin" not in sweep_plan, sweep_plan
-        batch_plan = physical_plan(_batch_recall_frame(spark, sf_dir))
-        assert "CartesianProduct" not in batch_plan, batch_plan
-        assert "SortMergeJoin" not in batch_plan, batch_plan
-        assert "BroadcastHashJoin" in batch_plan, batch_plan
-    finally:
-        release_caches()
+    assert "CartesianProduct" not in tlf_plan, tlf_plan
+    assert "TakeOrderedAndProject" in tlf_plan, tlf_plan
+    assert "rangepartitioning" not in tlf_plan.lower(), tlf_plan
+    # r16: the filtered two-level RECALL eval keeps the contract on
+    # its exact side too -- brute force over the filtered slice is
+    # a broadcast-query scan with a top-k head, never a corpus
+    # sort; the rollup joins two <= k-row frames (broadcast hash)
+    with _lazy("ann_twolevel_filtered_recall", spark, sf_dir) as df:
+        rec_plan = physical_plan(df)
+    assert "CartesianProduct" not in rec_plan, rec_plan
+    assert "TakeOrderedAndProject" in rec_plan, rec_plan
+    assert "rangepartitioning" not in rec_plan.lower(), rec_plan
+    assert "SortMergeJoin" not in rec_plan, rec_plan
+    # r16: the two-level width sweep -- one leaf pass serves every
+    # width (the grid attaches as a broadcast range join, never a
+    # cartesian or a per-width rescan), and the batch eval -- all
+    # probe attaches broadcast, per-qid windows, no corpus sort
+    with _lazy("ann_twolevel_probe_sweep", spark, sf_dir) as df:
+        sweep_plan = physical_plan(df)
+    assert "CartesianProduct" not in sweep_plan, sweep_plan
+    assert "SortMergeJoin" not in sweep_plan, sweep_plan
+    with _lazy("ann_twolevel_batch_recall", spark, sf_dir) as df:
+        batch_plan = physical_plan(df)
+    assert "CartesianProduct" not in batch_plan, batch_plan
+    assert "SortMergeJoin" not in batch_plan, batch_plan
+    assert "BroadcastHashJoin" in batch_plan, batch_plan
 
 
 def test_filtered_probe_sweep_plans_no_cartesian_or_sort_merge(
-    spark, sf_dir, monkeypatch
+    spark, sf_dir
 ):
     """The linear-k filtered sweep shares _probe_sweep with the two-level
     sweep pinned above, so it carries the same pin: the width grid
     attaches as a broadcast range join (never a cartesian) and the
     rollup stitch broadcasts its <= widths*k-row sides."""
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
-    )
-
-    try:
-        plan = physical_plan(
-            _lazy(monkeypatch, "ann_filtered_probe_sweep")(spark, sf_dir)
-        )
-        assert "CartesianProduct" not in plan, plan
-        assert "SortMergeJoin" not in plan, plan
-    finally:
-        release_caches()
+    with _lazy("ann_filtered_probe_sweep", spark, sf_dir) as df:
+        plan = physical_plan(df)
+    assert "CartesianProduct" not in plan, plan
+    assert "SortMergeJoin" not in plan, plan
 
 
 def test_bpe_iteration_frames_are_vocabulary_sized(spark, sf_dir, monkeypatch):
@@ -963,9 +902,6 @@ def test_bpe_iteration_frames_are_vocabulary_sized(spark, sf_dir, monkeypatch):
     checkpointed symbols), and each per-iteration winner attaches as a
     1-row broadcast (BNLJ), never a corpus-shuffling join."""
     from apache_iceberg_with_clickhouse_olake_spark.operators import tokenizer
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        cache_scope,
-    )
 
     real = tokenizer._superstep
     rounds = []
@@ -1054,13 +990,12 @@ def test_pq_assignment_is_joinless_single_exchange(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_winnowing_pair_join_is_fingerprint_keyed(spark, sf_dir, monkeypatch):
+def test_winnowing_pair_join_is_fingerprint_keyed(spark, sf_dir):
     """The winnowing inverted-index self-join must be an equi-join on
     the fingerprint (posting lists bound the cost), never a cartesian
     or nested-loop over documents."""
-    plan = physical_plan(
-        _lazy(monkeypatch, "winnowing_neardup_pairs")(spark, sf_dir)
-    )
+    with _lazy("winnowing_neardup_pairs", spark, sf_dir) as df:
+        plan = physical_plan(df)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "fp#" in plan, plan
@@ -1117,15 +1052,14 @@ def test_containment_pairs_reuse_the_exactly_once_band_filter(spark, sf_dir):
 
 
 def test_source_novelty_explodes_the_materialized_frame(
-    spark, sf_dir, monkeypatch
+    spark, sf_dir
 ):
     """The hashed-shingle frame must be a superstep (ExistingRDD): the
     explode generator otherwise re-inlines the staged shingle lambdas
     and re-evaluates them per generated row (measured 10.3 s vs 1.5 s
     at sf0.1)."""
-    plan = physical_plan(
-        _lazy(monkeypatch, "source_ngram_novelty")(spark, sf_dir)
-    )
+    with _lazy("source_ngram_novelty", spark, sf_dir) as df:
+        plan = physical_plan(df)
     assert "ExistingRDD" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -1190,15 +1124,14 @@ def test_interval_join_is_bucket_equi_never_theta(spark, sf_dir):
 
 
 def test_source_kl_reaggregates_the_superstep_not_the_corpus(
-    spark, sf_dir, monkeypatch
+    spark, sf_dir
 ):
     """All three KL marginals must derive from the superstep
     (source, term) frame: the final plan contains ExistingRDD scans and
     ZERO documents.parquet scans (one corpus scan+tokenize total, paid
     at checkpoint time)."""
-    plan = physical_plan(
-        _lazy(monkeypatch, "source_unigram_kl")(spark, sf_dir)
-    )
+    with _lazy("source_unigram_kl", spark, sf_dir) as df:
+        plan = physical_plan(df)
     assert "ExistingRDD" in plan, plan
     assert "documents.parquet" not in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -1224,7 +1157,7 @@ def test_centroid_outliers_broadcast_the_centroid_table(spark, sf_dir):
 
 
 def test_pmi_pairs_join_reads_the_superstep_with_lazy_scalar(
-    spark, sf_dir, monkeypatch
+    spark, sf_dir
 ):
     """The pair self-join must read the checkpointed (doc, vocab-term)
     frame (ExistingRDD), the n_docs scalar must stay IN-PLAN (one-row
@@ -1232,9 +1165,8 @@ def test_pmi_pairs_join_reads_the_superstep_with_lazy_scalar(
     CartesianProduct), and BOTH top-Vs (vocab selection and the final
     report) must compile to TakeOrderedAndProject, not a global
     row_number window over the term-df frame."""
-    plan = physical_plan(
-        _lazy(monkeypatch, "term_cooccurrence_pmi")(spark, sf_dir)
-    )
+    with _lazy("term_cooccurrence_pmi", spark, sf_dir) as df:
+        plan = physical_plan(df)
     assert "ExistingRDD" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" in plan, plan  # the 1-row scalar
@@ -1293,9 +1225,6 @@ def test_persisted_corpus_frames_run_at_full_parallelism(spark, sf_dir):
     (fp/dvec cast) must also sit ABOVE the exchange so the cache-build
     pass itself runs wide -- checked by Project appearing before the
     Exchange line in the physical tree (children print below parents)."""
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
-    )
     from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
         _fp_vectors,
         _kmeans_assign,
@@ -1305,7 +1234,7 @@ def test_persisted_corpus_frames_run_at_full_parallelism(spark, sf_dir):
     )
 
     par = spark.sparkContext.defaultParallelism
-    try:
+    with cache_scope():
         for frame in (_pi_vectors(spark, sf_dir), _fp_vectors(spark, sf_dir)):
             assert frame.rdd.getNumPartitions() >= par
             plan = physical_plan(frame)
@@ -1313,8 +1242,6 @@ def test_persisted_corpus_frames_run_at_full_parallelism(spark, sf_dir):
             assert "Project" in plan[:exch_at], plan  # cast runs wide
         assigned = _kmeans_assign(spark, sf_dir)
         assert assigned.rdd.getNumPartitions() >= par
-    finally:
-        release_caches()
 
 
 def _persist_raw_scan_hits(source: str, fname: str) -> list[str]:
@@ -1524,15 +1451,7 @@ def test_pq_adc_scan_is_joinless_and_code_width(spark, sf_dir):
     as literals -- the memory-bound PQ point): no sort-merge join, no
     cartesian anywhere; both top-k heads are TakeOrderedAndProject;
     and every corpus scan reads only (vec_id, embedding)."""
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
-    )
-    from apache_iceberg_with_clickhouse_olake_spark.operators.similarity import (
-        _pq_adc_recall_frame,
-    )
-
-    try:
-        df = _pq_adc_recall_frame(spark, sf_dir)
+    with _lazy("pq_adc_topk_recall", spark, sf_dir) as df:
         plan = physical_plan(df)
         assert "SortMergeJoin" not in plan, plan
         assert "CartesianProduct" not in plan, plan
@@ -1540,8 +1459,6 @@ def test_pq_adc_scan_is_joinless_and_code_width(spark, sf_dir):
         assert_scan_columns_at_most(
             df, "embeddings", {"vec_id", "embedding"}
         )
-    finally:
-        release_caches()
 
 
 def test_ivfpq_probe_is_broadcast_and_adc_scan_joinless(spark, sf_dir):
@@ -1550,15 +1467,7 @@ def test_ivfpq_probe_is_broadcast_and_adc_scan_joinless(spark, sf_dir):
     the probe is partition pruning), the ADC stage inherits the
     joinless constant-folded encode shape, and every embeddings scan
     reads only (vec_id, label, embedding)."""
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
-    )
-    from apache_iceberg_with_clickhouse_olake_spark.operators.similarity import (
-        _ivfpq_recall_frame,
-    )
-
-    try:
-        df = _ivfpq_recall_frame(spark, sf_dir)
+    with _lazy("ann_ivfpq_topk_recall", spark, sf_dir) as df:
         plan = physical_plan(df)
         assert "SortMergeJoin" not in plan, plan
         assert "CartesianProduct" not in plan, plan
@@ -1567,8 +1476,6 @@ def test_ivfpq_probe_is_broadcast_and_adc_scan_joinless(spark, sf_dir):
         assert_scan_columns_at_most(
             df, "embeddings", {"vec_id", "label", "embedding"}
         )
-    finally:
-        release_caches()
 
 
 def test_paraphrase_pairs_keep_payloads_off_the_band_explosion(
@@ -1595,20 +1502,11 @@ def test_kcenter_passes_are_broadcast_and_assignment_joinless(
     assignment is the joinless broadcast-array argmin fold; the only
     equi-join is the 5-row broadcast stitch -- never a sort-merge or
     a cartesian."""
-    from apache_iceberg_with_clickhouse_olake_spark.operators._cache import (
-        release_caches,
-    )
-    from apache_iceberg_with_clickhouse_olake_spark.operators.clustering import (
-        _kcenter_frame,
-    )
-
-    try:
-        plan = physical_plan(_kcenter_frame(spark, sf_dir))
-        assert "SortMergeJoin" not in plan, plan
-        assert "CartesianProduct" not in plan, plan
-        assert "TakeOrderedAndProject" in plan, plan
-    finally:
-        release_caches()
+    with _lazy("greedy_kcenter_sample", spark, sf_dir) as df:
+        plan = physical_plan(df)
+    assert "SortMergeJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    assert "TakeOrderedAndProject" in plan, plan
 
 
 def test_curriculum_bins_one_pass_broadcast_cuts(spark, sf_dir):
