@@ -14,7 +14,7 @@ join is key-to-key on doc_id with no payload movement.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import (
@@ -32,31 +32,31 @@ from ..functions import (
 from ..sources.multimodal import MEDIA_SQL, gen_media
 from ..sources.parquet import load_table, load_table_wide
 from .registry import query
+from .sampling import (
+    _MIX_SAMPLED_SQL,
+    _PACK_SHARD_SQL,
+    _mix_sampled,
+    _pack_shard,
+)
+from .text import (
+    _PUNCT_RATIO_SQL,
+    _STOPWORD_RATIO_SQL,
+    _punct_ratio,
+    _quality_keep,
+    _quality_keep_sql,
+    _stopword_ratio,
+)
 
 _NORM = norm_text_sql("text")
 _TOKS = tokens_sql("text")
-
-# Shared with the text module so the skyline's fluency dim is the SAME
-# stopword_ratio text_quality_scores reports.
-from .text import _sql_array, _STOPWORDS  # noqa: E402
-
-_STOP_SQL = _sql_array(_STOPWORDS)
 
 
 @query(
     "curation_pipeline",
     oracle=f"""
-    WITH quality AS (
-      SELECT doc_id, lang, text,
-             len({_TOKS}) AS n_tokens,
-             length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS n_punct,
-             length(text) AS n_chars
-      FROM documents
-    ),
-    kept AS (
-      SELECT doc_id, lang, text, n_tokens FROM quality
-      WHERE n_tokens >= 5 AND n_tokens <= 10000
-        AND CAST(n_punct AS DOUBLE) / NULLIF(n_chars, 0) < 0.2
+    WITH kept AS (
+      SELECT doc_id, lang, text, len({_TOKS}) AS n_tokens FROM documents
+      WHERE {_quality_keep_sql(f"len({_TOKS})", _PUNCT_RATIO_SQL)}
     ),
     deduped AS (
       SELECT doc_id, lang, n_tokens FROM kept
@@ -79,15 +79,8 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quality filter runs before the dedup shuffle so dropped docs
     never shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    n_tokens = F.size(toks)
-    n_punct = F.length(F.regexp_replace("text", "[^.!?,;:]", ""))
-    punct_ratio = n_punct.cast("double") / F.when(
-        F.length("text") == 0, F.lit(None)
-    ).otherwise(F.length("text"))
-    kept = docs.filter(
-        (n_tokens >= 5) & (n_tokens <= 10000) & (punct_ratio < 0.2)
-    ).select(
+    n_tokens = F.size(tokens(F.col("text")))
+    kept = docs.filter(_quality_keep(n_tokens, _punct_ratio())).select(
         "doc_id",
         "lang",
         n_tokens.alias("n_tokens"),
@@ -226,29 +219,57 @@ def shard_assignment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Benchmark decontamination (probe n-gram containment scan)
 # ---------------------------------------------------------------------------
 
+# The probe set and its shingle hash, one Spark function and one DuckDB
+# twin each: the first _PROBE_TOKENS tokens of docs 0.._N_PROBES-1 stand
+# in for a benchmark suite, hashed like every corpus shingle.
+# decontamination_scan, doc_contamination_fraction and
+# corpus_build_pipeline all compose these.
 _N_PROBES = 5
 _PROBE_TOKENS = 6
 
 
-_PROBE_SHINGLE_H = md5_int60_sql(
-    f"array_to_string(({_TOKS})[1:{_PROBE_TOKENS}], ' ')"
-)
-_CORPUS_SHINGLE_H = md5_int60_sql(
-    f"array_to_string(t[i:i + {_PROBE_TOKENS - 1}], ' ')"
+def _shingle_hash(toks: Column, start: Column | int) -> Column:
+    """md5_int60 of the _PROBE_TOKENS-token run of ``toks`` starting at
+    1-based ``start``."""
+    return md5_int60(F.concat_ws(" ", F.slice(toks, start, _PROBE_TOKENS)))
+
+
+def _shingle_hash_sql(toks: str, start: str) -> str:
+    """DuckDB twin of :func:`_shingle_hash`."""
+    return md5_int60_sql(
+        f"array_to_string({toks}[{start}:{start} + {_PROBE_TOKENS - 1}], ' ')"
+    )
+
+
+def _probes(docs: DataFrame) -> DataFrame:
+    """(probe_id, h): the probe set's shingle hashes."""
+    return (
+        docs.filter(F.col("doc_id") < _N_PROBES)
+        # materialize tokens once before slicing/hashing (higher-order-fn
+        # re-evaluation trap)
+        .select(
+            F.col("doc_id").alias("probe_id"),
+            tokens(F.col("text")).alias("t"),
+        )
+        .filter(F.size("t") >= _PROBE_TOKENS)
+        .select("probe_id", _shingle_hash(F.col("t"), 1).alias("h"))
+    )
+
+
+_PROBES_SQL = (
+    f"SELECT doc_id AS probe_id, {_shingle_hash_sql(f'({_TOKS})', '1')} AS h"
+    f" FROM documents"
+    f" WHERE doc_id < {_N_PROBES} AND len({_TOKS}) >= {_PROBE_TOKENS}"
 )
 
 
 @query(
     "decontamination_scan",
     oracle=f"""
-    WITH probes AS (
-      SELECT doc_id AS probe_id, {_PROBE_SHINGLE_H} AS h
-      FROM documents
-      WHERE doc_id < {_N_PROBES} AND len({_TOKS}) >= {_PROBE_TOKENS}
-    ),
+    WITH probes AS ({_PROBES_SQL}),
     toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
     shingles AS (
-      SELECT doc_id, {_CORPUS_SHINGLE_H} AS h
+      SELECT doc_id, {_shingle_hash_sql("t", "i")} AS h
       FROM toks,
            UNNEST(generate_series(1, len(t) - {_PROBE_TOKENS - 1})) AS g(i)
       WHERE len(t) >= {_PROBE_TOKENS}
@@ -281,22 +302,8 @@ def decontamination_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chain otherwise runs on the fixture single scan task; no-op
     # on production layouts (splits >= cores)
     docs = load_table_wide(spark, sf_dir, "documents", "doc_id")
-    toks = tokens(F.col("text"))
-    probes = (
-        docs.filter(F.col("doc_id") < _N_PROBES)
-        # materialize tokens once before slicing/hashing (higher-order-fn
-        # re-evaluation trap)
-        .select(F.col("doc_id").alias("probe_id"), toks.alias("t"))
-        .filter(F.size("t") >= _PROBE_TOKENS)
-        .select(
-            "probe_id",
-            md5_int60(
-                F.concat_ws(" ", F.slice("t", 1, _PROBE_TOKENS))
-            ).alias("h"),
-        )
-    )
     shingles = (
-        docs.select("doc_id", toks.alias("t"))
+        docs.select("doc_id", tokens(F.col("text")).alias("t"))
         .filter(F.size("t") >= _PROBE_TOKENS)
         .select(
             "doc_id",
@@ -305,17 +312,10 @@ def decontamination_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sequence(F.lit(1), F.size("t") - (_PROBE_TOKENS - 1))
             ).alias("i"),
         )
-        .select(
-            "doc_id",
-            md5_int60(
-                F.concat_ws(
-                    " ", F.slice(F.col("t"), F.col("i"), _PROBE_TOKENS)
-                )
-            ).alias("h"),
-        )
+        .select("doc_id", _shingle_hash(F.col("t"), F.col("i")).alias("h"))
     )
     return (
-        shingles.join(F.broadcast(probes), "h")
+        shingles.join(F.broadcast(_probes(docs)), "h")
         .groupBy("probe_id")
         .agg(
             F.countDistinct("doc_id").alias("contaminated_docs"),
@@ -332,21 +332,12 @@ def decontamination_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SEQ_BUDGET = 2048
-_N_BUILD_SHARDS = 8
 
-from .sampling import _MIX_RATE_SQL  # noqa: E402  (shared mix recipe)
-
-# DuckDB twin fragments for the composition oracle. DuckDB's range() is
-# end-exclusive, Spark's sequence() is inclusive -- both below enumerate
-# shingle start positions 1 .. n_toks - (_PROBE_TOKENS - 1).
-_BUILD_SHARD_SQL = md5_int60_sql("concat('pack-', CAST(doc_id AS VARCHAR))")
-_MIX_DRAW_SQL = md5_int60_sql("concat('mix-', CAST(doc_id AS VARCHAR))")
+# DuckDB's range() is end-exclusive, Spark's sequence() is inclusive --
+# both enumerate shingle start positions 1 .. n_toks - (_PROBE_TOKENS - 1).
 _DOC_SHINGLES_SQL = (
-    f"list_transform(range(1, n_toks - {_PROBE_TOKENS - 2}), i -> "
-    + md5_int60_sql(
-        f"array_to_string(toks[i:i + {_PROBE_TOKENS - 1}], ' ')"
-    )
-    + ")"
+    f"list_transform(range(1, n_toks - {_PROBE_TOKENS - 2}),"
+    f" i -> {_shingle_hash_sql('toks', 'i')})"
 )
 
 
@@ -356,14 +347,9 @@ _DOC_SHINGLES_SQL = (
     WITH q AS (
       SELECT doc_id, lang, text, {_TOKS} AS toks, len({_TOKS}) AS n_toks
       FROM documents
-      WHERE len({_TOKS}) >= 5 AND len({_TOKS}) <= 10000
-        AND CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS DOUBLE)
-            / NULLIF(length(text), 0) < 0.2
+      WHERE {_quality_keep_sql(f"len({_TOKS})", _PUNCT_RATIO_SQL)}
     ),
-    probes AS (
-      SELECT list({{PROBE_H}}) AS ph FROM documents
-      WHERE doc_id < {_N_PROBES} AND len({_TOKS}) >= {_PROBE_TOKENS}
-    ),
+    probes AS (SELECT list(h) AS ph FROM ({_PROBES_SQL})),
     flagged AS (
       SELECT doc_id, lang, n_toks,
              row_number() OVER (
@@ -371,8 +357,8 @@ _DOC_SHINGLES_SQL = (
              CASE WHEN n_toks >= {_PROBE_TOKENS} THEN
                len(list_intersect({_DOC_SHINGLES_SQL}, ph)) > 0
              ELSE FALSE END AS contaminated,
-             {_MIX_DRAW_SQL} % 1000 < {{MIX_RATE}} AS sampled,
-             CAST({_BUILD_SHARD_SQL} % {_N_BUILD_SHARDS} AS BIGINT) AS shard
+             {_MIX_SAMPLED_SQL} AS sampled,
+             {_PACK_SHARD_SQL} AS shard
       FROM q CROSS JOIN probes
     ),
     kept AS (
@@ -401,9 +387,7 @@ _DOC_SHINGLES_SQL = (
     FROM kept
     GROUP BY shard
     ORDER BY shard
-    """.replace("{PROBE_H}", _PROBE_SHINGLE_H).replace(
-        "{MIX_RATE}", _MIX_RATE_SQL
-    ),
+    """,
     tags=("llm-text", "llm-dedup", "llm-sampling", "multimodal"),
 )
 def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -428,11 +412,9 @@ def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returns per-shard funnel accounting: docs surviving quality, the
     exact-dedup representatives among them, how many representatives the
-    decontamination probes removed, the mix-sampled survivors, and the
-    packed-token / sequence / fill-ratio packing stats.
+    decontamination probes removed, the survivors the training mix
+    samples, and the packed-token / sequence / fill-ratio packing stats.
     """
-    from .sampling import _mix_rate_spark
-
     # NOT widened (r19): interleaved A/B measured the split-starved
     # widen at 1.717 -> 1.897 s here -- this pipeline keeps shingles as
     # arrays (no row explosion), so the single-task chain is cheaper
@@ -440,13 +422,7 @@ def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     n_tokens = F.size(toks)
-    n_punct = F.length(F.regexp_replace("text", "[^.!?,;:]", ""))
-    punct_ratio = n_punct.cast("double") / F.when(
-        F.length("text") == 0, F.lit(None)
-    ).otherwise(F.length("text"))
-    quality = docs.filter(
-        (n_tokens >= 5) & (n_tokens <= 10000) & (punct_ratio < 0.2)
-    ).select(
+    quality = docs.filter(_quality_keep(n_tokens, _punct_ratio())).select(
         "doc_id",
         "lang",
         toks.alias("toks"),
@@ -458,29 +434,16 @@ def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_fp = Window.partitionBy("fp").orderBy("doc_id")
     flagged = quality.withColumn("is_rep", F.row_number().over(w_fp) == 1)
 
-    # Stage 3: decontamination. Probe set = the first 6 tokens of docs
-    # 0..4 (stand-in for a benchmark suite; see decontamination_scan).
-    # Collapsed to ONE row of hashes and broadcast, so the membership
+    # Stage 3: decontamination against the probe set (_probes),
+    # collapsed to ONE row of hashes and broadcast, so the membership
     # test is a map-side arrays_overlap -- no shuffle, no explosion of
     # corpus shingles into rows.
-    probe_row = (
-        docs.filter(F.col("doc_id") < _N_PROBES)
-        .select(tokens(F.col("text")).alias("t"))
-        .filter(F.size("t") >= _PROBE_TOKENS)
-        .select(
-            md5_int60(
-                F.concat_ws(" ", F.slice("t", 1, _PROBE_TOKENS))
-            ).alias("h")
-        )
-        .agg(F.collect_list("h").alias("probe_hashes"))
-    )
+    probe_row = _probes(docs).agg(F.collect_list("h").alias("probe_hashes"))
     shingles = F.when(
         F.col("n_toks") >= _PROBE_TOKENS,
         F.transform(
             F.sequence(F.lit(1), F.col("n_toks") - (_PROBE_TOKENS - 1)),
-            lambda i: md5_int60(
-                F.concat_ws(" ", F.slice(F.col("toks"), i, _PROBE_TOKENS))
-            ),
+            lambda i: _shingle_hash(F.col("toks"), i),
         ),
     ).otherwise(F.array().cast("array<bigint>"))
     flagged = flagged.crossJoin(F.broadcast(probe_row)).withColumn(
@@ -488,26 +451,17 @@ def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.arrays_overlap(shingles, F.col("probe_hashes")),
     )
 
-    # Stage 4: deterministic training-mix sampling (same recipe as
-    # training_mix_sample) + stage-5 shard assignment.
-    draw = md5_int60(
-        F.concat(F.lit("mix-"), F.col("doc_id").cast("string"))
-    ) % 1000
-    shard = (
-        md5_int60(F.concat(F.lit("pack-"), F.col("doc_id").cast("string")))
-        % _N_BUILD_SHARDS
-    ).cast("long")
+    # Stage 4: the training-mix draw of training_mix_sample + the
+    # stage-5 shard of sequence_packing_stats.
     kept = flagged.select(
         "doc_id",
         "lang",
         "n_toks",
         "is_rep",
         "contaminated",
-        shard.alias("shard"),
+        _pack_shard().alias("shard"),
         (
-            F.col("is_rep")
-            & ~F.col("contaminated")
-            & (draw < _mix_rate_spark())
+            F.col("is_rep") & ~F.col("contaminated") & _mix_sampled()
         ).alias("final_kept"),
     )
 
@@ -667,18 +621,14 @@ def pii_redaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "doc_contamination_fraction",
     oracle=f"""
-    WITH pset AS (
-      SELECT DISTINCT {_PROBE_SHINGLE_H} AS h
-      FROM documents
-      WHERE doc_id < {_N_PROBES} AND len({_TOKS}) >= {_PROBE_TOKENS}
-    ),
+    WITH pset AS (SELECT DISTINCT h FROM ({_PROBES_SQL})),
     toks AS (SELECT doc_id, source, {_TOKS} AS t FROM documents),
     base AS (
       SELECT doc_id, source, len(t) - {_PROBE_TOKENS - 1} AS total_shingles
       FROM toks WHERE len(t) >= {_PROBE_TOKENS}
     ),
     sh AS (
-      SELECT doc_id, {_CORPUS_SHINGLE_H} AS h
+      SELECT doc_id, {_shingle_hash_sql("t", "i")} AS h
       FROM toks,
            UNNEST(generate_series(1, len(t) - {_PROBE_TOKENS - 1})) AS g(i)
       WHERE len(t) >= {_PROBE_TOKENS}
@@ -716,19 +666,9 @@ def doc_contamination_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     exempt them."""
     # widened when split-starved (r19, see decontamination_scan)
     docs = load_table_wide(spark, sf_dir, "documents", "doc_id")
-    toks = tokens(F.col("text"))
-    tok_frame = docs.select("doc_id", "source", toks.alias("t")).filter(
-        F.size("t") >= _PROBE_TOKENS
-    )
-    pset = (
-        tok_frame.filter(F.col("doc_id") < _N_PROBES)
-        .select(
-            md5_int60(
-                F.concat_ws(" ", F.slice("t", 1, _PROBE_TOKENS))
-            ).alias("h")
-        )
-        .distinct()
-    )
+    tok_frame = docs.select(
+        "doc_id", "source", tokens(F.col("text")).alias("t")
+    ).filter(F.size("t") >= _PROBE_TOKENS)
     base = tok_frame.select(
         "doc_id",
         "source",
@@ -742,14 +682,9 @@ def doc_contamination_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sequence(F.lit(1), F.size("t") - (_PROBE_TOKENS - 1))
         ).alias("i"),
         F.col("t"),
-    ).select(
-        "doc_id",
-        md5_int60(
-            F.concat_ws(" ", F.slice(F.col("t"), F.col("i"), _PROBE_TOKENS))
-        ).alias("h"),
-    )
+    ).select("doc_id", _shingle_hash(F.col("t"), F.col("i")).alias("h"))
     hits = (
-        shingles.join(F.broadcast(pset), "h")
+        shingles.join(F.broadcast(_probes(docs).select("h").distinct()), "h")
         .groupBy("doc_id")
         .agg(F.count("*").alias("hit_shingles"))
     )
@@ -787,10 +722,7 @@ doc_contamination_fraction.__doc__ = doc_contamination_fraction.__doc__.format(
     WITH t AS (
       SELECT doc_id, lang,
              CAST(len({_TOKS}) AS BIGINT) AS n_tokens,
-             {dround_sql(
-                 'CAST(len(list_filter(' + _TOKS + ','
-                 ' x -> list_contains(' + _STOP_SQL + ', x)))'
-                 ' AS DOUBLE) / len(' + _TOKS + ')', 4)} AS stopword_ratio
+             {_STOPWORD_RATIO_SQL} AS stopword_ratio
       FROM documents
       WHERE len({_TOKS}) > 0
     ),
@@ -833,16 +765,12 @@ def quality_length_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontiers, never the corpus."""
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
-    n_tokens = F.size(toks).cast("long")
-    n_stop = F.size(F.filter(toks, lambda x: x.isin(*_STOPWORDS)))
     base = (
         docs.select(
             "doc_id",
             "lang",
-            n_tokens.alias("n_tokens"),
-            dround(
-                n_stop.cast("double") / n_tokens.cast("double"), 4
-            ).alias("stopword_ratio"),
+            F.size(toks).cast("long").alias("n_tokens"),
+            _stopword_ratio(toks).alias("stopword_ratio"),
         )
         .filter(F.col("n_tokens") > 0)
     )

@@ -37,7 +37,7 @@ from ..functions import (
     tokens,
     tokens_sql,
 )
-from ..sources.parquet import load_table, load_table_wide
+from ..sources.parquet import load_table
 from ._cache import finalize as _finalize
 from ._cache import scoped as _scoped
 from ._cache import scratch_dir as _scratch_dir

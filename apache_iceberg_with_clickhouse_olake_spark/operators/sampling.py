@@ -12,7 +12,7 @@ or a driver-side shuffle of the corpus.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import (
@@ -40,10 +40,15 @@ _MIX_PERMILLE = {"en": 900, "de": 700, "fr": 600, "es": 500, "zh": 400}
 
 _SAMPLE_K = 100          # uniform-sample size for the reservoir twin
 _SEQ_BUDGET = 2048       # tokens per packed training sequence
-_N_PACK_SHARDS = 8
+_N_PACK_SHARDS = 8       # output shards of every packing stage
+
+# The mix draw and the pack shard, one Spark function and one DuckDB twin
+# each: training_mix_sample, sequence_packing_stats,
+# packing_efficiency_sweep, corpus_build_pipeline and the corpus ingest
+# stream compose these, so they sample and shard the same docs.
 
 
-def _mix_rate_spark():
+def _mix_rate_spark() -> Column:
     rate = F.lit(0)
     for lang, permille in _MIX_PERMILLE.items():
         rate = F.when(F.col("lang") == lang, F.lit(permille)).otherwise(rate)
@@ -54,7 +59,36 @@ _MIX_RATE_SQL = "CASE " + " ".join(
     f"WHEN lang = '{lg}' THEN {pm}" for lg, pm in _MIX_PERMILLE.items()
 ) + " ELSE 0 END"
 
-_MIX_HASH = "concat('mix-', CAST(doc_id AS VARCHAR))"
+
+def _mix_sampled() -> Column:
+    """Whether the training mix keeps a doc: a salted md5 draw on
+    doc_id, in permille, under its language's rate."""
+    draw = md5_int60(
+        F.concat(F.lit("mix-"), F.col("doc_id").cast("string"))
+    ) % 1000
+    return draw < _mix_rate_spark()
+
+
+_MIX_SAMPLED_SQL = (
+    md5_int60_sql("concat('mix-', CAST(doc_id AS VARCHAR))")
+    + f" % 1000 < {_MIX_RATE_SQL}"
+)
+
+
+def _pack_shard() -> Column:
+    """A doc's packing shard: a salted md5 of doc_id, mod the shard
+    count."""
+    return (
+        md5_int60(F.concat(F.lit("pack-"), F.col("doc_id").cast("string")))
+        % _N_PACK_SHARDS
+    ).cast("long")
+
+
+_PACK_SHARD_SQL = (
+    "CAST("
+    + md5_int60_sql("concat('pack-', CAST(doc_id AS VARCHAR))")
+    + f" % {_N_PACK_SHARDS} AS BIGINT)"
+)
 
 
 @query(
@@ -62,11 +96,9 @@ _MIX_HASH = "concat('mix-', CAST(doc_id AS VARCHAR))"
     oracle=f"""
     SELECT lang,
            COUNT(*) AS total_docs,
-           CAST(COUNT(CASE WHEN {md5_int60_sql(_MIX_HASH)} % 1000
-                           < {_MIX_RATE_SQL} THEN 1 END) AS BIGINT)
+           CAST(COUNT(CASE WHEN {_MIX_SAMPLED_SQL} THEN 1 END) AS BIGINT)
              AS sampled_docs,
-           CAST(SUM(CASE WHEN {md5_int60_sql(_MIX_HASH)} % 1000
-                         < {_MIX_RATE_SQL} THEN n_chars ELSE 0 END)
+           CAST(SUM(CASE WHEN {_MIX_SAMPLED_SQL} THEN n_chars ELSE 0 END)
                 AS BIGINT) AS sampled_chars,
            CAST({_MIX_RATE_SQL} AS BIGINT) AS target_permille
     FROM documents
@@ -83,11 +115,7 @@ def training_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     two clusters) selects the SAME documents — the property a training
     mix needs for reproducibility."""
     docs = load_table(spark, sf_dir, "documents")
-    rate = _mix_rate_spark()
-    draw = md5_int60(
-        F.concat(F.lit("mix-"), F.col("doc_id").cast("string"))
-    ) % 1000
-    kept = draw < rate
+    kept = _mix_sampled()
     return (
         docs.groupBy("lang")
         .agg(
@@ -97,7 +125,7 @@ def training_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("sampled_chars"),
         )
-        .withColumn("target_permille", rate.cast("long"))
+        .withColumn("target_permille", _mix_rate_spark().cast("long"))
         .orderBy("lang")
     )
 
@@ -130,15 +158,12 @@ def uniform_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PACK_SHARD = md5_int60_sql("concat('pack-', CAST(doc_id AS VARCHAR))")
-
-
 @query(
     "sequence_packing_stats",
     oracle=f"""
     WITH sized AS (
       SELECT doc_id,
-             CAST({_PACK_SHARD} % {_N_PACK_SHARDS} AS BIGINT) AS shard,
+             {_PACK_SHARD_SQL} AS shard,
              len({_TOKS}) AS n_toks
       FROM documents
     )
@@ -172,13 +197,9 @@ def sequence_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric a data pipeline monitors); fill_ratio <= 1 by construction,
     the deficit being each shard's final partial sequence."""
     docs = load_table(spark, sf_dir, "documents")
-    shard = (
-        md5_int60(F.concat(F.lit("pack-"), F.col("doc_id").cast("string")))
-        % _N_PACK_SHARDS
-    ).cast("long")
     sized = docs.select(
         "doc_id",
-        shard.alias("shard"),
+        _pack_shard().alias("shard"),
         F.size(tokens(F.col("text"))).cast("long").alias("n_toks"),
     )
     return (
@@ -862,7 +883,7 @@ _PACK_BUDGET_GRID = (64, 512, 1024, 2048, 4096)
     oracle=f"""
     WITH sized AS (
       SELECT doc_id,
-             CAST({_PACK_SHARD} % {_N_PACK_SHARDS} AS BIGINT) AS shard,
+             {_PACK_SHARD_SQL} AS shard,
              len({_TOKS}) AS n_toks
       FROM documents
     ),
@@ -911,7 +932,7 @@ def packing_efficiency_sweep(
     total bins and the global fill ratio, PLUS the
     truncate-instead-of-pack alternative's price (docs over budget,
     tokens a hard truncation would lose, loss fraction) -- one table
-    is the whole pack-vs-truncate decision at every candidate
+    is the whole pack versus truncate decision at every candidate
     sequence length. Concat-and-split wastes only each shard's final
     partial bin, so fill ratio rises toward 1 as the corpus grows and
     falls as the budget grows; truncation loss moves the OPPOSITE way
@@ -928,12 +949,8 @@ def packing_efficiency_sweep(
     bin -- guaranteed at the 64 row, where docs exceed the budget),
     so the whole sweep is two hash rollups, no window at all."""
     docs = load_table(spark, sf_dir, "documents")
-    shard = (
-        md5_int60(F.concat(F.lit("pack-"), F.col("doc_id").cast("string")))
-        % _N_PACK_SHARDS
-    ).cast("long")
     sized = docs.select(
-        shard.alias("shard"),
+        _pack_shard().alias("shard"),
         F.size(tokens(F.col("text"))).cast("long").alias("n_toks"),
     )
     budgets = F.explode(

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions import dsum, dsum_sql
 from ..sources.parquet import load_table
-from ..streaming import run_cdc_upsert_stream
+from ..streaming import WM_DELAY_SECS, run_cdc_upsert_stream
 from ._cache import cache_scope
 from ._cache import finalize as _finalize
 from ._cache import scoped as _scoped
@@ -256,12 +256,11 @@ def streaming_vector_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 # item 6 that keeps the drop semantics intact.)
 _WM_HOLD_MOD = 50
 _WM_HOLD_DAYS = 7
-_WM_DELAY_DAYS = 2       # must match streaming.WM_DELAY_SECS
 _WM_MARGIN_SECS = 86400
 # chunk0 span: hold window + delay + 2 margins past the stream start,
 # so max(chunk0) - delay >= hold cutoff + margin on any fixture dense
 # enough to have events near the boundary (asserted at run time)
-_WM_MID_DAYS = _WM_HOLD_DAYS + _WM_DELAY_DAYS + 2
+_WM_MID_DAYS = _WM_HOLD_DAYS + WM_DELAY_SECS // 86400 + 2
 
 
 @query(
@@ -276,7 +275,7 @@ _WM_MID_DAYS = _WM_HOLD_DAYS + _WM_DELAY_DAYS + 2
       -- allowed lateness; hold cutoff: first _WM_HOLD_DAYS of the
       -- stream, derived from the fixture's own MIN (both engines
       -- compute it from the same parquet, so it cannot drift)
-      SELECT MAX(us) - CAST({_WM_DELAY_DAYS * 86400} AS BIGINT) * 1000000
+      SELECT MAX(us) - CAST({WM_DELAY_SECS} AS BIGINT) * 1000000
                AS wm_us,
              MIN(us) + CAST({_WM_HOLD_DAYS * 86400} AS BIGINT) * 1000000
                AS hold_us
@@ -318,11 +317,8 @@ def events_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     on-time chunks are time-split so only held-back rows are ever late,
     and the watermark carries microseconds so it never lands exactly on
     a window boundary (no <=-vs-< edge)."""
-    from ..streaming import WM_DELAY_SECS, run_watermark_window_stream
+    from ..streaming import run_watermark_window_stream
 
-    assert WM_DELAY_SECS == _WM_DELAY_DAYS * 86400, (
-        "oracle delay constant drifted from streaming.WM_DELAY_SECS"
-    )
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.col("ts").cast("timestamp").alias("ts"),
@@ -344,7 +340,7 @@ def events_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk0_max = events.filter((~held) & (es < F.lit(t_mid))).agg(
         F.max(es)
     ).first()[0]
-    lagged_wm = (chunk0_max or 0) - _WM_DELAY_DAYS * 86400
+    lagged_wm = (chunk0_max or 0) - WM_DELAY_SECS
     if span.tmax <= t_mid or lagged_wm < t_hold + _WM_MARGIN_SECS:
         raise ValueError(
             "events fixture time span too narrow/sparse for the "

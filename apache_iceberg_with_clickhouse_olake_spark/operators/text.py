@@ -19,7 +19,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import (
@@ -36,7 +36,7 @@ from ..functions import (
     tokens,
     tokens_sql,
 )
-from ..sources.parquet import load_table, load_table_wide
+from ..sources.parquet import load_table
 from ._cache import finalize as _finalize
 from ._cache import scoped as _scoped
 from ._cache import superstep as _superstep
@@ -105,6 +105,76 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Quality scoring (length / punctuation / stopword ratios -> keep/drop)
 # ---------------------------------------------------------------------------
 
+# The quality rule of the corpus layer, one Spark function and one DuckDB
+# twin each. Every op and stream that scores or gates on quality composes
+# these (the threshold sweep, the curation and corpus-build pipelines,
+# the skyline and source-fair cuts, the corpus ingest stream), so they
+# all score and keep the same docs.
+_MIN_TOKENS = 5
+_MAX_TOKENS = 10000
+_MAX_PUNCT_RATIO = 0.2
+_NON_PUNCT = "[^.!?,;:]"
+
+_PUNCT_RATIO_SQL = (
+    f"CAST(length(regexp_replace(text, '{_NON_PUNCT}', '', 'g')) AS DOUBLE)"
+    " / NULLIF(length(text), 0)"
+)
+_STOPWORD_RATIO_SQL = dround_sql(
+    f"CAST(len(list_filter({_TOKS},"
+    f" x -> list_contains({_sql_array(_STOPWORDS)}, x))) AS DOUBLE)"
+    f" / NULLIF(len({_TOKS}), 0)",
+    4,
+)
+
+
+def _punct_ratio() -> Column:
+    """Punctuation characters per character of ``text``; NULL when the
+    text is empty."""
+    n_chars = F.length("text")
+    n_punct = F.length(F.regexp_replace("text", _NON_PUNCT, ""))
+    return n_punct.cast("double") / F.when(
+        n_chars == 0, F.lit(None)
+    ).otherwise(n_chars)
+
+
+def _stopword_ratio(toks: Column) -> Column:
+    """Share of the tokens ``toks`` that are English stopwords, 4 dp;
+    NULL for a doc with no tokens."""
+    n_tokens = F.size(toks)
+    n_stop = F.size(F.filter(toks, lambda x: x.isin(*_STOPWORDS)))
+    return dround(
+        n_stop.cast("double")
+        / F.when(n_tokens == 0, F.lit(None)).otherwise(n_tokens),
+        4,
+    )
+
+
+def _quality_keep(
+    n_tokens: Column,
+    punct_ratio: Column,
+    max_punct_ratio: Column | float = _MAX_PUNCT_RATIO,
+) -> Column:
+    """The keep gate: a token count within the length bounds and a
+    punctuation ratio under ``max_punct_ratio``."""
+    return (
+        (n_tokens >= _MIN_TOKENS)
+        & (n_tokens <= _MAX_TOKENS)
+        & (punct_ratio < max_punct_ratio)
+    )
+
+
+def _quality_keep_sql(
+    n_tokens: str,
+    punct_ratio: str,
+    max_punct_ratio: str | float = _MAX_PUNCT_RATIO,
+) -> str:
+    """DuckDB twin of :func:`_quality_keep`."""
+    return (
+        f"({n_tokens} BETWEEN {_MIN_TOKENS} AND {_MAX_TOKENS}"
+        f" AND {punct_ratio} < {max_punct_ratio})"
+    )
+
+
 @query(
     "text_quality_scores",
     oracle=f"""
@@ -112,19 +182,14 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, lang,
              length(text) AS n_chars,
              len({_TOKS}) AS n_tokens,
-             length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS n_punct,
-             len(list_filter({_TOKS},
-                 x -> list_contains({_sql_array(_STOPWORDS)}, x))) AS n_stop
+             {_PUNCT_RATIO_SQL} AS punct_raw,
+             {_STOPWORD_RATIO_SQL} AS stopword_ratio
       FROM documents
     )
     SELECT doc_id, lang, n_chars, n_tokens,
-           {dround_sql('CAST(n_punct AS DOUBLE) / NULLIF(n_chars, 0)', 4)}
-             AS punct_ratio,
-           {dround_sql('CAST(n_stop AS DOUBLE) / NULLIF(n_tokens, 0)', 4)}
-             AS stopword_ratio,
-           (n_tokens >= 5 AND n_tokens <= 10000
-            AND CAST(n_punct AS DOUBLE) / NULLIF(n_chars, 0) < 0.2)
-             AS keep
+           {dround_sql('punct_raw', 4)} AS punct_ratio,
+           stopword_ratio,
+           {_quality_keep_sql('n_tokens', 'punct_raw')} AS keep
     FROM t
     """,
     tags=("llm-text",),
@@ -134,27 +199,16 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     punctuation density, stopword density -> boolean keep flag."""
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
-    n_chars = F.length("text")
     n_tokens = F.size(toks)
-    n_punct = F.length(F.regexp_replace("text", "[^.!?,;:]", ""))
-    n_stop = F.size(F.filter(toks, lambda x: x.isin(*_STOPWORDS)))
-    punct_ratio_raw = n_punct.cast("double") / F.when(
-        n_chars == 0, F.lit(None)
-    ).otherwise(n_chars)
+    punct_ratio = _punct_ratio()
     return docs.select(
         "doc_id",
         "lang",
-        n_chars.cast("long").alias("n_chars"),
+        F.length("text").cast("long").alias("n_chars"),
         n_tokens.cast("long").alias("n_tokens"),
-        dround(punct_ratio_raw, 4).alias("punct_ratio"),
-        dround(
-            n_stop.cast("double")
-            / F.when(n_tokens == 0, F.lit(None)).otherwise(n_tokens),
-            4,
-        ).alias("stopword_ratio"),
-        (
-            (n_tokens >= 5) & (n_tokens <= 10000) & (punct_ratio_raw < 0.2)
-        ).alias("keep"),
+        dround(punct_ratio, 4).alias("punct_ratio"),
+        _stopword_ratio(toks).alias("stopword_ratio"),
+        _quality_keep(n_tokens, punct_ratio).alias("keep"),
     )
 
 
@@ -863,31 +917,29 @@ _QUALITY_THRESHOLDS = (0.05, 0.10, 0.15, 0.20, 0.25, 0.30)
     "quality_threshold_sweep",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id,
-             len({_TOKS}) AS n_tokens,
-             CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g'))
-                  AS DOUBLE) / NULLIF(length(text), 0) AS punct_ratio
+      SELECT len({_TOKS}) AS n_tokens, {_PUNCT_RATIO_SQL} AS punct_ratio
       FROM documents
     ),
     grid AS (
       SELECT CAST(unnest([{', '.join(str(t) for t in _QUALITY_THRESHOLDS)}])
                   AS DOUBLE) AS max_punct_ratio
+    ),
+    k AS (
+      SELECT g.max_punct_ratio, t.n_tokens,
+             {_quality_keep_sql('t.n_tokens', 't.punct_ratio',
+                                'g.max_punct_ratio')} AS kept
+      FROM t CROSS JOIN grid g
     )
-    SELECT g.max_punct_ratio,
-           CAST(COUNT(CASE WHEN t.n_tokens BETWEEN 5 AND 10000
-                            AND t.punct_ratio < g.max_punct_ratio
-                           THEN 1 END) AS BIGINT) AS docs_kept,
-           CAST(COALESCE(SUM(CASE WHEN t.n_tokens BETWEEN 5 AND 10000
-                                   AND t.punct_ratio < g.max_punct_ratio
-                                  THEN t.n_tokens END), 0) AS BIGINT)
-             AS tokens_kept,
+    SELECT max_punct_ratio,
+           CAST(COUNT(CASE WHEN kept THEN 1 END) AS BIGINT) AS docs_kept,
+           CAST(COALESCE(SUM(CASE WHEN kept THEN n_tokens END), 0)
+                AS BIGINT) AS tokens_kept,
            {dround_sql(
-               "CAST(COUNT(CASE WHEN t.n_tokens BETWEEN 5 AND 10000"
-               " AND t.punct_ratio < g.max_punct_ratio THEN 1 END)"
-               " AS DOUBLE) / COUNT(*)", 4)} AS frac_docs_kept
-    FROM t CROSS JOIN grid g
-    GROUP BY g.max_punct_ratio
-    ORDER BY g.max_punct_ratio
+               "CAST(COUNT(CASE WHEN kept THEN 1 END) AS DOUBLE)"
+               " / COUNT(*)", 4)} AS frac_docs_kept
+    FROM k
+    GROUP BY max_punct_ratio
+    ORDER BY max_punct_ratio
     """,
     tags=("llm-text",),
 )
@@ -901,25 +953,19 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side, cross-joined against the BROADCAST 6-row threshold grid
     (a constant-size explosion, same accepted shape as the banding
     sweep's config grid), and rolled up by threshold: one shuffle of
-    6 x docs tiny tuples, never a rescan per threshold. The token
-    bounds are text_quality_scores' fixed [5, 10000] gate, so sweep row
-    0.20 reproduces that query's keep count exactly."""
+    6 x docs tiny tuples, never a rescan per threshold. Each row is
+    :func:`_quality_keep` with the grid value as its cutoff, so sweep
+    row 0.20 reproduces text_quality_scores' keep count exactly."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    n_chars = F.length("text")
-    n_punct = F.length(F.regexp_replace("text", "[^.!?,;:]", ""))
     stats = docs.select(
-        F.size(toks).alias("n_tokens"),
-        (
-            n_punct.cast("double")
-            / F.when(n_chars == 0, F.lit(None)).otherwise(n_chars)
-        ).alias("punct_ratio"),
+        F.size(tokens(F.col("text"))).alias("n_tokens"),
+        _punct_ratio().alias("punct_ratio"),
     )
     grid = spark.createDataFrame(
         [(t,) for t in _QUALITY_THRESHOLDS], "max_punct_ratio double"
     )
-    kept = (F.col("n_tokens") >= 5) & (F.col("n_tokens") <= 10000) & (
-        F.col("punct_ratio") < F.col("max_punct_ratio")
+    kept = _quality_keep(
+        F.col("n_tokens"), F.col("punct_ratio"), F.col("max_punct_ratio")
     )
     return (
         stats.crossJoin(F.broadcast(grid))
@@ -2037,11 +2083,7 @@ _FAIR_Q = 0.75  # keep the top quartile of each source
     "quality_source_fair_threshold",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, source,
-             {dround_sql(
-                 f"CAST(len(list_filter({_TOKS}, x ->"
-                 f" list_contains({_sql_array(_STOPWORDS)}, x)))"
-                 f" AS DOUBLE) / NULLIF(len({_TOKS}), 0)", 4)} AS score
+      SELECT doc_id, source, {_STOPWORD_RATIO_SQL} AS score
       FROM documents
     ),
     cuts AS (
@@ -2098,14 +2140,7 @@ def quality_source_fair_threshold(
     come back as a broadcast |sources|-row join plus a 1-row global
     cross join (scalars stay in-plan, the lazy-scalar rule)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    n_tokens = F.size(toks)
-    n_stop = F.size(F.filter(toks, lambda x: x.isin(*_STOPWORDS)))
-    score = dround(
-        n_stop.cast("double")
-        / F.when(n_tokens == 0, F.lit(None)).otherwise(n_tokens),
-        4,
-    )
+    score = _stopword_ratio(tokens(F.col("text")))
     t = docs.select("doc_id", "source", score.alias("score"))
     cuts = t.groupBy("source").agg(
         dround(F.percentile(F.col("score"), F.lit(_FAIR_Q)), 4).alias(

@@ -40,7 +40,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import dround, dround_sql, md5_int60_sql
+from ..functions import dround, dround_sql, md5_int60, md5_int60_sql
 from ..sources.parquet import load_table
 from ._cache import scoped as _scoped
 from ._cache import finalize as _finalize
@@ -52,30 +52,35 @@ _TOP_PAIRS = 30
 
 _WORD_RE = "[a-z]+"
 
-# ---------------------------------------------------------------------------
-# Shared builders (Spark)
-# ---------------------------------------------------------------------------
-
-
-def _word_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(word, freq, s) -- the word-type table with its initial symbol
-    string ' h e l l o </w> ' (leading/trailing spaces so every symbol
-    occurrence is space-delimited for literal replace)."""
-    return _word_symbols_from(load_table(spark, sf_dir, "documents"))
-
-
-def _word_symbols_from(docs: DataFrame) -> DataFrame:
-    """Word-symbol table over an arbitrary documents frame (the
-    train/held-out split op passes filtered subsets)."""
-    wf = (
-        docs.select(
-            F.explode(
-                F.expr(f"regexp_extract_all(lower(text), '{_WORD_RE}', 0)")
-            ).alias("word")
-        )
-        .groupBy("word")
-        .agg(F.count("*").alias("freq"))
+# Literal space-delimited replace, three passes to fixpoint (module doc).
+# Spark SQL and DuckDB parse it alike, so both engines run this string.
+_APPLY_MERGE = "s"
+for _ in range(3):
+    _APPLY_MERGE = (
+        f"replace({_APPLY_MERGE},"
+        " concat(' ', a, ' ', b, ' '), concat(' ', a, b, ' '))"
     )
+
+# ---------------------------------------------------------------------------
+# The merge loop (Spark)
+# ---------------------------------------------------------------------------
+
+
+def _words(docs: DataFrame, *cols: str) -> DataFrame:
+    """One row per lower-cased word of ``docs``, beside ``cols``."""
+    return docs.select(
+        *cols,
+        F.explode(
+            F.expr(f"regexp_extract_all(lower(text), '{_WORD_RE}', 0)")
+        ).alias("word"),
+    )
+
+
+def _word_symbols(docs: DataFrame) -> DataFrame:
+    """(word, freq, s) -- the word-type table of ``docs`` with its
+    initial symbol string ' h e l l o </w> ' (leading/trailing spaces so
+    every symbol occurrence is space-delimited for literal replace)."""
+    wf = _words(docs).groupBy("word").agg(F.count("*").alias("freq"))
     return wf.select(
         "word",
         "freq",
@@ -109,75 +114,114 @@ def _pair_counts(symbols: DataFrame) -> DataFrame:
     )
 
 
-# Literal space-delimited replace, three passes to fixpoint (module doc).
-_APPLY_MERGE = "s"
-for _ in range(3):
-    _APPLY_MERGE = (
-        f"replace({_APPLY_MERGE},"
-        " concat(' ', a, ' ', b, ' '), concat(' ', a, b, ' '))"
+def _merge(symbols: DataFrame, top: DataFrame) -> DataFrame:
+    """``symbols`` with the 1-row winner ``top`` replaced into every word
+    (a broadcast nested-loop join of one row)."""
+    return (
+        symbols.crossJoin(F.broadcast(top.select("a", "b")))
+        .withColumn("s", F.expr(_APPLY_MERGE))
+        .select("word", "freq", "s")
     )
 
 
+def _bpe(
+    train: DataFrame, held: DataFrame | None = None
+) -> tuple[list[DataFrame], DataFrame, DataFrame | None]:
+    """The merge loop, learned on the ``train`` documents: _N_MERGES
+    rounds of count-pairs -> the tie-broken winner -> replace it into
+    every word. Each round's input type table is a superstep
+    (vocabulary-sized), so the chained lineage never recomputes the
+    history.
+
+    Returns ``(winners, train_symbols, held_symbols)``: each round's
+    1-row (a, b, cnt) frame, and the (word, freq, s) tables of ``train``
+    and of ``held`` (None without it) with every winner applied."""
+    symbols = _word_symbols(train)
+    held_symbols = None if held is None else _word_symbols(held)
+    winners = []
+    for _ in range(_N_MERGES):
+        symbols = _superstep(symbols)
+        top = (
+            _pair_counts(symbols)
+            .orderBy(F.col("cnt").desc(), "a", "b")
+            .limit(1)
+        )
+        winners.append(top)
+        symbols = _merge(symbols, top)
+        if held is not None:
+            held_symbols = _merge(held_symbols, top)
+    return winners, symbols, held_symbols
+
+
+def _tokenized(docs: DataFrame, symbols: DataFrame) -> DataFrame:
+    """(word, lang, n_sym): every word of ``docs`` with its symbol count
+    in the merged type table ``symbols``, attached as a broadcast."""
+    wtok = symbols.select(
+        "word", F.size(F.split(F.trim(F.col("s")), " ")).alias("n_sym")
+    )
+    return _words(docs, "lang").join(F.broadcast(wtok), "word")
+
+
 # ---------------------------------------------------------------------------
-# DuckDB oracle builders
+# The merge loop (DuckDB oracle twin)
 # ---------------------------------------------------------------------------
 
-_SQL_BASE = f"""
-    w AS (
-      SELECT unnest(regexp_extract_all(lower(text), '{_WORD_RE}')) AS word
-      FROM documents
-    ),
-    wf AS (SELECT word, COUNT(*) AS freq FROM w GROUP BY word),
-    s0 AS (
-      SELECT word, freq,
+
+def _words_sql(where: str) -> str:
+    """(lang, word) rows of ``documents WHERE where``: the twin of
+    :func:`_words`."""
+    return (
+        f"SELECT lang, unnest(regexp_extract_all(lower(text), '{_WORD_RE}'))"
+        f" AS word FROM documents WHERE {where}"
+    )
+
+
+def _bpe_sql(train_where: str, held_where: str | None = None) -> str:
+    """:func:`_bpe` unrolled into one WITH chain: ``s0``..``sN`` are the
+    train symbols after 0..N winners, ``pK`` round K's pair counts and
+    ``cK`` its winner; with ``held_where``, ``h0``..``hN`` are the
+    held-out symbols after 0..N train winners."""
+    chains = {"s": train_where}
+    if held_where is not None:
+        chains["h"] = held_where
+    parts = [
+        f"""{t}0 AS (
+      SELECT word, COUNT(*) AS freq,
              ' ' || array_to_string(regexp_extract_all(word, '.'), ' ')
                  || ' </w> ' AS s
-      FROM wf
+      FROM ({_words_sql(where)}) GROUP BY word
     )"""
-
-
-def _pairs_sql(sym_cte: str, name: str) -> str:
-    return f"""{name} AS (
+        for t, where in chains.items()
+    ]
+    for it in range(1, _N_MERGES + 1):
+        parts.append(f"""p{it} AS (
       SELECT p[1] AS a, p[2] AS b, CAST(SUM(freq) AS BIGINT) AS cnt
       FROM (
         SELECT freq,
                unnest(list_transform(range(1, len(syms)),
                                      i -> [syms[i], syms[i+1]])) AS p
-        FROM (
-          SELECT freq, string_split(trim(s), ' ') AS syms FROM {sym_cte}
-        )
+        FROM (SELECT freq, string_split(trim(s), ' ') AS syms FROM s{it - 1})
       )
       GROUP BY 1, 2
-    )"""
-
-
-_APPLY_MERGE_SQL = "s"
-for _ in range(3):
-    _APPLY_MERGE_SQL = (
-        f"replace({_APPLY_MERGE_SQL},"
-        " ' ' || a || ' ' || b || ' ', ' ' || a || b || ' ')"
-    )
-
-
-def _learn_sql() -> str:
-    parts = [_SQL_BASE]
-    for it in range(1, _N_MERGES + 1):
-        parts.append(_pairs_sql(f"s{it - 1}", f"p{it}"))
+    )""")
         parts.append(
             f"c{it} AS (SELECT a, b, cnt FROM p{it}"
             f" ORDER BY cnt DESC, a, b LIMIT 1)"
         )
-        if it < _N_MERGES:
-            parts.append(f"""s{it} AS (
-              SELECT word, freq, {_APPLY_MERGE_SQL} AS s
-              FROM s{it - 1} CROSS JOIN c{it}
-            )""")
-    ranks = "\nUNION ALL\n".join(
-        f"SELECT {it} AS merge_rank, a AS sym_a, b AS sym_b,"
-        f" a || b AS merged, cnt AS pair_count FROM c{it}"
-        for it in range(1, _N_MERGES + 1)
-    )
-    return "WITH " + ",\n".join(parts) + f"\nSELECT * FROM ({ranks}) ORDER BY merge_rank"
+        parts += [
+            f"{t}{it} AS (SELECT word, freq, {_APPLY_MERGE} AS s"
+            f" FROM {t}{it - 1} CROSS JOIN c{it})"
+            for t in chains
+        ]
+    return "WITH " + ",\n".join(parts)
+
+
+def _tokenized_sql(symbols: str, where: str) -> str:
+    """The ``tok`` CTE: the twin of :func:`_tokenized`."""
+    return f"""tok AS (
+      SELECT d.lang, d.word, len(string_split(trim(w.s), ' ')) AS n_sym
+      FROM ({_words_sql(where)}) d JOIN {symbols} w USING (word)
+    )"""
 
 
 # ---------------------------------------------------------------------------
@@ -188,8 +232,7 @@ def _learn_sql() -> str:
 @query(
     "bpe_pair_frequencies",
     oracle=f"""
-    WITH {_SQL_BASE.strip()},
-    {_pairs_sql('s0', 'p1')}
+    {_bpe_sql("TRUE")}
     SELECT a AS sym_a, b AS sym_b, cnt AS pair_count
     FROM p1
     ORDER BY pair_count DESC, sym_a, sym_b
@@ -202,9 +245,10 @@ def bpe_pair_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, weighted by word frequency -- the single-shot primitive the
     merge-learning loop iterates. Fully tie-broken top-k
     (TakeOrderedAndProject; the pair space is vocabulary-bounded)."""
-    pairs = _pair_counts(_word_symbols(spark, sf_dir))
+    docs = load_table(spark, sf_dir, "documents")
     return (
-        pairs.select(
+        _pair_counts(_word_symbols(docs))
+        .select(
             F.col("a").alias("sym_a"),
             F.col("b").alias("sym_b"),
             F.col("cnt").alias("pair_count"),
@@ -214,29 +258,30 @@ def bpe_pair_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_RANKS_SQL = "\nUNION ALL\n".join(
+    f"SELECT {it} AS merge_rank, a AS sym_a, b AS sym_b,"
+    f" a || b AS merged, cnt AS pair_count FROM c{it}"
+    for it in range(1, _N_MERGES + 1)
+)
+
+
 @query(
     "bpe_learn_merges",
-    oracle=_learn_sql(),
+    oracle=f"""
+    {_bpe_sql("TRUE")}
+    SELECT * FROM ({_RANKS_SQL}) ORDER BY merge_rank
+    """,
     tags=("llm-text", "llm-tokenizer"),
 )
 @_scoped
 def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Learn the first N BPE merges: N iterations of count-pairs ->
-    broadcast the tie-broken winner -> literal-replace it into every
-    word's symbol string. The oracle unrolls the identical N iterations
-    in SQL, so even this iterative training loop is hash-exact. The
-    per-iteration type table is a superstep (vocabulary-sized) so the
-    chained lineage doesn't recompute the whole history each round."""
-    symbols = _word_symbols(spark, sf_dir)
-    merges = []
-    for rank in range(1, _N_MERGES + 1):
-        symbols = _superstep(symbols)
-        top = (
-            _pair_counts(symbols)
-            .orderBy(F.col("cnt").desc(), "a", "b")
-            .limit(1)
-        )
-        merges.append(
+    """Learn the first N BPE merges (:func:`_bpe`) and report each
+    round's winner. The oracle unrolls the identical N iterations in
+    SQL, so even this iterative training loop is hash-exact."""
+    winners, _, _ = _bpe(load_table(spark, sf_dir, "documents"))
+    out = reduce(
+        DataFrame.unionAll,
+        [
             top.select(
                 F.lit(rank).alias("merge_rank"),
                 F.col("a").alias("sym_a"),
@@ -244,14 +289,9 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.concat("a", "b").alias("merged"),
                 F.col("cnt").alias("pair_count"),
             )
-        )
-        if rank < _N_MERGES:
-            symbols = (
-                symbols.crossJoin(F.broadcast(top.select("a", "b")))
-                .withColumn("s", F.expr(_APPLY_MERGE))
-                .select("word", "freq", "s")
-            )
-    out = reduce(DataFrame.unionAll, merges).orderBy("merge_rank")
+            for rank, top in enumerate(winners, start=1)
+        ],
+    ).orderBy("merge_rank")
     return _finalize(spark, out)
 
 
@@ -260,63 +300,20 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _merged_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(word, freq, s) after applying ALL _N_MERGES learned merges (the
-    learn loop applies only the first N-1 before selecting the Nth)."""
-    symbols = _word_symbols(spark, sf_dir)
-    for _ in range(_N_MERGES):
-        symbols = _superstep(symbols)
-        top = (
-            _pair_counts(symbols)
-            .orderBy(F.col("cnt").desc(), "a", "b")
-            .limit(1)
-        )
-        symbols = (
-            symbols.crossJoin(F.broadcast(top.select("a", "b")))
-            .withColumn("s", F.expr(_APPLY_MERGE))
-            .select("word", "freq", "s")
-        )
-    return symbols
-
-
-def _applied_sql() -> str:
-    """CTE chain ending in s{_N_MERGES}: symbols after ALL merges."""
-    parts = [_SQL_BASE]
-    for it in range(1, _N_MERGES + 1):
-        parts.append(_pairs_sql(f"s{it - 1}", f"p{it}"))
-        parts.append(
-            f"c{it} AS (SELECT a, b, cnt FROM p{it}"
-            f" ORDER BY cnt DESC, a, b LIMIT 1)"
-        )
-        parts.append(f"""s{it} AS (
-          SELECT word, freq, {_APPLY_MERGE_SQL} AS s
-          FROM s{it - 1} CROSS JOIN c{it}
-        )""")
-    return "WITH " + ",\n".join(parts)
-
-
 @query(
     "bpe_tokenize_corpus_stats",
     oracle=f"""
-    {_applied_sql()},
-    wtok AS (
-      SELECT word, len(string_split(trim(s), ' ')) AS n_sym
-      FROM s{_N_MERGES}
-    ),
-    docw AS (
-      SELECT lang,
-             unnest(regexp_extract_all(lower(text), '{_WORD_RE}')) AS word
-      FROM documents
-    )
-    SELECT d.lang,
+    {_bpe_sql("TRUE")},
+    {_tokenized_sql(f"s{_N_MERGES}", "TRUE")}
+    SELECT lang,
            COUNT(*) AS words,
-           CAST(SUM(w.n_sym) AS BIGINT) AS bpe_tokens,
-           CAST(SUM(length(d.word) + 1) AS BIGINT) AS char_tokens,
-           {dround_sql('CAST(SUM(w.n_sym) AS DOUBLE) / COUNT(*)', 4)}
+           CAST(SUM(n_sym) AS BIGINT) AS bpe_tokens,
+           CAST(SUM(length(word) + 1) AS BIGINT) AS char_tokens,
+           {dround_sql('CAST(SUM(n_sym) AS DOUBLE) / COUNT(*)', 4)}
              AS tokens_per_word
-    FROM docw d JOIN wtok w USING (word)
-    GROUP BY d.lang
-    ORDER BY d.lang
+    FROM tok
+    GROUP BY lang
+    ORDER BY lang
     """,
     tags=("llm-text", "llm-tokenizer"),
 )
@@ -330,20 +327,11 @@ def bpe_tokenize_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded words -- no per-document merge application, which is how a
     trained tokenizer is applied at 100 TB (the corpus join is the same
     word-keyed broadcast as the stratified sampler's rate table)."""
-    merged = _merged_symbols(spark, sf_dir)
-    wtok = merged.select(
-        "word", F.size(F.split(F.trim(F.col("s")), " ")).alias("n_sym")
-    )
     docs = load_table(spark, sf_dir, "documents")
-    docw = docs.select(
-        "lang",
-        F.explode(
-            F.expr(f"regexp_extract_all(lower(text), '{_WORD_RE}', 0)")
-        ).alias("word"),
-    )
+    _, merged, _ = _bpe(docs)
     return _finalize(
         spark,
-        docw.join(F.broadcast(wtok), "word")
+        _tokenized(docs, merged)
         .groupBy("lang")
         .agg(
             F.count("*").alias("words"),
@@ -366,71 +354,22 @@ def bpe_tokenize_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SPLIT_MOD = 10  # doc_id-hash split: residue 0 = held-out (10%)
-_SPLIT_HASH = "concat('split-', CAST(doc_id AS VARCHAR))"
-
-
-def _sql_base_where(where: str, w: str, wf: str, s0: str) -> str:
-    """Parameterized word-symbol CTE chain over a documents subset."""
-    return f"""
-    {w} AS (
-      SELECT unnest(regexp_extract_all(lower(text), '{_WORD_RE}')) AS word
-      FROM documents WHERE {where}
-    ),
-    {wf} AS (SELECT word, COUNT(*) AS freq FROM {w} GROUP BY word),
-    {s0} AS (
-      SELECT word, freq,
-             ' ' || array_to_string(regexp_extract_all(word, '.'), ' ')
-                 || ' </w> ' AS s
-      FROM {wf}
-    )"""
-
-
-def _heldout_sql() -> str:
-    """Train chain (winner per iteration) + held-out chain (application
-    of every train winner), unrolled."""
-    train = f"{md5_int60_sql(_SPLIT_HASH)} % {_SPLIT_MOD} <> 0"
-    held = f"{md5_int60_sql(_SPLIT_HASH)} % {_SPLIT_MOD} = 0"
-    parts = [
-        _sql_base_where(train, "w", "wf", "s0").strip(),
-        _sql_base_where(held, "hw", "hwf", "h0").strip(),
-    ]
-    for it in range(1, _N_MERGES + 1):
-        parts.append(_pairs_sql(f"s{it - 1}", f"p{it}"))
-        parts.append(
-            f"c{it} AS (SELECT a, b, cnt FROM p{it}"
-            f" ORDER BY cnt DESC, a, b LIMIT 1)"
-        )
-        parts.append(f"""s{it} AS (
-          SELECT word, freq, {_APPLY_MERGE_SQL} AS s
-          FROM s{it - 1} CROSS JOIN c{it}
-        )""")
-        parts.append(f"""h{it} AS (
-          SELECT word, freq, {_APPLY_MERGE_SQL} AS s
-          FROM h{it - 1} CROSS JOIN c{it}
-        )""")
-    return "WITH " + ",\n".join(parts)
+_SPLIT_SQL = md5_int60_sql(
+    "concat('split-', CAST(doc_id AS VARCHAR))"
+) + f" % {_SPLIT_MOD}"
 
 
 @query(
     "bpe_heldout_compression",
     oracle=f"""
-    {_heldout_sql()},
-    wtok AS (
-      SELECT word, len(string_split(trim(s), ' ')) AS n_sym
-      FROM h{_N_MERGES}
-    ),
-    docw AS (
-      SELECT lang,
-             unnest(regexp_extract_all(lower(text), '{_WORD_RE}')) AS word
-      FROM documents
-      WHERE {md5_int60_sql(_SPLIT_HASH)} % {_SPLIT_MOD} = 0
-    )
+    {_bpe_sql(f"{_SPLIT_SQL} <> 0", f"{_SPLIT_SQL} = 0")},
+    {_tokenized_sql(f"h{_N_MERGES}", f"{_SPLIT_SQL} = 0")}
     SELECT lang,
            COUNT(*) AS words,
            CAST(SUM(n_sym) AS BIGINT) AS bpe_tokens,
            {dround_sql('CAST(SUM(n_sym) AS DOUBLE) / COUNT(*)', 4)}
              AS tokens_per_word
-    FROM docw JOIN wtok USING (word)
+    FROM tok
     GROUP BY lang
     ORDER BY lang
     """,
@@ -441,53 +380,21 @@ def bpe_heldout_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize HELD-OUT documents with merges learned on the TRAIN
     split only: per-language held-out compression (BPE tokens per word).
     The deterministic md5 doc split makes train/test membership
-    reproducible; the train loop is the same vocabulary-bounded
-    iteration as bpe_learn_merges, and each winning pair is applied to
-    BOTH symbol tables via 1-row broadcasts. The oracle unrolls the
-    twin chains, so train/test discipline itself is hash-checked.
-    Scale: the held-out chain is type-table-sized like the train chain;
-    the corpus passes are one tokenize per split."""
-    from ..functions import md5_int60
-
+    reproducible; the train loop is :func:`_bpe`, which applies each
+    winning pair to BOTH symbol tables via 1-row broadcasts. The oracle
+    unrolls the twin chains, so train/test discipline itself is
+    hash-checked. Scale: the held-out chain is type-table-sized like
+    the train chain; the corpus passes are one tokenize per split."""
     docs = load_table(spark, sf_dir, "documents")
     split = (
         md5_int60(F.concat(F.lit("split-"), F.col("doc_id").cast("string")))
         % _SPLIT_MOD
     )
-    train_docs = docs.filter(split != 0)
     held_docs = docs.filter(split == 0)
-    sym_t = _word_symbols_from(train_docs)
-    sym_h = _word_symbols_from(held_docs)
-    for _ in range(_N_MERGES):
-        sym_t = _superstep(sym_t)
-        top = (
-            _pair_counts(sym_t)
-            .orderBy(F.col("cnt").desc(), "a", "b")
-            .limit(1)
-            .select("a", "b")
-        )
-        sym_t = (
-            sym_t.crossJoin(F.broadcast(top))
-            .withColumn("s", F.expr(_APPLY_MERGE))
-            .select("word", "freq", "s")
-        )
-        sym_h = (
-            sym_h.crossJoin(F.broadcast(top))
-            .withColumn("s", F.expr(_APPLY_MERGE))
-            .select("word", "freq", "s")
-        )
-    wtok = sym_h.select(
-        "word", F.size(F.split(F.trim(F.col("s")), " ")).alias("n_sym")
-    )
-    docw = held_docs.select(
-        "lang",
-        F.explode(
-            F.expr(f"regexp_extract_all(lower(text), '{_WORD_RE}', 0)")
-        ).alias("word"),
-    )
+    _, _, held = _bpe(docs.filter(split != 0), held_docs)
     return _finalize(
         spark,
-        docw.join(F.broadcast(wtok), "word")
+        _tokenized(held_docs, held)
         .groupBy("lang")
         .agg(
             F.count("*").alias("words"),

@@ -118,8 +118,11 @@ def read_cdc_state(
     if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
         paths.append(state_dir)
     if _has_deltas(state_dir):
-        # Globbed: a read rooted at a `_` dir is ignored as hidden.
-        paths.append(os.path.join(_delta_dir(state_dir), "*"))
+        # Each batch dir by name: a read rooted at a `_` dir is ignored
+        # as hidden, and a glob that is the read's only path makes Spark
+        # stat it for a streaming-sink metadata dir and log a warning.
+        delta = _delta_dir(state_dir)
+        paths += [os.path.join(delta, b) for b in sorted(os.listdir(delta))]
     events = spark.read.schema(CDC_EVENT_SCHEMA).parquet(*paths)
     return apply_cdc_upsert(events, keep_tombstones=keep_tombstones)
 
@@ -427,7 +430,7 @@ def _write_new_fingerprints(rows: DataFrame, sink_dir: str, batch_id: int) -> No
     # backfill-sized batch keeps ~64 MB-per-task granularity and fans
     # the write across the cluster. Multi-file partitions replay like
     # single-file ones because the whole batch=<id> dir is deleted first
-    # (pinned by test_dedup_index_backfill_batch_writes_multiple_files).
+    # (pinned by test_fp_sink_backfill_batch_writes_multiple_files).
     fresh.write.mode("overwrite").parquet(own_part)
 
 
@@ -436,7 +439,6 @@ def run_corpus_ingest_stream(
     docs_dir: str,
     corpus_dir: str,
     checkpoint_dir: str,
-    n_shards: int = 8,
 ) -> None:
     """Streaming corpus ingestion: the corpus_build_pipeline front half
     (quality filter -> exact dedup -> shard assignment) run
@@ -453,46 +455,37 @@ def run_corpus_ingest_stream(
     partitioned sink). The accumulated corpus is then directly readable
     for the packing/mix stages.
 
-    Quality thresholds and the shard hash are the corpus_build_pipeline
-    constants, so streamed ingestion converges to the same corpus the
-    batch build would produce from the same documents — exactly, when
-    duplicates arrive in doc_id order (crawl dumps ship id-ordered);
-    under arbitrary arrival order keep-first retains the first-ARRIVED
-    representative instead of the lowest id, which changes the kept
-    doc_id but never the fingerprint set."""
+    The quality gate (``operators.text._quality_keep``) and the shard
+    (``operators.sampling._pack_shard``) are the ones
+    corpus_build_pipeline composes, so streamed ingestion converges to
+    the same corpus the batch build would produce from the same
+    documents — exactly, when duplicates arrive in doc_id order (crawl
+    dumps ship id-ordered); under arbitrary arrival order keep-first
+    retains the first-ARRIVED representative instead of the lowest id,
+    which changes the kept doc_id but never the fingerprint set."""
     def body(batch: DataFrame, batch_id: int) -> None:
-        _corpus_ingest_body(corpus_dir, n_shards, batch, batch_id)
+        _corpus_ingest_body(corpus_dir, batch, batch_id)
 
     stream = _file_stream(spark, DOC_STREAM_SCHEMA, docs_dir)
     _drain(stream.writeStream.foreachBatch(body), checkpoint_dir)
 
 
 def _corpus_ingest_body(
-    corpus_dir: str, n_shards: int, batch: DataFrame, batch_id: int
+    corpus_dir: str, batch: DataFrame, batch_id: int
 ) -> None:
     """The foreachBatch body of :func:`run_corpus_ingest_stream`,
-    module-level so the chaos tests exercise the real code path."""
-    from ..functions import md5_int60, norm_text, tokens
+    module-level so the chaos tests exercise the real code path: the
+    shared quality gate and pack shard, then the fingerprint sink."""
+    from ..functions import norm_text, tokens
+    from ..operators.sampling import _pack_shard
+    from ..operators.text import _punct_ratio, _quality_keep
 
-    toks = tokens(F.col("text"))
-    n_tokens = F.size(toks)
-    n_punct = F.length(F.regexp_replace("text", "[^.!?,;:]", ""))
-    punct_ratio = n_punct.cast("double") / F.when(
-        F.length("text") == 0, F.lit(None)
-    ).otherwise(F.length("text"))
-    shard = (
-        md5_int60(
-            F.concat(F.lit("pack-"), F.col("doc_id").cast("string"))
-        )
-        % n_shards
-    ).cast("long")
-    rows = batch.filter(
-        (n_tokens >= 5) & (n_tokens <= 10000) & (punct_ratio < 0.2)
-    ).select(
+    n_tokens = F.size(tokens(F.col("text")))
+    rows = batch.filter(_quality_keep(n_tokens, _punct_ratio())).select(
         "doc_id",
         "source",
         n_tokens.cast("long").alias("n_toks"),
-        shard.alias("shard"),
+        _pack_shard().alias("shard"),
         F.md5(norm_text(F.col("text"))).alias("fp"),
     )
     _write_new_fingerprints(rows, corpus_dir, batch_id)

@@ -902,6 +902,9 @@ def test_bpe_iteration_frames_are_vocabulary_sized(spark, sf_dir, monkeypatch):
     checkpointed symbols), and each per-iteration winner attaches as a
     1-row broadcast (BNLJ), never a corpus-shuffling join."""
     from apache_iceberg_with_clickhouse_olake_spark.operators import tokenizer
+    from apache_iceberg_with_clickhouse_olake_spark.sources.parquet import (
+        load_table,
+    )
 
     real = tokenizer._superstep
     rounds = []
@@ -912,7 +915,8 @@ def test_bpe_iteration_frames_are_vocabulary_sized(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(tokenizer, "_superstep", recording_superstep)
     with cache_scope():
-        plan = physical_plan(tokenizer._merged_symbols(spark, sf_dir))
+        docs = load_table(spark, sf_dir, "documents")
+        plan = physical_plan(tokenizer._bpe(docs)[1])
     # every round's input is cut; from round 2 on it is the previous
     # round's checkpointed type table with the winner broadcast-joined
     assert len(rounds) == tokenizer._N_MERGES, len(rounds)

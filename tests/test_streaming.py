@@ -15,8 +15,13 @@ from apache_iceberg_with_clickhouse_olake_spark.operators.cdc import (
 )
 from apache_iceberg_with_clickhouse_olake_spark.sources.parquet import load_table
 from apache_iceberg_with_clickhouse_olake_spark.streaming import (
+    DOC_STREAM_SCHEMA,
+    _corpus_ingest_body,
+    _dedup_index_body,
     read_cdc_state,
     run_cdc_upsert_stream,
+    run_corpus_ingest_stream,
+    run_incremental_dedup_stream,
     run_streaming_sessionization,
 )
 
@@ -528,6 +533,46 @@ def test_incremental_dedup_stream_crash_replay_is_idempotent(
     assert _rows(got, ["fp", "doc_id"]) == _rows(want, ["fp", "doc_id"])
 
 
+def _stage_docs(spark, sf_dir, tmp_path, n_docs, chunks):
+    """Documents with doc_id < n_docs, staged under ``tmp_path/docs`` as
+    one parquet file per [lo, hi) doc_id chunk (one micro-batch each)."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < n_docs)
+        .select("doc_id", "text", "source")
+    )
+    docs_dir = str(tmp_path / "docs")
+    for lo, hi in chunks:
+        docs.filter(
+            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
+        ).coalesce(1).write.mode("append").parquet(docs_dir)
+    return docs, docs_dir
+
+
+def _fp_first(docs):
+    """(fp, doc_id): each fingerprint of ``docs`` once, lowest doc_id."""
+    from apache_iceberg_with_clickhouse_olake_spark.functions import norm_text
+
+    return (
+        docs.select("doc_id", F.md5(norm_text(F.col("text"))).alias("fp"))
+        .groupBy("fp")
+        .agg(F.min("doc_id").alias("doc_id"))
+    )
+
+
+def _quality_kept(docs):
+    """The docs the corpus layer's shared quality gate keeps."""
+    from apache_iceberg_with_clickhouse_olake_spark.functions import tokens
+    from apache_iceberg_with_clickhouse_olake_spark.operators.text import (
+        _punct_ratio,
+        _quality_keep,
+    )
+
+    return docs.filter(
+        _quality_keep(F.size(tokens(F.col("text"))), _punct_ratio())
+    )
+
+
 def test_corpus_ingest_stream_converges_to_batch_build(
     spark, sf_dir, tmp_path
 ):
@@ -537,58 +582,33 @@ def test_corpus_ingest_stream_converges_to_batch_build(
     counts, no duplicate fingerprints — and a checkpointed restart must
     not grow it."""
     from apache_iceberg_with_clickhouse_olake_spark.functions import (
-        md5_int60,
         norm_text,
         tokens,
     )
-    from apache_iceberg_with_clickhouse_olake_spark.streaming import (
-        run_corpus_ingest_stream,
+    from apache_iceberg_with_clickhouse_olake_spark.operators.sampling import (
+        _pack_shard,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 400)
-        .select("doc_id", "text", "source")
+    docs, docs_dir = _stage_docs(
+        spark, sf_dir, tmp_path, 400, ((0, 150), (100, 300), (250, 400))
     )
-    docs_dir = str(tmp_path / "docs")
-    for cond in [
-        F.col("doc_id") < 150,
-        (F.col("doc_id") >= 100) & (F.col("doc_id") < 300),
-        F.col("doc_id") >= 250,
-    ]:
-        docs.filter(cond).coalesce(1).write.mode("append").parquet(docs_dir)
-
     corpus_dir = str(tmp_path / "corpus")
     ckpt = str(tmp_path / "ckpt")
     run_corpus_ingest_stream(spark, docs_dir, corpus_dir, ckpt)
 
     got = spark.read.parquet(corpus_dir)
-    # batch twin: quality filter -> keep-first dedup -> shard
-    toks = tokens(F.col("text"))
-    n_tokens = F.size(toks)
-    n_punct = F.length(F.regexp_replace("text", "[^.!?,;:]", ""))
-    punct_ratio = n_punct.cast("double") / F.when(
-        F.length("text") == 0, F.lit(None)
-    ).otherwise(F.length("text"))
+    # batch twin: the shared quality gate -> keep-first dedup -> the
+    # shared pack shard
     from pyspark.sql import Window
 
     w = Window.partitionBy("fp").orderBy("doc_id")
     want = (
-        docs.filter(
-            (n_tokens >= 5) & (n_tokens <= 10000) & (punct_ratio < 0.2)
-        )
+        _quality_kept(docs)
         .select(
             "doc_id",
             "source",
-            n_tokens.cast("long").alias("n_toks"),
-            (
-                md5_int60(
-                    F.concat(
-                        F.lit("pack-"), F.col("doc_id").cast("string")
-                    )
-                )
-                % 8
-            ).cast("long").alias("shard"),
+            F.size(tokens(F.col("text"))).cast("long").alias("n_toks"),
+            _pack_shard().alias("shard"),
             F.md5(norm_text(F.col("text"))).alias("fp"),
         )
         .withColumn("rn", F.row_number().over(w))
@@ -603,34 +623,40 @@ def test_corpus_ingest_stream_converges_to_batch_build(
     assert spark.read.parquet(corpus_dir).count() == want.count()
 
 
-def test_incremental_dedup_stream_torn_write_recovers(
-    spark, sf_dir, tmp_path
-):
+# The two fingerprint-sink streams share their chaos and write-shape
+# contracts: (runner, foreachBatch body, docs the sink indexes, staged
+# doc range, chunks).
+_FP_SINKS = {
+    "dedup_index": (
+        run_incremental_dedup_stream,
+        _dedup_index_body,
+        lambda docs: docs,
+        200,
+        ((0, 80), (40, 150), (120, 200)),
+    ),
+    "corpus_ingest": (
+        run_corpus_ingest_stream,
+        _corpus_ingest_body,
+        _quality_kept,
+        400,
+        ((0, 150), (100, 300), (250, 400)),
+    ),
+}
+
+
+@pytest.mark.parametrize("sink", list(_FP_SINKS))
+def test_fp_sink_torn_write_recovers(spark, sf_dir, tmp_path, sink):
     """Chaos twin for the kill the r5 ADVICE flagged as untested: the
     process dies MID-parquet-write, leaving a TORN file (garbage bytes,
     unreadable footer) in the uncommitted batch partition — not the
     complete-file crash the existing replay test injects. The restart
     must not wedge on schema inference/footer listing touching the
     corrupt sibling: the body deletes its own batch=<id> partition
-    before reading the index, so the replay sees only committed
+    before reading the sink, so the replay sees only committed
     partitions and converges to the batch oracle."""
-    from apache_iceberg_with_clickhouse_olake_spark.functions import norm_text
-    from apache_iceberg_with_clickhouse_olake_spark.streaming import (
-        run_incremental_dedup_stream,
-    )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 200)
-        .select("doc_id", "text", "source")
-    )
-    docs_dir = str(tmp_path / "docs")
-    for cond in [F.col("doc_id") < 80, (F.col("doc_id") >= 40) & (
-        F.col("doc_id") < 150
-    ), F.col("doc_id") >= 120]:
-        docs.filter(cond).coalesce(1).write.mode("append").parquet(docs_dir)
-
-    index_dir = str(tmp_path / "index")
+    run, body, indexed, n_docs, chunks = _FP_SINKS[sink]
+    docs, docs_dir = _stage_docs(spark, sf_dir, tmp_path, n_docs, chunks)
+    sink_dir = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
 
     # First pass: batch 0 commits normally; the process "dies" MID-WRITE
@@ -640,13 +666,9 @@ def test_incremental_dedup_stream_torn_write_recovers(
     # earlier batches are always committed before a later batch starts
     # writing.
     ran = []
-    torn_dir = os.path.join(index_dir, "batch=1")
+    torn_dir = os.path.join(sink_dir, "batch=1")
 
     def poisoned(batch, batch_id):
-        from apache_iceberg_with_clickhouse_olake_spark.streaming import (
-            _dedup_index_body,
-        )
-
         if batch_id == 1 and not os.path.isdir(torn_dir):
             os.makedirs(torn_dir)
             with open(
@@ -654,12 +676,8 @@ def test_incremental_dedup_stream_torn_write_recovers(
             ) as f:
                 f.write(b"PAR1\x00\x13\x37garbage-not-a-footer")
             raise RuntimeError("injected kill mid-write of batch 1")
-        _dedup_index_body(index_dir, batch, batch_id)
+        body(sink_dir, batch, batch_id)
         ran.append(batch_id)
-
-    from apache_iceberg_with_clickhouse_olake_spark.streaming import (
-        DOC_STREAM_SCHEMA,
-    )
 
     q = (
         spark.readStream.schema(DOC_STREAM_SCHEMA)
@@ -670,9 +688,7 @@ def test_incremental_dedup_stream_torn_write_recovers(
         .trigger(availableNow=True)
         .start()
     )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
+    with pytest.raises(Exception):
         q.awaitTermination()
     assert ran == [0]
     # danger window proven: torn partition exists, batch 1 uncommitted
@@ -680,101 +696,18 @@ def test_incremental_dedup_stream_torn_write_recovers(
 
     # Restart: must read past the torn partition, rewrite batch=1, and
     # converge to the batch oracle with no duplicate fingerprints.
-    run_incremental_dedup_stream(spark, docs_dir, index_dir, ckpt)
-    got = spark.read.parquet(index_dir)
-    want = (
-        docs.select("doc_id", F.md5(norm_text(F.col("text"))).alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
+    run(spark, docs_dir, sink_dir, ckpt)
+    got = spark.read.parquet(sink_dir)
+    want = _fp_first(indexed(docs))
     assert got.groupBy("fp").count().filter("count > 1").count() == 0
     assert _rows(got, ["fp", "doc_id"]) == _rows(want, ["fp", "doc_id"])
 
 
-def test_corpus_ingest_stream_torn_write_recovers(spark, sf_dir, tmp_path):
-    """Same torn-write chaos twin as the dedup index, for the corpus
-    ingest stream: batch 0 commits, the process dies mid-write of
-    batch 1 leaving a garbage parquet file in its partition, and the
-    restart must converge to the batch-build corpus instead of wedging
-    on the torn footer."""
-    from apache_iceberg_with_clickhouse_olake_spark.streaming import (
-        DOC_STREAM_SCHEMA,
-        _corpus_ingest_body,
-        run_corpus_ingest_stream,
-    )
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 400)
-        .select("doc_id", "text", "source")
-    )
-    docs_dir = str(tmp_path / "docs")
-    for cond in [
-        F.col("doc_id") < 150,
-        (F.col("doc_id") >= 100) & (F.col("doc_id") < 300),
-        F.col("doc_id") >= 250,
-    ]:
-        docs.filter(cond).coalesce(1).write.mode("append").parquet(docs_dir)
-
-    corpus_dir = str(tmp_path / "corpus")
-    ckpt = str(tmp_path / "ckpt")
-    torn_dir = os.path.join(corpus_dir, "batch=1")
-
-    def poisoned(batch, batch_id):
-        if batch_id == 1 and not os.path.isdir(torn_dir):
-            os.makedirs(torn_dir)
-            with open(
-                os.path.join(torn_dir, "part-torn.snappy.parquet"), "wb"
-            ) as f:
-                f.write(b"PAR1\x00\x13\x37garbage-not-a-footer")
-            raise RuntimeError("injected kill mid-write of batch 1")
-        _corpus_ingest_body(corpus_dir, 8, batch, batch_id)
-
-    q = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-        .writeStream.foreachBatch(poisoned)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        q.awaitTermination()
-    assert os.path.exists(os.path.join(torn_dir, "part-torn.snappy.parquet"))
-
-    run_corpus_ingest_stream(spark, docs_dir, corpus_dir, ckpt)
-    got = spark.read.parquet(corpus_dir)
-    # converges: no duplicate fingerprints, same fingerprint set as the
-    # batch twin (reuse the convergence test's oracle shape)
-    from apache_iceberg_with_clickhouse_olake_spark.functions import (
-        norm_text,
-        tokens,
-    )
-
-    toks = tokens(F.col("text"))
-    n_tokens = F.size(toks)
-    n_punct = F.length(F.regexp_replace("text", "[^.!?,;:]", ""))
-    punct_ratio = n_punct.cast("double") / F.when(
-        F.length("text") == 0, F.lit(None)
-    ).otherwise(F.length("text"))
-    want_fps = (
-        docs.filter(
-            (n_tokens >= 5) & (n_tokens <= 10000) & (punct_ratio < 0.2)
-        )
-        .select(F.md5(norm_text(F.col("text"))).alias("fp"))
-        .distinct()
-    )
-    assert got.groupBy("fp").count().filter("count > 1").count() == 0
-    assert _rows(got.select("fp"), ["fp"]) == _rows(want_fps, ["fp"])
-
-
-def test_dedup_index_backfill_batch_writes_multiple_files(
-    spark, sf_dir, tmp_path
+@pytest.mark.parametrize("sink", list(_FP_SINKS))
+def test_fp_sink_backfill_batch_writes_multiple_files(
+    spark, sf_dir, tmp_path, sink
 ):
-    """The r7 departition of the index write: the batch's fp-hash
+    """The departition of the sink write: the batch's fp-hash
     partitioning flows into the sink and AQE sizes it by bytes, so a
     trickle batch coalesces to one file while a backfill-sized batch
     fans across tasks instead of serializing through one core (the r6
@@ -786,20 +719,16 @@ def test_dedup_index_backfill_batch_writes_multiple_files(
     The streaming-trigger tests all ride maxFilesPerTrigger=1
     single-partition batches, so without this test the multi-file
     branch would ship driver-unexercised."""
-    from apache_iceberg_with_clickhouse_olake_spark.functions import norm_text
-    from apache_iceberg_with_clickhouse_olake_spark.streaming import (
-        _dedup_index_body,
-    )
-
-    index_dir = str(tmp_path / "index")
+    _, body, indexed, _, _ = _FP_SINKS[sink]
+    sink_dir = str(tmp_path / "sink")
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text", "source")
     )
     # batch 0: a committed trickle batch -> AQE coalesces to one file
     trickle = docs.filter(F.col("doc_id") < 40).repartition(1)
-    _dedup_index_body(index_dir, trickle, 0)
-    part0 = os.path.join(index_dir, "batch=0")
+    body(sink_dir, trickle, 0)
+    part0 = os.path.join(sink_dir, "batch=0")
     files0 = [f for f in os.listdir(part0) if f.endswith(".parquet")]
     assert len(files0) == 1, "trickle batch should still land one file"
 
@@ -817,7 +746,7 @@ def test_dedup_index_backfill_batch_writes_multiple_files(
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize", "1024"
         )
-        _dedup_index_body(index_dir, backfill, 1)
+        body(sink_dir, backfill, 1)
     finally:
         spark.conf.set(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory
@@ -825,92 +754,27 @@ def test_dedup_index_backfill_batch_writes_multiple_files(
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize", min_size
         )
-    part1 = os.path.join(index_dir, "batch=1")
+    part1 = os.path.join(sink_dir, "batch=1")
     files1 = [f for f in os.listdir(part1) if f.endswith(".parquet")]
     assert len(files1) > 1, (
         f"backfill batch wrote {len(files1)} file(s); the fp-keyed "
         "write should fan out once the batch outgrows the advisory size"
     )
 
-    # Index correctness with the multi-file partition in place: each
-    # distinct fingerprint exactly once, first-seen doc_id wins.
-    got = spark.read.parquet(index_dir)
-    want = (
-        docs.select("doc_id", F.md5(norm_text(F.col("text"))).alias("fp"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
+    # Sink correctness with the multi-file partition in place: each
+    # fingerprint exactly once across batches (anti-join + in-batch
+    # keep-first), first-seen (= lowest) doc_id wins.
+    got = spark.read.parquet(sink_dir)
+    want = _fp_first(indexed(docs))
     assert got.groupBy("fp").count().filter("count > 1").count() == 0
     assert _rows(got, ["fp", "doc_id"]) == _rows(want, ["fp", "doc_id"])
 
     # Replay of the multi-file batch (crash-after-write, before-commit):
     # content must be byte-identical in effect — same rows, still no
     # duplicated fingerprints.
-    before = _rows(spark.read.parquet(index_dir), ["fp", "doc_id"])
-    _dedup_index_body(index_dir, backfill, 1)
-    after = _rows(spark.read.parquet(index_dir), ["fp", "doc_id"])
-    assert before == after
-
-
-def test_corpus_ingest_backfill_batch_writes_multiple_files(
-    spark, sf_dir, tmp_path
-):
-    """r9 departition of the CORPUS ingest write (the r8 VERDICT's one
-    remaining scale wart): same contract as the dedup-index twin above
-    — a trickle batch still lands one file, a backfill-sized batch fans
-    its corpus write across tasks via the fp partitioning + AQE byte
-    sizing instead of serializing through coalesce(1), and a replay of
-    the multi-file batch overwrites to identical content."""
-    from apache_iceberg_with_clickhouse_olake_spark.streaming import (
-        _corpus_ingest_body,
-    )
-
-    corpus_dir = str(tmp_path / "corpus")
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text", "source")
-    )
-    trickle = docs.filter(F.col("doc_id") < 40).repartition(1)
-    _corpus_ingest_body(corpus_dir, 8, trickle, 0)
-    part0 = os.path.join(corpus_dir, "batch=0")
-    files0 = [f for f in os.listdir(part0) if f.endswith(".parquet")]
-    assert len(files0) == 1, "trickle batch should still land one file"
-
-    advisory = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    min_size = spark.conf.get(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    )
-    backfill = docs.filter(F.col("doc_id") >= 20).repartition(8)
-    try:
-        spark.conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "4096"
-        )
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize", "1024"
-        )
-        _corpus_ingest_body(corpus_dir, 8, backfill, 1)
-    finally:
-        spark.conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory
-        )
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize", min_size
-        )
-    part1 = os.path.join(corpus_dir, "batch=1")
-    files1 = [f for f in os.listdir(part1) if f.endswith(".parquet")]
-    assert len(files1) > 1, (
-        f"backfill batch wrote {len(files1)} file(s); the fp-keyed "
-        "write should fan out once the batch outgrows the advisory size"
-    )
-
-    # Corpus correctness with the multi-file partition in place: each
-    # fingerprint exactly once across batches (anti-join + in-batch
-    # keep-first), and a replay converges to identical content.
-    got = spark.read.parquet(corpus_dir)
-    assert got.groupBy("fp").count().filter("count > 1").count() == 0
-    before = _rows(got, ["fp", "doc_id"])
-    _corpus_ingest_body(corpus_dir, 8, backfill, 1)
-    after = _rows(spark.read.parquet(corpus_dir), ["fp", "doc_id"])
+    before = _rows(spark.read.parquet(sink_dir), ["fp", "doc_id"])
+    body(sink_dir, backfill, 1)
+    after = _rows(spark.read.parquet(sink_dir), ["fp", "doc_id"])
     assert before == after
 
 
