@@ -1262,10 +1262,11 @@ _SALT_BUCKETS = 8
 def salted_status_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage salted aggregation over a deliberately skewed key
     (3 statuses for the whole table): stage 1 groups by (status, salt)
-    spreading each hot key over {8} reducers, stage 2 merges the partials.
-    Same answer as the plain groupBy (the oracle), but no reducer ever
-    holds a full hot key -- the manual fallback when AQE skew handling
-    can't apply (e.g. aggregations, which AQE skew-join doesn't cover).
+    spreading each hot key over _SALT_BUCKETS (8) reducers, stage 2
+    merges the partials. Same answer as the plain groupBy (the oracle),
+    but no reducer ever holds a full hot key -- the manual fallback when
+    AQE skew handling can't apply (e.g. aggregations, which AQE skew-join
+    doesn't cover).
     Salt is derived from o_orderkey, not rand(), so the plan stays
     deterministic and retry-safe."""
     orders = load_table(spark, sf_dir, "orders")
@@ -1308,10 +1309,11 @@ _JOIN_SALT = 4
 def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Salted shuffle join: the manual hot-key defense for fact-dim joins
     where the dim is too big to broadcast and one join key dominates.
-    Facts get a deterministic salt (orderkey % {4}); the dim side is
-    replicated once per salt value via explode(sequence(...)); the join
-    key becomes (custkey, _salt), spreading each hot key's rows over {4}
-    reducers instead of one. The oracle is the UNSALTED join -- salting
+    Facts get a deterministic salt (orderkey % _JOIN_SALT, i.e. % 4);
+    the dim side is replicated once per salt value via
+    explode(sequence(...)); the join key becomes (custkey, _salt),
+    spreading each hot key's rows over _JOIN_SALT reducers instead of
+    one. The oracle is the UNSALTED join -- salting
     must be answer-invariant, which is exactly what the driver hash
     checks. At 100 TB prefer AQE skew-join splitting when it applies
     (sort-merge joins, post-shuffle); this operator is the fallback for
@@ -1349,6 +1351,23 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Mergeable HLL sketches: the scale path for re-aggregable distincts
 # ---------------------------------------------------------------------------
 
+def _hll_monthly_users(events: DataFrame) -> DataFrame:
+    """Per-day HLL sketches of user_id UNIONED up to 30-day month buckets
+    (unsorted): month_bucket, approx_users, n_events, days_merged."""
+    day = F.expr("unix_micros(ts) div 86400000000").alias("day")
+    daily = events.select(day, "user_id").groupBy("day").agg(
+        F.hll_sketch_agg("user_id").alias("sketch"),
+        F.count("*").alias("n_events"),
+    )
+    return daily.groupBy(
+        (F.col("day") / 30).cast("int").alias("month_bucket")
+    ).agg(
+        F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("approx_users"),
+        F.sum("n_events").alias("n_events"),
+        F.count("*").alias("days_merged"),
+    )
+
+
 @query(
     "daily_users_hll_reagg",
     oracle="""
@@ -1382,31 +1401,20 @@ def daily_users_hll_reagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     fails the value hash."""
     events = load_table(spark, sf_dir, "events")
     day = F.expr("unix_micros(ts) div 86400000000").alias("day")
-    daily = events.select(day, "user_id").groupBy("day").agg(
-        F.hll_sketch_agg("user_id").alias("sketch"),
-        F.count("*").alias("n_events"),
-    )
-    monthly = daily.groupBy(
-        (F.col("day") / 30).cast("int").alias("month_bucket")
-    ).agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("_approx"),
-        F.sum("n_events").alias("n_events"),
-        F.count("*").alias("days_merged"),
-    )
     exact = (
         events.select(day, "user_id")
         .groupBy((F.col("day") / 30).cast("int").alias("month_bucket"))
         .agg(F.countDistinct("user_id").alias("exact_users"))
     )
     return (
-        monthly.join(exact, "month_bucket")
+        _hll_monthly_users(events).join(exact, "month_bucket")
         .select(
             "month_bucket",
             "n_events",
             "days_merged",
             "exact_users",
             (
-                F.abs(F.col("_approx") - F.col("exact_users"))
+                F.abs(F.col("approx_users") - F.col("exact_users"))
                 / F.col("exact_users").cast("double")
                 <= _APPROX_REL_ERR
             ).alias("within_bound"),
@@ -1423,24 +1431,9 @@ def daily_users_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     query keeps the exact join as its verification harness; this one is
     structurally pinned instead (tests/test_plans.py: hll_union_agg
     present, no exact distinct) and bounds-checked against the exact
-    variant in tests/test_analytics.py."""
+    variant in tests/test_scale_techniques.py."""
     events = load_table(spark, sf_dir, "events")
-    day = F.expr("unix_micros(ts) div 86400000000").alias("day")
-    daily = events.select(day, "user_id").groupBy("day").agg(
-        F.hll_sketch_agg("user_id").alias("sketch"),
-        F.count("*").alias("n_events"),
-    )
-    return (
-        daily.groupBy((F.col("day") / 30).cast("int").alias("month_bucket"))
-        .agg(
-            F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias(
-                "approx_users"
-            ),
-            F.sum("n_events").alias("n_events"),
-            F.count("*").alias("days_merged"),
-        )
-        .orderBy("month_bucket")
-    )
+    return _hll_monthly_users(events).orderBy("month_bucket")
 
 
 # ---------------------------------------------------------------------------

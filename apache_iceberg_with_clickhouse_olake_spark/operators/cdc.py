@@ -124,6 +124,36 @@ def apply_cdc_upsert(events: DataFrame, key_cols: tuple[str, ...] = ("key",),
     return latest if keep_tombstones else latest.filter(F.col("_op") != "d")
 
 
+def _latest_sql(events_sql: str, cols: str) -> str:
+    """SQL twin of :func:`apply_cdc_upsert`: ``cols`` of the latest event
+    per key of ``events_sql``, deletes dropped."""
+    return f"""
+    SELECT {cols} FROM ({events_sql})
+    QUALIFY row_number() OVER (PARTITION BY key ORDER BY _seq DESC) = 1
+      AND _op != 'd'
+    """
+
+
+def state_rollup(state: DataFrame) -> DataFrame:
+    """Live-state rollup of a CDC state: row count, distinct customers
+    and revenue."""
+    return state.agg(
+        F.count("*").alias("live_rows"),
+        F.countDistinct("custkey").alias("live_customers"),
+        dsum("price", "live_revenue"),
+    )
+
+
+# The oracle of every op that rolls up the state the full change stream
+# leaves: state_rollup over the merge-on-read apply.
+_STATE_ROLLUP_SQL = f"""
+    SELECT COUNT(*) AS live_rows,
+           COUNT(DISTINCT custkey) AS live_customers,
+           {dsum_sql('price')} AS live_revenue
+    FROM ({_latest_sql(_EVENTS_SQL, 'custkey, price')})
+"""
+
+
 @query(
     "cdc_change_log",
     oracle=f"""
@@ -159,12 +189,9 @@ def cdc_change_log(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cdc_upsert_state",
-    oracle=f"""
-    SELECT key, custkey, price, _op, _seq, _sync_ts_epoch
-    FROM ({_EVENTS_WITH_TS_SQL})
-    QUALIFY row_number() OVER (PARTITION BY key ORDER BY _seq DESC) = 1
-      AND _op != 'd'
-    """,
+    oracle=_latest_sql(
+        _EVENTS_WITH_TS_SQL, "key, custkey, price, _op, _seq, _sync_ts_epoch"
+    ),
     tags=("C4", "D6", "D9"),
 )
 def cdc_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,29 +202,9 @@ def cdc_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return apply_cdc_upsert(synthetic_change_events(orders))
 
 
-@query(
-    "cdc_state_rollup",
-    oracle=f"""
-    WITH state AS (
-      SELECT key, custkey, price
-      FROM ({_EVENTS_WITH_TS_SQL})
-      QUALIFY row_number() OVER (PARTITION BY key ORDER BY _seq DESC) = 1
-        AND _op != 'd'
-    )
-    SELECT COUNT(*) AS live_rows,
-           COUNT(DISTINCT custkey) AS live_customers,
-           {dsum_sql('price')} AS live_revenue
-    FROM state
-    """,
-    tags=("C4", "A1"),
-)
+@query("cdc_state_rollup", oracle=_STATE_ROLLUP_SQL, tags=("C4", "A1"))
 def cdc_state_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-upsert consistency rollup: the reference's row-count-assertion
     idiom (iceberg-setup.sql:13,23,...) applied to the CDC result."""
     orders = load_table(spark, sf_dir, "orders")
-    state = apply_cdc_upsert(synthetic_change_events(orders))
-    return state.agg(
-        F.count("*").alias("live_rows"),
-        F.countDistinct("custkey").alias("live_customers"),
-        dsum("price", "live_revenue"),
-    )
+    return state_rollup(apply_cdc_upsert(synthetic_change_events(orders)))

@@ -193,8 +193,9 @@ _N_SHARDS = 16
     tags=("llm-text", "O5"),
 )
 def shard_assignment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash-sharding of the corpus into {16} balanced
-    training shards (what partitionBy(shard) writes at 100 TB): per-shard
+    """Deterministic hash-sharding of the corpus into _N_SHARDS (16)
+    balanced training shards (what partitionBy(shard) writes at 100 TB):
+    per-shard
     doc/char/lang accounting proves the balance. Hash is md5-derived so
     assignment is stable across engines, runs, and cluster topologies."""
     from ..functions import md5_int60

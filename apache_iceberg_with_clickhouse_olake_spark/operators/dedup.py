@@ -930,7 +930,7 @@ _REP_LABELS_CTES = f"""{_sig_cte_sql('reps')},
 @_scoped
 def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate CLUSTERS, not just pairs: connected components over the
-    verified near-dup graph via {4} rounds of min-label propagation
+    verified near-dup graph via _CC_ROUNDS rounds of min-label propagation
     (cluster id = smallest doc_id reachable). Keep-one-per-cluster is the
     policy real dedup ships — pairs alone over-delete transitive groups.
 

@@ -19,13 +19,19 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import davg_sql, dsum, dsum_sql
+from ..functions import dsum, dsum_sql
 from ..sources.lake import compact, read_snapshot, snapshot_history, write_snapshot
 from ..sources.parquet import load_table
 from ._cache import finalize as _finalize
 from ._cache import scoped as _scoped
 from ._cache import scratch_dir as _scratch_dir
-from .medallion import _GOLD_SQL_INNER, build_medallion
+from .cdc import (
+    _EVENTS_SQL,
+    _latest_sql,
+    apply_cdc_upsert,
+    synthetic_change_events,
+)
+from .medallion import _GOLD_REAGG_SQL, build_medallion, reaggregate_gold
 from .registry import query
 
 _EVOLUTION_SPLIT_DATE = "2000-01-01"
@@ -99,25 +105,11 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "time_travel_counts",
     oracle=f"""
     WITH events AS (
-      SELECT o_orderkey AS key, o_totalprice AS price, 0 AS _seq, 'c' AS _op
-      FROM orders WHERE o_orderkey % 5 != 4
-      UNION ALL
-      SELECT o_orderkey, o_totalprice, 1, 'c'
-      FROM orders WHERE o_orderkey % 5 = 4
-      UNION ALL
-      SELECT o_orderkey, CAST(NULL AS DOUBLE), 3, 'd'
-      FROM orders WHERE o_orderkey % 7 = 0
+      SELECT key, price, _op, _seq FROM ({_EVENTS_SQL})
+      WHERE _op IN ('c', 'd')
     ),
-    v1 AS (
-      SELECT key, price FROM events WHERE _seq <= 0
-      QUALIFY row_number() OVER (PARTITION BY key ORDER BY _seq DESC) = 1
-        AND _op != 'd'
-    ),
-    v2 AS (
-      SELECT key, price FROM events
-      QUALIFY row_number() OVER (PARTITION BY key ORDER BY _seq DESC) = 1
-        AND _op != 'd'
-    )
+    v1 AS ({_latest_sql("SELECT * FROM events WHERE _seq <= 0", "key, price")}),
+    v2 AS ({_latest_sql("SELECT * FROM events", "key, price")})
     SELECT 1 AS version, COUNT(*) AS live_rows, {dsum_sql('price')} AS revenue
     FROM v1
     UNION ALL
@@ -131,8 +123,6 @@ def time_travel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel (blog :521-527): snapshot v1 = initial CDC snapshot,
     v2 = state after late inserts + deletes; both versions stay readable
     and the history listing (L4) drives the per-version rollup."""
-    from .cdc import apply_cdc_upsert, synthetic_change_events
-
     orders = load_table(spark, sf_dir, "orders")
     ev = synthetic_change_events(orders).select("key", "price", "_op", "_seq")
     tmp = _scratch_dir("timetravel_")
@@ -164,16 +154,7 @@ def time_travel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "medallion_readback",
-    oracle=f"""
-    SELECT status,
-           CAST(SUM(order_count) AS BIGINT) AS total_orders,
-           CAST(SUM(user_count) AS BIGINT) AS total_user_slots,
-           {dsum_sql('gross_revenue')} AS total_revenue,
-           {davg_sql('gross_revenue')} AS avg_monthly_revenue
-    FROM ({_GOLD_SQL_INNER})
-    GROUP BY status
-    ORDER BY total_orders DESC, status
-    """,
+    oracle=_GOLD_REAGG_SQL,
     tags=("S3", "S4", "D5", "O5", "A9"),
 )
 @_scoped
@@ -184,22 +165,10 @@ def medallion_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     as gold_reaggregate, proving the write path preserves the answers
     (the reference's cross-layer consistency, cross-database-analytics
     .sql:16-38)."""
-    from ..functions import davg
-
     tmp = _scratch_dir("medallion_")
     paths = build_medallion(spark, sf_dir, tmp)
     gold = spark.read.parquet(paths["gold_order_metrics"])
-    out = (
-        gold.groupBy("status")
-        .agg(
-            F.sum("order_count").alias("total_orders"),
-            F.sum("user_count").alias("total_user_slots"),
-            dsum("gross_revenue", "total_revenue"),
-            davg("gross_revenue", "avg_monthly_revenue"),
-        )
-        .orderBy(F.col("total_orders").desc(), "status")
-    )
-    return _finalize(spark, out)
+    return _finalize(spark, reaggregate_gold(gold))
 
 
 _UPDATE_PRICE_CUTOFF = 400000.0
@@ -640,8 +609,8 @@ _BUCKET_KEY = 1  # o_custkey present at every SF
 def bucket_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D10 secondary index, Spark-native: persist orders BUCKETED (+
     sorted) by o_custkey -- a precomputed hash index over the key -- then
-    point-look-up one customer. The scan prunes to 1 of {16} buckets
-    (SelectedBucketsCount, asserted in tests/test_plans.py), and a join
+    point-look-up one customer. The scan prunes to 1 of _BUCKET_N (16)
+    buckets (SelectedBucketsCount, asserted in tests/test_plans.py), and a join
     on the bucketed key would skip its shuffle entirely. This is what
     the reference's MergeTree ORDER BY/secondary indexes buy it; at
     100 TB the bucket count scales with the cluster, not the data.

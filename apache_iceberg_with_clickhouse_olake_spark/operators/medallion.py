@@ -23,7 +23,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import davg_sql, dround, dround_sql, dsum, dsum_sql, nullif_
+from ..functions import (
+    davg,
+    davg_sql,
+    dround,
+    dround_sql,
+    dsum,
+    dsum_sql,
+    nullif_,
+)
 from ..sources.parquet import load_table
 from .registry import query
 
@@ -130,28 +138,9 @@ def gold_order_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cross-database-analytics.sql:32-38, compare-query-performance.sql:36-44
 # ---------------------------------------------------------------------------
 
-@query(
-    "gold_reaggregate",
-    oracle=f"""
-    SELECT status,
-           CAST(SUM(order_count) AS BIGINT) AS total_orders,
-           CAST(SUM(user_count) AS BIGINT) AS total_user_slots,
-           {dsum_sql('gross_revenue')} AS total_revenue,
-           {davg_sql('gross_revenue')} AS avg_monthly_revenue
-    FROM ({_GOLD_SQL_INNER})
-    GROUP BY status
-    ORDER BY total_orders DESC, status
-    """,
-    tags=("A9",),
-)
-def gold_reaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SUM-of-counts / SUM-of-sums over the KPI table -- validates correct
-    partial->final aggregation semantics of the gold layer."""
-    from ..functions import davg
-
-    # not widened (r19): A/B 0.829->1.040 s, see gold_order_metrics
-    orders = load_table(spark, sf_dir, "orders")
-    gold = build_gold(build_silver(orders))
+def reaggregate_gold(gold: DataFrame) -> DataFrame:
+    """Status-level re-aggregation of the gold KPI table: SUM of counts
+    and of sums, plus the mean monthly revenue."""
     return (
         gold.groupBy("status")
         .agg(
@@ -162,6 +151,27 @@ def gold_reaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("total_orders").desc(), "status")
     )
+
+
+_GOLD_REAGG_SQL = f"""
+    SELECT status,
+           CAST(SUM(order_count) AS BIGINT) AS total_orders,
+           CAST(SUM(user_count) AS BIGINT) AS total_user_slots,
+           {dsum_sql('gross_revenue')} AS total_revenue,
+           {davg_sql('gross_revenue')} AS avg_monthly_revenue
+    FROM ({_GOLD_SQL_INNER})
+    GROUP BY status
+    ORDER BY total_orders DESC, status
+"""
+
+
+@query("gold_reaggregate", oracle=_GOLD_REAGG_SQL, tags=("A9",))
+def gold_reaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SUM-of-counts / SUM-of-sums over the KPI table -- validates correct
+    partial->final aggregation semantics of the gold layer."""
+    # not widened (r19): A/B 0.829->1.040 s, see gold_order_metrics
+    orders = load_table(spark, sf_dir, "orders")
+    return reaggregate_gold(build_gold(build_silver(orders)))
 
 
 # ---------------------------------------------------------------------------

@@ -186,7 +186,7 @@ def uniform_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sequence_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-split sequence packing: within each hash shard, docs
     (in stable doc_id order) concatenate into one token stream that is
-    split into {2048}-token training sequences, so a shard of T tokens
+    split into _SEQ_BUDGET-token training sequences, so a shard of T tokens
     consumes EXACTLY ceil(T / budget) sequences -- computed as that
     closed form (r15 review: the earlier distinct-starting-bin count
     undercounted whenever one doc spanned an entire bin, letting

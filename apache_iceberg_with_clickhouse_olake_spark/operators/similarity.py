@@ -1636,9 +1636,9 @@ def _lsh_eval(spark: SparkSession, sf_dir: str):
     tags=("llm-similarity",),
 )
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@k of the LSH-bucketed ANN against exact cosine top-k over a
-    {20}-query evaluation sample — the accuracy/cost dial every ANN
-    deployment must report before swapping approximate for exact.
+    """Recall@k of the LSH-bucketed ANN against exact cosine top-k over an
+    evaluation sample of _N_EVAL_Q (20) queries — the accuracy/cost dial
+    every ANN deployment must report before swapping approximate for exact.
 
     Shape at scale: the query sample is tiny and BROADCAST; exact
     scoring is corpus x sample (the standard sampled-recall eval, NOT

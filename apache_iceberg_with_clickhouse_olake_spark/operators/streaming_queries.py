@@ -35,22 +35,8 @@ from ._cache import cache_scope
 from ._cache import finalize as _finalize
 from ._cache import scoped as _scoped
 from ._cache import scratch_dir as _scratch_dir
-from .cdc import _EVENTS_WITH_TS_SQL, synthetic_change_events
+from .cdc import _STATE_ROLLUP_SQL, state_rollup, synthetic_change_events
 from .registry import query
-
-_STATE_ROLLUP_SQL = f"""
-    WITH state AS (
-      SELECT key, custkey, price
-      FROM ({_EVENTS_WITH_TS_SQL})
-      QUALIFY row_number() OVER (PARTITION BY key ORDER BY _seq DESC) = 1
-        AND _op != 'd'
-    )
-    SELECT COUNT(*) AS live_rows,
-           COUNT(DISTINCT custkey) AS live_customers,
-           {dsum_sql('price')} AS live_revenue
-    FROM state
-"""
-
 
 # FileStreamSource takes new files oldest-first: staged chunk c gets
 # mtime _ARRIVAL_EPOCH + c, so micro-batches arrive in chunk order.
@@ -93,14 +79,6 @@ def _stage_seq_files(
     _stage_chunks(ev.filter(F.col("_seq").isin(seqs)), F.col("_seq"), events_dir)
 
 
-def _state_rollup(spark: SparkSession, state_dir: str) -> DataFrame:
-    return spark.read.parquet(state_dir).agg(
-        F.count("*").alias("live_rows"),
-        F.countDistinct("custkey").alias("live_customers"),
-        dsum("price", "live_revenue"),
-    )
-
-
 @query(
     "streaming_chunked_state",
     oracle=_STATE_ROLLUP_SQL,
@@ -119,7 +97,7 @@ def streaming_chunked_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_cdc_upsert_stream(
         spark, events_dir, state_dir, os.path.join(tmp, "ckpt")
     )
-    return _finalize(spark, _state_rollup(spark, state_dir))
+    return _finalize(spark, state_rollup(spark.read.parquet(state_dir)))
 
 
 @query(
@@ -146,7 +124,7 @@ def streaming_restart_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt)
     # Run 3 (restart, no new data): exactly-once => state unchanged.
     run_cdc_upsert_stream(spark, events_dir, state_dir, ckpt)
-    return _finalize(spark, _state_rollup(spark, state_dir))
+    return _finalize(spark, state_rollup(spark.read.parquet(state_dir)))
 
 
 # ---------------------------------------------------------------------------

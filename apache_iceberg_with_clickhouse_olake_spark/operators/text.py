@@ -1266,7 +1266,7 @@ _ZIPF_TOP = 100
 )
 def zipf_slope_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law fit: least-squares slope of ln(freq) against ln(rank)
-    over the top-{100} terms (a healthy natural-language corpus sits
+    over the _ZIPF_TOP top terms (a healthy natural-language corpus sits
     near -1; a template-spam or codebook corpus does not). The rank
     selection is TakeOrderedAndProject (per-partition heap, never a
     global sort of the vocabulary); the regression then runs over 100
@@ -1348,13 +1348,13 @@ _HEAPS_BUCKETS = 10
 )
 def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law vocabulary growth: distinct-term count accumulated
-    across {10} equal doc-id slabs of the corpus (sublinear growth is
+    across _HEAPS_BUCKETS equal doc-id slabs of the corpus (sublinear growth is
     the natural-language signature; a flat curve means duplicated
     templates, a linear one means noise/UUID spam). Scale shape: the
     slab id is pure arithmetic on broadcast MIN/MAX scalars -- NOT an
     ntile over a global sort; each term's first-seen slab is one
     vocabulary-sized min-aggregate; the cumulative sum runs over
-    {10} rows."""
+    _HEAPS_BUCKETS rows."""
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2123,7 +2123,7 @@ def quality_source_fair_threshold(
     the source-bias audit a mixture owner runs before thresholding: a
     single global score cutoff silently over-prunes whole sources whose
     score DISTRIBUTION sits lower (code or tables score fewer stopwords
-    than prose, not less quality), while the per-source p{Q} cut keeps
+    than prose, not less quality), while the per-source _FAIR_Q cut keeps
     the same top fraction of every source. Each row prices the
     difference: kept_source_fair (top quartile within the source, frac
     pinned near 0.25 modulo ties) against kept_global (what the global

@@ -62,18 +62,6 @@ SESSIONS_SCHEMA = T.StructType(
     ]
 )
 
-# CDC change-event envelope (olake-config/source.json + the audit columns
-# destination.json:129-130: _olake_sync_timestamp/_olake_operation ->
-# _seq/_op here, operators/cdc.py).
-CDC_EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.LongType(), False),
-        T.StructField("price", T.DoubleType(), True),
-        T.StructField("_op", T.StringType(), False),  # c | u | d
-        T.StructField("_seq", T.IntegerType(), False),
-    ]
-)
-
 # Multimodal asset layout (sources/multimodal.py): opaque payload +
 # typed metadata struct.
 MEDIA_META_SCHEMA = T.StructType(

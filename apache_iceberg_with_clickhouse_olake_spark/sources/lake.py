@@ -52,8 +52,9 @@ def write_snapshot(df: DataFrame, table_dir: str) -> int:
 
 def read_snapshot(spark: SparkSession, table_dir: str,
                   version: int | None = None) -> DataFrame:
-    """Read a pinned snapshot (time travel) or the latest; tolerates
-    schema evolution across versions with ``mergeSchema`` reads (D7/L1).
+    """Read a pinned snapshot (time travel) or the latest. Versions may
+    differ in columns (D7/L1), but each ``v<N>`` dir holds the one schema
+    its write gave it, so the read sees that version's own schema.
     Iceberg: ``VERSION AS OF``. A ``version`` not in
     :func:`snapshot_history` raises FileNotFoundError before Spark runs."""
     versions = _versions(table_dir)
@@ -65,9 +66,7 @@ def read_snapshot(spark: SparkSession, table_dir: str,
         raise FileNotFoundError(
             f"no snapshot v{version} ({len(versions)} snapshots)"
         )
-    return read_table(
-        spark, os.path.join(table_dir, f"v{version}"), merge_schema=True
-    )
+    return read_table(spark, os.path.join(table_dir, f"v{version}"))
 
 
 def snapshot_history(spark: SparkSession, table_dir: str) -> list[int]:

@@ -153,22 +153,16 @@ def _meta(spark: SparkSession, path: str) -> _TableMeta | None:
     return m
 
 
-def read_table(
-    spark: SparkSession, path: str, merge_schema: bool = False
-) -> DataFrame:
+def read_table(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` that learns the schema once per file
     version: a recorded schema is handed to the reader
     (``spark.read.schema(s).parquet(path)``, no footer-reading job); on
     a miss the inferring read itself is returned and its schema
-    recorded (``merge_schema``: the union of every file's schema, the D7
-    evolution read). Files are still listed on every read."""
+    recorded. Files are still listed on every read."""
     m = _meta(spark, path)
     if m is not None and m.schema is not None:
         return spark.read.schema(m.schema).parquet(path)
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(path)
+    df = spark.read.parquet(path)
     if m is not None:
         m.schema = df.schema
     return df

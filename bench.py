@@ -9,8 +9,22 @@ Mirrors the reference's performance-comparison harness
 reference materializes silver/gold via iceberg-setup.sql before timing),
 then the same group-by is timed against each layer -- raw scan
 (2-5 s band), materialized silver (0.5-2 s band), materialized gold
-(10-50 ms band) -- plus the heaviest fact-table queries from the suite
-(compare-query-performance.sql Tests 1-4 shapes).
+(10-50 ms band) -- plus the heaviest fact-table queries from the suite.
+
+The headline rows are ``lakebench/workloads.HEADLINE``, in its order:
+
+- ``orders_by_status``: Test 1, raw group-by (the 2-5 s band shape);
+- ``monthly_revenue``: Test 2, month x status rollup;
+- ``high_value_orders``: Test 3, multi-predicate filter;
+- ``unique_customers``: Test 4, exact distinct;
+- ``gold_order_metrics``: medallion gold build (raw -> gold pipeline);
+- ``gold_reaggregate``: gold re-aggregation recomputed from raw;
+- ``pricing_summary``: biggest fact scan (TPC-H Q1 shape);
+- ``segment_lineitem_revenue``: biggest shuffle join;
+- ``revenue_by_nation``: star join;
+- ``daily_active_users``: events rollup.
+
+Tests 1-4 are the shapes of compare-query-performance.sql.
 
 Gold-layer band note: both gold variants reuse a pre-parsed plan handle
 (re-collecting one DataFrame reuses its QueryExecution -- the
@@ -42,26 +56,15 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "lakebench")]
 
 from apache_iceberg_with_clickhouse_olake_spark.operators import registry
 from apache_iceberg_with_clickhouse_olake_spark.session import (
     default_parallelism,
     get_spark,
 )
-
-HEADLINE = (
-    "orders_by_status",       # Test 1: raw group-by (the 2-5 s band shape)
-    "monthly_revenue",        # Test 2: month x status rollup
-    "high_value_orders",      # Test 3: multi-predicate filter
-    "unique_customers",       # Test 4: exact distinct
-    "gold_order_metrics",     # medallion gold build (raw -> gold pipeline)
-    "gold_reaggregate",       # gold re-agg recomputed from raw
-    "pricing_summary",        # biggest fact scan (TPC-H Q1 shape)
-    "segment_lineitem_revenue",  # biggest shuffle join
-    "revenue_by_nation",      # star join
-    "daily_active_users",     # events rollup
-)
+from workloads import HEADLINE
 
 
 # The corpus-operator suite, timed on the same sf dir as the headline

@@ -1,14 +1,16 @@
 """Property-based check of the CDC upsert operator: for ANY event
-sequence, the distributed row_number apply must equal a sequential
-replay into a dict (the semantics MySQL->OLake upsert promises,
-olake-config/destination.json:132-134)."""
+sequence, the distributed row_number apply and its DuckDB SQL twin must
+equal a sequential replay into a dict (the semantics MySQL->OLake upsert
+promises, olake-config/destination.json:132-134)."""
 
 from __future__ import annotations
 
+import duckdb
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from apache_iceberg_with_clickhouse_olake_spark.operators.cdc import (
+    _latest_sql,
     apply_cdc_upsert,
 )
 
@@ -56,6 +58,15 @@ def test_upsert_matches_sequential_replay(spark, seq):
         r.key: r.price for r in apply_cdc_upsert(df).collect()
     }
     assert got == _replay(seq)
+
+    with duckdb.connect() as con:
+        con.execute(
+            "CREATE TABLE ev"
+            " (key BIGINT, _op VARCHAR, price DOUBLE, _seq BIGINT)"
+        )
+        con.executemany("INSERT INTO ev VALUES (?, ?, ?, ?)", rows)
+        sql = _latest_sql("SELECT * FROM ev", "key, price")
+        assert dict(con.execute(sql).fetchall()) == _replay(seq)
 
 
 @given(_events)

@@ -1257,7 +1257,7 @@ def _persist_raw_scan_hits(source: str, fname: str) -> list[str]:
     `_persist(arg)` is flagged when the arg is tainted by the same
     rule. Taint stops at free-function boundaries on purpose
     (``_persist(helper(docs))`` is clean even when docs is a raw scan:
-    helpers like _word_symbols_from or _kmeans_assign_frames reshuffle
+    helpers like _word_symbols or _kmeans_assign_frames reshuffle
     internally, and flagging them would indict every audited-OK site
     in the r13 sweep).
 
